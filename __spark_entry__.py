@@ -12,10 +12,11 @@ import atexit
 import os
 
 from collections.abc import Callable
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from serimi_rdf_interlinking_spark.session import conf_override
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -75,24 +76,16 @@ def _session_state_width(spark: SparkSession, n_rows: int) -> int:
     return max(8, min(par, n_rows // 120_000))
 
 
-@contextmanager
-def _stream_shuffle(spark: SparkSession, n: int = 8):
-    """Right-size shuffle width for a streaming replay. Stateful
-    streaming commits ONE state-store delta per shuffle partition per
-    microbatch, so a 32-wide session conf turns a 6-microbatch
-    AvailableNow replay into ~200 state commits for a few thousand
-    keys — pure fixed overhead at fixture scale. Results are
-    partition-count-independent (grouping is logical); on a real
-    cluster the session conf carries the deployment's width. The conf
-    must stay overridden until awaitTermination returns (a streaming
-    query reads it at first-batch planning, not at .start())."""
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, saved)
+# The streaming replays run under conf_override(spark,
+# {"spark.sql.shuffle.partitions": ...}) to right-size the shuffle width.
+# Stateful streaming commits ONE state-store delta per shuffle partition
+# per microbatch, so a 32-wide session conf turns a 6-microbatch
+# AvailableNow replay into ~200 state commits for a few thousand keys —
+# pure fixed overhead at fixture scale. Results are
+# partition-count-independent (grouping is logical); on a real cluster
+# the session conf carries the deployment's width. The conf must stay
+# overridden until awaitTermination returns (a streaming query reads it
+# at first-batch planning, not at .start()).
 
 
 # ---------------------------------------------------------------------------
@@ -1485,7 +1478,7 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.timestamp_seconds(F.lit(1_600_000_000)).alias("ts"), "text"
     )
     docs.write.mode("overwrite").parquet(f"{base}/in")
-    with _stream_shuffle(spark):
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = stream_dedup_exact(
             spark, f"{base}/in", f"{base}/out", f"{base}/ckpt"
         )
@@ -1775,7 +1768,7 @@ def q_stream_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(
         f"{base}/in"
     )
-    with _stream_shuffle(spark):
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = stream_time_buckets(
             spark, f"{base}/in", f"{base}/out", f"{base}/ckpt",
             window="5 minutes", watermark="10 minutes",
@@ -1847,7 +1840,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     flush.coalesce(1).write.mode("append").parquet(f"{base}/in")
-    with _stream_shuffle(spark, width):
+    with conf_override(spark, {"spark.sql.shuffle.partitions": str(width)}):
         # state keyed on 4*width hash buckets of user_id: same emitted
         # sessions (see make_bucketed_event_time_sessionizer), but the
         # per-(group, micro-batch) Python dispatch — the measured wall
@@ -1902,7 +1895,7 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reader's maxFilesPerTrigger=4 — the stateless per-batch join
     # emits the same enriched row set regardless of file layout
     ev.coalesce(4).write.mode("overwrite").parquet(f"{base}/in")
-    with _stream_shuffle(spark):
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         q = stream_enrich(
             spark, f"{base}/in", dim, f"{base}/out", f"{base}/ckpt"
         )
@@ -2032,7 +2025,7 @@ def q_stream_sessionize_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     mtime += 2
     for p in set(glob.glob(f"{base}/in/*.parquet")) - seen:
         os.utime(p, (mtime, mtime))
-    with _stream_shuffle(spark, width):
+    with conf_override(spark, {"spark.sql.shuffle.partitions": str(width)}):
         # bucketed state keys — see q_stream_sessionize; the emitted
         # session set is keying-independent (folds are monotone under
         # the global watermark), which the ooo parity test asserts

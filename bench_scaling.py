@@ -303,6 +303,7 @@ def scaling_job(spark) -> dict:
     from serimi_rdf_interlinking_spark.operators.rds import (
         CHUNK_OUTPUT_SCHEMA,
         make_chunk_kernel,
+        make_chunk_scorer,
     )
 
     base = pages.limit(400000).select(
@@ -359,7 +360,7 @@ def scaling_job(spark) -> dict:
         .localCheckpoint(eager=True)
     )
     chunk_rows.count()
-    kernel = make_chunk_kernel(textp=[], stopwords=())
+    kernel = make_chunk_kernel(make_chunk_scorer(textp=[], stopwords=()))
     # bucket 8 chunks per pandas group (matcher default) — amortizes
     # the Arrow group-dispatch overhead over the 2,500 tiny chunks.
     # Literals are salted per iteration (cold asm caches, identical

@@ -12,7 +12,7 @@ Two reference CLI bugs are deliberately NOT replicated (we implement the
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -79,15 +79,3 @@ class SerimiConfig:
     # Dead code in the reference (its call site :113 is commented out,
     # because it starves F13 redirect expansion) — opt-in here.
     drop_redirect_candidates: bool = False
-
-    extra: dict = field(default_factory=dict)
-
-    def searched_chunk_bounds(self, rank: int) -> int:
-        """Map a 0-based blocking rank to its chunk id.
-
-        Reference chunking: first chunk is 5 subjects, every later chunk
-        is `chunk` (initializer.rb:93-98, warm-up seeds label learning).
-        """
-        if rank < self.warmup_chunk:
-            return 0
-        return 1 + (rank - self.warmup_chunk) // self.chunk

@@ -367,29 +367,6 @@ def simm_monge_elkan(a: str, b: str) -> float:
     return total / len(a_toks)
 
 
-def get_similarity(a: str, b: str, metric: str) -> float:
-    """T4 bridge (extension_module.rb:50-104); metric names as used by
-    the reference ('SOUDEX' typo included)."""
-    m = metric.upper()
-    if m == "NGRAM":
-        return simm_qgrams_distance(a, b)
-    if m == "JARO":
-        return simm_jaro(a, b)
-    if m == "JAROWINKLER":
-        return simm_jaro_winkler(a, b)
-    if m == "LEVENSHTEIN":
-        return simm_levenshtein(a, b)
-    if m in ("SOUDEX", "SOUNDEX"):
-        return simm_soundex(a, b)
-    if m == "SMITHWATERMAN":
-        return simm_smith_waterman(a, b)
-    if m == "NEEDLEMAN":
-        return simm_needleman_wunch(a, b)
-    if m == "MONGEELKAN":
-        return simm_monge_elkan(a, b)
-    raise ValueError(f"unknown metric {metric!r}")
-
-
 # ---------------------------------------------------------------------------
 # the reference's own pseudo-Jaro (T3)
 # ---------------------------------------------------------------------------

@@ -56,50 +56,3 @@ def asm_passes_udf(stopwords: tuple[str, ...], threshold: float):
 
     return _asm_p
 
-
-def max_jaro_udf(stopwords: tuple[str, ...]):
-    """T8: sum of advanced_string_matching over an array-of-labels col."""
-    sw = tuple(stopwords)
-
-    @F.pandas_udf(T.DoubleType())
-    def _mj(o: pd.Series, labels: pd.Series) -> pd.Series:
-        out = []
-        for val, labs in zip(o, labels):
-            if val is None or labs is None:
-                out.append(0.0)
-            else:
-                out.append(
-                    sum(K.advanced_string_matching_cached(val, x, sw) for x in labs)
-                )
-        return pd.Series(out, dtype="float64")
-
-    return _mj
-
-
-def xmatch_udf():
-    """T5 ensemble over two string columns."""
-
-    @F.pandas_udf(T.DoubleType())
-    def _xm(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                K.xmatch(x, y) if x is not None and y is not None else 0.0
-                for x, y in zip(a, b)
-            ],
-            dtype="float64",
-        )
-
-    return _xm
-
-
-def ref_jaro_udf():
-    """T3 — the reference's pseudo-Jaro over two string columns."""
-
-    @F.pandas_udf(T.DoubleType())
-    def _rj(a: pd.Series, b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [K.ref_jarowinkler_similar(x, y) for x, y in zip(a, b)],
-            dtype="float64",
-        )
-
-    return _rj

@@ -13,8 +13,13 @@ Query lifecycle parity with the reference (SURVEY.md §3):
    (J2/J3 + F11) — inverted-index joins instead of one SPARQL round
    trip per source resource (the reference's central bottleneck,
    SURVEY.md §3 entry point 2);
-5. chunk-parallel F12 + RDS scoring + adaptive thresholds via
-   groupBy(chunk_id).applyInPandas.
+5. chunk-parallel F12 + F13 + RDS scoring + adaptive thresholds via
+   groupBy(chunk bucket).applyInPandas.
+
+Steps 3 and 5 and the sequential loop score a chunk through the same
+path in operators/rds.py: `parse_chunk` groups the chunk's rows per
+source, and the scorer from `make_chunk_scorer` runs F12 → F13 →
+`rds_core.score_chunk` (with the pivot FIFO in sequential mode).
 
 Batch-mode divergences from the strictly sequential reference, both
 documented in SURVEY.md §7: the searchable-predicate list does not
@@ -55,7 +60,13 @@ from .operators.labels import (
     mine_stopwords,
     select_entity_labels,
 )
-from .operators.rds import CHUNK_OUTPUT_SCHEMA, make_chunk_kernel
+from .operators.rds import (
+    CHUNK_OUTPUT_SCHEMA,
+    make_chunk_kernel,
+    make_chunk_scorer,
+    parse_chunk,
+)
+from .session import conf_override
 
 KW_KEY = ["s", "rank", "chunk_id", "label_idx", "kw"]
 
@@ -432,183 +443,33 @@ class SerimiMatcher:
             rows = rows.unionByName(rdir_rows).unionByName(rdesc_rows)
         return rows
 
+    def _chunk_scorer(self, textp: list[str], stopwords: tuple[str, ...]):
+        cfg = self.cfg
+        return make_chunk_scorer(
+            textp,
+            stopwords,
+            topk=cfg.topk,
+            rds_threshold=cfg.rds_threshold,
+            filter_threshold=cfg.string_threshold,
+            overflow_min=cfg.overflow_min_threshold,
+            group_presence=cfg.entropy_group_presence,
+        )
+
     # -- warm-up: learn textp + searchable predicates ----------------------
     def _warmup(self, cand_result, source, target, stopwords):
         """Collects the warm-up chunk (<=5 sources) and replays the
         reference's chunk-1 math on the driver: $textp from the chunk's
         candidate data (serimi_module.rb:179) and the searchable
         predicates from its discriminative entropy (serimi_module.rb:28-30).
-        Returns (textp, search_predicates, score_rows)."""
+        F13 applies to the warm-up chunk too (serimi_module.rb:86 runs
+        for every chunk). Returns (textp, search_predicates, score_rows)."""
         cfg = self.cfg
-        rows = self._chunk_input(cand_result, source, target).collect()
-        by_src: dict[str, dict] = {}
-        ranks: dict[str, int] = {}
-        redirect_map: dict[str, str] = {}
-        redirect_desc: dict[str, list[tuple]] = {}
-        for r in rows:
-            if r.role == "rdir":
-                redirect_map[r.cand] = r.o
-                continue
-            if r.role == "rdesc":
-                redirect_desc.setdefault(r.cand, []).append(
-                    (r.cand, r.p, r.o, bool(r.o_is_uri))
-                )
-                continue
-            d = by_src.setdefault(r.src, {"cand": set(), "origin": set(), "kw": set()})
-            if r.role == "cand":
-                d["cand"].add((r.cand, r.p, r.o, bool(r.o_is_uri)))
-            elif r.role == "origin":
-                d["origin"].add((r.p, r.o, bool(r.o_is_uri)))
-            elif r.role == "kw":
-                d["kw"].add(r.p)
-            ranks[r.src] = r.rank
-        srcs = sorted(by_src, key=lambda s: ranks[s])
-        groups = [sorted(by_src[s]["cand"]) for s in srcs]
-        origins = [sorted(by_src[s]["origin"]) for s in srcs]
-        searched = [sorted(by_src[s]["kw"]) for s in srcs]
-
-        textp = rds_core.get_text_properties(groups, cfg.text_property_len)
-        filtered, disc = rds_core.entity_label_filtering(
-            groups, searched, textp, stopwords, cfg.string_threshold,
-            cfg.entropy_group_presence,
-        )
-        # F13 applies to the warm-up chunk too (serimi_module.rb:86 runs
-        # for every chunk) — without it the warm-up emits alias URIs.
-        if cfg.dbpedia_target and redirect_map:
-            from .operators.rds import apply_dbpedia_redirect
-
-            filtered = [
-                apply_dbpedia_redirect(g, redirect_map, redirect_desc)
-                for g in filtered
-            ]
-        search_preds = disc[: cfg.max_search_predicates]
-
-        keep = [i for i, g in enumerate(filtered) if len(g) > 0]
-        score_rows: list[tuple] = []
-        if len(keep) > 1:
-            out = rds_core.score_chunk(
-                [filtered[i] for i in keep],
-                [origins[i] for i in keep],
-                textp,
-                topk=cfg.topk,
-                rds_threshold=cfg.rds_threshold,
-                min_overflow_threshold=cfg.overflow_min_threshold,
-            )
-            kept_srcs = [srcs[i] for i in keep]
-            score_rows = [
-                (0, kept_srcs[g], c, v, t, a) for g, c, v, t, a in out
-            ]
-        return textp, search_preds, score_rows
+        chunk = parse_chunk(self._chunk_input(cand_result, source, target).collect())
+        textp = rds_core.get_text_properties(chunk.groups, cfg.text_property_len)
+        rows, disc = self._chunk_scorer(textp, stopwords)(chunk)
+        return textp, disc[: cfg.max_search_predicates], [(0, *r) for r in rows]
 
     # -- reference-parity sequential chunk loop -----------------------------
-    def _score_chunk_seq(
-        self,
-        crs: list,
-        chunk_id: int,
-        pivot_state: tuple,
-        textp: list[str],
-        stopwords: tuple[str, ...],
-    ) -> list[tuple]:
-        """Score one collected chunk on the driver: F12 label filtering,
-        F13 redirect expansion (dbpedia), RDS scoring with the pivot
-        FIFO carried across chunks (serimi_class.rb:279-298,
-        initializer.rb:173-179)."""
-        from .operators import rds_core
-        from .operators.rds import apply_dbpedia_redirect
-
-        cfg = self.cfg
-        pivot_groups, pivot_labels, pivot_subjects = pivot_state
-
-        srcs_ranked = sorted({(int(r.rank), r.src) for r in crs if r.role == "cand"})
-        groups, origins, searched = [], [], []
-        for _rank, src in srcs_ranked:
-            groups.append(
-                sorted(
-                    {
-                        (r.cand, r.p, r.o, bool(r.o_is_uri))
-                        for r in crs
-                        if r.role == "cand" and r.src == src
-                    }
-                )
-            )
-            origins.append(
-                sorted(
-                    {
-                        (r.p, r.o, bool(r.o_is_uri))
-                        for r in crs
-                        if r.role == "origin" and r.src == src
-                    }
-                )
-            )
-            searched.append(
-                sorted({r.p for r in crs if r.role == "kw" and r.src == src})
-            )
-
-        filtered, _disc = rds_core.entity_label_filtering(
-            groups, searched, textp, stopwords,
-            cfg.string_threshold, cfg.entropy_group_presence,
-        )
-        if cfg.dbpedia_target:
-            redirect_map: dict[str, str] = {}
-            redirect_desc: dict[str, list[tuple]] = {}
-            for r in crs:
-                if r.role == "rdir":
-                    redirect_map[r.cand] = r.o
-                elif r.role == "rdesc":
-                    redirect_desc.setdefault(r.cand, []).append(
-                        (r.cand, r.p, r.o, bool(r.o_is_uri))
-                    )
-            if redirect_map:
-                filtered = [
-                    apply_dbpedia_redirect(g, redirect_map, redirect_desc)
-                    for g in filtered
-                ]
-        keep = [i for i, g in enumerate(filtered) if g]
-        groups2 = [filtered[i] for i in keep]
-        origins2 = [origins[i] for i in keep]
-        searched2 = [searched[i] for i in keep]
-        srcs2 = [srcs_ranked[i][1] for i in keep]
-        if len(groups2) <= 1:
-            return []
-
-        pg = list(pivot_groups)
-        pl = list(pivot_labels)
-        all_groups = groups2 + pg
-        all_searched = searched2 + pl
-        res = rds_core.rds_score(
-            all_groups, origins2, textp, cfg.overflow_min_threshold
-        )
-        # pivot updates (add_pivot, serimi_class.rb:279-298)
-        if cfg.use_pivot:
-            for gidx, sidx in res.pivot_hits:
-                spivot = res.subjects[gidx][sidx]
-                if len(pivot_groups) > cfg.pivot_fifo:
-                    break
-                if spivot in pivot_subjects:
-                    continue
-                grp = [t for t in all_groups[gidx] if t[0] == spivot]
-                pivot_groups.append(grp)
-                pivot_labels.append(
-                    all_searched[gidx] if gidx < len(all_searched) else []
-                )
-                pivot_subjects.append(spivot)
-                if len(pivot_groups) > cfg.pivot_fifo:
-                    pivot_groups.popleft()
-                    pivot_labels.popleft()
-                    pivot_subjects.pop(0)
-
-        out: list[tuple] = []
-        n = len(groups2)
-        scores = res.normalized[:n]
-        thresholds = rds_core.rds_thresholds(
-            scores, topk=cfg.topk, rds_threshold=cfg.rds_threshold
-        )
-        for gidx in range(n):
-            t = thresholds[gidx]
-            for s, v in zip(res.subjects[gidx], scores[gidx]):
-                out.append((chunk_id, srcs2[gidx], s, v, t, v >= t))
-        return out
-
     def _run_sequential_loop(
         self,
         source: DataFrame,
@@ -641,13 +502,12 @@ class SerimiMatcher:
         initializer.rb:93), silently dropping the tail; we process the
         final short span instead.
         """
-        from collections import deque
-
         cfg = self.cfg
         max_rank = keywords.agg(F.max("rank")).collect()[0][0]
         count = (max_rank if max_rank is not None else -1) + 1
         order = list(order0)
-        pivot_state = (deque(), deque(), [])
+        score = self._chunk_scorer(textp, stopwords)
+        pivots = rds_core.PivotFifo(cfg.pivot_fifo) if cfg.use_pivot else None
         out: list[tuple] = []
         offset, limit = cfg.warmup_chunk, cfg.chunk
         chunk_id = 1
@@ -670,12 +530,9 @@ class SerimiMatcher:
                 cr.searched = cr.searched.withColumn(
                     "chunk_id", F.lit(chunk_id)
                 )
-                rows = self._chunk_input(cr, source, target).collect()
-                out.extend(
-                    self._score_chunk_seq(
-                        rows, chunk_id, pivot_state, textp, stopwords
-                    )
-                )
+                chunk = parse_chunk(self._chunk_input(cr, source, target).collect())
+                rows, _disc = score(chunk, pivots)
+                out.extend((chunk_id, *r) for r in rows)
             offset += limit
             chunk_id += 1
         self.final_search_order = order
@@ -695,19 +552,10 @@ class SerimiMatcher:
         # scale 32-way shuffles cost more in task scheduling than they
         # gain; on real corpora set cfg.shuffle_partitions to the
         # cluster's parallelism. Restored after the run.
-        overrides = {
-            "spark.sql.shuffle.partitions": str(cfg.shuffle_partitions),
-            **cfg.extra.get("spark_conf", {}),
-        }
-        saved = {k: spark.conf.get(k, None) for k in overrides}
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        try:
+        with conf_override(
+            spark, {"spark.sql.shuffle.partitions": str(cfg.shuffle_partitions)}
+        ):
             return self._run(spark, source, target, class_uri)
-        finally:
-            for k, v in saved.items():
-                if v is not None:
-                    spark.conf.set(k, v)
 
     def _run(
         self,
@@ -850,16 +698,7 @@ class SerimiMatcher:
             if self.cfg.checkpoint_dir:
                 chunk_input = self._mat(chunk_input, "chunk_input")
             tick("chunk input")
-            kernel = make_chunk_kernel(
-                textp,
-                stopwords,
-                topk=cfg.topk,
-                rds_threshold=cfg.rds_threshold,
-                filter_threshold=cfg.string_threshold,
-                overflow_min=cfg.overflow_min_threshold,
-                group_presence=cfg.entropy_group_presence,
-                dbpedia=cfg.dbpedia_target,
-            )
+            kernel = make_chunk_kernel(self._chunk_scorer(textp, stopwords))
             # group by a BUCKET of chunks, not per-chunk: the kernel
             # loops chunk_ids inside each pandas group, amortizing the
             # Arrow group-dispatch overhead over cfg.chunks_per_kernel_group

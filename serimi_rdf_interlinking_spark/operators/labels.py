@@ -77,42 +77,6 @@ def select_entity_labels(
     return out, textp
 
 
-def mine_stopwords_for_label(
-    triples: DataFrame, members: DataFrame, label: str
-) -> list[str]:
-    """A3 for one label property (serimi_module.rb:284-341).
-
-    Token frequency = occurrences / number-of-label-values; stop words
-    exist only when stddev >= 2*mean (the reference's volatility gate);
-    kept when freq >= mean and len > 1, ordered by length desc.
-    """
-    vals = (
-        triples.join(members, "s", "left_semi")
-        .filter(F.col("p") == label)
-        .select("o")
-    )
-    n = vals.count()
-    if n == 0:
-        return []
-    toks = vals.select(F.explode(norm_tokens("o")).alias("tok"))
-    toks = toks.filter(~is_numericish_col("tok"))
-    wc = toks.groupBy("tok").agg((F.count("*") / F.lit(float(n))).alias("v"))
-    stats = wc.agg(
-        F.avg("v").alias("m"), F.stddev_pop("v").alias("sd")
-    ).first()
-    if stats is None or stats.m is None:
-        return []
-    mean, sd = float(stats.m), float(stats.sd or 0.0)
-    if sd < mean * 2:
-        return []
-    rows = (
-        wc.filter((F.col("v") >= mean) & (F.length("tok") > 1))
-        .select("tok")
-        .collect()
-    )
-    return sorted({r.tok for r in rows}, key=lambda x: (-len(x), x))
-
-
 def mine_stopwords(
     triples: DataFrame, members: DataFrame, labels: list[str]
 ) -> tuple[str, ...]:

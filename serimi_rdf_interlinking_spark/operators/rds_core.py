@@ -29,6 +29,7 @@ Reference quirks preserved (see SURVEY.md §2.4, §7):
 from __future__ import annotations
 
 import math
+from collections import deque
 from dataclasses import dataclass, field
 
 from ..functions import kernels as K
@@ -412,6 +413,31 @@ def rds_thresholds(
     return thresholds
 
 
+@dataclass
+class PivotFifo:
+    """The pivots carried from chunk to chunk (add_pivot,
+    serimi_class.rb:279-298): each subject hitting a chunk's global RDS
+    max joins later chunks as an extra scoring group, at most `size`
+    of them, oldest evicted first."""
+
+    size: int
+    groups: deque = field(default_factory=deque)
+    subjects: list[str] = field(default_factory=list)
+
+    def admit(self, res: RdsResult, groups: list[list[Triple]]) -> None:
+        for gidx, sidx in res.pivot_hits:
+            spivot = res.subjects[gidx][sidx]
+            if len(self.groups) > self.size:
+                break
+            if spivot in self.subjects:
+                continue
+            self.groups.append([t for t in groups[gidx] if t[0] == spivot])
+            self.subjects.append(spivot)
+            if len(self.groups) > self.size:
+                self.groups.popleft()
+                self.subjects.pop(0)
+
+
 def score_chunk(
     groups: list[list[Triple]],
     origins: list[list[tuple[str, str, bool]]],
@@ -420,15 +446,22 @@ def score_chunk(
     rds_threshold: float | None = None,
     pivot_groups: list[list[Triple]] | None = None,
     min_overflow_threshold: float = 5.0,
+    pivot_fifo: PivotFifo | None = None,
 ) -> list[tuple[int, str, float, float, bool]]:
     """One chunk end-to-end: RDS scoring + thresholds + acceptance.
 
     Returns rows (group_idx, candidate_subject, score, threshold,
     accepted). Pivot groups participate in scoring/normalization but are
     excluded from output and threshold statistics (initializer.rb:179).
+    A `pivot_fifo` supplies the pivot groups instead and admits this
+    chunk's pivot hits afterwards.
     """
-    pivots = pivot_groups or []
-    res = rds_score(groups + pivots, origins, textp, min_overflow_threshold)
+    if pivot_fifo is not None:
+        pivot_groups = list(pivot_fifo.groups)
+    all_groups = groups + (pivot_groups or [])
+    res = rds_score(all_groups, origins, textp, min_overflow_threshold)
+    if pivot_fifo is not None:
+        pivot_fifo.admit(res, all_groups)
     n = len(groups)
     scores = res.normalized[:n]
     thresholds = rds_thresholds(scores, topk=topk, rds_threshold=rds_threshold)

@@ -44,41 +44,32 @@ def _norm(c: Column) -> Column:
 MAX_UNROLL_DIM = 256
 
 
-def dot_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Dot product as a static left-deep a[0]*b[0] + a[1]*b[1] + ...
-    expression chain. Higher-order functions (aggregate/zip_with) run
-    through Catalyst's lambda INTERPRETER per element; the unrolled
-    chain stays inside whole-stage codegen — measured 2.1x faster at
-    64 dims on the near-dup pair join, with a bit-identical result
-    (same left-to-right float addition order as the fold). Dims above
-    MAX_UNROLL_DIM fall back to the fold (same values, see above).
+def dot_unrolled(a: str, b: str, dim: int) -> Column:
+    """Dot product of two array columns, named by `a` and `b`, as a
+    static left-deep a[0]*b[0] + a[1]*b[1] + ... expression chain.
+    Higher-order functions (aggregate/zip_with) run through Catalyst's
+    lambda INTERPRETER per element; the unrolled chain stays inside
+    whole-stage codegen — measured 2.1x faster at 64 dims on the
+    near-dup pair join, with a bit-identical result (same left-to-right
+    float addition order as the fold). Dims above MAX_UNROLL_DIM fall
+    back to the fold (same values, see above).
 
-    Pass COLUMN NAMES (strings) where possible: the chain is then built
-    as ONE F.expr() SQL string — the SQL parser produces the identical
-    left-associative Add/Multiply/GetArrayItem tree (verified
-    bit-equal), while the Column-algebra form issues ~2*dim py4j
-    round-trips per call and was the measured BUILD wall of the
-    fixed-size similarity queries (0.6s vs 3ms at 64 dims)."""
-    import functools
-    import operator
-
+    The chain is built as ONE F.expr() SQL string — the SQL parser
+    produces the identical left-associative Add/Multiply/GetArrayItem
+    tree (verified bit-equal), while building it through Column algebra
+    issues ~2*dim py4j round-trips per call and was the measured BUILD
+    wall of the fixed-size similarity queries (0.6s vs 3ms at 64 dims)."""
+    if not (isinstance(a, str) and isinstance(b, str)):
+        raise TypeError("dot_unrolled takes column names, not Columns")
     if dim <= 0:  # empty-frame edge: the fold's identity element
         return F.lit(0.0)
     if dim > MAX_UNROLL_DIM:
-        a = F.col(a) if isinstance(a, str) else a
-        b = F.col(b) if isinstance(b, str) else b
-        return _dot(a, b)
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            " + ".join(f"`{a}`[{i}] * `{b}`[{i}]" for i in range(dim))
-        )
-    return functools.reduce(
-        operator.add, [a[i] * b[i] for i in range(dim)]
-    )
+        return _dot(F.col(a), F.col(b))
+    return F.expr(" + ".join(f"`{a}`[{i}] * `{b}`[{i}]" for i in range(dim)))
 
 
-def dot_literal(a: Column | str, vals: list, dim: int) -> Column:
-    """dot(vector column, python-list constant) with the same
+def dot_literal(a: str, vals: list, dim: int) -> Column:
+    """dot(array column named `a`, python-list constant) with the same
     left-to-right addition order as dot_unrolled/_dot. The constant is
     inlined as scalar literals, NOT as an array column: a[i] *
     array(...)[i] re-expands the CreateArray expression per element
@@ -87,30 +78,30 @@ def dot_literal(a: Column | str, vals: list, dim: int) -> Column:
     past MAX_UNROLL_DIM fall back to the HOF fold over one array
     literal (evaluated once per row), same values either way.
 
-    Like dot_unrolled, a string column name + all-finite constants
-    build through ONE F.expr() call ('D'-suffixed literals are exact:
-    repr(float) round-trips and the parser yields the same DoubleType
-    literal bits); non-finite values or Column inputs keep the
-    Column-algebra form."""
+    Like dot_unrolled, all-finite constants build through ONE F.expr()
+    call ('D'-suffixed literals are exact: repr(float) round-trips and
+    the parser yields the same DoubleType literal bits); non-finite
+    values keep the Column-algebra form."""
     import functools
-    import operator
     import math
+    import operator
 
+    if not isinstance(a, str):
+        raise TypeError("dot_literal takes a column name, not a Column")
     if dim <= 0:
         return F.lit(0.0)
     if dim > MAX_UNROLL_DIM:
-        a = F.col(a) if isinstance(a, str) else a
-        return _dot(a, F.array(*[F.lit(float(x)) for x in vals[:dim]]))
-    if isinstance(a, str) and all(math.isfinite(float(v)) for v in vals[:dim]):
+        return _dot(F.col(a), F.array(*[F.lit(float(x)) for x in vals[:dim]]))
+    if all(math.isfinite(float(v)) for v in vals[:dim]):
         return F.expr(
             " + ".join(
                 f"`{a}`[{i}] * {float(vals[i])!r}D" for i in range(dim)
             )
         )
-    a = F.col(a) if isinstance(a, str) else a
+    col = F.col(a)
     return functools.reduce(
         operator.add,
-        [a[i] * F.lit(float(vals[i])) for i in range(dim)],
+        [col[i] * F.lit(float(vals[i])) for i in range(dim)],
     )
 
 

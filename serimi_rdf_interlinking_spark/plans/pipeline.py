@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +30,7 @@ from ..config import SerimiConfig
 from ..extract import extract_triples, mentions_as_source_triples
 from ..matcher import SerimiMatcher
 from ..operators.graph import canonical_mapping
+from ..session import conf_override
 from ..sources.triples import OWL_SAMEAS, WIKI_REDIRECT
 
 
@@ -140,14 +140,10 @@ class KGPipeline:
         # shuffle of ~100 rows costs more in task scheduling than it
         # gains; on a real corpus cfg.shuffle_partitions carries the
         # cluster's parallelism. Restored after the run.
-        key = "spark.sql.shuffle.partitions"
-        saved = spark.conf.get(key, None)
-        spark.conf.set(key, str(self.cfg.shuffle_partitions))
-        try:
+        with conf_override(
+            spark, {"spark.sql.shuffle.partitions": str(self.cfg.shuffle_partitions)}
+        ):
             return self._run_stages(spark, pages, target, stop_after)
-        finally:
-            if saved is not None:
-                spark.conf.set(key, saved)
 
     def _run_stages(
         self,
@@ -388,8 +384,3 @@ def lsh_recovery_alignments(
         )
     )
 
-
-def elapsed(fn, *args, **kwargs):
-    t0 = time.time()
-    out = fn(*args, **kwargs)
-    return out, time.time() - t0

@@ -9,6 +9,8 @@ spark-submit. AQE is on so skewed candidate joins re-plan at runtime
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -47,3 +49,21 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_override(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the duration of a block. On exit, also on an
+    exception, each key gets its previous value back, or is unset again
+    if it was unset before."""
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import conf_override
+
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
 
@@ -148,12 +150,10 @@ def write_alignments_by_chunk(
     out = accepted.select(
         "chunk_id", _line_expr(fmt).alias("value")
     ).sortWithinPartitions("chunk_id", "value")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_override(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         out.write.mode("overwrite").partitionBy("chunk_id").text(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
 def read_gold_alignments(spark: SparkSession, path: str) -> DataFrame:

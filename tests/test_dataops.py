@@ -160,6 +160,16 @@ def test_cosine_topk_gemm_parity(embs):
         assert r.cos == pytest.approx(ex_cos[(r.query_id, r.neighbor_id)], abs=2e-6)
 
 
+def test_dot_builders_take_column_names_only(spark):
+    """dot_unrolled/dot_literal build their chains from column NAMES; a
+    Column argument (alone or mixed with a name) is a TypeError rather
+    than a silently malformed expression."""
+    for a, b in [(F.col("a"), F.col("b")), ("a", F.col("b")), (F.col("a"), "b")]:
+        with pytest.raises(TypeError):
+            S.dot_unrolled(a, b, 4)
+    with pytest.raises(TypeError):
+        S.dot_literal(F.col("a"), [1.0, 2.0], 2)
+
 def test_deterministic_split_properties(docs):
     """Splits are disjoint, exhaustive, repeatable, and roughly sized
     to their fractions; the same key always lands in the same split."""

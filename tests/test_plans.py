@@ -196,6 +196,7 @@ def test_matcher_kernel_is_arrow_not_row_python(spark, triple_dfs):
     from serimi_rdf_interlinking_spark.operators.rds import (
         CHUNK_OUTPUT_SCHEMA,
         make_chunk_kernel,
+        make_chunk_scorer,
     )
 
     src, _ = triple_dfs
@@ -209,7 +210,7 @@ def test_matcher_kernel_is_arrow_not_row_python(spark, triple_dfs):
         "o",
         "o_is_uri",
     )
-    kernel = make_chunk_kernel([], ())
+    kernel = make_chunk_kernel(make_chunk_scorer([], ()))
     df = rows.groupBy("chunk_id").applyInPandas(kernel, CHUNK_OUTPUT_SCHEMA)
     plan = _plan(df)
     assert "FlatMapGroupsInPandas" in plan

@@ -180,3 +180,100 @@ def test_score_chunk_pivots_stripped():
     rows = R.score_chunk(groups, origins, textp=[], pivot_groups=pivots)
     assert all(g == 0 for g, *_ in rows)
     assert {s for _g, s, *_ in rows} == {"t1", "t2"}
+
+
+# ---------------------------------------------------------------------------
+# the shared chunk path (operators/rds.py): parse -> F12 -> F13 -> RDS
+# ---------------------------------------------------------------------------
+
+CHUNK_COLS = ["chunk_id", "rank", "src", "role", "cand", "p", "o", "o_is_uri"]
+
+
+def _chunk_rows(retrieved):
+    """Rows of one chunk: per retrieved source, two homonym candidates
+    (the right one shares the origin's country), its origin pairs and
+    its searched label."""
+    rows = []
+    for rank, (src, name, country) in enumerate(retrieved):
+        rows += [
+            (7, rank, src, "kw", "", name, "", False),
+            (7, rank, src, "origin", "", "p:name", name, False),
+            (7, rank, src, "origin", "", "p:country", country, False),
+            (7, rank, src, "cand", f"t:{src}", "p:name", name, False),
+            (7, rank, src, "cand", f"t:{src}", "p:country", country, False),
+            (7, rank, src, "cand", f"t:{src}:x", "p:name", name, False),
+            (7, rank, src, "cand", f"t:{src}:x", "p:country", "atlantis", False),
+        ]
+    return rows
+
+
+def _unretrieved(rank):
+    # searched, but retrieval found nothing: kw + origin rows, no cand
+    return [
+        (7, rank, "s:none", "kw", "", "nowhere city", "", False),
+        (7, rank, "s:none", "origin", "", "p:name", "nowhere city", False),
+    ]
+
+
+def _score_rows(rows):
+    from pyspark.sql import Row
+
+    from serimi_rdf_interlinking_spark.operators import rds
+
+    chunk = rds.parse_chunk([Row(**dict(zip(CHUNK_COLS, r))) for r in rows])
+    return rds.make_chunk_scorer([], ())(chunk)[0]
+
+
+@pytest.mark.parametrize(
+    "retrieved",
+    [
+        [("s:tulsa", "tulsa", "us"), ("s:paris", "paris", "fr"),
+         ("s:lima", "lima", "pe")],
+        [("s:tulsa", "tulsa", "us")],
+    ],
+)
+def test_unretrieved_source_does_not_change_scores(retrieved):
+    """The shared parse keeps a searched-but-unretrieved source as an
+    empty group (the warm-up's discriminative predicates depend on it);
+    the kernel and sequential paths must score exactly as if it were
+    absent — F12 passes empty groups through and the keep step drops
+    them, and with at most one retrieved source nothing is emitted."""
+    base = _chunk_rows(retrieved)
+    without = _score_rows(base)
+    for rank in (0, len(retrieved)):  # before and after the others
+        shifted = [
+            (c, r + (r >= rank), *rest) for c, r, *rest in base
+        ]
+        assert _score_rows(shifted + _unretrieved(rank)) == without
+    if len(retrieved) > 1:
+        assert {(s, c) for s, c, _v, _t, a in without if a} == {
+            (s, f"t:{s}") for s, _n, _c in retrieved
+        }
+    else:
+        assert without == []
+
+
+def test_chunk_rows_and_pandas_frame_score_identically():
+    """The same chunk fed as Spark Rows (warm-up, sequential loop) and as
+    a pandas frame (the batch kernel) gives identical output rows."""
+    import pandas as pd
+
+    from serimi_rdf_interlinking_spark.operators import rds
+
+    rows = _chunk_rows(
+        [("s:tulsa", "tulsa", "us"), ("s:paris", "paris", "fr")]
+    ) + _unretrieved(2) + [
+        # F13: the paris homonym is a redirect alias
+        (7, 1, "s:paris", "rdir", "t:s:paris:x", "", "t:paris2", True),
+        (7, 1, "s:paris", "rdesc", "t:paris2", "p:name", "paris", False),
+        (7, 1, "s:paris", "rdesc", "t:paris2", "p:country", "fr", False),
+    ]
+    expected = [(7, *r) for r in _score_rows(rows)]
+    assert any(c == "t:paris2" for _k, _s, c, *_ in expected)
+
+    kernel = rds.make_chunk_kernel(rds.make_chunk_scorer([], ()))
+    got = kernel(pd.DataFrame(rows, columns=CHUNK_COLS))
+    assert list(got.itertuples(index=False, name=None)) == expected
+    assert list(got.columns) == [
+        "chunk_id", "src", "cand", "score", "threshold", "accepted"
+    ]

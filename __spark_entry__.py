@@ -76,6 +76,85 @@ def _session_state_width(spark: SparkSession, n_rows: int) -> int:
     return max(8, min(par, n_rows // 120_000))
 
 
+def _sessionize_replay(
+    spark: SparkSession,
+    sf_dir: str,
+    query: str,
+    write_events: Callable[[DataFrame, str, int, int], None],
+    watermark_delay: str,
+    max_files_per_trigger: int,
+) -> DataFrame:
+    """Flush-then-aggregate replay protocol of the two sessionize rows.
+
+    `write_events(ev, in_dir, lo, hi)` lays the projected events
+    (event_id, ts, user_id) out as the replay input, lo/hi being the
+    min/max event time in epoch seconds. A final file then adds one
+    far-future flush event PER USER: every real session gains a closing
+    successor and the watermark passes every real session end, so the
+    emitted sessions are EXACTLY the batch gap-rule sessions, and each
+    user's flush-started session stays open and is never emitted.
+    Aggregating the emitted sessions per user therefore reproduces the
+    batch (n_sessions, n_events) row for every user."""
+    from serimi_rdf_interlinking_spark.streaming.sessionize import (
+        stream_sessionize_event_time,
+    )
+
+    base = _stream_scratch(query, sf_dir)
+    # project to the columns the sessionizer touches (event_id, ts,
+    # user_id): every input column rides the replay write, the state
+    # operator's shuffle AND the Arrow boundary into the per-group
+    # pandas function — the dropped event_type/value/props payload is
+    # pure dead weight on all three. The emitted sessions are unchanged.
+    ev = _read(spark, sf_dir, "events").select(
+        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id"
+    )
+    bounds = ev.agg(
+        F.min(F.unix_timestamp("ts")).alias("lo"),
+        F.max(F.unix_timestamp("ts")).alias("hi"),
+        F.count("*").alias("n"),
+    ).collect()[0]
+    if bounds.lo is None:
+        return spark.createDataFrame(
+            [], "user_id long, n_sessions long, n_events long"
+        )
+    width = _session_state_width(spark, int(bounds.n))
+    write_events(ev, f"{base}/in", int(bounds.lo), int(bounds.hi))
+    flush = (
+        ev.select("user_id")
+        .distinct()
+        .select(
+            F.lit(-1).cast("long").alias("event_id"),
+            F.timestamp_seconds(F.lit(int(bounds.hi) + 86_400)).alias("ts"),
+            "user_id",
+        )
+    )
+    flush.coalesce(1).write.mode("append").parquet(f"{base}/in")
+    with conf_override(spark, {"spark.sql.shuffle.partitions": str(width)}):
+        # state keyed on 4*width hash buckets of user_id: the emitted
+        # session set is keying-independent (see
+        # make_bucketed_event_time_sessionizer), but the per-(group,
+        # micro-batch) Python dispatch — the measured wall of these
+        # replays — is one call per bucket instead of one per active
+        # user. Derived from the state width (itself input-derived),
+        # not a constant.
+        q = stream_sessionize_event_time(
+            spark, f"{base}/in", f"{base}/out", f"{base}/ckpt",
+            gap_seconds=3600.0, watermark_delay=watermark_delay,
+            max_files_per_trigger=max_files_per_trigger,
+            state_buckets=4 * width,
+        )
+        q.awaitTermination()
+    return (
+        spark.read.parquet(f"{base}/out")
+        .groupBy("user_id")
+        .agg(
+            F.count("*").alias("n_sessions"),
+            F.sum("n_events").alias("n_events"),
+        )
+        .orderBy("user_id")
+    )
+
+
 # The streaming replays run under conf_override(spark,
 # {"spark.sql.shuffle.partitions": ...}) to right-size the shuffle width.
 # Stateful streaming commits ONE state-store delta per shuffle partition
@@ -1793,90 +1872,35 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch sessionize oracle.
 
     Replay protocol: the events table lands time-ordered in one file
-    (so nothing is late for the watermark), then a second file adds one
-    far-future flush event PER USER — every real session gains a
-    closing successor and the watermark passes every real session end,
-    so the emitted sessions are EXACTLY the batch gap-rule sessions;
-    each user's flush-started session stays open and is never emitted.
-    Aggregating emitted sessions per user therefore reproduces the
-    batch (n_sessions, n_events) row for every user."""
+    (so nothing is late for the watermark), followed by the per-user
+    flush file of _sessionize_replay."""
 
-    from serimi_rdf_interlinking_spark.streaming.sessionize import (
-        stream_sessionize_event_time,
-    )
+    def write_ordered(ev: DataFrame, in_dir: str, lo: int, hi: int) -> None:
+        (
+            ev.repartition(1)
+            .sortWithinPartitions("ts", "event_id")
+            .write.mode("overwrite")
+            .parquet(in_dir)
+        )
 
-    base = _stream_scratch("sessionize", sf_dir)
-    # project to the columns the sessionizer touches (event_id, ts,
-    # user_id): every input column rides the replay write, the state
-    # operator's shuffle AND the Arrow boundary into the per-group
-    # pandas function — the dropped event_type/value/props payload is
-    # pure dead weight on all three (guide §4.1: pass only the columns
-    # the function needs). The emitted sessions are unchanged.
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id"
-    )
-    stats = ev.agg(
-        F.max(F.unix_timestamp("ts")).alias("m"), F.count("*").alias("n")
-    ).collect()[0]
-    max_ts = stats.m
-    if max_ts is None:
-        return spark.createDataFrame(
-            [], "user_id long, n_sessions long, n_events long"
-        )
-    width = _session_state_width(spark, int(stats.n))
-    (
-        ev.repartition(1)
-        .sortWithinPartitions("ts", "event_id")
-        .write.mode("overwrite")
-        .parquet(f"{base}/in")
-    )
-    flush = (
-        ev.select("user_id")
-        .distinct()
-        .select(
-            F.lit(-1).cast("long").alias("event_id"),
-            F.timestamp_seconds(F.lit(max_ts + 86_400)).alias("ts"),
-            "user_id",
-        )
-    )
-    flush.coalesce(1).write.mode("append").parquet(f"{base}/in")
-    with conf_override(spark, {"spark.sql.shuffle.partitions": str(width)}):
-        # state keyed on 4*width hash buckets of user_id: same emitted
-        # sessions (see make_bucketed_event_time_sessionizer), but the
-        # per-(group, micro-batch) Python dispatch — the measured wall
-        # of this replay — shrinks from one call per active user to one
-        # per bucket. Derived from the state width (itself input-
-        # derived), not a constant.
-        #
-        # Both files load in ONE micro-batch (max_files_per_trigger=2):
-        # the initial watermark is 0, so every event — ordered data and
-        # flush alike — buffers above it regardless of arrival batch,
-        # and the post-data timeout batch folds the buffer in event-time
-        # order and emits every closed session. The emitted set is
-        # identical to the old one-file-per-batch replay (verified
-        # hash-identical), one whole micro-batch boundary cheaper.
-        q = stream_sessionize_event_time(
-            spark, f"{base}/in", f"{base}/out", f"{base}/ckpt",
-            gap_seconds=3600.0, watermark_delay="10 minutes",
-            max_files_per_trigger=2, state_buckets=4 * width,
-        )
-        q.awaitTermination()
-    return (
-        spark.read.parquet(f"{base}/out")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.sum("n_events").alias("n_events"),
-        )
-        .orderBy("user_id")
+    # Both files load in ONE micro-batch (max_files_per_trigger=2): the
+    # initial watermark is 0, so every event — ordered data and flush
+    # alike — buffers above it regardless of arrival batch, and the
+    # post-data timeout batch folds the buffer in event-time order and
+    # emits every closed session. The emitted set is identical to a
+    # one-file-per-batch replay (verified hash-identical), one whole
+    # micro-batch boundary cheaper.
+    return _sessionize_replay(
+        spark, sf_dir, "sessionize", write_ordered,
+        watermark_delay="10 minutes", max_files_per_trigger=2,
     )
 
 
 def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fifth streaming correctness row — the stream-static enrichment
     join (streaming/ingest.py stream_enrich): events replayed
-    AvailableNow, LEFT joined per micro-batch to the broadcast
-    customer dimension, appended exactly-once; the sink is then
+    AvailableNow, LEFT joined per micro-batch to the customer
+    dimension, appended exactly-once; the sink is then
     batch-aggregated per (segment, event_type) and diffed against the
     plain batch join+aggregate oracle. Stateless streaming join, so no
     watermark/flush machinery is needed for finality."""
@@ -1929,121 +1953,73 @@ def q_stream_sessionize_ooo(spark: SparkSession, sf_dir: str) -> DataFrame:
     every deferred event stays above it (margin >= 600s covers
     sub-second parts): nothing is dropped, and by the sessionizer's
     divergence bound the emitted sessions are EXACTLY the batch
-    gap-rule sessions. A far-future
-    flush event per user closes the final watermark as in the ordered
-    row. Oracle: the SAME batch sessionize SQL."""
+    gap-rule sessions. The per-user flush file of _sessionize_replay
+    closes the final watermark as in the ordered row. Oracle: the SAME
+    batch sessionize SQL."""
     import glob
-
-    from serimi_rdf_interlinking_spark.streaming.sessionize import (
-        stream_sessionize_event_time,
-    )
-
-    base = _stream_scratch("sessionize_ooo", sf_dir)
-    # projected to (event_id, ts, user_id) — see q_stream_sessionize:
-    # the chunker, the state shuffle and the Arrow boundary all carry
-    # only what the sessionizer reads; emitted sessions unchanged
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id"
-    )
-    bounds = ev.agg(
-        F.min(F.unix_timestamp("ts")).alias("lo"),
-        F.max(F.unix_timestamp("ts")).alias("hi"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    if bounds.lo is None:
-        return spark.createDataFrame(
-            [], "user_id long, n_sessions long, n_events long"
-        )
-    width = _session_state_width(spark, int(bounds.n))
-    lo, hi = int(bounds.lo), int(bounds.hi)
-    span = max(hi - lo + 1, 4)
-    es = F.unix_timestamp("ts")
-    chunk = F.least(
-        F.lit(3), F.floor((es - F.lit(lo)) * 4 / F.lit(span))
-    ).cast("int")
-    nxt_b = F.lit(lo) + (chunk + 1) * F.lit(span) / F.lit(4.0)
-    defer = (
-        (chunk < 3)
-        & (F.pmod(F.xxhash64("event_id"), F.lit(5)) == 0)
-        & (es > nxt_b - 21000)
-        & (es <= nxt_b - 1250)
-    )
-    # materialize once: the per-chunk writes below each filter this
-    # frame — left lazy they would re-scan + re-tag the events table
-    # four times. (A widen_to_cluster before the checkpoint was
-    # measured SLOWER here — the round-robin shuffle + its
-    # sort-before-repartition cost more than the narrow scan-task
-    # checkpoint it parallelized.)
-    tagged = ev.withColumn(
-        "_chunk", F.when(defer, chunk + 1).otherwise(chunk)
-    ).localCheckpoint()
-    # the four chunk writes are independent single-task jobs over the
-    # same checkpointed frame — submit them CONCURRENTLY (guide §2.6:
-    # overlap independent jobs) into separate dirs (no output-committer
-    # races), then move the files into the stream dir with ascending
-    # mtimes = the replay order. Each file's row content and order are
-    # identical to the old sequential per-chunk writes; a one-job
-    # repartitionByRange+partitionBy variant measured SLOWER (the range
-    # exchange + global sort cost more than the four small sorts).
+    import time
     from concurrent.futures import ThreadPoolExecutor
 
-    def _write_chunk(c: int) -> None:
-        (
-            tagged.filter(F.col("_chunk") == c)
-            .drop("_chunk")
-            .repartition(1)
-            .sortWithinPartitions(F.md5(F.col("event_id").cast("string")))
-            .write.mode("overwrite")
-            .parquet(f"{base}/chunks/c{c}")
+    def write_chunks(ev: DataFrame, in_dir: str, lo: int, hi: int) -> None:
+        span = max(hi - lo + 1, 4)
+        es = F.unix_timestamp("ts")
+        chunk = F.least(
+            F.lit(3), F.floor((es - F.lit(lo)) * 4 / F.lit(span))
+        ).cast("int")
+        nxt_b = F.lit(lo) + (chunk + 1) * F.lit(span) / F.lit(4.0)
+        defer = (
+            (chunk < 3)
+            & (F.pmod(F.xxhash64("event_id"), F.lit(5)) == 0)
+            & (es > nxt_b - 21000)
+            & (es <= nxt_b - 1250)
         )
+        # materialize once: the per-chunk writes below each filter this
+        # frame — left lazy they would re-scan + re-tag the events table
+        # four times. (A widen_to_cluster before the checkpoint was
+        # measured SLOWER here — the round-robin shuffle + its
+        # sort-before-repartition cost more than the narrow scan-task
+        # checkpoint it parallelized.)
+        tagged = ev.withColumn(
+            "_chunk", F.when(defer, chunk + 1).otherwise(chunk)
+        ).localCheckpoint()
+        chunks_dir = os.path.join(os.path.dirname(in_dir), "chunks")
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        list(pool.map(_write_chunk, range(4)))
-    os.makedirs(f"{base}/in", exist_ok=True)
-    import time as _time
+        # the four chunk writes are independent single-task jobs over
+        # the same checkpointed frame — submit them CONCURRENTLY into
+        # separate dirs (no output-committer races), then move the
+        # files into the stream dir with ascending mtimes = the replay
+        # order. Each file's row content and order are identical to
+        # sequential per-chunk writes; a one-job
+        # repartitionByRange+partitionBy variant measured SLOWER (the
+        # range exchange + global sort cost more than the four small
+        # sorts).
+        def write_chunk(c: int) -> None:
+            (
+                tagged.filter(F.col("_chunk") == c)
+                .drop("_chunk")
+                .repartition(1)
+                .sortWithinPartitions(F.md5(F.col("event_id").cast("string")))
+                .write.mode("overwrite")
+                .parquet(f"{chunks_dir}/c{c}")
+            )
 
-    seen: set = set()
-    mtime = _time.time()
-    for c in range(4):
-        files = sorted(glob.glob(f"{base}/chunks/c{c}/*.parquet"))
-        mtime += 2
-        for i, src in enumerate(files):
-            dst = f"{base}/in/chunk{c}_{i}.parquet"
-            os.replace(src, dst)
-            os.utime(dst, (mtime, mtime))
-            seen.add(dst)
-    flush = (
-        ev.select("user_id")
-        .distinct()
-        .select(
-            F.lit(-1).cast("long").alias("event_id"),
-            F.timestamp_seconds(F.lit(hi + 86_400)).alias("ts"),
-            "user_id",
-        )
-    )
-    flush.coalesce(1).write.mode("append").parquet(f"{base}/in")
-    mtime += 2
-    for p in set(glob.glob(f"{base}/in/*.parquet")) - seen:
-        os.utime(p, (mtime, mtime))
-    with conf_override(spark, {"spark.sql.shuffle.partitions": str(width)}):
-        # bucketed state keys — see q_stream_sessionize; the emitted
-        # session set is keying-independent (folds are monotone under
-        # the global watermark), which the ooo parity test asserts
-        # against the batch oracle
-        q = stream_sessionize_event_time(
-            spark, f"{base}/in", f"{base}/out", f"{base}/ckpt",
-            gap_seconds=3600.0, watermark_delay="6 hours",
-            max_files_per_trigger=1, state_buckets=4 * width,
-        )
-        q.awaitTermination()
-    return (
-        spark.read.parquet(f"{base}/out")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_sessions"),
-            F.sum("n_events").alias("n_events"),
-        )
-        .orderBy("user_id")
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            list(pool.map(write_chunk, range(4)))
+        os.makedirs(in_dir, exist_ok=True)
+        # mtimes in the past, 2s apart: the flush file written after
+        # this returns is stamped now, so it replays last
+        mtime = time.time() - 10
+        for c in range(4):
+            mtime += 2
+            files = sorted(glob.glob(f"{chunks_dir}/c{c}/*.parquet"))
+            for i, src in enumerate(files):
+                dst = f"{in_dir}/chunk{c}_{i}.parquet"
+                os.replace(src, dst)
+                os.utime(dst, (mtime, mtime))
+
+    return _sessionize_replay(
+        spark, sf_dir, "sessionize_ooo", write_chunks,
+        watermark_delay="6 hours", max_files_per_trigger=1,
     )
 
 

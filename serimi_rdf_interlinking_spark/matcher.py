@@ -564,11 +564,9 @@ class SerimiMatcher:
         target: DataFrame,
         class_uri: str,
     ) -> MatchResult:
-        import os
         import time
 
         cfg = self.cfg
-        timing = os.environ.get("SERIMI_TIMING") == "1"
         t0 = time.time()
         # per-stage wall times of the last run (bench_scaling reads
         # these to separate the O(1) driver warm-up from the
@@ -577,10 +575,7 @@ class SerimiMatcher:
 
         def tick(label: str) -> None:
             nonlocal t0
-            dt = time.time() - t0
-            self.last_timings[label] = round(dt, 3)
-            if timing:
-                print(f"[serimi {label}: {dt:.1f}s]", flush=True)
+            self.last_timings[label] = round(time.time() - t0, 3)
             t0 = time.time()
 
         members = class_members(source, class_uri)

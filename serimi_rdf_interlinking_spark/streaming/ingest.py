@@ -168,15 +168,15 @@ def stream_enrich(
     joined to a bounded dimension frame per micro-batch, appended
     exactly-once to the sink.
 
-    Stateless (no watermark, no stream-stream buffering): the static
-    side is broadcast, so each micro-batch is one map-side hash join —
-    the scale-correct shape for dimension enrichment at ingestion time
+    Stateless (no watermark, no stream-stream buffering). The planner
+    picks the join strategy from the static side's size estimate: a
+    dimension under spark.sql.autoBroadcastJoinThreshold is broadcast,
+    so each micro-batch is one map-side hash join, and a larger one is
+    sort-merge joined instead of being shipped whole to every executor
     (the static side is re-resolved per batch, which is also what
     gives slowly-changing dimensions their freshness). Returns the
     StreamingQuery.
     """
-    from pyspark.sql import functions as F
-
     if schema is None:
         schema = spark.read.parquet(events_dir).schema
     stream = (
@@ -185,9 +185,7 @@ def stream_enrich(
         .parquet(events_dir)
     )
     enriched = stream.join(
-        F.broadcast(dim_df),
-        stream[stream_key] == dim_df[dim_key],
-        "left",
+        dim_df, stream[stream_key] == dim_df[dim_key], "left"
     ).drop(dim_key)
     return (
         enriched.writeStream.outputMode("append")

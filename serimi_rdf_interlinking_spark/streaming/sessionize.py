@@ -1,28 +1,21 @@
-"""Custom stateful streaming operator: per-user sessionization with
-applyInPandasWithState.
+"""Custom stateful streaming operator: watermarked event-time
+sessionization with applyInPandasWithState.
 
 The batch analogue is __spark_entry__.q_sessionize (lag + gap cumsum;
-DuckDB-oracled). This is the streaming form a crawl/event pipeline
-needs at scale: state is one small record per user (current session's
-start, last-seen timestamp, event count, session counter), grouped by
-user_id so state shards across executors with the shuffle; processing-
-time timeouts close sessions when a user goes quiet.
+DuckDB-oracled). A new session starts when the gap to the user's
+previous event exceeds `gap` seconds. The operator emits one row per
+CLOSED session: (user_id, session_id, n_events, start_us, end_us).
 
-Semantics (mirrors the batch query): a new session starts when the gap
-to the previous event exceeds `gap` seconds. Emits one row per CLOSED
-session: (user_id, session_id, n_events, start_ts, end_ts). Sessions
-still open when a timeout fires are emitted by the timeout branch;
-with Trigger.AvailableNow + a final timeout pass, batch parity holds
-for session COUNTS per user.
-
-Scale notes: state size is O(active users), not O(events); the only
-shuffle is the groupBy(user_id) hash partitioning; per-group work is a
-bounded pandas loop over that user's micro-batch events (sorted by
-event time). Event-time ordering within a user is guaranteed only
-per micro-batch — late cross-batch events belong to watermarked
-event-time processing; here the gap rule matches the reference-style
-batch query, which assumes ordered replay (AvailableNow over immutable
-files delivers that in file order).
+State is keyed on a hash bucket of user_id, so one state record and one
+Python group call cover every user in the bucket. Events newer than the
+current watermark are buffered in state (a straggler may still precede
+them); events at or below it are final and fold into the gap rule in
+event-time order. An event-time timeout closes a user's open session
+once the watermark passes its end plus the gap. The only divergence
+from the batch query is that events later than the watermark delay are
+dropped by Spark's late filter; within the delay the emitted sessions
+are the batch sessions, minus each user's session still open when the
+stream stops.
 """
 
 from __future__ import annotations
@@ -31,255 +24,10 @@ from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
 
-SESSION_STATE_SCHEMA = (
-    "session_id LONG, start_us LONG, last_us LONG, n_events LONG"
-)
 SESSION_OUTPUT_SCHEMA = (
     "user_id LONG, session_id LONG, n_events LONG, start_us LONG, "
     "end_us LONG"
 )
-
-
-def make_sessionizer(
-    gap_seconds: float = 3600.0, timeout_ms: int | None = 30000
-):
-    """Builds the applyInPandasWithState function. gap_seconds is the
-    inactivity threshold that starts a new session (batch analogue's
-    `> 3600`), compared on microsecond-precision epochs (the round-1
-    sessionize lesson: whole-second truncation diverges).
-
-    timeout_ms None = NoTimeout: only gap-closed sessions are emitted
-    and open sessions stay in state (deterministic — used by the parity
-    test). With a processing-time timeout, quiet users' open sessions
-    flush through the hasTimedOut branch; under Trigger.AvailableNow
-    that flush races query termination, so continuous triggers are the
-    mode where the timeout is meaningful."""
-    gap_us = int(gap_seconds * 1_000_000)
-
-    def sessionize(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state,
-    ) -> Iterator[pd.DataFrame]:
-        user_id = int(key[0])
-        if state.hasTimedOut:
-            if state.exists:
-                session_id, start_us, last_us, n_events = state.get
-                state.remove()
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id],
-                        "session_id": [session_id],
-                        "n_events": [n_events],
-                        "start_us": [start_us],
-                        "end_us": [last_us],
-                    }
-                )
-            return
-
-        if state.exists:
-            session_id, start_us, last_us, n_events = state.get
-        else:
-            session_id, start_us, last_us, n_events = 0, None, None, 0
-
-        closed: list[tuple[int, int, int, int]] = []
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            # microsecond epoch; sort by event time then id for
-            # deterministic per-batch replay. Normalize to ns first:
-            # a datetime64[us]-unit series would otherwise make
-            # .astype(int64) yield microseconds and the //1000 shift
-            # units silently.
-            us = (
-                pd.to_datetime(pdf["ts"])
-                .astype("datetime64[ns]")
-                .astype("int64")
-                // 1000
-            ).to_numpy()
-            order = pdf.assign(_us=us).sort_values(["_us", "event_id"])
-            for t in order["_us"].to_numpy():
-                t = int(t)
-                if start_us is None:
-                    session_id += 1
-                    start_us, last_us, n_events = t, t, 1
-                elif t - last_us > gap_us:
-                    closed.append((session_id, start_us, last_us, n_events))
-                    session_id += 1
-                    start_us, last_us, n_events = t, t, 1
-                else:
-                    last_us = t
-                    n_events += 1
-
-        state.update((session_id, start_us, last_us, n_events))
-        if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id] * len(closed),
-                    "session_id": [c[0] for c in closed],
-                    "n_events": [c[3] for c in closed],
-                    "start_us": [c[1] for c in closed],
-                    "end_us": [c[2] for c in closed],
-                }
-            )
-
-    return sessionize
-
-
-EVENT_STATE_SCHEMA = (
-    "session_id LONG, start_us LONG, last_us LONG, n_events LONG, "
-    "buf_us ARRAY<LONG>, buf_id ARRAY<LONG>"
-)
-
-
-def make_event_time_sessionizer(gap_seconds: float = 3600.0):
-    """Watermarked EVENT-TIME sessionizer: correct under out-of-order
-    and cross-micro-batch arrival, bounded by the watermark delay.
-
-    Mechanics: events newer than the current watermark are BUFFERED in
-    state (they may still be preceded by a straggler); events at or
-    below the watermark are final — no earlier-or-equal event can
-    arrive (Spark's late filter drops input with ts <= the current
-    watermark before the stateful operator) — so they fold into the
-    gap logic in event-time order.
-    An event-time timeout at last_us + gap closes a session once the
-    watermark proves no extender can come. Divergence bound vs the
-    batch query: ONLY events later than the watermark delay are
-    dropped; within the delay, emitted sessions are identical to the
-    batch lag+cumsum query (asserted by the cross-batch out-of-order
-    parity test). State is O(active users + buffered late window),
-    sharded by the groupBy(user_id) shuffle."""
-    import numpy as np
-
-    gap_us = int(gap_seconds * 1_000_000)
-    _empty = np.empty(0, dtype=np.int64)
-
-    def sessionize(
-        key: Tuple[Any, ...],
-        pdfs: Iterable[pd.DataFrame],
-        state,
-    ) -> Iterator[pd.DataFrame]:
-        # Vectorized form of the original per-event fold (new session
-        # when the gap to the previous event exceeds gap_us): the fold
-        # over watermark-safe events is segment arithmetic over the
-        # sorted timestamp array — identical session ids, bounds and
-        # counts, without a per-event Python loop. The per-(group,
-        # micro-batch) call count is fixed by the operator contract, so
-        # the per-call constant is the optimization axis here.
-        user_id = int(key[0])
-        if state.exists:
-            session_id, start_us, last_us, n_events, sb_us, sb_id = state.get
-            bu = np.asarray(sb_us if sb_us is not None else (), dtype=np.int64)
-            bi = np.asarray(sb_id if sb_id is not None else (), dtype=np.int64)
-        else:
-            session_id, start_us, last_us, n_events = 0, None, None, 0
-            bu = bi = _empty
-
-        if not state.hasTimedOut:
-            parts_u, parts_i = [bu], [bi]
-            for pdf in pdfs:
-                if len(pdf):
-                    ts = pdf["ts"].to_numpy()
-                    parts_u.append(
-                        ts.astype("datetime64[ns]").view("int64") // 1000
-                    )
-                    parts_i.append(
-                        pdf["event_id"].to_numpy().astype(np.int64)
-                    )
-            if len(parts_u) > 1:
-                bu = np.concatenate(parts_u)
-                bi = np.concatenate(parts_i)
-
-        wm_us = state.getCurrentWatermarkMs() * 1000
-        if len(bu):
-            # the original buffered (t, id) tuples and list.sort()ed
-            # them — lexsort on (id, t) reproduces that order exactly
-            order = np.lexsort((bi, bu))
-            bu = bu[order]
-            bi = bi[order]
-            n_safe = int(np.searchsorted(bu, wm_us, side="right"))
-        else:
-            n_safe = 0
-
-        closed: list[tuple[int, int, int, int]] = []
-        if n_safe:
-            t = bu[:n_safe]
-            isnew = np.empty(n_safe, dtype=bool)
-            isnew[0] = (start_us is None) or (int(t[0]) - last_us > gap_us)
-            if n_safe > 1:
-                np.greater(t[1:] - t[:-1], gap_us, out=isnew[1:])
-            starts = np.flatnonzero(isnew)
-            if len(starts) == 0:
-                # every safe event extends the open session
-                last_us = int(t[-1])
-                n_events += n_safe
-            else:
-                first = int(starts[0])
-                if start_us is not None:
-                    if first > 0:
-                        # head events extend the open session before
-                        # the first boundary closes it
-                        last_us = int(t[first - 1])
-                        n_events += first
-                    closed.append((session_id, start_us, last_us, n_events))
-                bounds = np.append(starts, n_safe)
-                for j in range(len(starts)):
-                    s, e = int(bounds[j]), int(bounds[j + 1])
-                    session_id += 1
-                    start_us, last_us, n_events = int(t[s]), int(t[e - 1]), e - s
-                    if j < len(starts) - 1:
-                        closed.append(
-                            (session_id, start_us, last_us, n_events)
-                        )
-        # close the open session once the watermark proves no extender
-        # can arrive: every future event (including anything still
-        # buffered) is > wm > last + gap, so it would START a new
-        # session, never extend this one
-        if last_us is not None and wm_us > last_us + gap_us:
-            closed.append((session_id, start_us, last_us, n_events))
-            start_us, last_us, n_events = None, None, 0
-
-        rb_u, rb_i = bu[n_safe:], bi[n_safe:]
-        if last_us is None and not len(rb_u):
-            if state.exists:
-                state.remove()
-        else:
-            state.update(
-                (
-                    session_id,
-                    start_us,
-                    last_us,
-                    n_events,
-                    rb_u.tolist(),
-                    rb_i.tolist(),
-                )
-            )
-            # wake up when the open session becomes closeable, or when
-            # buffered events become safe to fold
-            nxt = None
-            if last_us is not None:
-                nxt = last_us + gap_us
-            if len(rb_u):
-                first_buf = int(rb_u[0])
-                nxt = first_buf if nxt is None else min(nxt, first_buf)
-            if nxt is not None:
-                # timeout timestamps must be > current watermark
-                state.setTimeoutTimestamp(max(nxt // 1000 + 1, wm_us // 1000 + 1))
-        if closed:
-            arr = np.asarray(closed, dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "user_id": np.full(len(closed), user_id, dtype=np.int64),
-                    "session_id": arr[:, 0],
-                    "n_events": arr[:, 3],
-                    "start_us": arr[:, 1],
-                    "end_us": arr[:, 2],
-                }
-            )
-
-    return sessionize
 
 
 BUCKET_EVENT_STATE_SCHEMA = (
@@ -289,31 +37,31 @@ BUCKET_EVENT_STATE_SCHEMA = (
 
 
 def make_bucketed_event_time_sessionizer(gap_seconds: float = 3600.0):
-    """Key-group variant of make_event_time_sessionizer: state is keyed
-    on a HASH BUCKET of user_id instead of the user itself, so one
-    applyInPandasWithState group call (and one state ser/de round-trip)
-    covers ~n_users/n_buckets users per micro-batch instead of one.
-    The per-(group, micro-batch) Python dispatch is the measured wall
-    of the sessionize replays (the framework charges a fixed ~0.3 ms
-    per group call for Arrow setup + state codec, regardless of how
-    few rows the group carries), and the per-user session math is
-    unchanged — the same watermark-safe fold, run per user inside the
-    bucket.
+    """Builds the applyInPandasWithState function. State is keyed on a
+    HASH BUCKET of user_id, so one group call (and one state ser/de
+    round-trip) covers ~n_users/n_buckets users per micro-batch instead
+    of one. The per-(group, micro-batch) Python dispatch is the measured
+    wall of the sessionize replays (the framework charges a fixed
+    ~0.3 ms per group call for Arrow setup + state codec, regardless of
+    how few rows the group carries); inside the bucket the session math
+    runs per user. gap_seconds is compared on microsecond-precision
+    epochs (whole-second truncation diverges from the batch query).
 
-    Emission parity with the per-user operator: Spark's late-row
-    filter (ts <= watermark drops before the operator) and the global
-    watermark are key-independent, so every event folds under the same
-    safety rule in both keyings; folds are MONOTONE (an event folded
-    later always has a later timestamp than every event folded
-    earlier, because late arrivals below the fold watermark never
-    reach the operator), so folding a user's stream in bucket-paced
-    increments yields byte-identical sessions to user-paced
-    increments. Sessions may EMIT in an earlier micro-batch (a bucket
-    is invoked whenever ANY of its users has data, which can fold a
-    quiet co-bucketed user's now-safe buffer sooner than that user's
-    own timeout would have), but the emitted session SET is identical,
-    which is the operator's contract (append-mode sinks are
-    order-free).
+    Why bucket keying emits the same sessions as keying state on the
+    user itself: Spark's late-row filter (ts <= watermark drops before
+    the operator) and the global watermark are key-independent, so
+    every event folds under the same safety rule in both keyings; folds
+    are MONOTONE (an event folded later always has a later timestamp
+    than every event folded earlier, because late arrivals below the
+    fold watermark never reach the operator), so folding a user's
+    stream in bucket-paced increments yields byte-identical sessions to
+    user-paced increments. Sessions may EMIT in an earlier micro-batch
+    (a bucket is invoked whenever ANY of its users has data, which can
+    fold a quiet co-bucketed user's now-safe buffer sooner than that
+    user's own timeout would have), but the emitted session SET is
+    identical, which is the operator's contract (append-mode sinks are
+    order-free). The same argument makes the set independent of the
+    bucket count.
 
     State layout: parallel arrays over the bucket's users (open
     sessions; sst == -1 encodes "no open session") plus the
@@ -364,8 +112,8 @@ def make_bucketed_event_time_sessionizer(gap_seconds: float = 3600.0):
                     )
         wm_us = state.getCurrentWatermarkMs() * 1000
 
-        # user-major, then (t, id): per user this is exactly the
-        # per-user operator's lexsort((id, t)) order
+        # user-major, then (t, id): each user's events fold in
+        # event-time order, ties broken by event_id
         if b_u:
             order = np.lexsort(
                 (np.asarray(b_i), np.asarray(b_t), np.asarray(b_u))
@@ -381,7 +129,6 @@ def make_bucketed_event_time_sessionizer(gap_seconds: float = 3600.0):
         touched: set = set()
 
         def fold_user(u: int, evs_t: list, evs_i: list) -> None:
-            # identical per-user math to make_event_time_sessionizer:
             # safe events (t <= wm) fold with the gap rule; the open
             # session closes once the watermark proves no extender can
             # arrive; the above-watermark remainder re-buffers
@@ -491,20 +238,20 @@ def stream_sessionize_event_time(
     watermark_delay: str = "10 minutes",
     schema=None,
     max_files_per_trigger: int = 1,
-    state_buckets: int | None = None,
+    *,
+    state_buckets: int,
 ):
-    """Event-time variant: readStream → withWatermark(ts) →
-    groupBy(user_id) applyInPandasWithState(EventTimeTimeout) → append
+    """readStream → withWatermark(ts) → groupBy(pmod(xxhash64(user_id),
+    state_buckets)) applyInPandasWithState(EventTimeTimeout) → append
     sink. Late events beyond `watermark_delay` are dropped (the
     documented divergence bound); everything else matches the batch
     sessionize query. Returns the StreamingQuery.
 
-    ``state_buckets``: when set, state is keyed on
-    pmod(xxhash64(user_id), state_buckets) hash buckets instead of the
-    raw user_id (see make_bucketed_event_time_sessionizer) — same
-    emitted sessions, ~n_users/state_buckets fewer Python group calls
-    per micro-batch. Derive it from input scale (e.g. a small multiple
-    of the state-store width), never a constant."""
+    ``state_buckets`` sets how many hash buckets key the state (see
+    make_bucketed_event_time_sessionizer): the emitted sessions do not
+    depend on it, the number of Python group calls per micro-batch
+    does. Derive it from input scale (e.g. a small multiple of the
+    state-store width), never a constant."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -516,69 +263,15 @@ def stream_sessionize_event_time(
         .parquet(events_dir)
         .withWatermark("ts", watermark_delay)
     )
-    if state_buckets is not None:
-        keyed = stream.withColumn(
-            "_bucket",
-            F.pmod(F.xxhash64("user_id"), F.lit(int(state_buckets))),
-        )
-        sessions = keyed.groupBy("_bucket").applyInPandasWithState(
-            make_bucketed_event_time_sessionizer(gap_seconds),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=BUCKET_EVENT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    else:
-        sessions = stream.groupBy("user_id").applyInPandasWithState(
-            make_event_time_sessionizer(gap_seconds),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=EVENT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    keyed = stream.withColumn(
+        "_bucket", F.pmod(F.xxhash64("user_id"), F.lit(int(state_buckets)))
     )
-
-
-def stream_sessionize(
-    spark,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap_seconds: float = 3600.0,
-    schema=None,
-    timeout_ms: int | None = 30000,
-):
-    """readStream(events parquet) → groupBy(user_id)
-    applyInPandasWithState → append sink. Returns the StreamingQuery."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    if schema is None:
-        schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(events_dir)
-    )
-    sessions = (
-        stream.groupBy("user_id")
-        .applyInPandasWithState(
-            make_sessionizer(gap_seconds, timeout_ms),
-            outputStructType=SESSION_OUTPUT_SCHEMA,
-            stateStructType=SESSION_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=(
-                GroupStateTimeout.NoTimeout
-                if timeout_ms is None
-                else GroupStateTimeout.ProcessingTimeTimeout
-            ),
-        )
+    sessions = keyed.groupBy("_bucket").applyInPandasWithState(
+        make_bucketed_event_time_sessionizer(gap_seconds),
+        outputStructType=SESSION_OUTPUT_SCHEMA,
+        stateStructType=BUCKET_EVENT_STATE_SCHEMA,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
     return (
         sessions.writeStream.outputMode("append")

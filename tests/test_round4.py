@@ -294,20 +294,6 @@ def test_pinned_oracle_doubles_are_bit_exact(spark, duck_con):
         assert struct.pack("<d", a) == struct.pack("<d", b), (a, b)
 
 
-def test_stream_time_buckets_empty_events(spark, tmp_path):
-    """An empty events table must yield an empty result (the batch
-    aggregate is empty), not a TypeError from the sentinel math."""
-    import __spark_entry__ as E
-
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    spark.createDataFrame([], ev.schema).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
-    out = E.q_stream_time_buckets(spark, str(tmp_path))
-    assert out.count() == 0
-    assert out.columns == ["bucket", "event_type", "n", "v"]
-
-
 def test_ivf_lloyd_plan_is_dim_independent(spark):
     """At 512 dims the refinement plan must NOT carry one aggregate
     column per dimension (plan bloat / codegen overrun at 1k+ dims):

@@ -1,36 +1,21 @@
 """Custom stateful streaming operator (applyInPandasWithState):
-per-user sessionization parity with the batch/oracle semantics.
+bucketed event-time sessionization parity with the batch/oracle
+semantics.
 
 The stream emits CLOSED sessions; each user's final session stays open
 in state when an AvailableNow run terminates, so expected output =
 every session except each user's last — computed here independently in
-pandas from the same events.
+pandas from the same events. Real-data parity of the declared replays
+is checked by the stream_sessionize rows of test_oracle_compare.py.
 """
 
 import pandas as pd
 import pytest
 
 
-@pytest.fixture(scope="module")
-def ordered_events(spark, tmp_path_factory):
-    """Events re-written time-ordered in one file: AvailableNow replays
-    files in order, and the gap rule (like the reference-style batch
-    query) assumes ordered replay; late-data handling is the
-    watermarked variant's job."""
-    src = "/root/testdata/sf0.001/events.parquet"
-    out = str(tmp_path_factory.mktemp("events_ordered") / "ev")
-    (
-        spark.read.parquet(src)
-        .repartition(1)
-        .sortWithinPartitions("ts", "event_id")
-        .write.mode("overwrite")
-        .parquet(out)
-    )
-    return out
-
-
-def _expected_closed(pdf: pd.DataFrame, gap_us: int):
-    """All sessions except each user's last, by the batch gap rule."""
+def _expected_closed(pdf: pd.DataFrame, gap_us: int, last_closed=False):
+    """All sessions by the batch gap rule, except each user's last
+    unless ``last_closed``."""
     rows = []
     for uid, g in pdf.sort_values(["user_id", "us", "event_id"]).groupby(
         "user_id"
@@ -50,44 +35,33 @@ def _expected_closed(pdf: pd.DataFrame, gap_us: int):
                 start, last, n = t, t, 1
             else:
                 last, n = t, n + 1
-        rows.extend(sessions)  # final (open) session excluded
+        if last_closed:
+            sessions.append((uid, sid, n, start, last))
+        rows.extend(sessions)
     return sorted(rows)
 
 
-def test_stream_sessionize_matches_batch_rule(spark, ordered_events, tmp_path):
-    from serimi_rdf_interlinking_spark.streaming.sessionize import (
-        stream_sessionize,
-    )
+def _assert_bucket_occupancy(spark, ev_dir, state_buckets):
+    """2 buckets must put at least two users in one bucket, 64 buckets
+    every user alone, by the operator's own pmod(xxhash64(user_id), n)
+    keying over the input."""
+    from pyspark.sql import functions as F
 
-    out = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-    # NoTimeout: emissions are exactly the gap-closed sessions, so the
-    # comparison below is deterministic (a processing-time timeout
-    # would race AvailableNow termination and flush open sessions
-    # nondeterministically).
-    q = stream_sessionize(
-        spark, ordered_events, out, ckpt, gap_seconds=3600.0,
-        timeout_ms=None,
-    )
-    assert q.awaitTermination(300), "stream did not terminate in 300s"
-
-    got = sorted(
-        (
-            int(r.user_id), int(r.session_id), int(r.n_events),
-            int(r.start_us), int(r.end_us),
-        )
-        for r in spark.read.parquet(out).collect()
-    )
-
-    ev = spark.read.parquet(ordered_events).toPandas()
-    ev["us"] = pd.to_datetime(ev["ts"]).astype("int64") // 1000
-    expected = _expected_closed(ev, gap_us=3600 * 1_000_000)
-
-    assert len(expected) > 0  # fixture genuinely has multi-session users
-    assert got == expected
+    users_per_bucket = [
+        r.n
+        for r in spark.read.parquet(ev_dir)
+        .select("user_id").distinct()
+        .groupBy(F.pmod(F.xxhash64("user_id"), F.lit(state_buckets)))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+    if state_buckets == 2:
+        assert max(users_per_bucket) >= 2
+    else:
+        assert max(users_per_bucket) == 1
 
 
-@pytest.mark.parametrize("state_buckets", [None, 2])
+@pytest.mark.parametrize("state_buckets", [2, 64])
 def test_event_time_sessionize_out_of_order_cross_batch(
     spark, tmp_path, state_buckets
 ):
@@ -97,9 +71,9 @@ def test_event_time_sessionize_out_of_order_cross_batch(
     sessions equal the batch lag+cumsum rule on the union of both
     files, minus each user's final (still-open) session.
 
-    Parametrized over the round-6 bucketed state keying (2 buckets for
-    3 users forces multi-user buckets): the emitted session SET must be
-    keying-independent."""
+    Parametrized over the state bucket count (2 buckets put both users
+    in one bucket, 64 give each user its own): the emitted session SET
+    must not depend on it."""
     import time
 
     import pandas as pd
@@ -111,27 +85,28 @@ def test_event_time_sessionize_out_of_order_cross_batch(
     ev_dir = str(tmp_path / "events")
     sec = lambda s: pd.Timestamp(s * 1_000_000_000)
 
-    # batch 1: user 1 at 10s, 100s, then 10_000s (a later session);
+    # batch 1: user 3 at 10s, 100s, then 10_000s (a later session);
     # user 2 at 50s. max ts -> watermark after batch 1 = 10_000s - delay.
     # (t=0 would be dropped: Spark's late filter discards ts <= the
     # current watermark, and the initial watermark is epoch 0.)
+    # Users 2 and 3 hash to the same bucket of 2; users 1 and 2 do not.
     f1 = pd.DataFrame(
         {
             "event_id": [1, 2, 3, 4],
-            "user_id": [1, 1, 1, 2],
+            "user_id": [3, 3, 3, 2],
             "ts": [sec(10), sec(100), sec(10_000), sec(50)],
             "event_type": ["a"] * 4,
             "value": [1.0] * 4,
         }
     )
-    # batch 2: user 1's out-of-order straggler at 9_200s (< 10_000s seen
+    # batch 2: user 3's out-of-order straggler at 9_200s (< 10_000s seen
     # in batch 1, but above the 8_200s watermark -> must be kept and
     # folded BEFORE the 10_000s event), plus far-future flush events
     # that push the watermark past every real session.
     f2 = pd.DataFrame(
         {
             "event_id": [5, 6, 7],
-            "user_id": [1, 1, 2],
+            "user_id": [3, 3, 2],
             "ts": [sec(9_200), sec(100_000), sec(100_000)],
             "event_type": ["a"] * 3,
             "value": [1.0] * 3,
@@ -140,6 +115,7 @@ def test_event_time_sessionize_out_of_order_cross_batch(
     spark.createDataFrame(f1).coalesce(1).write.mode("append").parquet(ev_dir)
     time.sleep(1.1)  # distinct mtimes => deterministic file order
     spark.createDataFrame(f2).coalesce(1).write.mode("append").parquet(ev_dir)
+    _assert_bucket_occupancy(spark, ev_dir, state_buckets)
 
     out = str(tmp_path / "sessions")
     q = stream_sessionize_event_time(
@@ -158,9 +134,9 @@ def test_event_time_sessionize_out_of_order_cross_batch(
     )
     s = 1_000_000  # seconds -> microseconds
     assert got == [
-        (1, 1, 2, 10 * s, 100 * s),         # {10,100}
-        (1, 2, 2, 9_200 * s, 10_000 * s),   # straggler folded in order
         (2, 1, 1, 50 * s, 50 * s),
+        (3, 1, 2, 10 * s, 100 * s),         # {10,100}
+        (3, 2, 2, 9_200 * s, 10_000 * s),   # straggler folded in order
     ]
     # cross-check against the shared batch-rule helper on the union
     ev = spark.read.parquet(ev_dir).toPandas()
@@ -168,7 +144,7 @@ def test_event_time_sessionize_out_of_order_cross_batch(
     assert got == _expected_closed(ev, gap_us=3600 * 1_000_000)
 
 
-@pytest.mark.parametrize("state_buckets", [None, 2])
+@pytest.mark.parametrize("state_buckets", [2, 64])
 def test_event_time_sessionize_randomized_parity(
     spark, tmp_path, state_buckets
 ):
@@ -177,8 +153,8 @@ def test_event_time_sessionize_randomized_parity(
     well inside the 2-hour watermark delay), plus far-future flush
     events. Emitted sessions must equal the batch gap rule minus each
     user's final (open, flush-started) session. Parametrized over the
-    round-6 bucketed state keying (multi-user buckets at 2 buckets /
-    3 users): same emitted set."""
+    state bucket count (a multi-user bucket at 2, one user per bucket
+    at 64): same emitted set."""
     import random
     import time
 
@@ -222,6 +198,7 @@ def test_event_time_sessionize_randomized_parity(
         )
         spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(ev_dir)
         time.sleep(1.1)
+    _assert_bucket_occupancy(spark, ev_dir, state_buckets)
 
     q = stream_sessionize_event_time(
         spark, ev_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
@@ -245,9 +222,10 @@ def test_event_time_sessionize_randomized_parity(
 
 
 class _FakeState:
-    def __init__(self, value=None, timed_out=False):
+    def __init__(self, value=None, timed_out=False, watermark_ms=0):
         self._v = value
         self.hasTimedOut = timed_out
+        self.watermark_ms = watermark_ms
         self.removed = False
         self.updated = None
         self.timeout_set = None
@@ -268,40 +246,56 @@ class _FakeState:
         self.updated = v
         self._v = v
 
-    def setTimeoutDuration(self, ms):
+    def getCurrentWatermarkMs(self):
+        return self.watermark_ms
+
+    def setTimeoutTimestamp(self, ms):
         self.timeout_set = ms
 
 
-def test_timeout_branch_flushes_open_session():
+def test_bucketed_sessionizer_buffers_then_folds_on_watermark():
+    """Spark-free: below the watermark nothing folds and the bucket's
+    events buffer in the packed state blob; once the watermark passes
+    every event plus the gap, the buffered events fold by the batch gap
+    rule and every session, each user's last included, closes."""
+    import numpy as np
+
     from serimi_rdf_interlinking_spark.streaming.sessionize import (
-        make_sessionizer,
+        make_bucketed_event_time_sessionizer,
     )
 
-    fn = make_sessionizer(gap_seconds=3600.0, timeout_ms=1000)
-    st = _FakeState(value=(3, 100, 200, 7), timed_out=True)
-    out = list(fn((42,), iter(()), st))
-    assert st.removed
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert (row.user_id, row.session_id, row.n_events, row.start_us,
-            row.end_us) == (42, 3, 7, 100, 200)
-
-
-def test_gap_splits_sessions_and_updates_state():
-    from serimi_rdf_interlinking_spark.streaming.sessionize import (
-        make_sessionizer,
+    s = 1_000_000  # seconds -> microseconds
+    gap_us = 3600 * s
+    ev = pd.DataFrame(
+        {
+            "event_id": [1, 2, 3, 4, 5],
+            "user_id": [7, 9, 7, 7, 9],
+            "us": [100 * s, 50 * s, 10 * s, 10_000 * s, 60 * s],
+        }
     )
+    pdf = ev.assign(ts=pd.to_datetime(ev["us"], unit="us"))[
+        ["event_id", "user_id", "ts"]
+    ]
+    fn = make_bucketed_event_time_sessionizer(gap_seconds=3600.0)
 
-    fn = make_sessionizer(gap_seconds=1.0, timeout_ms=None)
-    ts = pd.to_datetime([0, 500_000, 2_000_000, 2_100_000], unit="us")
-    pdf = pd.DataFrame({"ts": ts, "event_id": [1, 2, 3, 4]})
-    st = _FakeState()
-    out = list(fn((7,), iter([pdf]), st))
-    # one closed session (events 1-2), second session open in state
-    assert len(out) == 1
-    row = out[0].iloc[0]
-    assert (row.session_id, row.n_events, row.start_us, row.end_us) == (
-        1, 2, 0, 500_000,
+    st = _FakeState(watermark_ms=0)
+    assert list(fn((0,), iter([pdf]), st)) == []
+    blob = np.frombuffer(st.updated[5], dtype="<i8").reshape(3, -1)
+    order = ev.sort_values(["user_id", "us", "event_id"])
+    assert blob.tolist() == [
+        order["user_id"].tolist(), order["us"].tolist(),
+        order["event_id"].tolist(),
+    ]
+    assert st.timeout_set == int(ev["us"].min()) // 1000 + 1
+
+    wm_ms = (int(ev["us"].max()) + gap_us) // 1000 + 1
+    st2 = _FakeState(value=st.updated, timed_out=True, watermark_ms=wm_ms)
+    out = pd.concat(list(fn((0,), iter(()), st2)))
+    got = sorted(
+        tuple(int(v) for v in r)
+        for r in out[
+            ["user_id", "session_id", "n_events", "start_us", "end_us"]
+        ].itertuples(index=False)
     )
-    assert st.updated == (2, 2_000_000, 2_100_000, 2)
-    assert st.timeout_set is None  # NoTimeout variant sets no duration
+    assert got == _expected_closed(ev, gap_us, last_closed=True)
+    assert st2.removed

@@ -101,3 +101,27 @@ def test_stream_dedup_exact_drops_cross_batch_duplicates(spark, tmp_path):
     # doc 3 (same normalized text as 1) and doc 4 (cross-batch dup) drop
     assert 2 in ids and 5 in ids
     assert ids.count(3) == 0 and ids.count(4) + ids.count(1) == 1
+
+
+@pytest.mark.parametrize(
+    "query, columns",
+    [
+        ("q_stream_time_buckets", ["bucket", "event_type", "n", "v"]),
+        ("q_stream_sessionize", ["user_id", "n_sessions", "n_events"]),
+        ("q_stream_sessionize_ooo", ["user_id", "n_sessions", "n_events"]),
+    ],
+    ids=["q_stream_time_buckets", "q_stream_sessionize", "q_stream_sessionize_ooo"],
+)
+def test_stream_replay_empty_events(spark, tmp_path, query, columns):
+    """An empty events table must yield an empty result (the batch
+    aggregate is empty), not a TypeError from the flush-event math."""
+    import __spark_entry__ as E
+
+    spark.createDataFrame(
+        [],
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    out = getattr(E, query)(spark, str(tmp_path))
+    assert out.count() == 0
+    assert out.columns == columns

@@ -33,7 +33,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--rds-threshold", type=float, default=None)
     p.add_argument("-p", "--topk", type=int, default=0)
     p.add_argument("-u", "--use-pivot", action="store_true")
-    p.add_argument("--no-blocking", action="store_true")
     p.add_argument("-f", "--format", choices=["txt", "nt"], default="txt")
     p.add_argument(
         "-a", "--append",
@@ -79,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
         rds_threshold=args.rds_threshold,
         topk=args.topk,
         use_pivot=args.use_pivot,
-        blocking=not args.no_blocking,
         output_format=args.format,
         mode="sequential" if args.use_pivot else args.mode,
         checkpoint_dir=args.checkpoint_dir,

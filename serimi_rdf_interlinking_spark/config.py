@@ -2,8 +2,9 @@
 
 Reference: serimi.rb:11-120 (OptionParser). Defaults per serimi.rb:
 chunk 20 (:54-57), string threshold 0.7 (:66-69), format txt (:50-53),
-blocking on (initializer.rb:22 — only ever set true), pivots off
-(initializer.rb:15), top-k 0 = adaptive threshold (initializer.rb:16).
+pivots off (initializer.rb:15), top-k 0 = adaptive threshold
+(initializer.rb:16). Blocking (search_module.rb:33-56) is always on: the
+reference only ever sets it true (initializer.rb:22).
 
 Two reference CLI bugs are deliberately NOT replicated (we implement the
 *intended* semantics): `-p` writes options[:chunk] (serimi.rb:58-61) and
@@ -22,7 +23,6 @@ class SerimiConfig:
     string_threshold: float = 0.7    # -y  $filter_threshold (serimi.rb:66-69)
     rds_threshold: float | None = None  # fixed RDS delta; None = adaptive delta-m
     topk: int = 0                    # top-k per group; 0 = adaptive threshold
-    blocking: bool = True            # token-frequency source ordering (search_module.rb:33-56)
     use_pivot: bool = False          # carry pivot groups across chunks (serimi_class.rb:279-298)
     output_format: str = "txt"       # "txt" (src=tgt) | "nt" (owl:sameAs triples)
     warmup_chunk: int = 5            # first chunk is 5 then sigma (initializer.rb:94-98)

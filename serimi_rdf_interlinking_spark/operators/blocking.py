@@ -9,6 +9,10 @@ zipWithIndex for a contiguous global rank. zipWithIndex is two linear
 jobs (count per partition, then offsetting) — no single-partition
 window, so the global ordering scales. Chunk ids derive from the rank
 (first chunk 5, then sigma — the reference's warm-up, initializer.rb:94-98).
+
+`lsh_label_join` (the fuzzy selection tier) runs each side's character
+shingles through dedup's filter-verify core: `_band_keys`,
+`_candidate_cooccurrence` and `_exact_jaccard`.
 """
 
 from __future__ import annotations
@@ -19,6 +23,7 @@ from pyspark.sql import types as T
 
 from ..config import SerimiConfig
 from ..functions.columns import norm_tokens
+from .dedup import _band_keys, _candidate_cooccurrence, _exact_jaccard, _norm
 
 
 def blocking_order(
@@ -131,8 +136,6 @@ def _char_shingle_rows(
     label. Labels shorter than k yield one shingle (the whole label) —
     substr past the end truncates identically in Spark and DuckDB, so
     the SQL oracle mirrors bit-for-bit."""
-    from .dedup import _norm
-
     base = df.select(F.col(id_col).alias("id"), _norm(label_col).alias("nrm"))
     n_sh = F.greatest(F.length("nrm") - F.lit(k - 1), F.lit(1))
     return base.select(
@@ -145,52 +148,6 @@ def _char_shingle_rows(
                 )
             )
         ).alias("sh"),
-    )
-
-
-def _char_minhash_banded(
-    sh: DataFrame, num_hashes: int, bands: int
-) -> DataFrame:
-    """(id, band, band_key) from char-shingle rows — same integer
-    md5->XOR minhash family and order-insensitive band keys as the
-    dedup LSH (operators/dedup.py minhash_signatures; see its shape
-    notes for why this stays in primitive agg buffers)."""
-    from .dedup import _XOR_SEEDS
-
-    r = num_hashes // bands
-    x = (
-        F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10)
-        .cast("long")
-        .alias("x")
-    )
-    hashed = sh.select("id", x).select(
-        "id",
-        *[
-            F.col("x").bitwiseXOR(F.lit(_XOR_SEEDS[s])).alias(f"h{s}")
-            for s in range(num_hashes)
-        ],
-    )
-    sig = hashed.groupBy("id").agg(
-        *[F.min(f"h{s}").alias(f"m{s}") for s in range(num_hashes)]
-    )
-    exploded = sig.select(
-        "id",
-        F.posexplode(
-            F.array(*[F.col(f"m{s}") for s in range(num_hashes)])
-        ).alias("seed", "minhash"),
-    )
-    return (
-        exploded.withColumn("band", F.floor(F.col("seed") / r))
-        .groupBy("id", "band")
-        .agg(
-            F.concat_ws(
-                "-",
-                F.transform(
-                    F.sort_array(F.collect_list("minhash")),
-                    lambda m: m.cast("string"),
-                ),
-            ).alias("band_key")
-        )
     )
 
 
@@ -210,9 +167,10 @@ def lsh_label_join(
     north_star's fuzzy selection tier ("LSH-blocked similarity join on
     rdfs:label/name predicates") next to the exact tokenized
     inverted-index retrieval (operators/candidates.py): character
-    k-shingle minhash signatures per side, band-bucket equi-join
+    k-shingle minhash band keys per side, band-bucket equi-join
     ACROSS the two sides (never a self all-pairs), then exact
     character-Jaccard verification bounded to the LSH candidates.
+    Band keys, co-occurrence and verify are minhash_lsh_pairs' own.
     Catches typo/spacing variants where no full token matches exactly.
     Returns (src_id, tgt_id, jaccard >= verify_threshold).
 
@@ -223,17 +181,15 @@ def lsh_label_join(
     all-identical-label corpus degrades to the true duplicate set,
     which is the correct answer, not a skew artifact. Each side's
     shingle frame is re-derived by its 3 consumers (banding, sizes,
-    verify) instead of persisted — same trade as minhash_lsh_pairs
-    (operators/dedup.py): shingling is a linear stateless map over
-    label rows, and a persist inside an operator races against itself
-    when the consumers run within one action."""
-    assert num_hashes % bands == 0
+    verify) instead of persisted: shingling is a linear stateless map
+    over label rows, and a persist inside an operator races against
+    itself when the consumers run within one action."""
     src_sh = _char_shingle_rows(src, src_id, src_label, k)
     tgt_sh = _char_shingle_rows(tgt, tgt_id, tgt_label, k)
-    a = _char_minhash_banded(src_sh, num_hashes, bands).select(
+    a = _band_keys(src_sh, num_hashes, bands).select(
         F.col("id").alias("id_a"), "band", "band_key"
     )
-    b = _char_minhash_banded(tgt_sh, num_hashes, bands).select(
+    b = _band_keys(tgt_sh, num_hashes, bands).select(
         F.col("id").alias("id_b"), "band", "band_key"
     )
     cand = (
@@ -241,26 +197,9 @@ def lsh_label_join(
         .select("id_a", "id_b")
         .distinct()
     )
-    sizes_a = src_sh.groupBy("id").agg(F.count("*").alias("n_a"))
-    sizes_b = tgt_sh.groupBy("id").agg(F.count("*").alias("n_b"))
-    co = (
-        cand.join(src_sh.select(F.col("id").alias("id_a"), "sh"), "id_a")
-        .join(tgt_sh.select(F.col("id").alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("co"))
-    )
+    co = _candidate_cooccurrence(cand, src_sh, tgt_sh)
     return (
-        co.join(sizes_a, co.id_a == sizes_a.id)
-        .drop("id")
-        .join(sizes_b, co.id_b == sizes_b.id)
-        .drop("id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("co") / (F.col("n_a") + F.col("n_b") - F.col("co")), 6
-            ),
-        )
-        .filter(F.col("jaccard") >= verify_threshold)
+        _exact_jaccard(co, src_sh, tgt_sh, verify_threshold)
         .select(
             F.col("id_a").alias("src_id"),
             F.col("id_b").alias("tgt_id"),

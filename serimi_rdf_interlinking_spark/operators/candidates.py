@@ -81,18 +81,50 @@ def prepare_keywords(
     return kw
 
 
+# hot-key skew guard, shared by the token cap below and dedup's
+# hot-shingle drop. Membership mechanism switch: below this many hot
+# keys an isin() literal is cheapest (no extra join, no plan bloat);
+# above it — e.g. a low ceiling over a large corpus — the literal would
+# inflate the plan/driver, so membership goes through a broadcast
+# semi/anti join instead (degrades gracefully with the hot-set size).
+HOT_LIST_ISIN_MAX = 2048
+
+
+def hot_keys(df: DataFrame, key: str, ceiling: int) -> list:
+    """Values of string column `key` in more than `ceiling` rows of
+    `df`, in one collect job: the hot set is small by construction, and
+    on the driver it has no persist() lifecycle to leak."""
+    return [
+        r[0]
+        for r in df.groupBy(key)
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") > ceiling)
+        .select(key)
+        .collect()
+    ]
+
+
+def split_hot(
+    df: DataFrame, key: str, hot: list
+) -> tuple[DataFrame, DataFrame]:
+    """(cold, hot) rows of `df` by membership of `key` in `hot`, both
+    in `df`'s column order."""
+    if len(hot) <= HOT_LIST_ISIN_MAX:
+        is_hot = F.col(key).isin(hot)
+        return df.filter(~is_hot), df.filter(is_hot)
+    hot_df = F.broadcast(
+        df.sparkSession.createDataFrame([(k,) for k in hot], f"{key} string")
+    )
+    cols = df.columns  # USING-join reorders the key first; restore
+    return (
+        df.join(hot_df, key, "left_anti").select(*cols),
+        df.join(hot_df, key, "left_semi").select(*cols),
+    )
+
+
 # ---------------------------------------------------------------------------
 # inverted token index over target literals
 # ---------------------------------------------------------------------------
-
-
-# membership mechanism switch for the hot-token cap: below this many
-# hot tokens an isin() literal is cheapest (no extra join, no plan
-# bloat); above it — e.g. a low max_candidates_per_token over a large
-# corpus — the literal would inflate the plan/driver, so membership
-# goes through a broadcast semi/anti join instead (degrades gracefully
-# with the hot-set size).
-HOT_LIST_ISIN_MAX = 2048
 
 
 def raw_token_index(
@@ -162,20 +194,11 @@ def apply_hot_token_cap(idx: DataFrame, cfg: SerimiConfig) -> DataFrame:
     index but cold under the searched predicates is never capped — the
     round-3 half-closure of this guard.
 
-    Membership: the hot set is small by construction (distinct tokens
-    above the ceiling), so it collects to the driver for the cap
-    decision; it is applied as an isin() literal up to
-    HOT_LIST_ISIN_MAX tokens and as a broadcast semi/anti join beyond
-    that (plan stays bounded however low the ceiling is set)."""
+    The hot set is found and applied by the shared hot-key guard
+    (`hot_keys` collects it to the driver, `split_hot` splits the index
+    by membership)."""
     cap = cfg.max_candidates_per_token
-    hot_list = [
-        r.tok
-        for r in idx.groupBy("tok")
-        .agg(F.count("*").alias("fanout"))
-        .filter(F.col("fanout") > cap)
-        .select("tok")
-        .collect()
-    ]
+    hot_list = hot_keys(idx, "tok", cap)
     if not hot_list:
         return idx
     log.warning(
@@ -186,19 +209,7 @@ def apply_hot_token_cap(idx: DataFrame, cfg: SerimiConfig) -> DataFrame:
         cap,
         cap,
     )
-    if len(hot_list) <= HOT_LIST_ISIN_MAX:
-        is_hot = F.col("tok").isin(hot_list)
-        cold = idx.filter(~is_hot)
-        hot = idx.filter(is_hot)
-    else:
-        hot_df = F.broadcast(
-            idx.sparkSession.createDataFrame(
-                [(t,) for t in hot_list], "tok string"
-            )
-        )
-        cols = idx.columns  # USING-join reorders tok first; restore
-        cold = idx.join(hot_df, "tok", "left_anti").select(*cols)
-        hot = idx.join(hot_df, "tok", "left_semi").select(*cols)
+    cold, hot = split_hot(idx, "tok", hot_list)
     # two-level truncating top-k (same shape as similarity._partial_topk):
     # level 1 truncates per (tok, input partition) map-side, so the
     # shuffle carries at most cap rows per partition per hot token;

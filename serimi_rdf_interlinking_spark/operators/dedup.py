@@ -8,9 +8,8 @@ them value-for-value:
 * ngram       — word-n-gram shingles → inverted shingle join → exact
                 Jaccard (shuffle on shingle; hot shingles are the skew
                 axis — guarded by the max_shingle_df ceiling, which
-                broadcast-anti-joins away shingles whose document
-                frequency makes the self-join quadratic, with the drop
-                count logged);
+                drops shingles whose document frequency makes the
+                self-join quadratic, with the drop count logged);
 * minhash+LSH — per-seed min of md5(seed|shingle) → band keys →
                 bucket self-join → exact-Jaccard verify bounded to the
                 candidate pairs (the scale path: both the bucket join
@@ -18,6 +17,12 @@ them value-for-value:
                 all-pairs);
 * simhash     — 16-bit md5-nibble majority signature, Hamming-ready;
 * embedding   — cosine near-dup within blocking keys.
+
+The filter-verify steps exist once, shared with blocking.lsh_label_join:
+`_band_keys` (shingles → minhash band keys), `_candidate_cooccurrence`
+(shared-shingle counts for candidate pairs only) and `_exact_jaccard`
+(per-side sizes → rounded Jaccard ≥ threshold). The hot-shingle drop
+uses candidates.py's hot-key guard (`hot_keys`, `split_hot`).
 
 md5 is used as the deterministic hash everywhere (identical hex output
 in Spark and DuckDB, so oracles reproduce signatures bit-for-bit).
@@ -60,21 +65,12 @@ def _xor_seed(s: int) -> int:
 _XOR_SEEDS = [_xor_seed(s) for s in range(64)]
 
 
-def _shingles(tokens: Column, n: int) -> Column:
-    """Word n-grams; a document shorter than n tokens yields one shingle
-    (its full token string)."""
-    count = F.greatest(F.size(tokens) - F.lit(n - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), count),
-        lambda i: F.concat_ws(" ", F.slice(tokens, i, n)),
-    )
-
-
 def _shingle_rows(
     docs: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
-    """(id, sh) distinct word-n-gram rows; token-less docs yield one ''
-    shingle (the array shingler's greatest(...,1) floor).
+    """(id, sh) distinct word-n-gram rows; a document shorter than n
+    tokens yields one shingle (its full token string), and token-less
+    docs yield one '' shingle.
 
     Tokenization stays a JVM expression (codegen regex + lower — no
     second Unicode-case implementation enters the path); the SHINGLE
@@ -138,19 +134,44 @@ def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def _jaccard_from_counts() -> Column:
-    return F.round(
-        F.col("co") / (F.col("na") + F.col("nb") - F.col("co")), 6
+def _candidate_cooccurrence(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame
+) -> DataFrame:
+    """(id_a, id_b, co) shared-shingle counts for the candidate pairs
+    only: keyed THROUGH the candidate list (on id_a, then on (id_b,
+    sh)), so the work is linear in |candidates| x shingles-per-id —
+    never the all-pairs inverted self-join blocking exists to avoid."""
+    return (
+        cand.join(sh_a.select(F.col("id").alias("id_a"), "sh"), "id_a")
+        .join(sh_b.select(F.col("id").alias("id_b"), "sh"), ["id_b", "sh"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("co"))
     )
 
 
-def _join_sizes(co: DataFrame, sizes: DataFrame) -> DataFrame:
-    return co.join(
-        sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na")),
-        "id_a",
-    ).join(
-        sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb")),
-        "id_b",
+def _exact_jaccard(
+    co: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Verify step: (id_a, id_b, co) and each side's (id, sh) rows ->
+    (id_a, id_b, jaccard) with exact set Jaccard >= threshold, rounded
+    to 6 decimals (oracle-stable). Per-id sizes are aggregated over
+    ALL ids — one map-side-combined, id-count-sized aggregate, cheaper
+    than re-deriving the candidates for a semi-join."""
+
+    def sizes(sh: DataFrame, side: str) -> DataFrame:
+        return sh.groupBy(F.col("id").alias(f"id_{side}")).agg(
+            F.count("*").alias(f"n{side}")
+        )
+
+    jaccard = F.round(
+        F.col("co") / (F.col("na") + F.col("nb") - F.col("co")), 6
+    )
+    return (
+        co.join(sizes(sh_a, "a"), "id_a")
+        .join(sizes(sh_b, "b"), "id_b")
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -173,8 +194,9 @@ def ngram_jaccard_pairs(
     1M docs alone produces 5e11 candidate rows). Dropped shingles are
     excluded from the per-doc sizes too, so Jaccard stays an exact
     set similarity over the kept shingle universe; the count of dropped
-    shingles is logged (no silent caps). The hot set is tiny (df above
-    the ceiling), so it is broadcast for the anti-join.
+    shingles is logged (no silent caps). The hot set is found and
+    dropped by the hot-key guard the matcher's token cap also uses
+    (operators/candidates.py `hot_keys` + `split_hot`).
 
     The shingle frame is materialized once (localCheckpoint): it feeds
     the hot-shingle scan plus three plan subtrees (sizes, both sides of
@@ -197,18 +219,9 @@ def ngram_jaccard_pairs(
             "(n_docs=%d)", max_shingle_df, n_docs,
         )
     if max_shingle_df is not None:
-        # the hot set (df above the ceiling) is small by construction,
-        # so collect it to the driver and embed as an isin literal —
-        # no persist() lifecycle to leak across repeated builds in one
-        # session (round-2 verdict hygiene item).
-        hot_list = [
-            r.sh
-            for r in sh.groupBy("sh")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("sh")
-            .collect()
-        ]
+        from .candidates import hot_keys, split_hot
+
+        hot_list = hot_keys(sh, "sh", max_shingle_df)
         if hot_list:
             log.warning(
                 "ngram_jaccard_pairs: dropping %d hot shingles with "
@@ -216,21 +229,7 @@ def ngram_jaccard_pairs(
                 len(hot_list),
                 max_shingle_df,
             )
-            from .candidates import HOT_LIST_ISIN_MAX
-
-            if len(hot_list) <= HOT_LIST_ISIN_MAX:
-                sh = sh.filter(~F.col("sh").isin(hot_list))
-            else:
-                # a low ceiling over a large corpus can flag many
-                # shingles — membership via broadcast anti-join keeps
-                # the plan/driver bounded (same trade as the token cap)
-                hot_df = F.broadcast(
-                    sh.sparkSession.createDataFrame(
-                        [(s,) for s in hot_list], "sh string"
-                    )
-                )
-                sh = sh.join(hot_df, "sh", "left_anti")
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
+            sh, _ = split_hot(sh, "sh", hot_list)
     a = sh.select(F.col("id").alias("id_a"), "sh")
     b = sh.select(F.col("id").alias("id_b"), "sh")
     co = (
@@ -239,14 +238,7 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("co"))
     )
-    out = (
-        _join_sizes(co, sizes)
-        .withColumn("jaccard", _jaccard_from_counts())
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-        .orderBy("id_a", "id_b")
-    )
-    return out
+    return _exact_jaccard(co, sh, sh, threshold).orderBy("id_a", "id_b")
 
 
 def minhash_signatures(
@@ -284,8 +276,8 @@ def minhash_signatures(
 
 def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
     """minhash_signatures' aggregation half, split out so callers that
-    already hold the (id, sh) shingle frame (minhash_lsh_pairs) can
-    reuse one materialization instead of re-deriving the shingles."""
+    already hold an (id, sh) shingle frame (the band keys) can reuse it
+    instead of re-deriving the shingles."""
     x = (
         F.conv(F.substring(F.md5(F.col("sh")), 1, 15), 16, 10)
         .cast("long")
@@ -308,6 +300,30 @@ def _signatures_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
     ).select("id", F.col("seed").cast("long").alias("seed"), "minhash")
 
 
+def _band_keys(sh: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(id, sh) shingle rows -> (id, band, band_key): the minhash
+    signature cut into `bands` bands of num_hashes/bands rows each.
+    Hashes within a band concatenate in numeric-sorted order, so the
+    key is order-insensitive (engine-portable). Two ids are LSH
+    candidates iff they share a (band, band_key)."""
+    assert num_hashes % bands == 0
+    r = num_hashes // bands
+    return (
+        _signatures_from_shingles(sh, num_hashes)
+        .withColumn("band", F.floor(F.col("seed") / r))
+        .groupBy("id", "band")
+        .agg(
+            F.concat_ws(
+                "-",
+                F.transform(
+                    F.sort_array(F.collect_list("minhash")),
+                    lambda x: x.cast("string"),
+                ),
+            ).alias("band_key")
+        )
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -324,8 +340,6 @@ def minhash_lsh_pairs(
     unless ``sorted_output=False`` — order-insensitive consumers
     (connected components' distinct) skip the global pair sort, which
     the optimizer does NOT eliminate below their aggregate."""
-    assert num_hashes % bands == 0
-    r = num_hashes // bands
     # ONE shingle materialization for the whole pipeline: the (id, sh)
     # frame feeds four plan subtrees (signatures, per-doc sizes, both
     # sides of the verify join) and Spark re-executes a shared subtree
@@ -333,29 +347,13 @@ def minhash_lsh_pairs(
     # regex+tokenize+explode passes over the corpus before this
     # localCheckpoint (guide §2.4: don't compute things twice).
     sh = _shingle_rows(docs, id_col, text_col, n).localCheckpoint(eager=True)
-    sig = _signatures_from_shingles(sh, num_hashes)
-    # hashes within a band concatenate in numeric-sorted order so the
-    # key is order-insensitive (engine-portable)
-    banded = (
-        sig.withColumn("band", F.floor(F.col("seed") / r))
-        .groupBy("id", "band")
-        .agg(
-            F.concat_ws(
-                "-",
-                F.transform(
-                    F.sort_array(F.collect_list("minhash")),
-                    lambda x: x.cast("string"),
-                ),
-            ).alias("band_key")
-        )
-        # the band-key frame feeds BOTH sides of the bucket self-join;
-        # left lazy, the whole md5+XOR+min signature pipeline executes
-        # once per side (no static ReuseExchange across the differing
-        # join-key shuffles — measured 8.9s -> 5.3s warm at sf1.0 from
-        # this one materialization; the frame is docs x bands rows,
-        # far smaller than the shingle checkpoint that already holds)
-        .localCheckpoint(eager=True)
-    )
+    # the band-key frame feeds BOTH sides of the bucket self-join; left
+    # lazy, the whole md5+XOR+min signature pipeline executes once per
+    # side (no static ReuseExchange across the differing join-key
+    # shuffles — measured 8.9s -> 5.3s warm at sf1.0 from this one
+    # materialization; the frame is docs x bands rows, far smaller than
+    # the shingle checkpoint that already holds)
+    banded = _band_keys(sh, num_hashes, bands).localCheckpoint(eager=True)
     a = banded.select(F.col("id").alias("id_a"), "band", "band_key")
     b = banded.select(F.col("id").alias("id_b"), "band", "band_key")
     cand = (
@@ -364,32 +362,13 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # Exact-Jaccard verification bounded to LSH candidates: the
-    # co-occurrence join is keyed THROUGH the candidate pair list
-    # (join on id_a, then on (id_b, sh)), so its work is linear in
-    # |candidates| x shingles-per-doc — never the all-pairs inverted
-    # self-join LSH exists to avoid (which a naive verify-then-filter
-    # would run over every pair sharing any shingle). cand is consumed
-    # by exactly one downstream join: multiple consumers would make
-    # Spark re-execute the whole minhash pipeline once per consumer
-    # (measured 22 parquet scans in a 3-consumer variant, and a persist
-    # races against itself when the consumers run inside one action).
-    # Per-doc sizes are computed over ALL docs instead of semi-joining
-    # to candidates — one map-side-combined, doc-count-sized aggregate,
-    # cheaper at every scale than re-deriving cand for the semi-join.
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    co = (
-        cand.join(sh.select(F.col("id").alias("id_a"), "sh"), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("co"))
-    )
-    pairs = (
-        _join_sizes(co, sizes)
-        .withColumn("jaccard", _jaccard_from_counts())
-        .filter(F.col("jaccard") >= verify_threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    # cand is consumed by exactly one downstream join: multiple
+    # consumers would make Spark re-execute the whole minhash pipeline
+    # once per consumer (measured 22 parquet scans in a 3-consumer
+    # variant, and a persist races against itself when the consumers
+    # run inside one action)
+    co = _candidate_cooccurrence(cand, sh, sh)
+    pairs = _exact_jaccard(co, sh, sh, verify_threshold)
     if sorted_output:
         pairs = pairs.orderBy("id_a", "id_b")
     return pairs

@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# edge rows connected_components' path probe collects before counting
+DRIVER_PROBE_ROWS = 10_000
+
 
 def _union_find_local(pairs: list[tuple]) -> dict:
     """Driver-side union-find with min-label roots — exact same
@@ -70,13 +73,14 @@ def connected_components(
         .distinct()
     )
     e = e.localCheckpoint(eager=True)
-    # one job decides the path AND fetches the edges: collecting at
-    # most threshold+1 rows either returns the ENTIRE edge set (when
-    # it fits under the driver threshold) or proves it does not —
-    # the separate count() job the old form ran is redundant
-    probe = e.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
-        mapping = _union_find_local([(r.a, r.b) for r in probe])
+    # one bounded probe job decides AND fetches a small graph; a full
+    # probe pays a count(), and the edges are collected only if it fits
+    rows = e.limit(DRIVER_PROBE_ROWS + 1).collect()
+    n_edges = len(rows) if len(rows) <= DRIVER_PROBE_ROWS else e.count()
+    if n_edges <= driver_threshold:
+        if len(rows) < n_edges:
+            rows = e.collect()
+        mapping = _union_find_local([(r.a, r.b) for r in rows])
         spark = edges.sparkSession
         if not mapping:
             return spark.createDataFrame([], "node string, component string")

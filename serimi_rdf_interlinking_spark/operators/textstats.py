@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import _tokens
 from .partitioning import widen_to_cluster
 
 LANG_MARKERS: dict[str, list[str]] = {
@@ -22,14 +23,6 @@ LANG_MARKERS: dict[str, list[str]] = {
     "pt": ["de", "que", "e", "do", "da", "em", "um", "para", "com", "os"],
     "de": ["der", "die", "und", "das", "ist", "von", "mit", "den", "im", "ein"],
 }
-
-
-def _tokens(c) -> F.Column:
-    col = F.col(c) if isinstance(c, str) else c
-    return F.filter(
-        F.split(F.lower(F.trim(F.regexp_replace(col, r"(?i)[^a-z0-9]+", " "))), " "),
-        lambda t: t != F.lit(""),
-    )
 
 
 def language_id(

@@ -3,6 +3,7 @@
 import subprocess
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from serimi_rdf_interlinking_spark.sources.alignments import (
@@ -115,6 +116,19 @@ def test_cli_parser_defaults():
     assert args.topk == 0
     assert args.format == "txt"
     assert not args.use_pivot
+
+
+def test_cli_rejects_no_blocking():
+    """Blocking is always on (the reference only ever sets it true), so
+    --no-blocking, once accepted and silently ignored, is a usage
+    error."""
+    from serimi_rdf_interlinking_spark.cli import build_parser
+
+    with pytest.raises(SystemExit) as exc:
+        build_parser().parse_args(
+            ["-s", "src", "-t", "tgt", "-c", "K", "-o", "out", "--no-blocking"]
+        )
+    assert exc.value.code == 2
 
 
 def test_cli_new_flags_wire_through(spark, triple_dfs, tmp_path):

@@ -1,6 +1,7 @@
 """Dedup / similarity / text-analysis operators over the driver test
 tables (documents, embeddings)."""
 
+import logging
 import os
 
 import pytest
@@ -9,6 +10,7 @@ from pyspark.sql import functions as F
 from serimi_rdf_interlinking_spark.operators import dedup as D
 from serimi_rdf_interlinking_spark.operators import similarity as S
 from serimi_rdf_interlinking_spark.operators import textstats as TX
+from serimi_rdf_interlinking_spark.operators.dedup import ngram_jaccard_pairs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -271,6 +273,68 @@ def test_ngram_hot_shingle_guard_drops_and_logs(spark, caplog):
     assert not any(a < 100 and b < 100 for a, b in got)
 
 
+def _boiler_corpus(spark):
+    """40 docs sharing a 6-token boilerplate header (the web-crawl
+    template pathology) + one true near-dup pair with unique content."""
+    boiler = "lorem ipsum dolor sit amet consectetur"
+    rows = [(f"d{i:02d}", f"{boiler} unique{i} filler{i} token{i}") for i in range(40)]
+    rows += [
+        ("x1", "alpha beta gamma delta epsilon zeta"),
+        ("x2", "alpha beta gamma delta epsilon eta"),
+    ]
+    return spark.createDataFrame(rows, "doc_id string, text string")
+
+
+def test_hot_shingle_guard_kills_quadratic_boilerplate(spark, caplog):
+    docs = _boiler_corpus(spark)
+    with caplog.at_level(logging.WARNING):
+        guarded = ngram_jaccard_pairs(
+            docs, n=3, threshold=0.3, max_shingle_df=10
+        ).collect()
+    # the 4 boilerplate shingles (df=40 > 10) are dropped, so the 780
+    # template-only pairs vanish; the true near-dup pair survives with
+    # its exact Jaccard over the KEPT shingle universe (3 shared of 5)
+    assert [(r.id_a, r.id_b, r.jaccard) for r in guarded] == [
+        ("x1", "x2", 0.6)
+    ]
+    assert any("hot shingles" in r.message for r in caplog.records), (
+        "drops must be logged — no silent caps"
+    )
+
+
+def test_unguarded_boilerplate_is_quadratic(spark):
+    """The counterfactual the guard prevents: without a ceiling the
+    template shingles connect every doc pair (40*39/2 = 780 bogus
+    near-dups at jaccard 4/10)."""
+    docs = _boiler_corpus(spark)
+    pairs = ngram_jaccard_pairs(
+        docs, n=3, threshold=0.3, max_shingle_df=None
+    ).collect()
+    assert len(pairs) == 781  # 780 boilerplate pairs + the true pair
+    bogus = [r for r in pairs if r.id_a.startswith("d")]
+    assert len(bogus) == 780 and all(r.jaccard == 0.4 for r in bogus)
+
+
+def test_auto_ceiling_is_default_and_matches_explicit(spark):
+    """Naive call == explicit max(1000, ceil(0.01*n_docs)) ceiling (the
+    'auto' rule), so the skew guard is on by default."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    n_docs = docs.count()
+    ceiling = max(1000, -(-n_docs // 100))
+    default_rows = sorted(
+        map(tuple, ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect())
+    )
+    explicit_rows = sorted(
+        map(
+            tuple,
+            ngram_jaccard_pairs(
+                docs, n=3, threshold=0.5, max_shingle_df=ceiling
+            ).collect(),
+        )
+    )
+    assert default_rows == explicit_rows
+
+
 def test_lsh_verify_is_candidate_bounded(docs):
     """Regression tooth for the round-1 scale-killer: the exact-Jaccard
     verification inside minhash_lsh_pairs must never run the bare
@@ -286,6 +350,25 @@ def test_lsh_verify_is_candidate_bounded(docs):
     assert not re.search(r"Join \w+, \(sh#\d+ = sh#\d+\)\s*$", plan, re.M), (
         "found a bare shingle-equality join (all-pairs verify) in:\n" + plan
     )
+
+
+def test_minhash_band_key_checkpoint_in_plan(spark):
+    """The band-key self-join must consume the CHECKPOINTED band frame
+    on both sides (no duplicated signature pipeline): the verify plan
+    contains no md5 computation for the band keys — only ExistingRDD
+    scans below the bucket join."""
+    from serimi_rdf_interlinking_spark.operators.dedup import (
+        minhash_lsh_pairs,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    out = minhash_lsh_pairs(docs, num_hashes=12, bands=4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # banded + shingle checkpoints: every leaf is an ExistingRDD, and
+    # the signature aggregate (min over XOR-mixed md5 longs) is gone
+    # from the pair plan
+    assert plan.count("Scan parquet") == 0
+    assert "xor(" not in plan.lower()
 
 
 def test_token_index_hot_token_guard(spark, caplog):

@@ -347,6 +347,59 @@ def test_connected_components_driver_path_equals_distributed(spark):
     assert local == dist and len(local) > 0
 
 
+def _cc_edges(spark, n):
+    """n distinct edges: a path n000 - ... - n{n-2} plus the separate
+    edge z1 - z0, so the labeling has two non-trivial components."""
+    rows = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n - 1)]
+    expected = {f"n{i:03d}": "n000" for i in range(n)}
+    expected.update(z0="z0", z1="z0")
+    return spark.createDataFrame(rows + [("z1", "z0")], ["src", "dst"]), expected
+
+
+def test_connected_components_probe_is_bounded_over_threshold(
+    spark, monkeypatch
+):
+    """A graph over driver_threshold must not be shipped to the driver:
+    the path probe collects at most DRIVER_PROBE_ROWS + 1 edges, counts,
+    and leaves the labeling to the distributed loop."""
+    from serimi_rdf_interlinking_spark.operators import graph as G
+
+    monkeypatch.setattr(G, "DRIVER_PROBE_ROWS", 3, raising=False)
+    edges, expected = _cc_edges(spark, 12)
+    collected = []
+    cls = type(edges)
+    collect = cls.collect
+
+    def spy(self):
+        rows = collect(self)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    cc = G.connected_components(edges, driver_threshold=10)
+    assert collected and max(collected) <= 4
+    assert {r.node: r.component for r in cc.collect()} == expected
+
+
+@pytest.mark.parametrize("probe", [None, 3], ids=["one_probe", "count_path"])
+@pytest.mark.parametrize("extra", [0, 1], ids=["at_threshold", "over_threshold"])
+def test_connected_components_labels_at_driver_threshold(
+    spark, monkeypatch, probe, extra
+):
+    """Exactly driver_threshold edges take the driver union-find, one
+    more takes the distributed loop; both give the same labels, with
+    the probe larger than the graph (one probe job) and smaller (count,
+    then collect only what fits)."""
+    from serimi_rdf_interlinking_spark.operators import graph as G
+
+    if probe is not None:
+        monkeypatch.setattr(G, "DRIVER_PROBE_ROWS", probe)
+    threshold = 6
+    edges, expected = _cc_edges(spark, threshold + extra)
+    cc = G.connected_components(edges, driver_threshold=threshold)
+    assert {r.node: r.component for r in cc.collect()} == expected
+
+
 def test_lsh_recovery_alignments_direct(spark):
     """Recovery tier kernel: an unmatched typo'd mention links to the
     right target via the char-shingle LSH join; matched mentions are

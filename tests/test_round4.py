@@ -130,60 +130,6 @@ SELECT query_id, neighbor_id, cos FROM r WHERE rk <= 3
     assert got == want
 
 
-# ---------------------------------------------------------------------------
-# IVF: Lloyd step is dim-independent (one array aggregate)
-# ---------------------------------------------------------------------------
-
-
-def test_hot_token_cap_recomputed_on_filtered_index(spark):
-    """A token hot on the any-predicate index but cold under the
-    searched predicates must keep its FULL fan-out when the cap is
-    re-applied on the restricted frame (round-3 half-closure: the old
-    path reused the any-predicate cap and truncated it)."""
-    from serimi_rdf_interlinking_spark.config import SerimiConfig
-    from serimi_rdf_interlinking_spark.operators.candidates import (
-        apply_hot_token_cap,
-        raw_token_index,
-    )
-    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
-
-    # token 'zebra' appears under predicate A in 8 distinct subjects
-    # (hot vs cap=3) but under predicate B in only 2 (cold)
-    rows = [(f"e{i}", "A", f"zebra alpha{i}", False, False) for i in range(8)]
-    rows += [(f"f{i}", "B", f"zebra beta{i}", False, False) for i in range(2)]
-    target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    cfg = SerimiConfig(max_candidates_per_token=3)
-    raw = raw_token_index(target, None, cfg)
-
-    capped_all = apply_hot_token_cap(raw, cfg)
-    assert capped_all.filter("tok = 'zebra'").count() == 3  # hot: capped
-
-    restricted = apply_hot_token_cap(raw.filter(F.col("p") == "B"), cfg)
-    # cold under B: full fan-out survives, nothing truncated
-    assert restricted.filter("tok = 'zebra'").count() == 2
-    # (the stale path — filtering AFTER capping on the any-predicate
-    # index — kept at most 3 rows drawn across ALL predicates, so the
-    # B-rows could be truncated or dropped entirely)
-
-
-def test_hot_token_cap_broadcast_membership_path(spark, monkeypatch):
-    """With the isin ceiling forced to 0 the membership goes through the
-    broadcast semi/anti join — results must be identical to the literal
-    path."""
-    from serimi_rdf_interlinking_spark.config import SerimiConfig
-    from serimi_rdf_interlinking_spark.operators import candidates as C
-    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
-
-    rows = [(f"e{i}", "A", f"zebra alpha{i}", False, False) for i in range(8)]
-    target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    cfg = SerimiConfig(max_candidates_per_token=3)
-    raw = C.raw_token_index(target, None, cfg)
-    lit_rows = sorted(map(tuple, C.apply_hot_token_cap(raw, cfg).collect()))
-    monkeypatch.setattr(C, "HOT_LIST_ISIN_MAX", 0)
-    join_rows = sorted(map(tuple, C.apply_hot_token_cap(raw, cfg).collect()))
-    assert lit_rows == join_rows
-
-
 def test_append_swap_crash_recovery(spark, tmp_path):
     """The append swap must survive a crash at every protocol point:
     rerunning write_alignments(mode='append') from any intermediate

@@ -1,157 +1,11 @@
-"""Round-5 items: the ngram hot-shingle guard exercised against a
-genuinely boilerplate-heavy corpus (round-4 verdict #8), the auto
-ceiling default, the J2 hot-token cap against a genuinely skewed
-label corpus (round-4 verdict #6), and the randomized kill-point
-sweep over the crash-safe append sink (round-4 verdict #9)."""
+"""Round-5 items: the randomized kill-point sweep over the crash-safe
+append sink (round-4 verdict #9)."""
 
-import logging
 import os
 import shutil
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
-
-from serimi_rdf_interlinking_spark.operators.dedup import ngram_jaccard_pairs
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-# ---------------------------------------------------------------------------
-# ngram_jaccard_pairs hot-shingle guard
-# ---------------------------------------------------------------------------
-
-
-def _boiler_corpus(spark):
-    """40 docs sharing a 6-token boilerplate header (the web-crawl
-    template pathology) + one true near-dup pair with unique content."""
-    boiler = "lorem ipsum dolor sit amet consectetur"
-    rows = [(f"d{i:02d}", f"{boiler} unique{i} filler{i} token{i}") for i in range(40)]
-    rows += [
-        ("x1", "alpha beta gamma delta epsilon zeta"),
-        ("x2", "alpha beta gamma delta epsilon eta"),
-    ]
-    return spark.createDataFrame(rows, "doc_id string, text string")
-
-
-def test_hot_shingle_guard_kills_quadratic_boilerplate(spark, caplog):
-    docs = _boiler_corpus(spark)
-    with caplog.at_level(logging.WARNING):
-        guarded = ngram_jaccard_pairs(
-            docs, n=3, threshold=0.3, max_shingle_df=10
-        ).collect()
-    # the 4 boilerplate shingles (df=40 > 10) are dropped, so the 780
-    # template-only pairs vanish; the true near-dup pair survives with
-    # its exact Jaccard over the KEPT shingle universe (3 shared of 5)
-    assert [(r.id_a, r.id_b, r.jaccard) for r in guarded] == [
-        ("x1", "x2", 0.6)
-    ]
-    assert any("hot shingles" in r.message for r in caplog.records), (
-        "drops must be logged — no silent caps"
-    )
-
-
-def test_unguarded_boilerplate_is_quadratic(spark):
-    """The counterfactual the guard prevents: without a ceiling the
-    template shingles connect every doc pair (40*39/2 = 780 bogus
-    near-dups at jaccard 4/10)."""
-    docs = _boiler_corpus(spark)
-    pairs = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.3, max_shingle_df=None
-    ).collect()
-    assert len(pairs) == 781  # 780 boilerplate pairs + the true pair
-    bogus = [r for r in pairs if r.id_a.startswith("d")]
-    assert len(bogus) == 780 and all(r.jaccard == 0.4 for r in bogus)
-
-
-def test_auto_ceiling_is_default_and_matches_explicit(spark):
-    """Naive call == explicit max(1000, ceil(0.01*n_docs)) ceiling (the
-    'auto' rule), so the skew guard is on by default."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    n_docs = docs.count()
-    ceiling = max(1000, -(-n_docs // 100))
-    default_rows = sorted(
-        map(tuple, ngram_jaccard_pairs(docs, n=3, threshold=0.5).collect())
-    )
-    explicit_rows = sorted(
-        map(
-            tuple,
-            ngram_jaccard_pairs(
-                docs, n=3, threshold=0.5, max_shingle_df=ceiling
-            ).collect(),
-        )
-    )
-    assert default_rows == explicit_rows
-
-
-# ---------------------------------------------------------------------------
-# J2 hot-token cap under genuine label skew
-# ---------------------------------------------------------------------------
-
-
-def test_j2_skewed_label_corpus_bounded_fanout_and_recall(spark, caplog):
-    """A label token shared by a large fraction of the corpus ('smith'
-    across 200 entities; SURVEY §7 skew risk): the cap must bound every
-    downstream token join at max_candidates_per_token rows per key,
-    log the cap accounting, and — because tier-1 joins only each
-    keyword's RAREST token — preserve 100% recall for every keyword
-    that has any non-hot token."""
-    from serimi_rdf_interlinking_spark.config import SerimiConfig
-    from serimi_rdf_interlinking_spark.operators.candidates import (
-        build_token_index,
-        phrase_hits,
-    )
-    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
-
-    rows = [
-        (f"t{i:03d}", "label", f"smith person{i}", False, False)
-        for i in range(200)
-    ]
-    # a second hot token for the all-hot-keyword case
-    rows += [
-        (f"u{i:02d}", "label", f"smith common extra{i}", False, False)
-        for i in range(30)
-    ]
-    target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    cfg = SerimiConfig(max_candidates_per_token=20, shuffle_partitions=4)
-    with caplog.at_level(logging.WARNING):
-        idx = build_token_index(target, None, cfg)
-        fanout = {
-            r.tok: r.n
-            for r in idx.groupBy("tok").agg(F.count("*").alias("n")).collect()
-        }
-    # bounded per-key fan-out: the 230-row 'smith' and 30-row 'common'
-    # fan-ins are capped to 20 — no token join key exceeds the cap
-    assert fanout["smith"] == 20 and fanout["common"] == 20
-    assert max(fanout.values()) <= 20
-    assert any("capping" in r.message for r in caplog.records)
-
-    kw_rows = [
-        (f"s{i:03d}", 1, 0, 0, f"smith person{i}", f"smith person{i}", True)
-        for i in range(200)
-    ]
-    keywords = spark.createDataFrame(
-        kw_rows,
-        "s string, rank int, chunk_id int, label_idx int, kw string, "
-        "kw_norm string, searchable boolean",
-    )
-    hits = phrase_hits(keywords, idx, None).collect()
-    # full recall despite the hot token: every keyword resolves through
-    # its rare token (person{i}, freq 1), never through capped 'smith'
-    assert len(hits) == 200
-    assert all(h.cand == "t" + h.s[1:] for h in hits)
-
-    # all-hot keyword ('smith common'): the join is bounded by the cap
-    # (<= 20 candidate rows), the documented recall trade of capping
-    all_hot = spark.createDataFrame(
-        [("sx", 1, 0, 0, "smith common", "smith common", True)],
-        "s string, rank int, chunk_id int, label_idx int, kw string, "
-        "kw_norm string, searchable boolean",
-    )
-    hot_hits = phrase_hits(all_hot, idx, None).collect()
-    assert 0 < len(hot_hits) <= 20
-    assert all(h.cand.startswith("u") for h in hot_hits)
 
 
 # ---------------------------------------------------------------------------

@@ -11,8 +11,7 @@ loudly:
   where a lower()-then-match rewrite would diverge;
 * the F.expr()-built dot chains produce raw-bit-identical doubles to
   the Column-algebra form across the unroll/fold boundary;
-* the plan-shape wins (single-scan set_operations, checkpointed
-  band-key self-join) stay in the plan.
+* the single-scan set_operations plan-shape win stays in the plan.
 """
 
 from __future__ import annotations
@@ -166,22 +165,3 @@ def test_set_operations_single_lineitem_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 0
     assert plan.count("Scan ExistingRDD") >= 2
-
-
-def test_minhash_band_key_checkpoint_in_plan(spark):
-    """The band-key self-join must consume the CHECKPOINTED band frame
-    on both sides (no duplicated signature pipeline): the verify plan
-    contains no md5 computation for the band keys — only ExistingRDD
-    scans below the bucket join."""
-    from serimi_rdf_interlinking_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = minhash_lsh_pairs(docs, num_hashes=12, bands=4)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # banded + shingle checkpoints: every leaf is an ExistingRDD, and
-    # the signature aggregate (min over XOR-mixed md5 longs) is gone
-    # from the pair plan
-    assert plan.count("Scan parquet") == 0
-    assert "xor(" not in plan.lower()

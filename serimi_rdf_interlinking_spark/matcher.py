@@ -161,38 +161,33 @@ class SerimiMatcher:
         name: str = "retrieve",
     ):
         cfg = self.cfg
-        h1 = phrase_hits(keywords, index, tiers)
-        p1 = self._mat(f11_passing(h1, target, textp, stopwords, cfg), f"{name}_p1")
-        sel_kws = p1.select(*KW_KEY).distinct()
-        failed = keywords.filter("searchable").join(sel_kws, KW_KEY, "left_anti")
-        # tier-2 only runs for keywords tier-1 missed (the reference's
-        # break-on-first-hit). When nothing missed — the common case on
-        # well-matched data — skip the whole AND-search job: the
-        # emptiness probe over two materialized frames costs far less
-        # than an f11 job with its pandas-UDF stages.
-        if failed.isEmpty():
-            p2 = None
-        else:
-            h2 = and_hits(failed, index, tiers, stopwords)
-            p2 = self._mat(
-                f11_passing(h2, target, textp, stopwords, cfg), f"{name}_p2"
+
+        def passing_hits(hits: DataFrame, tier: int) -> DataFrame:
+            return self._mat(
+                f11_passing(hits, target, textp, stopwords, cfg),
+                f"{name}_p{tier}",
             )
-        # tier-3 word-by-word (J4) — opt-in: dead code in the reference
-        # ($word_by_word never set); only keywords that also failed
-        # tier-2 reach it. Promotion folding stays tier-1/2-driven (the
-        # reference's $found would never have come from this tier).
-        p3 = None
-        if cfg.word_by_word and p2 is not None:
-            failed2 = failed.join(
-                p2.select(*KW_KEY).distinct(), KW_KEY, "left_anti"
+
+        # the search cascade (break-on-first-hit): a later tier searches
+        # only the searchable keywords every earlier tier missed, and
+        # stops at the first empty miss set — on well-matched data tier 1
+        # finds everything, and the emptiness probe over materialized
+        # frames costs far less than an f11 job with its pandas-UDF
+        # stages. Word-by-word (J4) is opt-in: dead code in the reference
+        # ($word_by_word never set).
+        passing = [passing_hits(phrase_hits(keywords, index, tiers), 1)]
+        missed = keywords.filter("searchable")
+        later = [and_hits] + ([word_hits] if cfg.word_by_word else [])
+        for tier, search in enumerate(later, start=2):
+            missed = missed.join(
+                passing[-1].select(*KW_KEY).distinct(), KW_KEY, "left_anti"
             )
-            if not failed2.isEmpty():
-                h3 = word_hits(failed2, index, tiers, stopwords)
-                p3 = self._mat(
-                    f11_passing(h3, target, textp, stopwords, cfg),
-                    f"{name}_p3",
-                )
-        cr = select_candidates(keywords, p1, p2, p3)
+            if missed.isEmpty():
+                break
+            passing.append(
+                passing_hits(search(missed, index, tiers, stopwords), tier)
+            )
+        cr = select_candidates(keywords, *passing)
         # one checkpoint for pairs+searched instead of two: both are
         # multi-consumer downstream, but each eager materialization is a
         # full Spark job and the fixed job overhead dominates at small
@@ -215,8 +210,7 @@ class SerimiMatcher:
         cr.searched = combo.filter(F.col("kind") == "kw").select(
             "chunk_id", "rank", "s", F.col("val").alias("kw")
         )
-        cr.passing_t1 = p1
-        cr.passing_t2 = p2
+        cr.passing = passing
         return cr
 
     # -- sequential-mode promotion fold ------------------------------------
@@ -255,19 +249,19 @@ class SerimiMatcher:
         # min(struct(tier, found_p)): winning tier first, then the
         # deterministic found-predicate pick within that tier
         agg = F.min(F.struct(F.col("tier"), F.col("found_p"))).alias("b")
-        t1: dict[tuple, tuple] = {}
-        if cr.passing_t1 is not None:
-            for r in (
-                cr.passing_t1.groupBy("rank", "label_idx", "kw")
-                .agg(agg)
-                .collect()
-            ):
-                t1[(r.rank, r.label_idx, r.kw)] = (r.b.tier, r.b.found_p)
+        t1 = {
+            (r.rank, r.label_idx, r.kw): (r.b.tier, r.b.found_p)
+            for r in cr.passing[0].groupBy("rank", "label_idx", "kw")
+            .agg(agg)
+            .collect()
+        }
+        # tiers 1-2 only: the reference's $found would never have come
+        # from the word-by-word tier
         t2and: dict[tuple, tuple] = {}
         t2nsw: dict[tuple, tuple] = {}
-        if cr.passing_t2 is not None:
+        for p2 in cr.passing[1:2]:
             for r in (
-                cr.passing_t2.groupBy("rank", "label_idx", "kw", "variant")
+                p2.groupBy("rank", "label_idx", "kw", "variant")
                 .agg(agg)
                 .collect()
             ):

@@ -1,33 +1,37 @@
-"""J2/J3 candidate retrieval + F11 similarity filtering, batched.
+"""Candidate retrieval + F11 similarity filtering, batched.
 
 The reference issues one Virtuoso `bif:contains` query per (keyword,
 predicate) with retry-on-error and break-on-first-hit
-(search_module.rb:62-198). Here the whole corpus is searched at once:
+(search_module.rb:62-198). Here the whole corpus is searched at once
+against an inverted token index over target literals (explode +
+distinct), whose per-token fan-out is capped (skew guard — hot tokens
+like 'john' otherwise explode J2, SURVEY.md §7).
 
-* an inverted token index over target literals (explode + distinct)
-  replaces Virtuoso's text index; per-token fan-out is capped (skew
-  guard — hot tokens like 'john' otherwise explode J2, SURVEY.md §7);
-* tier-1 phrase search joins each keyword's RAREST token (frequency
-  from the index — selectivity + skew avoidance) against the index and
-  verifies the phrase JVM-side with instr();
-* tier-2 AND search (search_module.rb:126-168) generates the trailing-
-  token-drop prefixes (len>=2) and the stopword-stripped variant, joins
-  tokens against the index and verifies ALL-tokens-present with a
-  countDistinct == prefix-size aggregate;
-* F11 (search_module.rb:228-270) scores DISTINCT (keyword, literal)
-  pairs with the advanced_string_matching pandas UDF and keeps
-  candidate groups whose best literal beats the threshold;
-* cascade selection (first predicate tier with a passing hit; first
-  label property with any candidate) becomes min-over-priority
-  aggregates — batch-evaluating all tiers then selecting is the
-  set-oriented equivalent of the reference's sequential break.
+The search cascade is one loop over tiers (the matcher's `_retrieve`);
+each tier searches only the keywords every earlier tier missed:
+
+* tier 1, phrase (J2): each keyword's RAREST token joins the index,
+  and the phrase is verified JVM-side with instr();
+* tier 2, AND (J3, search_module.rb:126-168): trailing-token-drop
+  prefixes (len>=2) and the stopword-stripped variant need ALL their
+  tokens in one literal;
+* tier 3, word-by-word (J4, opt-in): each token searches alone.
+
+Every tier then takes the same steps: `tag_tiers` gives each hit its
+predicate's cascade priority, `f11_passing` (search_module.rb:228-270)
+keeps hits whose candidate has a literal beating the threshold, and
+`select_candidates` keeps each keyword's `first_hits` — batch-evaluating
+the predicates and then taking the min priority is the set-oriented
+equivalent of the reference's sequential break.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
+import operator
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -240,18 +244,49 @@ def build_token_index(
     target: DataFrame,
     search_predicates: list[str] | None,
     cfg: SerimiConfig,
-    mat=None,
 ) -> DataFrame:
     """raw_token_index + apply_hot_token_cap in one call (the simple
-    entry point when no predicate restriction follows). `mat`
-    materializes the RAW index first so the hot-token frequency scan
-    reads the checkpointed frame instead of re-running the whole build
-    (one full-plan job instead of two); the cap stays lazy over the
-    materialized frame."""
-    idx = raw_token_index(target, search_predicates, cfg)
-    if mat is not None:
-        idx = mat(idx)
-    return apply_hot_token_cap(idx, cfg)
+    entry point when no predicate restriction follows)."""
+    return apply_hot_token_cap(
+        raw_token_index(target, search_predicates, cfg), cfg
+    )
+
+
+# ---------------------------------------------------------------------------
+# cascade steps shared by every tier: tier tagging and first-hit selection
+# ---------------------------------------------------------------------------
+
+
+def tag_tiers(
+    hits: DataFrame, tier_of_pred: dict[str, int] | None
+) -> DataFrame:
+    """`hits` with column `tier`, its predicate `p`'s cascade priority;
+    hits on predicates the cascade does not search are dropped.
+    tier_of_pred None is the any-predicate warm-up ('?p'): every hit is
+    tier 0."""
+    if tier_of_pred is None:
+        return hits.withColumn("tier", F.lit(0))
+    tier_map = F.create_map(
+        *[x for p, i in tier_of_pred.items() for x in (F.lit(p), F.lit(i))]
+    )
+    return hits.withColumn("tier", tier_map[F.col("p")]).filter(
+        F.col("tier").isNotNull()
+    )
+
+
+def first_hits(df: DataFrame, key: list[str], priority: list) -> DataFrame:
+    """Rows of `df` whose priority columns equal, in order, their
+    minimum over `key` (ties kept). Each priority is a column name or a
+    (name, Column) pair for a derived value. Several priorities take
+    one min over their struct (lexicographic order); a single one takes
+    a plain min, which Spark hash-aggregates — a struct min needs a
+    sort-based aggregate."""
+    prio = [(p, F.col(p)) if isinstance(p, str) else p for p in priority]
+    single = len(prio) == 1
+    packed = prio[0][1] if single else F.struct(*[c.alias(n) for n, c in prio])
+    best = df.groupBy(*key).agg(F.min(packed).alias("b"))
+    at_min = [c == F.col("b" if single else f"b.{n}") for n, c in prio]
+    return df.join(best, key).filter(functools.reduce(operator.and_, at_min))
 
 
 # ---------------------------------------------------------------------------
@@ -264,10 +299,8 @@ def phrase_hits(
     index: DataFrame,
     tier_of_pred: dict[str, int] | None,
 ) -> DataFrame:
-    """(s, rank, chunk_id, label_idx, kw, tier, cand) — phrase matches.
-
-    tier_of_pred maps searchable predicate -> cascade priority; None
-    means the any-predicate warm-up tier ('?p', tier 0 for all)."""
+    """(s, rank, chunk_id, label_idx, kw, tier, cand) — phrase matches,
+    tiered by `tag_tiers(_, tier_of_pred)`."""
     tok_freq = index.groupBy("tok").agg(F.count("*").alias("tok_freq"))
     ks = keywords.filter("searchable").withColumn(
         "tok", F.explode(F.array_distinct(norm_tokens("kw_norm")))
@@ -294,16 +327,7 @@ def phrase_hits(
         )
         .filter(F.col("kw_norm") != "")
     )
-    if tier_of_pred is None:
-        hits = hits.withColumn("tier", F.lit(0))
-    else:
-        tier_map = F.create_map(
-            *[x for p, i in tier_of_pred.items() for x in (F.lit(p), F.lit(i))]
-        )
-        hits = hits.withColumn("tier", tier_map[F.col("p")]).filter(
-            F.col("tier").isNotNull()
-        )
-    return hits.select(
+    return tag_tiers(hits, tier_of_pred).select(
         "s", "rank", "chunk_id", "label_idx", "kw", "tier", "cand"
     ).distinct()
 
@@ -357,16 +381,7 @@ def and_hits(
         .agg(F.countDistinct("tok").alias("n_hit"))
         .filter(F.col("n_hit") == F.col("n_req"))
     )
-    if tier_of_pred is None:
-        grouped = grouped.withColumn("tier", F.lit(0))
-    else:
-        tier_map = F.create_map(
-            *[x for p, i in tier_of_pred.items() for x in (F.lit(p), F.lit(i))]
-        )
-        grouped = grouped.withColumn("tier", tier_map[F.col("p")]).filter(
-            F.col("tier").isNotNull()
-        )
-    return grouped.select(
+    return tag_tiers(grouped, tier_of_pred).select(
         "s", "rank", "chunk_id", "label_idx", "kw", "variant",
         "prefix_len", "tier", "cand",
     ).distinct()
@@ -392,10 +407,7 @@ def word_hits(
     one §2 row without an implementation. For keywords that failed
     tiers 1-2, each token searches ALONE (in keyword order, skipping
     stopwords and tokens shorter than 3 chars — the reference's
-    `next if` guards); selection downstream keeps the first
-    (word_pos, tier) with a PASSING candidate, mirroring the
-    reference's break-on-first-passing-token outer loop with its
-    first-passing-predicate inner loop."""
+    `next if` guards)."""
     toks = failed_keywords.select(
         "s", "rank", "chunk_id", "label_idx", "kw",
         F.posexplode(norm_tokens("kw_norm")).alias("word_pos", "tok"),
@@ -403,16 +415,7 @@ def word_hits(
     if stopwords:
         toks = toks.filter(~F.col("tok").isin(list(stopwords)))
     hits = toks.join(index, "tok")
-    if tier_of_pred is None:
-        hits = hits.withColumn("tier", F.lit(0))
-    else:
-        tier_map = F.create_map(
-            *[x for p, i in tier_of_pred.items() for x in (F.lit(p), F.lit(i))]
-        )
-        hits = hits.withColumn("tier", tier_map[F.col("p")]).filter(
-            F.col("tier").isNotNull()
-        )
-    return hits.select(
+    return tag_tiers(hits, tier_of_pred).select(
         "s", "rank", "chunk_id", "label_idx", "kw", "word_pos", "tier",
         "cand",
     ).distinct()
@@ -499,87 +502,53 @@ def f11_passing(
 class CandidateResult:
     pairs: DataFrame      # (chunk_id, rank, s, cand)
     searched: DataFrame   # (chunk_id, rank, s, kw) — winning label property
-    # per-tier passing frames, kept for the sequential-mode promotion
-    # fold (search_module.rb:107-108 — which predicate "found" each
-    # keyword decides the next chunk's cascade order)
-    passing_t1: DataFrame | None = None
-    passing_t2: DataFrame | None = None
+    # passing frames of the tiers that ran, in tier order, kept for the
+    # sequential-mode promotion fold (search_module.rb:107-108 — which
+    # predicate "found" each keyword decides the next chunk's cascade
+    # order)
+    passing: list[DataFrame] = field(default_factory=list)
 
 
 def select_candidates(
     keywords: DataFrame,
     passing_t1: DataFrame,
-    passing_t2: DataFrame | None,
+    passing_t2: DataFrame | None = None,
     passing_t3: DataFrame | None = None,
 ) -> CandidateResult:
-    """Reference cascade as min-priority selections:
+    """Reference cascade as first-hit (min-priority) selections per
+    keyword:
 
-    * per keyword, tier-1 wins at the lowest predicate tier with a
-      passing candidate (search_module.rb:91);
+    * tier 1 wins at the lowest predicate tier with a passing candidate
+      (search_module.rb:91);
     * tier-2 'and' wins at (lowest tier, longest prefix); the 'nsw'
-      variant adds its own first-passing tier (b + c union,
+      variant adds its own lowest tier (b + c union,
       search_module.rb:167);
     * tier-3 word-by-word (J4, opt-in) wins at the first
-      (word_pos, tier) with a passing candidate — it only ever
-      receives keywords that failed tiers 1-2;
+      (word_pos, tier) with a passing candidate — the first passing
+      token, then its first passing predicate;
     * per source, the first label property (label_idx) with any
       candidate wins (serimi_module.rb:151-170); its keywords become
       the searched labels.
     """
     kw_key = ["s", "rank", "chunk_id", "label_idx", "kw"]
-    best1 = passing_t1.groupBy(*kw_key).agg(F.min("tier").alias("best_tier"))
-    sel1 = passing_t1.join(best1, kw_key).filter(
-        F.col("tier") == F.col("best_tier")
-    ).select(*kw_key, "cand")
 
-    sels = [sel1]
+    def first(df: DataFrame, *priority) -> DataFrame:
+        return first_hits(df, kw_key, list(priority)).select(*kw_key, "cand")
+
+    sels = [first(passing_t1, "tier")]
     if passing_t2 is not None:
-        t2 = passing_t2
-        and_best = (
-            t2.filter(F.col("variant") == "and")
-            .groupBy(*kw_key)
-            .agg(F.min(F.struct(F.col("tier"), (-F.col("prefix_len")).alias("npl"))).alias("b"))
-        )
-        sel2a = (
-            t2.filter(F.col("variant") == "and")
-            .join(and_best, kw_key)
-            .filter(
-                (F.col("tier") == F.col("b.tier"))
-                & (-F.col("prefix_len") == F.col("b.npl"))
+        variant = F.col("variant")
+        sels.append(
+            first(
+                passing_t2.filter(variant == "and"),
+                "tier",
+                ("npl", -F.col("prefix_len")),
             )
-            .select(*kw_key, "cand")
         )
-        nsw_best = (
-            t2.filter(F.col("variant") == "nsw")
-            .groupBy(*kw_key)
-            .agg(F.min("tier").alias("best_tier"))
-        )
-        sel2b = (
-            t2.filter(F.col("variant") == "nsw")
-            .join(nsw_best, kw_key)
-            .filter(F.col("tier") == F.col("best_tier"))
-            .select(*kw_key, "cand")
-        )
-        sels.extend([sel2a, sel2b])
-
+        sels.append(first(passing_t2.filter(variant == "nsw"), "tier"))
     if passing_t3 is not None:
-        best3 = passing_t3.groupBy(*kw_key).agg(
-            F.min(F.struct(F.col("word_pos"), F.col("tier"))).alias("b")
-        )
-        sel3 = (
-            passing_t3.join(best3, kw_key)
-            .filter(
-                (F.col("word_pos") == F.col("b.word_pos"))
-                & (F.col("tier") == F.col("b.tier"))
-            )
-            .select(*kw_key, "cand")
-        )
-        sels.append(sel3)
-
-    all_sel = sels[0]
-    for s_ in sels[1:]:
-        all_sel = all_sel.unionByName(s_)
-    all_sel = all_sel.distinct()
+        sels.append(first(passing_t3, "word_pos", "tier"))
+    all_sel = functools.reduce(DataFrame.unionByName, sels).distinct()
 
     # label-property cascade per source
     src_key = ["s", "rank", "chunk_id"]

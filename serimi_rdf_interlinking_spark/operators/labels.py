@@ -17,9 +17,8 @@ from pyspark.sql import functions as F
 
 from ..functions import kernels as K
 from ..functions.columns import is_numericish_col, norm_tokens
+from ..sources.triples import RDFS_LABEL
 from . import rds_core
-
-RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
 
 
 def _ruby_to_f_str(s: str) -> str:

@@ -15,8 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import conf_override
-
-OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
+from .triples import OWL_SAMEAS
 
 
 def _line_expr(fmt: str):

@@ -14,14 +14,12 @@ from __future__ import annotations
 import random
 from dataclasses import dataclass, field
 
+from .triples import OWL_SAMEAS, RDF_TYPE, RDFS_LABEL, WIKI_REDIRECT  # noqa: F401
+
 SRC = "http://src.test/resource/"
 TGT = "http://tgt.test/resource/"
 SRC_ONT = "http://src.test/ontology/"
 TGT_ONT = "http://tgt.test/ontology/"
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-RDFS_LABEL = "http://www.w3.org/2000/01/rdf-schema#label"
-WIKI_REDIRECT = "http://dbpedia.org/ontology/wikiPageRedirects"
-OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
 CLASS_CITY = "http://src.test/class/City"
 CLASS_PERSON = "http://src.test/class/Person"

@@ -36,14 +36,6 @@ PAGE_SCHEMA = T.StructType(
     ]
 )
 
-ALIGNMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("source", T.StringType(), False),
-        T.StructField("target", T.StringType(), False),
-        T.StructField("score", T.DoubleType(), True),
-    ]
-)
-
 EXTRACTED_TRIPLE_SCHEMA = T.StructType(
     [
         T.StructField("s", T.StringType(), False),
@@ -51,16 +43,5 @@ EXTRACTED_TRIPLE_SCHEMA = T.StructType(
         T.StructField("o", T.StringType(), True),
         T.StructField("o_is_uri", T.BooleanType(), False),
         T.StructField("src_url", T.StringType(), False),
-    ]
-)
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), True),
-        T.StructField("rows_in", T.LongType(), True),
-        T.StructField("rows_out", T.LongType(), True),
-        T.StructField("detail", T.StringType(), True),
     ]
 )

@@ -33,3 +33,29 @@ def triple_dfs(spark, fixture_small):
     src = spark.createDataFrame(fixture_small.source, TRIPLE_SCHEMA)
     tgt = spark.createDataFrame(fixture_small.target, TRIPLE_SCHEMA)
     return src, tgt
+
+
+@pytest.fixture(scope="module")
+def duck_con():
+    import duckdb
+
+    con = duckdb.connect()
+    yield con
+    con.close()
+
+
+@pytest.fixture()
+def mat_boundaries(monkeypatch):
+    """Names of the SerimiMatcher `_mat` stage boundaries materialized
+    during the test, in call order."""
+    from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
+
+    names: list[str] = []
+    mat = SerimiMatcher._mat
+
+    def recording_mat(self, df, name):
+        names.append(name)
+        return mat(self, df, name)
+
+    monkeypatch.setattr(SerimiMatcher, "_mat", recording_mat)
+    return names

@@ -1,7 +1,8 @@
-"""Candidate retrieval's inverted token index: the hot-token cap
-(operators/candidates.py `apply_hot_token_cap`) and the shared hot-key
+"""Candidate retrieval (operators/candidates.py): the inverted token
+index's hot-token cap (`apply_hot_token_cap`) and the shared hot-key
 guard under it (`hot_keys` + `split_hot`, also used by dedup's
-hot-shingle drop)."""
+hot-shingle drop), and the cascade's first-hit rules
+(`select_candidates`)."""
 
 import logging
 
@@ -150,3 +151,86 @@ def test_j2_skewed_label_corpus_bounded_fanout_and_recall(spark, caplog):
     hot_hits = phrase_hits(all_hot, idx, None).collect()
     assert 0 < len(hot_hits) <= 20
     assert all(h.cand.startswith("u") for h in hot_hits)
+
+
+KW_SCHEMA = (
+    "s string, rank long, chunk_id long, label_idx int, kw string, "
+    "kw_norm string, searchable boolean"
+)
+HIT_SCHEMA = "s string, rank long, chunk_id long, label_idx int, kw string"
+
+
+def test_select_candidates_tier1_ties_and_label_cascade(spark):
+    """Tier 1 keeps every candidate tied at a keyword's lowest predicate
+    tier. Per source the lowest label_idx with any candidate wins, and
+    `searched` carries all of that label's keywords, searchable or not."""
+    from serimi_rdf_interlinking_spark.operators.candidates import (
+        select_candidates,
+    )
+
+    kws = spark.createDataFrame(
+        [
+            ("s1", 0, 1, 0, "alpha beta", "alpha beta", True),
+            ("s1", 0, 1, 0, "ab", "ab", False),
+            ("s1", 0, 1, 1, "alpha alias", "alpha alias", True),
+            ("s2", 1, 1, 0, "zeta", "zeta", True),
+            ("s2", 1, 1, 1, "gamma delta", "gamma delta", True),
+        ],
+        KW_SCHEMA,
+    )
+    p1 = spark.createDataFrame(
+        [
+            ("s1", 0, 1, 0, "alpha beta", 1, "cA"),
+            ("s1", 0, 1, 0, "alpha beta", 1, "cB"),
+            ("s1", 0, 1, 0, "alpha beta", 2, "cC"),
+            # a lower tier under a later label property never wins
+            ("s1", 0, 1, 1, "alpha alias", 0, "cZ"),
+            # s2's first label property found nothing: label 1 wins
+            ("s2", 1, 1, 1, "gamma delta", 0, "cD"),
+        ],
+        HIT_SCHEMA + ", tier int, cand string",
+    )
+    cr = select_candidates(kws, p1)
+    assert {(r.s, r.cand) for r in cr.pairs.collect()} == {
+        ("s1", "cA"), ("s1", "cB"), ("s2", "cD"),
+    }
+    assert {(r.s, r.kw) for r in cr.searched.collect()} == {
+        ("s1", "alpha beta"), ("s1", "ab"), ("s2", "gamma delta"),
+    }
+
+
+def test_select_candidates_and_nsw_first_hits_union(spark):
+    """Tier-2 'and' wins at the lowest tier, then the longest prefix;
+    'nsw' wins at its own lowest tier, however low the 'and' winner's
+    is; both are unioned with tier 1's picks (search_module.rb:167)."""
+    from serimi_rdf_interlinking_spark.operators.candidates import (
+        select_candidates,
+    )
+
+    kws = spark.createDataFrame(
+        [
+            ("s1", 0, 1, 0, kw, kw, True)
+            for kw in ("alpha beta", "gamma delta eps", "eta theta iota")
+        ],
+        KW_SCHEMA,
+    )
+    p1 = spark.createDataFrame(
+        [("s1", 0, 1, 0, "alpha beta", 0, "cA")],
+        HIT_SCHEMA + ", tier int, cand string",
+    )
+    p2 = spark.createDataFrame(
+        [
+            # tier before prefix length: the shorter prefix at tier 0
+            # beats the longer one at tier 1
+            ("s1", 0, 1, 0, "gamma delta eps", "and", 3, 1, "cF"),
+            ("s1", 0, 1, 0, "gamma delta eps", "and", 2, 0, "cD"),
+            ("s1", 0, 1, 0, "gamma delta eps", "nsw", 2, 2, "cG"),
+            ("s1", 0, 1, 0, "gamma delta eps", "nsw", 2, 3, "cH"),
+            # within the lowest tier the longest prefix wins
+            ("s1", 0, 1, 0, "eta theta iota", "and", 2, 0, "cI"),
+            ("s1", 0, 1, 0, "eta theta iota", "and", 3, 0, "cJ"),
+        ],
+        HIT_SCHEMA + ", variant string, prefix_len int, tier int, cand string",
+    )
+    cr = select_candidates(kws, p1, p2)
+    assert {r.cand for r in cr.pairs.collect()} == {"cA", "cD", "cG", "cJ"}

@@ -1,10 +1,12 @@
-"""Dedup / similarity / text-analysis operators over the driver test
-tables (documents, embeddings)."""
+"""Dedup / similarity / text-analysis / sampling operators over the
+sf0.001 test tables (documents, embeddings), and the bit-equivalences
+their fast paths rely on."""
 
 import logging
 import os
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from serimi_rdf_interlinking_spark.operators import dedup as D
@@ -473,3 +475,227 @@ def test_pack_documents_greedy(spark):
     assert out[3] == (2, 9, 9)
     assert out[4] == (3, 2, 2)
     assert out[5] == (4, 11, 11)
+
+
+# ---------------------------------------------------------------------------
+# sampling NULL strata, GEMM id dtypes, the unrolled exact-cosine dot
+# ---------------------------------------------------------------------------
+
+
+def test_stratified_sample_null_stratum_excluded(spark):
+    """A NULL stratum (or key) must hash to NULL and be EXCLUDED — the
+    SQL '||' NULL-propagation semantics the oracle documents — not
+    silently sampled under a different keying (the concat_ws skip)."""
+    from serimi_rdf_interlinking_spark.operators.sampling import (
+        stratified_sample,
+    )
+
+    df = spark.createDataFrame(
+        [Row(stratum="a", k=i) for i in range(50)]
+        + [Row(stratum=None, k=i) for i in range(50, 80)]
+        + [Row(stratum="b", k=None)],
+    )
+    out = stratified_sample(df, "stratum", 1.0, "k")
+    rows = out.collect()
+    # fraction 1.0 keeps every NON-NULL row; every NULL-stratum/key row
+    # is dropped on both engines identically
+    assert len(rows) == 50
+    assert all(r.stratum == "a" for r in rows)
+
+
+def test_gemm_string_ids_match_exact_topk(spark):
+    """Non-long id columns must flow through GEMM unchanged (the round-3
+    schema hardcoded 'long' and failed on string ids)."""
+    from serimi_rdf_interlinking_spark.operators.similarity import (
+        cosine_topk,
+        cosine_topk_gemm,
+    )
+
+    import numpy as np
+
+    rng = np.random.RandomState(11)
+    rows = [
+        Row(vec_id=f"doc{i:03d}", embedding=[float(x) for x in rng.randn(8)])
+        for i in range(40)
+    ]
+    embs = spark.createDataFrame(rows)
+    queries = embs.filter(F.col("vec_id") < "doc005")
+    exact = cosine_topk(embs, queries, k=3)
+    gemm = cosine_topk_gemm(embs, queries, k=3)
+    assert dict(gemm.dtypes)["query_id"] == "string"
+    assert dict(gemm.dtypes)["neighbor_id"] == "string"
+    e = {(r.query_id, r.neighbor_id) for r in exact.collect()}
+    g = {(r.query_id, r.neighbor_id) for r in gemm.collect()}
+    assert e == g
+
+
+def test_cosine_topk_values_unchanged_by_unroll(spark, duck_con):
+    """The unrolled chain folds left-to-right exactly like the HOF
+    aggregate — rounded cosines must equal the sequential SQL fold."""
+    from serimi_rdf_interlinking_spark.operators.similarity import cosine_topk
+
+    embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    queries = embs.filter(F.col("vec_id") < 4)
+    got = {
+        (r.query_id, r.neighbor_id): r.cos
+        for r in cosine_topk(embs, queries, k=3).collect()
+    }
+    want = {
+        (q, n): c
+        for q, n, c in duck_con.execute(
+            """
+WITH u AS (SELECT vec_id, list_transform(embedding::DOUBLE[], x -> x /
+  sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))) AS v
+  FROM read_parquet('{d}/embeddings.parquet')),
+q AS (SELECT vec_id AS query_id, v AS qv FROM u WHERE vec_id < 4),
+s AS (SELECT q.query_id, u.vec_id AS neighbor_id,
+        round(list_dot_product(q.qv, u.v), 6) AS cos
+      FROM q, u WHERE q.query_id <> u.vec_id),
+r AS (SELECT *, row_number() OVER (PARTITION BY query_id
+        ORDER BY cos DESC, neighbor_id) AS rk FROM s)
+SELECT query_id, neighbor_id, cos FROM r WHERE rk <= 3
+""".format(d=SF_DIR)
+        ).fetchall()
+    }
+    assert got == want
+
+# ---------------------------------------------------------------------------
+# fast-path equivalences: the (?i) case-folded regexes equal the
+# spelled-out classes (incl. İ / KELVIN SIGN, whose lowercase contains
+# ASCII), and the F.expr dot chains are raw-bit equal to Column algebra
+# ---------------------------------------------------------------------------
+
+
+TRICKY = [
+    "Hello, World!  multi  space",
+    "ÀÉÎ öü ß çñ",              # non-ASCII letters: separators in both
+    "İstanbul KKelvin",  # İ and KELVIN SIGN: lowercase
+                                    # CONTAINS ascii i/k — the chars a
+                                    # lower-then-match rewrite gets wrong
+    "under_score-and.dots",
+    "123abc DEF456",
+    "",
+    "   ",
+    "!!!",
+    "a",
+    "ΣΙΣΥΦΟΣ τέλος",
+    "tab\tnew\nline",
+    "ＡＢＣ fullwidth",
+]
+
+
+@pytest.fixture(scope="module")
+def tricky_df(spark):
+    return spark.createDataFrame([(t,) for t in TRICKY], "text string")
+
+
+def _collect(df, col):
+    return [r[0] for r in df.select(col.alias("x")).collect()]
+
+
+def test_case_fold_flag_regex_equivalence(tricky_df):
+    pairs = [
+        (r"[^A-Za-z0-9]+", r"(?i)[^a-z0-9]+"),
+        (r"[^A-Za-z0-9_]", r"(?i)[^a-z0-9_]"),
+        (r"[^A-Za-z]", r"(?i)[^a-z]"),
+    ]
+    for spelled, folded in pairs:
+        a = _collect(tricky_df, F.regexp_replace("text", spelled, " "))
+        b = _collect(tricky_df, F.regexp_replace("text", folded, " "))
+        assert a == b, (spelled, folded)
+    # the extract-all alternation used by token_counts' bpe proxy
+    a = _collect(
+        tricky_df,
+        F.regexp_extract_all("text", F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"), 0),
+    )
+    b = _collect(
+        tricky_df,
+        F.regexp_extract_all("text", F.lit(r"(?i)[a-z0-9]+|[^a-z0-9\s]"), 0),
+    )
+    assert a == b
+
+
+def test_dedup_norm_matches_spelled_out_form(tricky_df):
+    from serimi_rdf_interlinking_spark.operators.dedup import _norm, _tokens
+
+    spelled = F.lower(
+        F.trim(F.regexp_replace("text", r"[^A-Za-z0-9]+", " "))
+    )
+    assert _collect(tricky_df, _norm("text")) == _collect(tricky_df, spelled)
+    spelled_toks = F.filter(
+        F.split(spelled, " "), lambda t: t != F.lit("")
+    )
+    assert _collect(tricky_df, _tokens("text")) == _collect(
+        tricky_df, spelled_toks
+    )
+
+
+@pytest.mark.parametrize("dim", [1, 3, 64, 300])
+def test_dot_unrolled_expr_bitparity(spark, dim):
+    """The F.expr()-built chain must be RAW-BIT equal to the
+    Column-algebra chain on both sides of the MAX_UNROLL_DIM fold
+    boundary (300 > 256 exercises the HOF fallback)."""
+    import functools
+    import operator
+    import random
+
+    from serimi_rdf_interlinking_spark.operators.similarity import (
+        MAX_UNROLL_DIM,
+        _dot,
+        dot_unrolled,
+    )
+
+    rng = random.Random(dim)
+    rows = [
+        (
+            [rng.uniform(-1, 1) for _ in range(dim)],
+            [rng.uniform(-1, 1) for _ in range(dim)],
+        )
+        for _ in range(50)
+    ]
+    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
+    fast = dot_unrolled("a", "b", dim)  # string names -> expr path
+    if dim > MAX_UNROLL_DIM:
+        slow = _dot(F.col("a"), F.col("b"))
+    else:
+        slow = functools.reduce(
+            operator.add, [F.col("a")[i] * F.col("b")[i] for i in range(dim)]
+        )
+    out = df.select(
+        F.sum(F.pmod(F.xxhash64(fast), F.lit(10 ** 9))).alias("hf"),
+        F.sum(F.pmod(F.xxhash64(slow), F.lit(10 ** 9))).alias("hs"),
+    ).collect()[0]
+    assert out.hf == out.hs
+
+
+def test_dot_literal_expr_bitparity_and_nonfinite_fallback(spark):
+    import functools
+    import operator
+    import random
+
+    from serimi_rdf_interlinking_spark.operators.similarity import dot_literal
+
+    rng = random.Random(7)
+    dim = 64
+    vals = [rng.uniform(-1, 1) for _ in range(dim)]
+    vals[3] = 1e-300          # extreme-but-finite literals round-trip
+    vals[5] = -0.0
+    rows = [([rng.uniform(-1, 1) for _ in range(dim)],) for _ in range(50)]
+    df = spark.createDataFrame(rows, "a array<double>")
+    fast = dot_literal("a", vals, dim)
+    slow = functools.reduce(
+        operator.add,
+        [F.col("a")[i] * F.lit(float(vals[i])) for i in range(dim)],
+    )
+    out = df.select(
+        F.sum(F.pmod(F.xxhash64(fast), F.lit(10 ** 9))).alias("hf"),
+        F.sum(F.pmod(F.xxhash64(slow), F.lit(10 ** 9))).alias("hs"),
+    ).collect()[0]
+    assert out.hf == out.hs
+    # non-finite constants must take the Column fallback, not a broken
+    # expr string
+    nf = vals[:]
+    nf[0] = float("inf")
+    col = dot_literal("a", nf, dim)
+    got = df.limit(1).select(col.alias("x")).collect()[0].x
+    assert got in (float("inf"), float("-inf")) or got != got

@@ -4,7 +4,9 @@ value-for-value (sorted columns, sorted rows, numeric tolerance).
 
 This is the local twin of the driver's CORRECTNESS gate — it exists so
 engine/oracle divergences (e.g. the round-1 sessionize sub-second epoch
-truncation) are caught by `pytest` before a round is graded.
+truncation) are caught by `pytest` before a round is graded. The
+serimi_alignment scores are also pinned bit for bit, because value
+hashes compare doubles exactly.
 """
 
 import os
@@ -74,3 +76,31 @@ def test_query_matches_oracle(spark, duck, name):
     odf = duck.execute(E.oracle_sql()[name]).df()
     err = _diff(sdf, odf)
     assert err is None, f"{name}: {err}"
+
+
+def test_pinned_oracle_doubles_are_bit_exact(spark, duck_con):
+    """The driver hashes materialized values STRICTLY — np.allclose
+    tolerance in the pytest gate must never hide a literal-parsing ulp
+    skew (bare decimal literals parse DECIMAL-first in DuckDB and the
+    ::DOUBLE cast double-rounds; _dlit therefore casts from a string).
+    This pins bit equality for every serimi_alignment score."""
+    import struct
+
+    import __spark_entry__ as E
+
+    sdf = (
+        E.queries()["serimi_alignment"](spark, SF_DIR)
+        .toPandas()
+        .sort_values(["source", "target"])
+        .reset_index(drop=True)
+    )
+    odf = (
+        duck_con.execute(E.oracle_sql()["serimi_alignment"])
+        .df()
+        .sort_values(["source", "target"])
+        .reset_index(drop=True)
+    )
+    assert list(sdf["source"]) == list(odf["source"])
+    assert list(sdf["target"]) == list(odf["target"])
+    for a, b in zip(sdf["score"], odf["score"]):
+        assert struct.pack("<d", a) == struct.pack("<d", b), (a, b)

@@ -1,8 +1,11 @@
 """Physical-plan checks: predicate pushdown reaches the parquet scan,
 small dimensions broadcast, the dedup hot path stays JVM-side (no
-Python eval in the plan), and column pruning keeps scans narrow."""
+Python eval in the plan), column pruning keeps scans narrow, and the
+similarity / set-operation plan shapes (no interpreted dot fold,
+dim-independent IVF aggregate, one lineitem scan) stay in place."""
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -238,3 +241,62 @@ def test_lsh_label_join_no_cartesian_all_codegen_joins(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
+
+
+def test_cosine_topk_pair_path_has_no_interpreted_fold(spark):
+    """The pair-scoring hot path must be the unrolled a[0]*b[0]+... chain
+    (whole-stage codegen), not the interpreted aggregate(zip_with(...))
+    higher-order fold. unit_vec's once-per-vector transform() lambda is
+    fine — the assert targets the per-pair fold specifically."""
+    from serimi_rdf_interlinking_spark.operators.similarity import cosine_topk
+
+    embs = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    queries = embs.filter(F.col("vec_id") < 4)
+    plan = _plan(cosine_topk(embs, queries, k=3))
+    assert "zip_with" not in plan
+
+
+def test_ivf_lloyd_plan_is_dim_independent(spark):
+    """At 512 dims the refinement plan must NOT carry one aggregate
+    column per dimension (plan bloat / codegen overrun at 1k+ dims):
+    the posexplode + (cluster, pos) average keeps the aggregate list
+    constant-width regardless of dim."""
+    import numpy as np
+
+    from serimi_rdf_interlinking_spark.operators.similarity import ann_ivf_topk
+
+    rng = np.random.RandomState(5)
+    dim = 512
+    rows = [
+        Row(vec_id=i, embedding=[float(x) for x in rng.randn(dim)])
+        for i in range(24)
+    ]
+    embs = spark.createDataFrame(rows)
+    queries = embs.filter(F.col("vec_id") < 2)
+    df = ann_ivf_topk(embs, queries, k=3, n_centroids=4, n_probe=2)
+    plan = _plan(df)
+    # the per-dimension form emitted avg(v[0]) ... avg(v[511]) into the
+    # result plan; the array-aggregate Lloyd step now runs EAGERLY
+    # inside ann_ivf_topk (its K refined centroids are collected — a
+    # bounded n_centroids-row transfer — so both assignment passes
+    # become literal argmax projections with no cross join, no
+    # vector-carrying groupBy and no window). The returned plan must
+    # carry no per-dimension aggregates and no per-query window.
+    assert plan.count("avg(") < 20
+    assert "row_number" not in plan
+    # and it still computes: recall vs brute force isn't asserted here
+    # (tiny corpus), just execution end-to-end
+    assert df.count() > 0
+
+
+def test_set_operations_single_lineitem_scan(spark):
+    """Both consumers (hot-part aggregation + the join) must read the
+    ONE materialized distinct-pair frame: exactly zero parquet scans of
+    lineitem remain in the query plan (the scan happened once, at
+    checkpoint time)."""
+    import __spark_entry__ as entry
+
+    df = entry.queries()["set_operations"](spark, "/root/testdata/sf0.001")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 0
+    assert plan.count("Scan ExistingRDD") >= 2

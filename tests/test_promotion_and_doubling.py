@@ -164,3 +164,37 @@ def test_adaptive_doubling_rescues_single_group_chunk(spark):
     assert by_src["http://s/0"] == {(1, "http://t/0", True)}
     assert (1, "http://t/2", True) in by_src["http://s/2"]
     assert (1, "http://t/3", True) in by_src["http://s/3"]
+
+
+def test_promote_found_predicate_matches_reference_cascade(spark):
+    """cfg.promote_found_predicate derives the promoted predicate from
+    the passing description triple ($found, search_module.rb:252-260)
+    instead of the searched tier. On the promotion-divergence fixture
+    the passing triples live under tgt:alias, so the found-mode cascade
+    ends with alias promoted to the front and recall matches the
+    searched-tier sequential mode (11/13)."""
+    from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
+    from serimi_rdf_interlinking_spark.sources.fixtures import (
+        CLASS_CITY,
+        build_promotion_divergence_fixture,
+    )
+    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
+
+    fx = build_promotion_divergence_fixture()
+    src = spark.createDataFrame(fx.source, TRIPLE_SCHEMA)
+    tgt = spark.createDataFrame(fx.target, TRIPLE_SCHEMA)
+    gold = set(fx.gold)
+
+    cfg = SerimiConfig(
+        chunk=2, topk=1, mode="sequential", shuffle_partitions=4,
+        promote_found_predicate=True,
+    )
+    matcher = SerimiMatcher(cfg)
+    res = matcher.run(spark, src, tgt, CLASS_CITY)
+    got = {(r.source, r.target) for r in res.alignments.collect()}
+    assert got <= gold
+    assert len(got & gold) == 11
+    # the evolved cascade front is the predicate whose literal PASSED
+    # (alias), matching the reference's $found promotion
+    assert matcher.final_search_order[0].rsplit("/", 1)[-1] == "alias"

@@ -119,13 +119,9 @@ def test_matcher_word_by_word_noop_when_tiers_hit(spark, triple_dfs):
     assert a == b and len(a) > 0
 
 
-def test_matcher_word_by_word_recovers_failed_keyword(spark):
-    """A keyword whose tokens never co-occur in one target literal
-    fails tiers 1-2; with word_by_word=True its single shared token
-    retrieves the candidate (threshold relaxed so F11 passes on the
-    partial label)."""
-    from serimi_rdf_interlinking_spark.config import SerimiConfig
-    from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
+def _failed_keyword_frames(spark):
+    """(source, target, s_extra, t_extra): the 12-entity fixture plus
+    one source whose keyword fails tiers 1-2."""
     from serimi_rdf_interlinking_spark.sources.fixtures import (
         CLASS_CITY,
         build_interlinking_fixture,
@@ -161,6 +157,19 @@ def test_matcher_word_by_word_recovers_failed_keyword(spark):
     )
     src = spark.createDataFrame(fx.source, TRIPLE_SCHEMA)
     tgt = spark.createDataFrame(fx.target, TRIPLE_SCHEMA)
+    return src, tgt, s_extra, t_extra
+
+
+def test_matcher_word_by_word_recovers_failed_keyword(spark):
+    """A keyword whose tokens never co-occur in one target literal
+    fails tiers 1-2; with word_by_word=True its single shared token
+    retrieves the candidate (threshold relaxed so F11 passes on the
+    partial label)."""
+    from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
+    from serimi_rdf_interlinking_spark.sources.fixtures import CLASS_CITY
+
+    src, tgt, s_extra, t_extra = _failed_keyword_frames(spark)
 
     def run(wbw):
         cfg = SerimiConfig(
@@ -174,3 +183,26 @@ def test_matcher_word_by_word_recovers_failed_keyword(spark):
     with_wbw = run(True)
     assert (s_extra, t_extra) not in without
     assert (s_extra, t_extra) in with_wbw
+
+
+def test_word_by_word_tier_searched_only_when_enabled(spark, mat_boundaries):
+    """The word-by-word tier materializes a `_p3` frame only with
+    word_by_word=True, and only in a retrieval whose AND tier ran."""
+    from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
+    from serimi_rdf_interlinking_spark.sources.fixtures import CLASS_CITY
+
+    src, tgt, _, _ = _failed_keyword_frames(spark)
+    tiers_run = {}
+    for wbw in (False, True):
+        mat_boundaries.clear()
+        cfg = SerimiConfig(
+            chunk=20, topk=1, shuffle_partitions=4,
+            string_threshold=0.2, word_by_word=wbw,
+        )
+        SerimiMatcher(cfg).run(spark, src, tgt, CLASS_CITY)
+        tiers_run[wbw] = list(mat_boundaries)
+    assert not [n for n in tiers_run[False] if n.endswith("_p3")]
+    p3 = [n[:-3] for n in tiers_run[True] if n.endswith("_p3")]
+    assert p3
+    assert all(f"{r}_p2" in tiers_run[True] for r in p3)

@@ -2,16 +2,17 @@
 materialize, checkpointed per stage and idempotently resumable.
 
 north_rule requirements covered here:
-* per-stage checkpoints: every stage writes its output table under
-  <checkpoint_dir>/<run_id>/<stage>/ (parquet locally; the same layout
-  maps to Iceberg tables on a deployment with the Iceberg runtime jars,
-  see sources/io.py) and records completion in _state.json;
+* per-stage checkpoints: every stage writes its output as parquet
+  under <checkpoint_dir>/<run_id>/<stage>/out and records completion in
+  _state.json;
 * resume: a rerun with the same run_id skips completed stages by
   reading their committed outputs — killing the driver between stages
   and rerunning yields byte-identical results;
-* lineage + counters: every stage appends (run_id, stage,
-  partition_id, rows_in, rows_out) rows to the lineage table; the
-  extract stage records per-partition row counts.
+* lineage + counters: every stage writes one file,
+  lineage/part-<stage>.parquet, of (run_id, stage, partition_id,
+  rows_in, rows_out, detail) rows — one stage row, plus per-partition
+  row counts for extract — and renames it into place before committing
+  the stage, so a crash and resume leaves exactly one row set per stage.
 
 The reference analogue is the `-b` offset-resume flag + sequential
 chunk loop (serimi.rb:62-65, initializer.rb:84-87,93-130).
@@ -84,12 +85,8 @@ class KGPipeline:
             json.dump(st, f)
         os.replace(tmp, self._state_path)  # atomic commit
 
-    def _out(self, stage: str, name: str = "out") -> str:
-        return os.path.join(self.root, stage, name)
-
     def _lineage_append(
         self,
-        spark: SparkSession,
         stage: str,
         rows_in: int,
         rows_out: int,
@@ -101,8 +98,6 @@ class KGPipeline:
         # scheduling per stage at any scale, the file is identical
         # parquet with the same schema, and spark.read.parquet reads it
         # unchanged (schema asserted by the pipeline tests)
-        import uuid
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -119,12 +114,15 @@ class KGPipeline:
                 "detail": pa.array([r[5] for r in rows], pa.string()),
             }
         )
+        # one file per stage, renamed into place like _mark_done: a
+        # rerun of a stage that died before its commit replaces that
+        # stage's rows instead of adding a second set, and a torn write
+        # leaves only a dot-file, which Spark and pyarrow.dataset skip
         out_dir = os.path.join(self.root, "lineage")
         os.makedirs(out_dir, exist_ok=True)
-        pq.write_table(
-            table,
-            os.path.join(out_dir, f"part-{stage}-{uuid.uuid4().hex}.parquet"),
-        )
+        tmp = os.path.join(out_dir, f".part-{stage}.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(out_dir, f"part-{stage}.parquet"))
 
     # -- stages ---------------------------------------------------------------
     def run(
@@ -155,151 +153,105 @@ class KGPipeline:
         done = set(self._state()["done"])
         ran: list[str] = []
         skipped: list[str] = []
-
-        # -- extract ----------------------------------------------------------
-        ex_path = self._out("extract")
-        if "extract" in done:
-            extracted = spark.read.parquet(ex_path)
-            skipped.append("extract")
-        else:
-            extracted = extract_triples(pages, from_html=False)
-            extracted.write.mode("overwrite").parquet(ex_path)
-            extracted = spark.read.parquet(ex_path)
-            per_part = [
-                (r.pid, r.cnt)
-                for r in extracted.groupBy(
-                    F.spark_partition_id().alias("pid")
-                ).agg(F.count("*").alias("cnt")).collect()
-            ]
-            # rows_out is the sum of the per-partition counts just
-            # collected — a second full count() job over the same
-            # table would recompute the identical number
-            self._lineage_append(
-                spark,
-                "extract",
-                pages.count(),
-                sum(c for _, c in per_part),
-                per_part,
-            )
-            self._mark_done("extract")
-            ran.append("extract")
-        if stop_after == "extract":
-            return self._result(spark, ran, skipped, extracted=extracted)
-
-        # -- link --------------------------------------------------------------
-        al_path = self._out("link")
-        if "link" in done:
-            alignments = spark.read.parquet(al_path)
-            skipped.append("link")
-        else:
-            # materialize once: the matcher consumes its source frame in
-            # many stages, and the mention lift is a 3-way union of
-            # distincts over the extract table — left lazy it would
-            # re-execute per consuming stage (multi-consumer
-            # re-execution; localCheckpoint truncates in memory)
-            mentions = mentions_as_source_triples(extracted).localCheckpoint()
-            link_cfg = self.cfg
-            matcher = SerimiMatcher(link_cfg)
-            res = matcher.run(
-                spark, mentions, target, "mention://class/Entity"
-            )
-            aligned = res.alignments
-            if self.lsh_recovery:
-                aligned = aligned.unionByName(
-                    lsh_recovery_alignments(
-                        mentions, target, aligned,
-                        threshold=self.lsh_recovery_threshold,
-                    )
+        outs: dict[str, DataFrame] = {}
+        for stage in self.STAGES:
+            path = os.path.join(self.root, stage, "out")
+            if stage in done:
+                outs[stage] = spark.read.parquet(path)
+                skipped.append(stage)
+            else:
+                consumed, built = getattr(self, f"_{stage}")(spark, pages, target, outs)
+                writer = built.write.mode("overwrite")
+                if stage == "materialize":
+                    writer = writer.partitionBy("bucket")
+                writer.parquet(path)
+                out = outs[stage] = spark.read.parquet(path)
+                per_part = None
+                if stage == "extract":
+                    per_part = [
+                        (r.pid, r.cnt)
+                        for r in out.groupBy(
+                            F.spark_partition_id().alias("pid")
+                        ).agg(F.count("*").alias("cnt")).collect()
+                    ]
+                rows_in = consumed.count()
+                # extract's rows_out is the sum of the per-partition
+                # counts just collected — a second full count() job over
+                # the same table would recompute the identical number
+                rows_out = (
+                    out.count() if per_part is None else sum(c for _, c in per_part)
                 )
-            aligned.write.mode("overwrite").parquet(al_path)
-            alignments = spark.read.parquet(al_path)
-            self._lineage_append(
-                spark, "link", mentions.count(), alignments.count()
-            )
-            self._mark_done("link")
-            ran.append("link")
-        if stop_after == "link":
-            return self._result(
-                spark, ran, skipped, extracted=extracted, alignments=alignments
-            )
+                self._lineage_append(stage, rows_in, rows_out, per_part)
+                self._mark_done(stage)
+                ran.append(stage)
+            if stage == stop_after:
+                break
+        return self._result(spark, ran, skipped, outs)
 
-        # -- canonicalize -------------------------------------------------------
-        cc_path = self._out("canonicalize")
-        if "canonicalize" in done:
-            canonical = spark.read.parquet(cc_path)
-            skipped.append("canonicalize")
-        else:
-            sameas_edges = alignments.select(
-                F.col("source").alias("src"), F.col("target").alias("dst")
-            ).unionByName(
-                target.filter(F.col("p") == OWL_SAMEAS).select(
-                    F.col("s").alias("src"), F.col("o").alias("dst")
+    # -- stage bodies ---------------------------------------------------------
+    # each gets the committed outputs of the earlier stages (`outs`) and
+    # returns (the frame counted as its rows_in, the frame to write)
+    def _extract(self, spark, pages, target, outs) -> tuple[DataFrame, DataFrame]:
+        return pages, extract_triples(pages, from_html=False)
+
+    def _link(self, spark, pages, target, outs) -> tuple[DataFrame, DataFrame]:
+        # materialize once: the matcher consumes its source frame in
+        # many stages, and the mention lift is a 3-way union of
+        # distincts over the extract table — left lazy it would
+        # re-execute per consuming stage (multi-consumer
+        # re-execution; localCheckpoint truncates in memory)
+        mentions = mentions_as_source_triples(outs["extract"]).localCheckpoint()
+        aligned = SerimiMatcher(self.cfg).run(
+            spark, mentions, target, "mention://class/Entity"
+        ).alignments
+        if self.lsh_recovery:
+            aligned = aligned.unionByName(
+                lsh_recovery_alignments(
+                    mentions, target, aligned,
+                    threshold=self.lsh_recovery_threshold,
                 )
             )
-            redirects = target.filter(F.col("p") == WIKI_REDIRECT).select(
+        return mentions, aligned
+
+    def _canonicalize(self, spark, pages, target, outs) -> tuple[DataFrame, DataFrame]:
+        alignments = outs["link"]
+        sameas_edges = alignments.select(
+            F.col("source").alias("src"), F.col("target").alias("dst")
+        ).unionByName(
+            target.filter(F.col("p") == OWL_SAMEAS).select(
                 F.col("s").alias("src"), F.col("o").alias("dst")
             )
-            canonical = canonical_mapping(sameas_edges, redirects)
-            canonical.write.mode("overwrite").parquet(cc_path)
-            canonical = spark.read.parquet(cc_path)
-            self._lineage_append(
-                spark, "canonicalize", alignments.count(), canonical.count()
-            )
-            self._mark_done("canonicalize")
-            ran.append("canonicalize")
-        if stop_after == "canonicalize":
-            return self._result(
-                spark, ran, skipped,
-                extracted=extracted, alignments=alignments, canonical=canonical,
-            )
-
-        # -- materialize ---------------------------------------------------------
-        mat_path = self._out("materialize")
-        if "materialize" in done:
-            triples_out = spark.read.parquet(mat_path)
-            skipped.append("materialize")
-        else:
-            ent = F.concat(
-                F.lit("mention://"), F.regexp_replace(F.col("s"), r"\s+", "_")
-            )
-            lifted = extracted.select(
-                ent.alias("s"), "p", "o", "o_is_uri", "src_url"
-            )
-            cmap = canonical.select(
-                F.col("entity").alias("s"), F.col("canonical").alias("s_canon")
-            )
-            triples_out = (
-                lifted.join(cmap, "s", "left")
-                .withColumn("s", F.coalesce("s_canon", "s"))
-                .drop("s_canon")
-                .distinct()
-                # salted, skew-aware layout (north_star): the salt
-                # hashes the WHOLE triple, not just the subject — a
-                # subject-only hash would put a hot entity's entire
-                # fan-in into one bucket, which is the skew salting
-                # exists to break. Full-row salting spreads each hot
-                # subject uniformly over all buckets; readers filter on
-                # s across buckets (the standard salted-layout trade).
-                .withColumn(
-                    "bucket", F.pmod(F.xxhash64("s", "p", "o"), F.lit(16))
-                )
-                .repartition("bucket")
-            )
-            triples_out.write.mode("overwrite").partitionBy("bucket").parquet(
-                mat_path
-            )
-            triples_out = spark.read.parquet(mat_path)
-            self._lineage_append(
-                spark, "materialize", extracted.count(), triples_out.count()
-            )
-            self._mark_done("materialize")
-            ran.append("materialize")
-
-        return self._result(
-            spark, ran, skipped,
-            extracted=extracted, alignments=alignments,
-            canonical=canonical, triples_out=triples_out,
         )
+        redirects = target.filter(F.col("p") == WIKI_REDIRECT).select(
+            F.col("s").alias("src"), F.col("o").alias("dst")
+        )
+        return alignments, canonical_mapping(sameas_edges, redirects)
+
+    def _materialize(self, spark, pages, target, outs) -> tuple[DataFrame, DataFrame]:
+        extracted = outs["extract"]
+        ent = F.concat(
+            F.lit("mention://"), F.regexp_replace(F.col("s"), r"\s+", "_")
+        )
+        lifted = extracted.select(ent.alias("s"), "p", "o", "o_is_uri", "src_url")
+        cmap = outs["canonicalize"].select(
+            F.col("entity").alias("s"), F.col("canonical").alias("s_canon")
+        )
+        triples_out = (
+            lifted.join(cmap, "s", "left")
+            .withColumn("s", F.coalesce("s_canon", "s"))
+            .drop("s_canon")
+            .distinct()
+            # salted, skew-aware layout (north_star): the salt
+            # hashes the WHOLE triple, not just the subject — a
+            # subject-only hash would put a hot entity's entire
+            # fan-in into one bucket, which is the skew salting
+            # exists to break. Full-row salting spreads each hot
+            # subject uniformly over all buckets; readers filter on
+            # s across buckets (the standard salted-layout trade).
+            .withColumn("bucket", F.pmod(F.xxhash64("s", "p", "o"), F.lit(16)))
+            .repartition("bucket")
+        )
+        return extracted, triples_out
 
     # -- assembling the result -------------------------------------------------
     def _result(
@@ -307,10 +259,7 @@ class KGPipeline:
         spark: SparkSession,
         ran: list[str],
         skipped: list[str],
-        extracted: DataFrame | None = None,
-        alignments: DataFrame | None = None,
-        canonical: DataFrame | None = None,
-        triples_out: DataFrame | None = None,
+        outs: dict[str, DataFrame],
     ) -> PipelineResult:
         empty_al = spark.createDataFrame([], "source string, target string, score double")
         empty_cc = spark.createDataFrame([], "entity string, canonical string")
@@ -327,9 +276,9 @@ class KGPipeline:
                 " rows_out long, detail string",
             )
         return PipelineResult(
-            triples_out=triples_out if triples_out is not None else (extracted or empty_tr),
-            alignments=alignments if alignments is not None else empty_al,
-            canonical_ids=canonical if canonical is not None else empty_cc,
+            triples_out=outs.get("materialize", outs.get("extract", empty_tr)),
+            alignments=outs.get("link", empty_al),
+            canonical_ids=outs.get("canonicalize", empty_cc),
             lineage=lineage,
             stages_run=ran,
             stages_skipped=skipped,

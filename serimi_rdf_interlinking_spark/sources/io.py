@@ -1,12 +1,10 @@
-"""Table IO: Iceberg-first with parquet fallback.
+"""Table reads for the CLI's -s/-t inputs: a SPARQL endpoint URL, an
+Iceberg table name, or a parquet path.
 
-north_rule targets Iceberg tables for inputs/checkpoints/outputs. The
-sandbox image has no Iceberg runtime jars, so `iceberg_available()`
-gates every Iceberg path behind an import/config probe and the same
-API transparently falls back to parquet directories with an identical
-layout. On a real deployment, set `spark.sql.catalog.<name>` configs
-and the writes become Iceberg commits (snapshot-isolated, which is what
-makes the per-stage checkpoints idempotent under retries).
+`iceberg_available()` probes for the Iceberg runtime jars; without them
+an identifier is read as a parquet path.
+The KG pipeline's per-stage checkpoints do not go through this module:
+they are always parquet directories (see plans/pipeline.py).
 """
 
 from __future__ import annotations
@@ -21,32 +19,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return True
     except Exception:
         return False
-
-
-def write_table(
-    df: DataFrame,
-    identifier: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """identifier: an Iceberg table name (catalog.db.table) when the
-    runtime is present, else a filesystem path for parquet."""
-    spark = df.sparkSession
-    if iceberg_available(spark) and "/" not in identifier:
-        writer = df.writeTo(identifier)
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        if mode == "overwrite":
-            writer.createOrReplace()
-        else:
-            writer.append()
-        return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(identifier)
 
 
 def read_table(spark: SparkSession, identifier: str) -> DataFrame:

@@ -2,6 +2,7 @@
 streaming ingestion, multimodal plumbing."""
 
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +28,19 @@ def _pages_df(spark, fixture):
         for url, _ts, html, text, lang in fixture.pages
     ]
     return spark.createDataFrame(rows, PAGE_SCHEMA)
+
+
+def _bag(df):
+    return Counter(map(tuple, df.collect()))
+
+
+def _stage_rows(lineage_rows):
+    """(stage, rows_in, rows_out) of each stage row of a lineage table."""
+    return Counter(
+        (r["stage"], r["rows_in"], r["rows_out"])
+        for r in lineage_rows
+        if r["partition_id"] is None
+    )
 
 
 def test_html_text_invariant(fixture_small):
@@ -194,6 +208,22 @@ def test_pipeline_end_to_end_and_resume(spark, fixture_small, triple_dfs, tmp_pa
     assert res2.triples_out.count() == n_triples
     assert res2.alignments.exceptAll(res1.alignments).count() == 0
 
+    # stepwise: one run(stop_after=S) call per stage, as kgbench's
+    # traced run makes them, builds exactly stage S and ends equal to
+    # the one-shot run
+    steps = KGPipeline(cfg, ckpt, run_id="r1_steps")
+    for i, stage in enumerate(KGPipeline.STAGES):
+        r = steps.run(spark, pages, tgt, stop_after=stage)
+        assert r.stages_run == [stage]
+        assert r.stages_skipped == KGPipeline.STAGES[:i]
+        if stage == "extract":
+            assert r.alignments.count() == 0
+        if stage in ("extract", "link"):
+            assert r.canonical_ids.count() == 0
+    assert _bag(r.triples_out) == _bag(res1.triples_out)
+    assert _bag(r.alignments) == _bag(res1.alignments)
+    assert _stage_rows(r.lineage.collect()) == _stage_rows(res1.lineage.collect())
+
 
 def test_pipeline_resume_after_partial(spark, fixture_small, triple_dfs, tmp_path):
     _src, tgt = triple_dfs
@@ -211,6 +241,82 @@ def test_pipeline_resume_after_partial(spark, fixture_small, triple_dfs, tmp_pat
     assert "extract" in r2.stages_skipped
     assert "link" in r2.stages_run
     assert r2.alignments.count() > 0
+
+
+def _assert_one_lineage_row_set_per_stage(lineage_rows):
+    stage_rows = [r for r in lineage_rows if r["partition_id"] is None]
+    assert sorted(r["stage"] for r in stage_rows) == sorted(KGPipeline.STAGES)
+    (extract,) = [r for r in stage_rows if r["stage"] == "extract"]
+    assert extract["rows_out"] == sum(
+        r["rows_out"]
+        for r in lineage_rows
+        if r["stage"] == "extract" and r["partition_id"] is not None
+    )
+
+
+def test_pipeline_lineage_commit_survives_crash(
+    spark, fixture_small, triple_dfs, tmp_path, monkeypatch
+):
+    """A driver that dies after a stage's lineage write but before its
+    _mark_done commit reruns that stage on resume; the rerun replaces
+    the stage's lineage rows instead of adding a second set."""
+    _src, tgt = triple_dfs
+    pages = _pages_df(spark, fixture_small)
+    cfg = SerimiConfig(chunk=10, topk=1)
+    ckpt = str(tmp_path / "ckpt_commit")
+    mark_done = KGPipeline._mark_done
+    crashed = set()
+
+    def crash_once(self, stage):
+        if stage not in crashed:
+            crashed.add(stage)
+            raise RuntimeError(f"killed before committing {stage}")
+        mark_done(self, stage)
+
+    monkeypatch.setattr(KGPipeline, "_mark_done", crash_once)
+    for stage in KGPipeline.STAGES:
+        with pytest.raises(RuntimeError, match=f"committing {stage}"):
+            KGPipeline(cfg, ckpt, run_id="c").run(spark, pages, tgt)
+    res = KGPipeline(cfg, ckpt, run_id="c").run(spark, pages, tgt)
+    assert res.stages_run == ["materialize"]
+    _assert_one_lineage_row_set_per_stage(res.lineage.collect())
+
+
+def test_pipeline_lineage_survives_torn_write(
+    spark, fixture_small, triple_dfs, tmp_path, monkeypatch
+):
+    """A lineage write killed halfway leaves no file that a reader of
+    the run's lineage trips over: the resumed run completes, and its
+    lineage reads with Spark and with pyarrow.dataset."""
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    _src, tgt = triple_dfs
+    pages = _pages_df(spark, fixture_small)
+    cfg = SerimiConfig(chunk=10, topk=1)
+    ckpt = str(tmp_path / "ckpt_torn")
+    write_table = pq.write_table
+    torn = []
+
+    def tear_once(table, where, *args, **kwargs):
+        if torn:
+            return write_table(table, where, *args, **kwargs)
+        torn.append(True)
+        with open(where, "wb") as f:
+            f.write(b"PAR1\x00\x00")
+        raise OSError("killed mid-write")
+
+    monkeypatch.setattr(pq, "write_table", tear_once)
+    with pytest.raises(OSError, match="mid-write"):
+        KGPipeline(cfg, ckpt, run_id="t").run(spark, pages, tgt)
+    res = KGPipeline(cfg, ckpt, run_id="t").run(spark, pages, tgt)
+    assert res.stages_run == KGPipeline.STAGES
+    spark_rows = res.lineage.collect()  # spark.read.parquet(<run>/lineage)
+    arrow_rows = ds.dataset(
+        os.path.join(ckpt, "t", "lineage"), format="parquet"
+    ).to_table().to_pylist()
+    _assert_one_lineage_row_set_per_stage(spark_rows)
+    assert _stage_rows(arrow_rows) == _stage_rows(spark_rows)
 
 
 def test_streaming_extract(spark, fixture_small, tmp_path):

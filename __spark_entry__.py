@@ -9,6 +9,7 @@ kernels). Every computed column is aliased identically on both sides.
 from __future__ import annotations
 
 import atexit
+import functools
 import os
 
 from collections.abc import Callable
@@ -32,13 +33,14 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _stream_scratch(query: str, sf_dir: str) -> str:
     """Per-(query, sf, PROCESS) scratch dir for the streaming replay
-    rows, wiped on entry and removed at interpreter exit. The pid in
-    the path isolates concurrent drivers on the same host (a bench run
-    overlapping a correctness run must not wipe each other's in-flight
-    stream input/checkpoint/sink — round-4 advice); the wipe-on-entry
-    still bounds disk use at one tree per query/sf within a process
-    (bench's best-of-2 invokes each query twice), and the atexit sweep
-    reclaims the last tree when the process ends."""
+    rows and the kg_pipeline row's checkpoint, wiped on entry and
+    removed at interpreter exit. The pid in the path isolates
+    concurrent drivers on the same host (a bench run overlapping a
+    correctness run must not wipe each other's in-flight stream
+    input/checkpoint/sink — round-4 advice); the wipe-on-entry still
+    bounds disk use at one tree per query/sf within a process (bench's
+    best-of-2 invokes each query twice), and the atexit sweep reclaims
+    the last tree when the process ends."""
     import shutil
     import tempfile
 
@@ -56,6 +58,31 @@ def _stream_scratch(query: str, sf_dir: str) -> str:
 
 
 _STREAM_SCRATCH_DIRS: set = set()
+
+
+def _replay(
+    spark: SparkSession, sf_dir: str, query: str,
+    write_input: Callable[[str], None], start: Callable, width: int,
+) -> DataFrame:
+    """One streaming replay: `write_input(in_dir)` lays out the input in
+    a fresh scratch dir, `start(in_dir, out_dir, checkpoint_dir)` runs
+    the AvailableNow query to termination, and the sink is read back.
+
+    The query runs at spark.sql.shuffle.partitions = `width`: stateful
+    streaming commits ONE state-store delta per shuffle partition per
+    micro-batch, so a 32-wide session conf turns a 6-micro-batch replay
+    into ~200 state commits for a few thousand keys — pure fixed
+    overhead at fixture scale. Results are partition-count-independent
+    (grouping is logical); on a real cluster the session conf carries
+    the deployment's width. The conf must stay overridden until
+    awaitTermination returns: a streaming query reads it at first-batch
+    planning, not at start()."""
+    base = _stream_scratch(query, sf_dir)
+    in_dir, out_dir = f"{base}/in", f"{base}/out"
+    write_input(in_dir)
+    with conf_override(spark, {"spark.sql.shuffle.partitions": str(width)}):
+        start(in_dir, out_dir, f"{base}/ckpt").awaitTermination()
+    return spark.read.parquet(out_dir)
 
 
 def _session_state_width(spark: SparkSession, n_rows: int) -> int:
@@ -99,7 +126,6 @@ def _sessionize_replay(
         stream_sessionize_event_time,
     )
 
-    base = _stream_scratch(query, sf_dir)
     # project to the columns the sessionizer touches (event_id, ts,
     # user_id): every input column rides the replay write, the state
     # operator's shuffle AND the Arrow boundary into the per-group
@@ -118,7 +144,6 @@ def _sessionize_replay(
             [], "user_id long, n_sessions long, n_events long"
         )
     width = _session_state_width(spark, int(bounds.n))
-    write_events(ev, f"{base}/in", int(bounds.lo), int(bounds.hi))
     flush = (
         ev.select("user_id")
         .distinct()
@@ -128,24 +153,25 @@ def _sessionize_replay(
             "user_id",
         )
     )
-    flush.coalesce(1).write.mode("append").parquet(f"{base}/in")
-    with conf_override(spark, {"spark.sql.shuffle.partitions": str(width)}):
-        # state keyed on 4*width hash buckets of user_id: the emitted
-        # session set is keying-independent (see
-        # make_bucketed_event_time_sessionizer), but the per-(group,
-        # micro-batch) Python dispatch — the measured wall of these
-        # replays — is one call per bucket instead of one per active
-        # user. Derived from the state width (itself input-derived),
-        # not a constant.
-        q = stream_sessionize_event_time(
-            spark, f"{base}/in", f"{base}/out", f"{base}/ckpt",
-            gap_seconds=3600.0, watermark_delay=watermark_delay,
-            max_files_per_trigger=max_files_per_trigger,
-            state_buckets=4 * width,
-        )
-        q.awaitTermination()
+
+    def write_input(in_dir: str) -> None:
+        write_events(ev, in_dir, int(bounds.lo), int(bounds.hi))
+        flush.coalesce(1).write.mode("append").parquet(in_dir)
+
+    # state keyed on 4*width hash buckets of user_id: the emitted session
+    # set is keying-independent (see make_bucketed_event_time_sessionizer),
+    # but the per-(group, micro-batch) Python dispatch — the measured wall
+    # of these replays — is one call per bucket instead of one per active
+    # user. Derived from the state width (itself input-derived), not a
+    # constant.
+    start = functools.partial(
+        stream_sessionize_event_time, spark,
+        watermark_delay=watermark_delay,
+        max_files_per_trigger=max_files_per_trigger,
+        state_buckets=4 * width,
+    )
     return (
-        spark.read.parquet(f"{base}/out")
+        _replay(spark, sf_dir, query, write_input, start, width)
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_sessions"),
@@ -153,18 +179,6 @@ def _sessionize_replay(
         )
         .orderBy("user_id")
     )
-
-
-# The streaming replays run under conf_override(spark,
-# {"spark.sql.shuffle.partitions": ...}) to right-size the shuffle width.
-# Stateful streaming commits ONE state-store delta per shuffle partition
-# per microbatch, so a 32-wide session conf turns a 6-microbatch
-# AvailableNow replay into ~200 state commits for a few thousand keys —
-# pure fixed overhead at fixture scale. Results are
-# partition-count-independent (grouping is logical); on a real cluster
-# the session conf carries the deployment's width. The conf must stay
-# overridden until awaitTermination returns (a streaming query reads it
-# at first-batch planning, not at .start()).
 
 
 # ---------------------------------------------------------------------------
@@ -1545,25 +1559,20 @@ def q_stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-stream); which physical row survives per key is
     batch-arrival-dependent, so the key set (not the row ids) is the
     engine-portable invariant."""
-    from serimi_rdf_interlinking_spark.streaming.ingest import (
-        stream_dedup_exact,
-    )
+    from serimi_rdf_interlinking_spark.streaming.ingest import stream_dedup_exact
 
-    base = _stream_scratch("dedup", sf_dir)
     # projected to (ts, text): the dedup key derives from text and the
     # watermark from ts; the query reads only the surviving key set,
     # so lang/source/n_chars never ride the replay or the sink
     docs = _read(spark, sf_dir, "documents").select(
         F.timestamp_seconds(F.lit(1_600_000_000)).alias("ts"), "text"
     )
-    docs.write.mode("overwrite").parquet(f"{base}/in")
-    with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
-        q = stream_dedup_exact(
-            spark, f"{base}/in", f"{base}/out", f"{base}/ckpt"
-        )
-        q.awaitTermination()
     return (
-        spark.read.parquet(f"{base}/out")
+        _replay(
+            spark, sf_dir, "dedup",
+            lambda in_dir: docs.write.mode("overwrite").parquet(in_dir),
+            functools.partial(stream_dedup_exact, spark), width=8,
+        )
         .select("dedup_key")
         .orderBy("dedup_key")
     )
@@ -1818,11 +1827,8 @@ def q_stream_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     The sentinel's own window stays unemitted (above watermark) and is
     filtered defensively anyway. Buckets compare as epoch seconds —
     timezone-representation-free on both engines."""
-    from serimi_rdf_interlinking_spark.streaming.ingest import (
-        stream_time_buckets,
-    )
+    from serimi_rdf_interlinking_spark.streaming.ingest import stream_time_buckets
 
-    base = _stream_scratch("buckets", sf_dir)
     # projected to (ts, event_type, value): the windowed aggregate
     # reads nothing else, so the replay write and the per-microbatch
     # scan skip the event_id/user_id/props payload (guide §2.3:
@@ -1844,17 +1850,13 @@ def q_stream_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the replay's batch structure — and the emitted windows — are
     # unchanged (the sentinel rides in whichever file gets it; the
     # watermark is computed over the whole batch either way)
-    ev.unionByName(sentinel).coalesce(4).write.mode("overwrite").parquet(
-        f"{base}/in"
-    )
-    with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
-        q = stream_time_buckets(
-            spark, f"{base}/in", f"{base}/out", f"{base}/ckpt",
-            window="5 minutes", watermark="10 minutes",
-        )
-        q.awaitTermination()
+    replay_in = ev.unionByName(sentinel).coalesce(4)
     return (
-        spark.read.parquet(f"{base}/out")
+        _replay(
+            spark, sf_dir, "buckets",
+            lambda in_dir: replay_in.write.mode("overwrite").parquet(in_dir),
+            functools.partial(stream_time_buckets, spark), width=8,
+        )
         .filter(F.col("event_type") != "__flush__")
         .select(
             F.col("bucket_start").cast("long").alias("bucket"),
@@ -1906,7 +1908,6 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark/flush machinery is needed for finality."""
     from serimi_rdf_interlinking_spark.streaming.ingest import stream_enrich
 
-    base = _stream_scratch("enrich", sf_dir)
     # projected to (user_id, event_type, value): the join key plus the
     # two columns the sink aggregate reads — props/event_id/ts never
     # enter the replay write, the per-batch join or the sink (guide
@@ -1918,14 +1919,12 @@ def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # coalesce(4): parallel write, still one micro-batch at the
     # reader's maxFilesPerTrigger=4 — the stateless per-batch join
     # emits the same enriched row set regardless of file layout
-    ev.coalesce(4).write.mode("overwrite").parquet(f"{base}/in")
-    with conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
-        q = stream_enrich(
-            spark, f"{base}/in", dim, f"{base}/out", f"{base}/ckpt"
-        )
-        q.awaitTermination()
     return (
-        spark.read.parquet(f"{base}/out")
+        _replay(
+            spark, sf_dir, "enrich",
+            lambda in_dir: ev.coalesce(4).write.mode("overwrite").parquet(in_dir),
+            lambda i, o, ckpt: stream_enrich(spark, i, dim, o, ckpt), width=8,
+        )
         .groupBy(F.col("c_mktsegment").alias("segment"), "event_type")
         .agg(
             F.count("*").alias("n"),

@@ -1,65 +1,73 @@
-"""Structured Streaming ingestion of the page corpus.
+"""Structured Streaming operators over incrementally landed parquet.
 
-The reference is a batch CLI (SURVEY.md §2.9: no streaming operators);
-its sequential chunk loop with offset resume maps to a foreachBatch
-driver loop here. Incremental crawls land as parquet files; the stream
-extracts triples per micro-batch and appends them exactly-once-per-file
-(checkpointed by the streaming engine), with Trigger.AvailableNow
-semantics for catch-up runs.
+The reference is a batch CLI (SURVEY.md §2.9: no streaming operators).
+Incremental crawls and event drops land as parquet files; every operator
+here is one `replay_files` call: a file source, the operator's own
+transform, and an append parquet sink whose checkpoint commits each
+input file exactly once. Trigger.AvailableNow processes the files
+present at start in bounded micro-batches, then stops.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from ..extract import extract_triples
 from ..sources.triples import PAGE_SCHEMA
 
 
-def stream_extract(
+def replay_files(
     spark: SparkSession,
-    pages_dir: str,
+    in_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
+    build,
+    max_files_per_trigger: int,
+    schema=None,
 ):
-    """readStream(pages parquet) → mapInPandas extraction → append sink.
-
-    Returns the StreamingQuery; callers use processAllAvailable()/stop()
-    (tests) or awaitTermination() (deployments).
-    """
+    """Parquet file stream over in_dir, at most `max_files_per_trigger`
+    files per micro-batch → `build(stream)` → append parquet sink at
+    out_dir, checkpointed at checkpoint_dir, Trigger.AvailableNow.
+    A file stream cannot infer its schema, so `schema=None` takes the
+    input files' own. Returns the StreamingQuery; callers use
+    awaitTermination()."""
+    if schema is None:
+        schema = spark.read.parquet(in_dir).schema
     stream = (
-        spark.readStream.schema(PAGE_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(pages_dir)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(in_dir)
     )
-    extracted = extract_triples(stream, from_html=False)
-
-    writer = (
-        extracted.writeStream.outputMode("append")
+    return (
+        build(stream).writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def stream_extract(
+    spark: SparkSession, pages_dir: str, out_dir: str, checkpoint_dir: str
+):
+    """Pages parquet → mapInPandas extraction → appended triples.
+    Returns the StreamingQuery."""
+    return replay_files(
+        spark, pages_dir, out_dir, checkpoint_dir,
+        lambda pages: extract_triples(pages, from_html=False),
+        8, schema=PAGE_SCHEMA,
+    )
 
 
 def stream_dedup_exact(
-    spark: SparkSession,
-    docs_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    text_col: str = "text",
-    schema=None,
+    spark: SparkSession, docs_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """Streaming exact dedup — the ingestion-time twin of the batch
     dedup_exact operator: keep the FIRST arrival of each normalized
-    text, drop later duplicates that arrive within the watermark
-    horizon of each other.
+    `text`, drop later duplicates whose `ts` lies within a 1-hour
+    watermark horizon of it.
 
     Built on the engine-native dropDuplicatesWithinWatermark: state is
     one (key, first-seen-ts) row per distinct text inside the horizon,
@@ -69,104 +77,53 @@ def stream_dedup_exact(
     is the same normalization as dedup_exact (lower, strip
     non-alphanumerics), md5'd so state carries a fixed-width key
     instead of the document text. Returns the StreamingQuery."""
-    from pyspark.sql import functions as F
 
-    if schema is None:
-        schema = spark.read.parquet(docs_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(docs_dir)
-        .withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-        .withColumn(
-            "dedup_key",
-            F.md5(
-                F.lower(
-                    F.trim(
-                        F.regexp_replace(F.col(text_col), r"(?i)[^a-z0-9]+", " ")
-                    )
-                )
-            ),
+    def dedup(docs):
+        norm = F.lower(F.trim(F.regexp_replace("text", r"(?i)[^a-z0-9]+", " ")))
+        return (
+            docs.withColumn("ts", F.col("ts").cast("timestamp"))
+            .withColumn("dedup_key", F.md5(norm))
+            .withWatermark("ts", "1 hour")
+            .dropDuplicatesWithinWatermark(["dedup_key"])
         )
-    )
-    deduped = stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["dedup_key"]
-    )
-    return (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+    return replay_files(spark, docs_dir, out_dir, checkpoint_dir, dedup, 4)
 
 
 def stream_time_buckets(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    schema=None,
+    spark: SparkSession, events_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """Watermarked event-time windowed aggregation — the streaming form
-    of the batch time_buckets query: tumbling windows over event time,
-    late rows beyond the watermark dropped, finalized windows appended
-    exactly once.
+    of the batch time_buckets query: 5-minute tumbling windows over
+    event time, rows later than the 10-minute watermark dropped,
+    finalized windows appended exactly once.
 
     Built entirely from Spark primitives (withWatermark + window +
     groupBy count/sum): state is one row per (window, event_type) and
     the watermark bounds it — the scale-correct shape for an unbounded
     event stream. Returns the StreamingQuery.
     """
-    from pyspark.sql import functions as F
 
-    if schema is None:
-        schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(events_dir)
-        # watermarks require TimestampType; events carry TIMESTAMP_NTZ
-        # (cast is exact under the session's UTC timezone)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-    )
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("v"))
-        .select(
-            F.col("w.start").alias("bucket_start"),
-            "event_type",
-            "n",
-            "v",
+    def buckets(events):
+        return (
+            # watermarks require TimestampType; events carry TIMESTAMP_NTZ
+            # (cast is exact under the session's UTC timezone)
+            events.withColumn("ts", F.col("ts").cast("timestamp"))
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+            .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("v"))
+            .select(F.col("w.start").alias("bucket_start"), "event_type", "n", "v")
         )
-    )
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+    return replay_files(spark, events_dir, out_dir, checkpoint_dir, buckets, 4)
 
 
 def stream_enrich(
-    spark: SparkSession,
-    events_dir: str,
-    dim_df,
-    out_dir: str,
-    checkpoint_dir: str,
-    stream_key: str = "user_id",
-    dim_key: str = "c_custkey",
-    schema=None,
+    spark: SparkSession, events_dir: str, dim_df, out_dir: str, checkpoint_dir: str
 ):
     """Stream-static enrichment join: the unbounded event stream LEFT
-    joined to a bounded dimension frame per micro-batch, appended
-    exactly-once to the sink.
+    joined on user_id = c_custkey to a bounded customer dimension per
+    micro-batch, appended exactly-once to the sink.
 
     Stateless (no watermark, no stream-stream buffering). The planner
     picks the join strategy from the static side's size estimate: a
@@ -177,21 +134,10 @@ def stream_enrich(
     gives slowly-changing dimensions their freshness). Returns the
     StreamingQuery.
     """
-    if schema is None:
-        schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(events_dir)
-    )
-    enriched = stream.join(
-        dim_df, stream[stream_key] == dim_df[dim_key], "left"
-    ).drop(dim_key)
-    return (
-        enriched.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+
+    def enrich(events):
+        return events.join(
+            dim_df, events["user_id"] == dim_df["c_custkey"], "left"
+        ).drop("c_custkey")
+
+    return replay_files(spark, events_dir, out_dir, checkpoint_dir, enrich, 4)

@@ -3,7 +3,7 @@ sessionization with applyInPandasWithState.
 
 The batch analogue is __spark_entry__.q_sessionize (lag + gap cumsum;
 DuckDB-oracled). A new session starts when the gap to the user's
-previous event exceeds `gap` seconds. The operator emits one row per
+previous event exceeds one hour. The operator emits one row per
 CLOSED session: (user_id, session_id, n_events, start_us, end_us).
 
 State is keyed on a hash bucket of user_id, so one state record and one
@@ -23,6 +23,8 @@ from __future__ import annotations
 from typing import Any, Iterable, Iterator, Tuple
 
 import pandas as pd
+
+from .ingest import replay_files
 
 SESSION_OUTPUT_SCHEMA = (
     "user_id LONG, session_id LONG, n_events LONG, start_us LONG, "
@@ -234,18 +236,17 @@ def stream_sessionize_event_time(
     events_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    gap_seconds: float = 3600.0,
-    watermark_delay: str = "10 minutes",
-    schema=None,
-    max_files_per_trigger: int = 1,
     *,
+    watermark_delay: str,
+    max_files_per_trigger: int,
     state_buckets: int,
 ):
-    """readStream → withWatermark(ts) → groupBy(pmod(xxhash64(user_id),
+    """File stream → withWatermark(ts) → groupBy(pmod(xxhash64(user_id),
     state_buckets)) applyInPandasWithState(EventTimeTimeout) → append
-    sink. Late events beyond `watermark_delay` are dropped (the
-    documented divergence bound); everything else matches the batch
-    sessionize query. Returns the StreamingQuery.
+    sink, sessions split at gaps over one hour. Late events beyond
+    `watermark_delay` are dropped (the documented divergence bound);
+    everything else matches the batch sessionize query. Returns the
+    StreamingQuery.
 
     ``state_buckets`` sets how many hash buckets key the state (see
     make_bucketed_event_time_sessionizer): the emitted sessions do not
@@ -255,29 +256,24 @@ def stream_sessionize_event_time(
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if schema is None:
-        schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-        .withWatermark("ts", watermark_delay)
-    )
-    keyed = stream.withColumn(
-        "_bucket", F.pmod(F.xxhash64("user_id"), F.lit(int(state_buckets)))
-    )
-    sessions = keyed.groupBy("_bucket").applyInPandasWithState(
-        make_bucketed_event_time_sessionizer(gap_seconds),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        stateStructType=BUCKET_EVENT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-    return (
-        sessions.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    def sessionize(events):
+        return (
+            events.withWatermark("ts", watermark_delay)
+            .withColumn(
+                "_bucket",
+                F.pmod(F.xxhash64("user_id"), F.lit(int(state_buckets))),
+            )
+            .groupBy("_bucket")
+            .applyInPandasWithState(
+                make_bucketed_event_time_sessionizer(3600.0),
+                outputStructType=SESSION_OUTPUT_SCHEMA,
+                stateStructType=BUCKET_EVENT_STATE_SCHEMA,
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.EventTimeTimeout,
+            )
+        )
+
+    return replay_files(
+        spark, events_dir, out_dir, checkpoint_dir, sessionize,
+        max_files_per_trigger,
     )

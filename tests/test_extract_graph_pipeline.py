@@ -328,8 +328,8 @@ def test_streaming_extract(spark, fixture_small, tmp_path):
     ckpt = str(tmp_path / "stream_ckpt")
     pages.write.mode("overwrite").parquet(pages_dir)
 
-    q = stream_extract(spark, pages_dir, out_dir, ckpt, available_now=True)
-    q.awaitTermination(120)
+    q = stream_extract(spark, pages_dir, out_dir, ckpt)
+    assert q.awaitTermination(300), "stream did not terminate in 300s"
     got = spark.read.parquet(out_dir)
     batch = extract_triples(pages)
     assert got.count() == batch.count()

@@ -120,7 +120,7 @@ def test_event_time_sessionize_out_of_order_cross_batch(
     out = str(tmp_path / "sessions")
     q = stream_sessionize_event_time(
         spark, ev_dir, out, str(tmp_path / "ckpt"),
-        gap_seconds=3600.0, watermark_delay="30 minutes",
+        watermark_delay="30 minutes",
         max_files_per_trigger=1, state_buckets=state_buckets,
     )
     assert q.awaitTermination(300), "stream did not terminate in 300s"
@@ -202,7 +202,7 @@ def test_event_time_sessionize_randomized_parity(
 
     q = stream_sessionize_event_time(
         spark, ev_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-        gap_seconds=3600.0, watermark_delay="2 hours",
+        watermark_delay="2 hours",
         max_files_per_trigger=1, state_buckets=state_buckets,
     )
     assert q.awaitTermination(300), "stream did not terminate in 300s"

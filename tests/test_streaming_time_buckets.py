@@ -18,9 +18,7 @@ def test_stream_time_buckets_finalized_windows(spark, tmp_path):
     spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
     out = str(tmp_path / "buckets")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_time_buckets(
-        spark, src, out, ckpt, window="5 minutes", watermark="10 minutes"
-    )
+    q = stream_time_buckets(spark, src, out, ckpt)
     assert q.awaitTermination(300), "stream did not terminate in 300s"
 
     got = {
@@ -89,7 +87,6 @@ def test_stream_dedup_exact_drops_cross_batch_duplicates(spark, tmp_path):
 
     q = stream_dedup_exact(
         spark, src, str(tmp_path / "out"), str(tmp_path / "ck"),
-        watermark="1 hour",
     )
     assert q.awaitTermination(300), "stream did not terminate in 300s"
     rows = spark.read.parquet(str(tmp_path / "out")).collect()
@@ -109,11 +106,16 @@ def test_stream_dedup_exact_drops_cross_batch_duplicates(spark, tmp_path):
         ("q_stream_time_buckets", ["bucket", "event_type", "n", "v"]),
         ("q_stream_sessionize", ["user_id", "n_sessions", "n_events"]),
         ("q_stream_sessionize_ooo", ["user_id", "n_sessions", "n_events"]),
+        ("q_stream_dedup_exact", ["dedup_key"]),
+        ("q_stream_enrich", ["segment", "event_type", "n", "v"]),
     ],
-    ids=["q_stream_time_buckets", "q_stream_sessionize", "q_stream_sessionize_ooo"],
+    ids=[
+        "q_stream_time_buckets", "q_stream_sessionize", "q_stream_sessionize_ooo",
+        "q_stream_dedup_exact", "q_stream_enrich",
+    ],
 )
 def test_stream_replay_empty_events(spark, tmp_path, query, columns):
-    """An empty events table must yield an empty result (the batch
+    """An empty input table must yield an empty result (the batch
     aggregate is empty), not a TypeError from the flush-event math."""
     import __spark_entry__ as E
 
@@ -122,6 +124,46 @@ def test_stream_replay_empty_events(spark, tmp_path, query, columns):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     ).write.parquet(str(tmp_path / "events.parquet"))
+    spark.createDataFrame(
+        [], "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    spark.createDataFrame(
+        [],
+        "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
+        "c_mktsegment string",
+    ).write.parquet(str(tmp_path / "customer.parquet"))
     out = getattr(E, query)(spark, str(tmp_path))
     assert out.count() == 0
     assert out.columns == columns
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "q_stream_dedup_exact", "q_stream_time_buckets", "q_stream_sessionize",
+        "q_stream_sessionize_ooo", "q_stream_enrich",
+    ],
+)
+def test_stream_replay_holds_its_shuffle_width(spark, monkeypatch, query):
+    """Each replay row plans its micro-batches at the replay's own
+    shuffle width (8 at sf0.001, with the session at 4): the width must
+    still be in force when the first batch is planned, which happens
+    after the query starts. The session's own width comes back after."""
+    import json
+
+    import __spark_entry__ as E
+
+    dirs = []
+    scratch = E._stream_scratch
+
+    def recording_scratch(name, sf_dir):
+        dirs.append(scratch(name, sf_dir))
+        return dirs[-1]
+
+    monkeypatch.setattr(E, "_stream_scratch", recording_scratch)
+    getattr(E, query)(spark, E.SF_DEFAULT)
+    (base,) = dirs
+    with open(f"{base}/ckpt/offsets/0") as f:
+        batch0 = json.loads(f.read().splitlines()[1])
+    assert batch0["conf"]["spark.sql.shuffle.partitions"] == "8"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"

@@ -250,6 +250,7 @@ def q_stopword_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3 (serimi_module.rb:280-343): token document-frequency over
     normalized document text; stop word iff freq >= mean(freq) and
     len > 1. Returns the flagged tokens with frequencies."""
+    from serimi_rdf_interlinking_spark.functions.columns import norm_tokens
     from serimi_rdf_interlinking_spark.operators.partitioning import (
         widen_to_cluster,
     )
@@ -259,17 +260,9 @@ def q_stopword_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them behind one core (per-row compute, not I/O, dominates here)
     docs = widen_to_cluster(_read(spark, sf_dir, "documents"))
     n = docs.count()
-    toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.trim(F.regexp_replace("text", r"(?i)[^a-z0-9]+", " "))),
-                    " ",
-                ),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("tok")
-    ).filter(~F.col("tok").rlike(r"^[0-9]"))
+    toks = docs.select(F.explode(norm_tokens("text")).alias("tok")).filter(
+        ~F.col("tok").rlike(r"^[0-9]")
+    )
     wc = toks.groupBy("tok").agg(
         F.round(F.count("*") / F.lit(float(n)), 6).alias("freq")
     )
@@ -284,19 +277,23 @@ def q_stopword_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_text_property_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F9 (serimi_module.rb:2-15): 'text-like' groups = sources whose
-    documents exceed the 400-char threshold anywhere."""
+    documents exceed the TEXT_LEN-char threshold anywhere."""
+    from serimi_rdf_interlinking_spark.operators.rds_core import TEXT_LEN
+
     docs = _read(spark, sf_dir, "documents")
     return (
         docs.groupBy("source")
         .agg(F.max(F.length("text")).alias("max_len"))
-        .withColumn("is_text_property", F.col("max_len") > 400)
+        .withColumn("is_text_property", F.col("max_len") > TEXT_LEN)
         .orderBy("source")
     )
 
 
 def q_property_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 (serimi_class.rb:340-371): (user_id, event_type) counts vs the
-    max(mean, stddev_pop) threshold with the >5 gate."""
+    max(mean, stddev_pop) threshold with the > OVERFLOW_MIN gate."""
+    from serimi_rdf_interlinking_spark.operators.rds_core import OVERFLOW_MIN
+
     ev = _read(spark, sf_dir, "events")
     cnt = ev.groupBy("user_id", "event_type").agg(F.count("*").alias("c"))
     stats = cnt.agg(
@@ -306,7 +303,8 @@ def q_property_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
         cnt.crossJoin(stats)
         .withColumn("threshold", F.round(F.greatest("m", "sd"), 6))
         .withColumn(
-            "overflow", (F.col("c") > F.col("threshold")) & (F.col("threshold") > 5)
+            "overflow",
+            (F.col("c") > F.col("threshold")) & (F.col("threshold") > OVERFLOW_MIN),
         )
         .groupBy("event_type")
         .agg(
@@ -335,18 +333,10 @@ def q_restricted_ifp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_blocking_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 (search_module.rb:33-56): token frequency of customer names,
     descending — the blocking order key."""
+    from serimi_rdf_interlinking_spark.functions.columns import norm_tokens
+
     cust = _read(spark, sf_dir, "customer")
-    toks = cust.select(
-        F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.trim(F.regexp_replace("c_name", r"(?i)[^a-z0-9]+", " "))),
-                    " ",
-                ),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("tok")
-    )
+    toks = cust.select(F.explode(norm_tokens("c_name")).alias("tok"))
     return (
         toks.groupBy("tok")
         .agg(F.count("*").alias("n_subjects"))
@@ -357,12 +347,19 @@ def q_blocking_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_keyword_hygiene(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F8 (serimi_module.rb:159-164): keyword hygiene over part names —
     length cap, paren-strip, distinct."""
+    from serimi_rdf_interlinking_spark.functions.columns import paren_strip
+    from serimi_rdf_interlinking_spark.operators.candidates import (
+        KEYWORD_MAX_LEN,
+        MIN_KEYWORD_LEN,
+    )
+
     part = _read(spark, sf_dir, "part")
     return (
-        part.select(
-            F.rtrim(F.regexp_replace("p_name", r"\(.*$", "")).alias("kw")
+        part.select(paren_strip("p_name").alias("kw"))
+        .filter(
+            (F.length("kw") <= KEYWORD_MAX_LEN)
+            & (F.length("kw") >= MIN_KEYWORD_LEN)
         )
-        .filter((F.length("kw") <= 150) & (F.length("kw") >= 3))
         .distinct()
         .orderBy("kw")
     )

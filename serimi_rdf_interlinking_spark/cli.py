@@ -78,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
         rds_threshold=args.rds_threshold,
         topk=args.topk,
         use_pivot=args.use_pivot,
-        output_format=args.format,
         mode="sequential" if args.use_pivot else args.mode,
         checkpoint_dir=args.checkpoint_dir,
         run_id=args.run_id,
@@ -96,11 +95,11 @@ def main(argv: list[str] | None = None) -> int:
     target = read_table(spark, args.target)
     res = SerimiMatcher(cfg).run(spark, source, target, args.klass)
     write_alignments(
-        res.alignments, args.output, cfg.output_format,
+        res.alignments, args.output, args.format,
         mode="append" if args.append else "overwrite",
     )
     n = res.alignments.count()
-    print(f"wrote {n} alignments to {args.output} ({cfg.output_format})")
+    print(f"wrote {n} alignments to {args.output} ({args.format})")
     if not preexisting:
         spark.stop()
     return 0

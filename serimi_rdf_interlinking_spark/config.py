@@ -1,10 +1,14 @@
-"""Run configuration mirroring the reference CLI options.
+"""Run configuration: the knobs a caller sets.
 
-Reference: serimi.rb:11-120 (OptionParser). Defaults per serimi.rb:
-chunk 20 (:54-57), string threshold 0.7 (:66-69), format txt (:50-53),
-pivots off (initializer.rb:15), top-k 0 = adaptive threshold
-(initializer.rb:16). Blocking (search_module.rb:33-56) is always on: the
-reference only ever sets it true (initializer.rb:22).
+Reference: serimi.rb:11-120 (OptionParser), whose only tuning flags are
+-k, -y, -p and -u. Defaults per serimi.rb: chunk 20 (:54-57), string
+threshold 0.7 (:66-69), pivots off (initializer.rb:15), top-k 0 =
+adaptive threshold (initializer.rb:16). Blocking (search_module.rb:33-56)
+is always on: the reference only ever sets it true (initializer.rb:22).
+
+The reference's hard-coded matcher constants (text length, group
+presence, sample and keyword limits, pivot FIFO, ...) are not fields:
+each is a module constant beside the code that reads it.
 
 Two reference CLI bugs are deliberately NOT replicated (we implement the
 *intended* semantics): `-p` writes options[:chunk] (serimi.rb:58-61) and
@@ -24,16 +28,7 @@ class SerimiConfig:
     rds_threshold: float | None = None  # fixed RDS delta; None = adaptive delta-m
     topk: int = 0                    # top-k per group; 0 = adaptive threshold
     use_pivot: bool = False          # carry pivot groups across chunks (serimi_class.rb:279-298)
-    output_format: str = "txt"       # "txt" (src=tgt) | "nt" (owl:sameAs triples)
     warmup_chunk: int = 5            # first chunk is 5 then sigma (initializer.rb:94-98)
-    class_sample_limit: int = 4000   # label-selection sample (serimi_module.rb:233-235)
-    max_search_predicates: int = 6   # $word_by_word_properties cap (serimi_module.rb:29)
-    text_property_len: int = 400     # F9 long-text threshold (serimi_module.rb:13)
-    keyword_max_len: int = 150       # F8 label hygiene (serimi_module.rb:160)
-    min_keyword_len: int = 3         # search skips keywords < 3 chars (search_module.rb:71)
-    pivot_fifo: int = 10             # pivot FIFO cap (serimi_class.rb:281,292-296)
-    entropy_group_presence: float = 0.4  # A1 only-once exclusion (serimi_class.rb:36)
-    overflow_min_threshold: float = 5.0  # A5 rule max(mu,sigma)>5 (serimi_class.rb:363)
 
     # engine knobs (ours; no reference analogue)
     mode: str = "batch"              # "batch" = all chunks in parallel (pivots off);
@@ -45,12 +40,6 @@ class SerimiConfig:
     # every token-join key at the ceiling, which is why there is no
     # separate salting knob for the index join.
     max_candidates_per_token: int = 5000
-    # batch-mode RDS kernel: number of chunks scored inside one pandas
-    # group. Thousands of ~20-row chunks as individual applyInPandas
-    # groups are dominated by Arrow dispatch overhead; bucketing
-    # amortizes it while keeping per-group memory bounded at
-    # ~chunks_per_kernel_group * sigma candidate descriptions.
-    chunks_per_kernel_group: int = 8
     checkpoint_dir: str | None = None     # per-stage parquet checkpoints + pipeline_state
     run_id: str = "run0"
 

@@ -19,7 +19,8 @@ import re
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 from .sources.triples import EXTRACTED_TRIPLE_SCHEMA
 
@@ -162,17 +163,22 @@ def extract_triples(pages: DataFrame, from_html: bool = False) -> DataFrame:
     return pages.select(*cols).mapInPandas(_run, EXTRACTED_TRIPLE_SCHEMA)
 
 
+def mention_uri(col: str) -> Column:
+    """mention://<surface form of column `col`, whitespace runs as '_'>:
+    the link stage's source resources and the materialized subjects
+    both key on it, so the canonical mapping joins back to the latter."""
+    return F.concat(F.lit("mention://"), F.regexp_replace(col, r"\s+", "_"))
+
+
 def mentions_as_source_triples(extracted: DataFrame) -> DataFrame:
     """Lift extracted page triples into the matcher's source-triple
     shape: each distinct subject becomes a source resource typed
     mention:Entity, its surface form the rdfs:label, and its extracted
     facts the description (SERIMI consumes mention labels as EL input,
     SURVEY.md §7 step 6)."""
-    from pyspark.sql import functions as F
-
     from .sources.triples import RDF_TYPE, RDFS_LABEL
 
-    ent = F.concat(F.lit("mention://"), F.regexp_replace(F.col("s"), r"\s+", "_"))
+    ent = mention_uri("s")
     facts = extracted.select(
         ent.alias("s"),
         F.col("p"),

@@ -66,9 +66,17 @@ from .operators.rds import (
     make_chunk_scorer,
     parse_chunk,
 )
-from .session import conf_override
+from .session import conf_override, release_checkpoints
 
 KW_KEY = ["s", "rank", "chunk_id", "label_idx", "kw"]
+MAX_SEARCH_PREDICATES = 6  # $word_by_word_properties cap (serimi_module.rb:29)
+PIVOT_FIFO = 10            # pivot FIFO cap (serimi_class.rb:281,292-296)
+# batch-mode RDS kernel: number of chunks scored inside one pandas
+# group. Thousands of ~20-row chunks as individual applyInPandas
+# groups are dominated by Arrow dispatch overhead; bucketing amortizes
+# it while keeping per-group memory bounded at
+# ~CHUNKS_PER_KERNEL_GROUP * sigma candidate descriptions.
+CHUNKS_PER_KERNEL_GROUP = 8
 
 
 @dataclass
@@ -85,50 +93,6 @@ class SerimiMatcher:
     def __init__(self, cfg: SerimiConfig | None = None):
         self.cfg = cfg or SerimiConfig()
         self._cached: list[DataFrame] = []
-
-    def _release_intermediates(self, keep: tuple[DataFrame, ...] = ()) -> None:
-        """Free every tracked localCheckpoint except the frames backing
-        the returned result. localCheckpoint storage does NOT go through
-        the CacheManager, so `df.unpersist()` is a no-op on it — the
-        blocks are released by unpersisting the LogicalRDD's underlying
-        RDD directly. Without this, repeated matcher runs in one session
-        accumulate executor storage (round-2 verdict hygiene item)."""
-        keep_ids = {id(df) for df in keep}
-        to_release = [df for df in self._cached if id(df) not in keep_ids]
-        rdd_logger = "org.apache.spark.rdd.MapPartitionsRDD"
-        jvm = prev_level = None
-        if to_release:
-            # silence the expected per-RDD "locally checkpointed ...
-            # cannot be recomputed after unpersisting" WARN — releasing
-            # is deliberate and the frames are never touched again. The
-            # suppression is SCOPED to the unpersist loop: the previous
-            # effective level is restored in the finally below, so
-            # unrelated RDD warnings later in the session still surface.
-            try:
-                jvm = to_release[0].sparkSession._jvm
-                prev_level = jvm.org.apache.logging.log4j.LogManager.getLogger(
-                    rdd_logger
-                ).getLevel()
-                jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-                    rdd_logger, jvm.org.apache.logging.log4j.Level.ERROR
-                )
-            except Exception:  # pragma: no cover - log tuning only
-                jvm = None
-        try:
-            for df in to_release:
-                try:
-                    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-                except Exception:  # pragma: no cover - best-effort cleanup
-                    log.debug("checkpoint release failed", exc_info=True)
-        finally:
-            if jvm is not None and prev_level is not None:
-                try:
-                    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-                        rdd_logger, prev_level
-                    )
-                except Exception:  # pragma: no cover - log tuning only
-                    pass
-        self._cached = [df for df in self._cached if id(df) in keep_ids]
 
     def _mat(self, df: DataFrame, name: str) -> DataFrame:
         """Materialize a stage boundary.
@@ -158,7 +122,7 @@ class SerimiMatcher:
         tiers: dict[str, int] | None,
         textp: list[str] | None,
         stopwords: tuple[str, ...],
-        name: str = "retrieve",
+        name: str,
     ):
         cfg = self.cfg
 
@@ -445,8 +409,6 @@ class SerimiMatcher:
             topk=cfg.topk,
             rds_threshold=cfg.rds_threshold,
             filter_threshold=cfg.string_threshold,
-            overflow_min=cfg.overflow_min_threshold,
-            group_presence=cfg.entropy_group_presence,
         )
 
     # -- warm-up: learn textp + searchable predicates ----------------------
@@ -457,11 +419,10 @@ class SerimiMatcher:
         predicates from its discriminative entropy (serimi_module.rb:28-30).
         F13 applies to the warm-up chunk too (serimi_module.rb:86 runs
         for every chunk). Returns (textp, search_predicates, score_rows)."""
-        cfg = self.cfg
         chunk = parse_chunk(self._chunk_input(cand_result, source, target).collect())
-        textp = rds_core.get_text_properties(chunk.groups, cfg.text_property_len)
+        textp = rds_core.get_text_properties(chunk.groups)
         rows, disc = self._chunk_scorer(textp, stopwords)(chunk)
-        return textp, disc[: cfg.max_search_predicates], [(0, *r) for r in rows]
+        return textp, disc[:MAX_SEARCH_PREDICATES], [(0, *r) for r in rows]
 
     # -- reference-parity sequential chunk loop -----------------------------
     def _run_sequential_loop(
@@ -501,7 +462,7 @@ class SerimiMatcher:
         count = (max_rank if max_rank is not None else -1) + 1
         order = list(order0)
         score = self._chunk_scorer(textp, stopwords)
-        pivots = rds_core.PivotFifo(cfg.pivot_fifo) if cfg.use_pivot else None
+        pivots = rds_core.PivotFifo(PIVOT_FIFO) if cfg.use_pivot else None
         out: list[tuple] = []
         offset, limit = cfg.warmup_chunk, cfg.chunk
         chunk_id = 1
@@ -573,10 +534,8 @@ class SerimiMatcher:
             t0 = time.time()
 
         members = class_members(source, class_uri)
-        sample = collect_class_sample(source, members, cfg.class_sample_limit)
-        labels, _sample_textp = select_entity_labels(
-            sample, cfg.text_property_len
-        )
+        sample = collect_class_sample(source, members)
+        labels = select_entity_labels(sample)
         tick("labels")
 
         # stop-word mining, the blocking order + keyword prep, and the
@@ -690,12 +649,12 @@ class SerimiMatcher:
             kernel = make_chunk_kernel(self._chunk_scorer(textp, stopwords))
             # group by a BUCKET of chunks, not per-chunk: the kernel
             # loops chunk_ids inside each pandas group, amortizing the
-            # Arrow group-dispatch overhead over cfg.chunks_per_kernel_group
+            # Arrow group-dispatch overhead over CHUNKS_PER_KERNEL_GROUP
             # chunks while keeping group memory bounded. Keyed on a
             # deterministic chunk_id division so co-bucketed chunks are
             # stable across runs/resumes.
             bucket = F.floor(
-                F.col("chunk_id") / F.lit(max(1, cfg.chunks_per_kernel_group))
+                F.col("chunk_id") / F.lit(CHUNKS_PER_KERNEL_GROUP)
             ).alias("kernel_bucket")
             scored = (
                 chunk_input.withColumn("kernel_bucket", bucket)
@@ -709,7 +668,8 @@ class SerimiMatcher:
         tick("rds kernel")
         # the result (alignments + scores) derives only from the scored
         # checkpoint — every earlier intermediate can release its blocks
-        self._release_intermediates(keep=(scored,))
+        release_checkpoints(df for df in self._cached if df is not scored)
+        self._cached = [df for df in self._cached if df is scored]
 
         alignments = (
             scored.filter("accepted")

@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import SerimiConfig
-from ..functions.columns import norm_tokens
-from .dedup import _band_keys, _candidate_cooccurrence, _exact_jaccard, _norm
+from ..functions.columns import norm_text, norm_tokens
+from .dedup import _band_keys, _candidate_cooccurrence, _exact_jaccard
 
 
 def blocking_order(
@@ -136,7 +136,7 @@ def _char_shingle_rows(
     label. Labels shorter than k yield one shingle (the whole label) —
     substr past the end truncates identically in Spark and DuckDB, so
     the SQL oracle mirrors bit-for-bit."""
-    base = df.select(F.col(id_col).alias("id"), _norm(label_col).alias("nrm"))
+    base = df.select(F.col(id_col).alias("id"), norm_text(label_col).alias("nrm"))
     n_sh = F.greatest(F.length("nrm") - F.lit(k - 1), F.lit(1))
     return base.select(
         "id",

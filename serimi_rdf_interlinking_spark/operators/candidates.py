@@ -43,6 +43,8 @@ from ..functions.columns import norm_text, norm_tokens, paren_strip, valid_date_
 from ..functions.udfs import asm_passes_udf
 
 YAGO_PREFIX = "http://dbpedia.org/class/yago/"
+KEYWORD_MAX_LEN = 150  # F8 label hygiene (serimi_module.rb:160)
+MIN_KEYWORD_LEN = 3    # search skips keywords < 3 chars (search_module.rb:71)
 
 
 # ---------------------------------------------------------------------------
@@ -58,11 +60,11 @@ def prepare_keywords(
 ) -> DataFrame:
     """(src, rank, chunk_id, label_idx, kw, kw_norm, searchable).
 
-    Hygiene per serimi_module.rb:159-164 (len<=150, no bnodes, no
-    dates, paren-strip, distinct) then search-level cleanup
+    Hygiene per serimi_module.rb:159-164 (len<=KEYWORD_MAX_LEN, no
+    bnodes, no dates, paren-strip, distinct) then search-level cleanup
     (search_module.rb:69-71: '*'->' ', drop '\"', searchable iff
-    len>=3). Non-searchable keywords are kept — they still enter
-    @searchedlabels for F12 scoring (serimi_module.rb:173).
+    len>=MIN_KEYWORD_LEN). Non-searchable keywords are kept — they
+    still enter @searchedlabels for F12 scoring (serimi_module.rb:173).
     """
     label_map = F.create_map(
         *[x for i, lab in enumerate(labels) for x in (F.lit(lab), F.lit(i))]
@@ -71,7 +73,7 @@ def prepare_keywords(
         source.join(ranked, "s")
         .filter(F.col("p").isin(labels) & ~F.col("is_bnode") & ~F.col("o_is_uri"))
         .withColumn("label_idx", label_map[F.col("p")])
-        .filter(F.length("o") <= cfg.keyword_max_len)
+        .filter(F.length("o") <= KEYWORD_MAX_LEN)
         .filter(~valid_date_col("o"))
         .withColumn("kw", paren_strip("o"))
         .withColumn(
@@ -79,7 +81,7 @@ def prepare_keywords(
         )
         .select("s", "rank", "chunk_id", "label_idx", "kw")
         .distinct()
-        .withColumn("searchable", F.length("kw") >= cfg.min_keyword_len)
+        .withColumn("searchable", F.length("kw") >= MIN_KEYWORD_LEN)
         .withColumn("kw_norm", norm_text("kw"))
     )
     return kw

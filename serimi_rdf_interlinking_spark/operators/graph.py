@@ -17,8 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import release_checkpoints
+
 # edge rows connected_components' path probe collects before counting
 DRIVER_PROBE_ROWS = 10_000
+MAX_ITER = 25  # pointer-jumping rounds: cover diameters up to ~2^25
 
 
 def _union_find_local(pairs: list[tuple]) -> dict:
@@ -49,7 +52,6 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
     driver_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Returns (node, component) with component = min node id (string
@@ -64,87 +66,95 @@ def connected_components(
     distributed pointer-jumping loop runs — that is the 100-TB path,
     where the per-round cost amortizes over real data.
 
-    Raises RuntimeError if max_iter rounds do not converge — a silent
-    partial result would be WRONG labels (with pointer jumping, 25
-    rounds cover component diameters up to ~2^25)."""
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
-        .distinct()
-    )
-    e = e.localCheckpoint(eager=True)
-    # one bounded probe job decides AND fetches a small graph; a full
-    # probe pays a count(), and the edges are collected only if it fits
-    rows = e.limit(DRIVER_PROBE_ROWS + 1).collect()
-    n_edges = len(rows) if len(rows) <= DRIVER_PROBE_ROWS else e.count()
-    if n_edges <= driver_threshold:
-        if len(rows) < n_edges:
-            rows = e.collect()
-        mapping = _union_find_local([(r.a, r.b) for r in rows])
-        spark = edges.sparkSession
-        if not mapping:
-            return spark.createDataFrame([], "node string, component string")
-        sample = next(iter(mapping))
-        t = "string" if isinstance(sample, str) else "long"
-        return spark.createDataFrame(
-            list(mapping.items()), f"node {t}, component {t}"
-        )
+    Raises RuntimeError if MAX_ITER rounds do not converge — a silent
+    partial result would be WRONG labels.
 
-    und = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    und = und.localCheckpoint(eager=True)
+    Every localCheckpoint made here except the returned frame is
+    released before returning or raising."""
+    ckpts: list[DataFrame] = []
+    out = None
 
-    labels = (
-        und.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-    )
-    labels = labels.localCheckpoint(eager=True)
+    def checkpoint(df: DataFrame) -> DataFrame:
+        ckpts.append(df.localCheckpoint(eager=True))
+        return ckpts[-1]
 
-    for _ in range(max_iter):
-        # candidate labels: own + min over neighbors' labels
-        neigh = (
-            und.join(labels, und["b"] == labels["node"])
-            .select(F.col("a").alias("node"), F.col("component"))
+    try:
+        e = checkpoint(
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+            .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
+            .distinct()
         )
-        prop = (
-            labels.select("node", "component")
-            .unionByName(neigh)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-        )
-        # pointer jumping: follow the label one hop (label's label) —
-        # label values are node ids, monotonically non-increasing, so
-        # compression is safe and halves chain lengths each round
-        lab2 = prop.select(
-            F.col("node").alias("component"),
-            F.col("component").alias("comp2"),
-        )
-        new_labels = (
-            prop.join(lab2, "component", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("comp2"), F.col("component")),
-                ).alias("component"),
+        # one bounded probe job decides AND fetches a small graph; a full
+        # probe pays a count(), and the edges are collected only if it fits
+        rows = e.limit(DRIVER_PROBE_ROWS + 1).collect()
+        n_edges = len(rows) if len(rows) <= DRIVER_PROBE_ROWS else e.count()
+        if n_edges <= driver_threshold:
+            if len(rows) < n_edges:
+                rows = e.collect()
+            mapping = _union_find_local([(r.a, r.b) for r in rows])
+            spark = edges.sparkSession
+            if not mapping:
+                return spark.createDataFrame([], "node string, component string")
+            sample = next(iter(mapping))
+            t = "string" if isinstance(sample, str) else "long"
+            return spark.createDataFrame(
+                list(mapping.items()), f"node {t}, component {t}"
             )
+
+        und = checkpoint(
+            e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
+        labels = checkpoint(
+            und.select(F.col("a").alias("node"))
+            .distinct()
+            .withColumn("component", F.col("node"))
         )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
+        for _ in range(MAX_ITER):
+            # candidate labels: own + min over neighbors' labels
+            neigh = (
+                und.join(labels, und["b"] == labels["node"])
+                .select(F.col("a").alias("node"), F.col("component"))
+            )
+            prop = (
+                labels.select("node", "component")
+                .unionByName(neigh)
+                .groupBy("node")
+                .agg(F.min("component").alias("component"))
+            )
+            # pointer jumping: follow the label one hop (label's label) —
+            # label values are node ids, monotonically non-increasing, so
+            # compression is safe and halves chain lengths each round
+            lab2 = prop.select(
+                F.col("node").alias("component"),
+                F.col("component").alias("comp2"),
+            )
+            new_labels = checkpoint(
+                prop.join(lab2, "component", "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("component"),
+                        F.coalesce(F.col("comp2"), F.col("component")),
+                    ).alias("component"),
+                )
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.component") != F.col("o.component"))
+                .limit(1)
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                out = labels
+                return out
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            f"connected_components did not converge in {MAX_ITER} rounds"
         )
-    return labels
+    finally:
+        release_checkpoints(df for df in ckpts if df is not out)
 
 
 def canonical_mapping(

@@ -20,6 +20,9 @@ from ..functions.columns import is_numericish_col, norm_tokens
 from ..sources.triples import RDFS_LABEL
 from . import rds_core
 
+CLASS_SAMPLE_LIMIT = 4000  # label-selection sample (serimi_module.rb:233-235)
+LABEL_TOP = 3              # top-3 label predicates (serimi_module.rb:269)
+
 
 def _ruby_to_f_str(s: str) -> str:
     """Ruby String#to_f followed by Float#to_s (leading-float parse,
@@ -33,15 +36,11 @@ def _ruby_to_f_str(s: str) -> str:
     return repr(f)
 
 
-def select_entity_labels(
-    sample_triples: list[tuple],
-    text_len: int = 400,
-    top: int = 3,
-) -> tuple[list[str], list[str]]:
+def select_entity_labels(sample_triples: list[tuple]) -> list[str]:
     """get_entity_labels over a collected class sample.
 
-    sample rows: (s, p, o, o_is_uri). Returns (label predicates with
-    rdfs:label prepended, text predicates of the sample).
+    sample rows: (s, p, o, o_is_uri). Returns the label predicates,
+    rdfs:label first.
 
     Quirks preserved: the post-text-filter dedup is discarded in the
     reference (serimi_module.rb:239 return value unused), so entropy
@@ -49,7 +48,7 @@ def select_entity_labels(
     SIZES of to_i/to_f round-trips (serimi_module.rb:251).
     """
     as4 = [(t[0], t[1], str(t[2]), bool(t[3])) for t in sample_triples]
-    textp = rds_core.get_text_properties([as4], text_len)
+    textp = rds_core.get_text_properties([as4])
     textp_set = set(textp)
     data = [t for t in as4 if t[1] not in textp_set]
     candidates, _scores = rds_core.entropy_computation([data], textp=[])
@@ -67,13 +66,8 @@ def select_entity_labels(
             continue  # pure float by size
         eligible.add(p)
 
-    labels = [p for p in candidates if p in eligible][:top]
-    labels.insert(0, RDFS_LABEL)
-    out: list[str] = []
-    for p in labels:
-        if p not in out:
-            out.append(p)
-    return out, textp
+    labels = [p for p in candidates if p in eligible][:LABEL_TOP]
+    return list(dict.fromkeys([RDFS_LABEL, *labels]))
 
 
 def mine_stopwords(
@@ -133,9 +127,7 @@ def class_members(triples: DataFrame, class_uri: str) -> DataFrame:
     )
 
 
-def collect_class_sample(
-    triples: DataFrame, members: DataFrame, limit: int = 4000
-) -> list[tuple]:
+def collect_class_sample(triples: DataFrame, members: DataFrame) -> list[tuple]:
     """F2: distinct member triples, deterministically capped (the
     reference's LIMIT 4000 takes an endpoint-ordered subset; we order by
     (s,p,o) so runs are reproducible)."""
@@ -145,7 +137,7 @@ def collect_class_sample(
         .select("s", "p", "o", "o_is_uri")
         .distinct()
         .orderBy("s", "p", "o")
-        .limit(limit)
+        .limit(CLASS_SAMPLE_LIMIT)
         .collect()
     )
     return [(r.s, r.p, r.o, r.o_is_uri) for r in rows]

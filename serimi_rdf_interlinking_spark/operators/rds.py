@@ -121,8 +121,6 @@ def make_chunk_scorer(
     topk: int = 0,
     rds_threshold: float | None = None,
     filter_threshold: float = 0.7,
-    overflow_min: float = 5.0,
-    group_presence: float = 0.4,
 ) -> Callable[..., tuple[list[tuple], list[str]]]:
     """Builds score(chunk, pivot_fifo=None) -> (rows, discriminative
     predicates), rows being (src, cand, score, threshold, accepted)."""
@@ -133,8 +131,7 @@ def make_chunk_scorer(
         chunk: Chunk, pivot_fifo: rds_core.PivotFifo | None = None
     ) -> tuple[list[tuple], list[str]]:
         filtered, disc = rds_core.entity_label_filtering(
-            chunk.groups, chunk.searched, textp, stopwords,
-            filter_threshold, group_presence,
+            chunk.groups, chunk.searched, textp, stopwords, filter_threshold
         )
         if chunk.redirect_map:
             filtered = [
@@ -152,7 +149,6 @@ def make_chunk_scorer(
             textp,
             topk=topk,
             rds_threshold=rds_threshold,
-            min_overflow_threshold=overflow_min,
             pivot_fifo=pivot_fifo,
         )
         return [(chunk.srcs[keep[g]], c, v, t, a) for g, c, v, t, a in rows], disc

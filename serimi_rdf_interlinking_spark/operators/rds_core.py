@@ -36,14 +36,18 @@ from ..functions import kernels as K
 
 Triple = tuple  # (s, p, o, is_uri)
 
+TEXT_LEN = 400        # F9 long-text threshold (serimi_module.rb:13)
+GROUP_PRESENCE = 0.4  # A1 only-once exclusion (serimi_class.rb:36)
+OVERFLOW_MIN = 5.0    # A5 rule max(mu, sigma) > 5 (serimi_class.rb:363)
+
 
 # ---------------------------------------------------------------------------
 # F9 — text-property detection (serimi_module.rb:2-15)
 # ---------------------------------------------------------------------------
 
 
-def get_text_properties(groups: list[list[Triple]], text_len: int = 400) -> list[str]:
-    """Predicates having any object value longer than `text_len`."""
+def get_text_properties(groups: list[list[Triple]]) -> list[str]:
+    """Predicates having any object value longer than TEXT_LEN."""
     seen: set[Triple] = set()
     textp: list[str] = []
     for g in groups:
@@ -51,7 +55,7 @@ def get_text_properties(groups: list[list[Triple]], text_len: int = 400) -> list
             if t in seen:
                 continue
             seen.add(t)
-            if len(str(t[2])) > text_len:
+            if len(str(t[2])) > TEXT_LEN:
                 textp.append(t[1])
     out: list[str] = []
     for p in textp:
@@ -68,14 +72,14 @@ def get_text_properties(groups: list[list[Triple]], text_len: int = 400) -> list
 def entropy_computation(
     groups: list[list[Triple]],
     textp: list[str],
-    group_presence: float = 0.4,
 ) -> tuple[list[str], dict[str, float]]:
     """Returns (selected predicates ascending by score, score map).
 
     Score = |1 - H/ln(n)|; keep predicates scoring <= mean(score).
     With >1 group, (p,o) pairs are deduped per group and predicates
-    present in < 0.4 * nonempty-groups are excluded first; with exactly
-    1 group the pairs keep multiplicity (serimi_class.rb:25-30).
+    present in < GROUP_PRESENCE * nonempty-groups are excluded first;
+    with exactly 1 group the pairs keep multiplicity
+    (serimi_class.rb:25-30).
     """
     pairs: list[tuple[str, str]] = []
     pergroup_predicates: list[str] = []
@@ -108,7 +112,7 @@ def entropy_computation(
             predicates.append(p)
 
     if multi:
-        threshold = noempty * group_presence
+        threshold = noempty * GROUP_PRESENCE
         counts: dict[str, int] = {}
         for p in pergroup_predicates:
             counts[p] = counts.get(p, 0) + 1
@@ -146,7 +150,7 @@ def entropy_computation(
 # ---------------------------------------------------------------------------
 
 
-def property_overflow(groups: list[list[Triple]], min_threshold: float = 5.0) -> list[str]:
+def property_overflow(groups: list[list[Triple]]) -> list[str]:
     triples: list[Triple] = []
     seen: set[Triple] = set()
     for g in groups:
@@ -163,7 +167,7 @@ def property_overflow(groups: list[list[Triple]], min_threshold: float = 5.0) ->
     mean, dev = K.mean_and_standard_deviation(list(map(float, counts.values())))
     threshold = max(mean, dev)
     out: list[str] = []
-    if threshold > min_threshold:
+    if threshold > OVERFLOW_MIN:
         for (s, p), c in counts.items():
             if c > threshold and p not in out:
                 out.append(p)
@@ -202,7 +206,6 @@ def entity_label_filtering(
     textp: list[str],
     stopwords: tuple[str, ...],
     filter_threshold: float = 0.7,
-    group_presence: float = 0.4,
 ) -> tuple[list[list[Triple]], list[str]]:
     """Per group keep only the subjects attaining the maximal summed
     label similarity (when that max exceeds the threshold).
@@ -211,7 +214,7 @@ def entity_label_filtering(
     feeds the searchable-predicate promotion ($word_by_word_properties,
     serimi_module.rb:28-30).
     """
-    discriminative, _entropies = entropy_computation(groups, textp, group_presence)
+    discriminative, _entropies = entropy_computation(groups, textp)
     disc_set = set(discriminative)
     textp_set = set(textp)
     out: list[list[Triple]] = []
@@ -271,16 +274,13 @@ def rds_score(
     groups: list[list[Triple]],
     origins: list[list[tuple[str, str, bool]]],
     textp: list[str],
-    min_overflow_threshold: float = 5.0,
 ) -> RdsResult:
     """Quirk-faithful port of rdf2svm_with_meta_properties.
 
     `groups` may include trailing pivot groups (beyond len(origins));
     those receive no origin-similarity term (serimi_class.rb:176).
     """
-    ifp = restricted_ifp(groups) + list(textp) + property_overflow(
-        groups, min_overflow_threshold
-    )
+    ifp = restricted_ifp(groups) + list(textp) + property_overflow(groups)
     ifp_set = set(dict.fromkeys(ifp))
 
     # per-group summaries over distinct triples (group.uniq)
@@ -444,8 +444,6 @@ def score_chunk(
     textp: list[str],
     topk: int = 0,
     rds_threshold: float | None = None,
-    pivot_groups: list[list[Triple]] | None = None,
-    min_overflow_threshold: float = 5.0,
     pivot_fifo: PivotFifo | None = None,
 ) -> list[tuple[int, str, float, float, bool]]:
     """One chunk end-to-end: RDS scoring + thresholds + acceptance.
@@ -453,13 +451,11 @@ def score_chunk(
     Returns rows (group_idx, candidate_subject, score, threshold,
     accepted). Pivot groups participate in scoring/normalization but are
     excluded from output and threshold statistics (initializer.rb:179).
-    A `pivot_fifo` supplies the pivot groups instead and admits this
-    chunk's pivot hits afterwards.
+    A `pivot_fifo` supplies the pivot groups and admits this chunk's
+    pivot hits afterwards.
     """
-    if pivot_fifo is not None:
-        pivot_groups = list(pivot_fifo.groups)
-    all_groups = groups + (pivot_groups or [])
-    res = rds_score(all_groups, origins, textp, min_overflow_threshold)
+    all_groups = groups + (list(pivot_fifo.groups) if pivot_fifo else [])
+    res = rds_score(all_groups, origins, textp)
     if pivot_fifo is not None:
         pivot_fifo.admit(res, all_groups)
     n = len(groups)

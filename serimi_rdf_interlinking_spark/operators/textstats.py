@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _tokens
+from ..functions.columns import norm_text, norm_tokens
 from .partitioning import widen_to_cluster
 
 LANG_MARKERS: dict[str, list[str]] = {
@@ -35,7 +35,7 @@ def language_id(
     Per-row marker counts (array filter on the token array): a pure
     scan, no explode+groupBy shuffle."""
     docs = widen_to_cluster(docs)
-    toks = docs.select(F.col(id_col), _tokens(text_col).alias("toks"))
+    toks = docs.select(F.col(id_col), norm_tokens(text_col).alias("toks"))
     per_doc = toks.select(
         id_col,
         *[
@@ -81,7 +81,7 @@ def quality_score(
         F.length(t).alias("_nc"),
         F.length(F.regexp_replace(t, r"(?i)[^a-z]", "")).alias("_na"),
         F.length(F.regexp_replace(t, r"[^ ]", "")).alias("_nw"),
-        _tokens(text_col).alias("_toks"),
+        norm_tokens(text_col).alias("_toks"),
     )
     # stage 2: token counts from the materialized array
     counts = base.select(
@@ -139,11 +139,10 @@ def fingerprint(
     key) and md5 of the sorted distinct token set (bag-of-words key,
     order/shuffle-insensitive)."""
     docs = widen_to_cluster(docs)
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"(?i)[^a-z0-9]+", " ")))
-    bow = F.concat_ws(" ", F.array_sort(F.array_distinct(_tokens(text_col))))
+    bow = F.concat_ws(" ", F.array_sort(F.array_distinct(norm_tokens(text_col))))
     return docs.select(
         F.col(id_col),
-        F.md5(norm).alias("fp_exact"),
+        F.md5(norm_text(text_col)).alias("fp_exact"),
         F.md5(bow).alias("fp_bow"),
     ).orderBy(id_col)
 

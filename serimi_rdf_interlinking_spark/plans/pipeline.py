@@ -28,11 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import SerimiConfig
-from ..extract import extract_triples, mentions_as_source_triples
+from ..extract import extract_triples, mention_uri, mentions_as_source_triples
 from ..matcher import SerimiMatcher
 from ..operators.graph import canonical_mapping
-from ..session import conf_override
+from ..session import conf_override, release_checkpoints
 from ..sources.triples import OWL_SAMEAS, WIKI_REDIRECT
+
+# minimum label Jaccard of the opt-in LSH recovery tier's matches
+LSH_RECOVERY_THRESHOLD = 0.5
 
 
 @dataclass
@@ -54,7 +57,6 @@ class KGPipeline:
         checkpoint_dir: str,
         run_id: str = "run0",
         lsh_recovery: bool = False,
-        lsh_recovery_threshold: float = 0.5,
     ):
         self.cfg = cfg
         self.root = os.path.join(checkpoint_dir, run_id)
@@ -66,7 +68,8 @@ class KGPipeline:
         # matcher left unlinked get a fuzzy LSH pass. Default off —
         # the reference-parity alignment pins cover the default path.
         self.lsh_recovery = lsh_recovery
-        self.lsh_recovery_threshold = lsh_recovery_threshold
+        # localCheckpoints a stage pins; released once it commits or raises
+        self._pinned: list[DataFrame] = []
 
     # -- state ---------------------------------------------------------------
     def _state(self) -> dict:
@@ -160,33 +163,40 @@ class KGPipeline:
                 outs[stage] = spark.read.parquet(path)
                 skipped.append(stage)
             else:
-                consumed, built = getattr(self, f"_{stage}")(spark, pages, target, outs)
-                writer = built.write.mode("overwrite")
-                if stage == "materialize":
-                    writer = writer.partitionBy("bucket")
-                writer.parquet(path)
-                out = outs[stage] = spark.read.parquet(path)
-                per_part = None
-                if stage == "extract":
-                    per_part = [
-                        (r.pid, r.cnt)
-                        for r in out.groupBy(
-                            F.spark_partition_id().alias("pid")
-                        ).agg(F.count("*").alias("cnt")).collect()
-                    ]
-                rows_in = consumed.count()
-                # extract's rows_out is the sum of the per-partition
-                # counts just collected — a second full count() job over
-                # the same table would recompute the identical number
-                rows_out = (
-                    out.count() if per_part is None else sum(c for _, c in per_part)
-                )
-                self._lineage_append(stage, rows_in, rows_out, per_part)
-                self._mark_done(stage)
+                try:
+                    outs[stage] = self._build(spark, stage, path, pages, target, outs)
+                finally:
+                    release_checkpoints(self._pinned)
+                    self._pinned = []
                 ran.append(stage)
             if stage == stop_after:
                 break
         return self._result(spark, ran, skipped, outs)
+
+    def _build(self, spark, stage, path, pages, target, outs) -> DataFrame:
+        """Write, read back, count, lineage, commit: the committed output."""
+        consumed, built = getattr(self, f"_{stage}")(spark, pages, target, outs)
+        writer = built.write.mode("overwrite")
+        if stage == "materialize":
+            writer = writer.partitionBy("bucket")
+        writer.parquet(path)
+        out = spark.read.parquet(path)
+        per_part = None
+        if stage == "extract":
+            per_part = [
+                (r.pid, r.cnt)
+                for r in out.groupBy(
+                    F.spark_partition_id().alias("pid")
+                ).agg(F.count("*").alias("cnt")).collect()
+            ]
+        rows_in = consumed.count()
+        # extract's rows_out is the sum of the per-partition counts just
+        # collected — a second full count() job over the same table
+        # would recompute the identical number
+        rows_out = out.count() if per_part is None else sum(c for _, c in per_part)
+        self._lineage_append(stage, rows_in, rows_out, per_part)
+        self._mark_done(stage)
+        return out
 
     # -- stage bodies ---------------------------------------------------------
     # each gets the committed outputs of the earlier stages (`outs`) and
@@ -201,15 +211,15 @@ class KGPipeline:
         # re-execute per consuming stage (multi-consumer
         # re-execution; localCheckpoint truncates in memory)
         mentions = mentions_as_source_triples(outs["extract"]).localCheckpoint()
-        aligned = SerimiMatcher(self.cfg).run(
+        self._pinned.append(mentions)
+        res = SerimiMatcher(self.cfg).run(
             spark, mentions, target, "mention://class/Entity"
-        ).alignments
+        )
+        self._pinned.append(res.scores)
+        aligned = res.alignments
         if self.lsh_recovery:
             aligned = aligned.unionByName(
-                lsh_recovery_alignments(
-                    mentions, target, aligned,
-                    threshold=self.lsh_recovery_threshold,
-                )
+                lsh_recovery_alignments(mentions, target, aligned)
             )
         return mentions, aligned
 
@@ -229,10 +239,9 @@ class KGPipeline:
 
     def _materialize(self, spark, pages, target, outs) -> tuple[DataFrame, DataFrame]:
         extracted = outs["extract"]
-        ent = F.concat(
-            F.lit("mention://"), F.regexp_replace(F.col("s"), r"\s+", "_")
+        lifted = extracted.select(
+            mention_uri("s").alias("s"), "p", "o", "o_is_uri", "src_url"
         )
-        lifted = extracted.select(ent.alias("s"), "p", "o", "o_is_uri", "src_url")
         cmap = outs["canonicalize"].select(
             F.col("entity").alias("s"), F.col("canonical").alias("s_canon")
         )
@@ -289,7 +298,6 @@ def lsh_recovery_alignments(
     mentions: DataFrame,
     target: DataFrame,
     matched: DataFrame,
-    threshold: float = 0.5,
 ) -> DataFrame:
     """Second selection tier (north_star): mentions the exact-token
     matcher left unlinked, recovered by an LSH-blocked similarity join
@@ -321,7 +329,7 @@ def lsh_recovery_alignments(
         .select(F.col("s").alias("tgt_id"), F.col("o").alias("label"))
     )
     pairs = lsh_label_join(
-        unmatched, tgt_labels, verify_threshold=threshold
+        unmatched, tgt_labels, verify_threshold=LSH_RECOVERY_THRESHOLD
     )
     return (
         pairs.groupBy("src_id")

@@ -8,11 +8,15 @@ spark-submit. AQE is on so skewed candidate joins re-plan at runtime
 
 from __future__ import annotations
 
+import logging
 import os
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
+
+log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -67,3 +71,30 @@ def conf_override(spark: SparkSession, overrides: dict[str, str]) -> Iterator[No
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def release_checkpoints(frames: Iterable[DataFrame]) -> None:
+    """Free the executor blocks of localCheckpoint'ed frames that will
+    never be read again. localCheckpoint storage does NOT go through
+    the CacheManager, so `df.unpersist()` is a no-op on it — the blocks
+    are released by unpersisting the LogicalRDD's underlying RDD
+    directly. Other frames are skipped."""
+    rdd_logger = "org.apache.spark.rdd.MapPartitionsRDD"
+    # silence the expected per-RDD "locally checkpointed ... cannot be
+    # recomputed after unpersisting" WARN for the unpersist loop only:
+    # releasing is deliberate and the frames are never touched again
+    try:
+        log4j = SparkContext._jvm.org.apache.logging.log4j
+        prev_level = log4j.LogManager.getLogger(rdd_logger).getLevel()
+        log4j.core.config.Configurator.setLevel(rdd_logger, log4j.Level.ERROR)
+    except Exception:  # pragma: no cover - log tuning only
+        prev_level = None
+    try:
+        for df in frames:
+            try:
+                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+            except Exception:  # not a LogicalRDD, e.g. a parquet read
+                log.debug("checkpoint release failed", exc_info=True)
+    finally:
+        if prev_level is not None:
+            log4j.core.config.Configurator.setLevel(rdd_logger, prev_level)

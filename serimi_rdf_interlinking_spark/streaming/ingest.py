@@ -14,6 +14,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..extract import extract_triples
+from ..functions.columns import norm_text
 from ..sources.triples import PAGE_SCHEMA
 
 
@@ -79,10 +80,9 @@ def stream_dedup_exact(
     instead of the document text. Returns the StreamingQuery."""
 
     def dedup(docs):
-        norm = F.lower(F.trim(F.regexp_replace("text", r"(?i)[^a-z0-9]+", " ")))
         return (
             docs.withColumn("ts", F.col("ts").cast("timestamp"))
-            .withColumn("dedup_key", F.md5(norm))
+            .withColumn("dedup_key", F.md5(norm_text("text")))
             .withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark(["dedup_key"])
         )

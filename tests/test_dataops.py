@@ -616,7 +616,10 @@ def test_case_fold_flag_regex_equivalence(tricky_df):
 
 
 def test_dedup_norm_matches_spelled_out_form(tricky_df):
-    from serimi_rdf_interlinking_spark.operators.dedup import _norm, _tokens
+    from serimi_rdf_interlinking_spark.functions.columns import (
+        norm_text as _norm,
+        norm_tokens as _tokens,
+    )
 
     spelled = F.lower(
         F.trim(F.regexp_replace("text", r"[^A-Za-z0-9]+", " "))
@@ -627,6 +630,21 @@ def test_dedup_norm_matches_spelled_out_form(tricky_df):
     )
     assert _collect(tricky_df, _tokens("text")) == _collect(
         tricky_df, spelled_toks
+    )
+    # the per-character form the matcher's kw_norm / norm_o were built
+    # with: non-word chars and '_' to spaces, then space runs collapsed
+    per_char = F.lower(F.trim(F.regexp_replace(
+        F.regexp_replace(
+            F.regexp_replace("text", r"[^A-Za-z0-9_]", " "), "_", " "
+        ),
+        r" +", " ",
+    )))
+    assert _collect(tricky_df, _norm("text")) == _collect(tricky_df, per_char)
+    per_char_toks = F.filter(
+        F.split(per_char, " "), lambda t: t != F.lit("")
+    )
+    assert _collect(tricky_df, _tokens("text")) == _collect(
+        tricky_df, per_char_toks
     )
 
 

@@ -453,6 +453,39 @@ def test_connected_components_driver_path_equals_distributed(spark):
     assert local == dist and len(local) > 0
 
 
+def _persistent_rdds(spark):
+    """Ids of the session's persistent RDDs. Compared as sets: the
+    context cleaner may release an earlier test's frames meanwhile."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def test_pipeline_run_releases_its_checkpoints(
+    spark, fixture_small, triple_dfs, tmp_path
+):
+    """A pipeline run leaves no localCheckpoint of its own pinned: the
+    mentions frame, the matcher's scored frame and connected_components'
+    edge frame are all released by the time run returns."""
+    _src, tgt = triple_dfs
+    pages = _pages_df(spark, fixture_small)
+    before = _persistent_rdds(spark)
+    KGPipeline(SerimiConfig(chunk=10, topk=1), str(tmp_path / "ck")).run(
+        spark, pages, tgt
+    )
+    assert _persistent_rdds(spark) - before == set()
+
+
+def test_connected_components_distributed_keeps_only_its_result(spark):
+    """The distributed loop releases every checkpoint it made except
+    the returned labels."""
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i + 1}") for i in range(20)], ["src", "dst"]
+    )
+    before = _persistent_rdds(spark)
+    cc = connected_components(edges, driver_threshold=0)
+    assert len(_persistent_rdds(spark) - before) == 1
+    assert {r.component for r in cc.collect()} == {"n0"}
+
+
 def _cc_edges(spark, n):
     """n distinct edges: a path n000 - ... - n{n-2} plus the separate
     edge z1 - z0, so the labeling has two non-trivial components."""

@@ -61,3 +61,30 @@ def test_matcher_medium_scale(spark):
     prf = evaluate_alignment(res.alignments, gold)
     assert prf.precision >= 0.95, (prf.tp, prf.fp, prf.fn)
     assert prf.recall >= 0.95, (prf.tp, prf.fp, prf.fn)
+
+
+def test_matcher_parquet_boundaries_match_default(spark, tmp_path):
+    """With checkpoint_dir set, `_mat` writes each stage boundary as a
+    parquet table under <checkpoint_dir>/<run_id>/ instead of a
+    localCheckpoint; the alignments are those of the default run."""
+    import os
+
+    from serimi_rdf_interlinking_spark.sources.fixtures import (
+        build_interlinking_fixture,
+    )
+    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
+
+    fx = build_interlinking_fixture(30, seed=7)
+    src = spark.createDataFrame(fx.source, TRIPLE_SCHEMA)
+    tgt = spark.createDataFrame(fx.target, TRIPLE_SCHEMA)
+
+    def aligned(cfg):
+        res = SerimiMatcher(cfg).run(spark, src, tgt, CLASS_CITY)
+        return sorted(map(tuple, res.alignments.collect()))
+
+    default = aligned(SerimiConfig(chunk=10, topk=1))
+    ckpt = str(tmp_path / "ckpt")
+    cfg = SerimiConfig(chunk=10, topk=1, checkpoint_dir=ckpt)
+    assert aligned(cfg) == default and default
+    for name in ("keywords", "index_all", "chunk_input", "scored"):
+        assert os.path.isdir(os.path.join(ckpt, cfg.run_id, name)), name

@@ -5,6 +5,7 @@ Hand-computed expectations follow the reference formulas
 """
 
 import math
+from collections import deque
 
 import pytest
 
@@ -177,7 +178,10 @@ def test_score_chunk_pivots_stripped():
     origins = [[("p:a", "x", False)]]
     groups = [[T("t1", "p:a", "x"), T("t2", "p:b", "y")]]
     pivots = [[T("pv", "p:a", "x")]]
-    rows = R.score_chunk(groups, origins, textp=[], pivot_groups=pivots)
+    rows = R.score_chunk(
+        groups, origins, textp=[],
+        pivot_fifo=R.PivotFifo(size=len(pivots), groups=deque(pivots)),
+    )
     assert all(g == 0 for g, *_ in rows)
     assert {s for _g, s, *_ in rows} == {"t1", "t2"}
 

@@ -79,3 +79,8 @@ def ruby_to_i_col(c: Column | str) -> Column:
 def is_numericish_col(c: Column | str) -> Column:
     """T10 eligibility: o.to_i != 0 (serimi_module.rb:45)."""
     return ruby_to_i_col(c) != 0
+
+
+def lit_map(d: dict) -> Column:
+    """A literal map column of `d`'s items, in `d`'s order."""
+    return F.create_map(*[F.lit(x) for kv in d.items() for x in kv])

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 log = logging.getLogger(__name__)
 
 from .config import SerimiConfig
+from .functions.columns import lit_map
 from .operators import rds_core
 from .operators.blocking import blocking_order
 from .operators.candidates import (
@@ -66,7 +67,7 @@ from .operators.rds import (
     make_chunk_scorer,
     parse_chunk,
 )
-from .session import conf_override, release_checkpoints
+from .session import Checkpoints, conf_override
 
 KW_KEY = ["s", "rank", "chunk_id", "label_idx", "kw"]
 MAX_SEARCH_PREDICATES = 6  # $word_by_word_properties cap (serimi_module.rb:29)
@@ -92,7 +93,7 @@ class MatchResult:
 class SerimiMatcher:
     def __init__(self, cfg: SerimiConfig | None = None):
         self.cfg = cfg or SerimiConfig()
-        self._cached: list[DataFrame] = []
+        self._ckpts = Checkpoints()
 
     def _mat(self, df: DataFrame, name: str) -> DataFrame:
         """Materialize a stage boundary.
@@ -109,9 +110,7 @@ class SerimiMatcher:
             path = f"{self.cfg.checkpoint_dir}/{self.cfg.run_id}/{name}"
             df.write.mode("overwrite").parquet(path)
             return df.sparkSession.read.parquet(path)
-        ck = df.localCheckpoint(eager=True)
-        self._cached.append(ck)
-        return ck
+        return self._ckpts(df)
 
     # -- retrieval for one keyword frame against one index ----------------
     def _retrieve(
@@ -294,9 +293,7 @@ class SerimiMatcher:
             "spans (O5 analogue)",
             len(remap),
         )
-        m = F.create_map(
-            *[x for k, v in remap.items() for x in (F.lit(k), F.lit(v))]
-        )
+        m = lit_map(remap)
         for attr in ("pairs", "searched"):
             df = getattr(cr, attr)
             setattr(
@@ -559,7 +556,7 @@ class SerimiMatcher:
                 mat=lambda df: self._mat(df, "blocking_ordered"),
             )
             return self._mat(
-                prepare_keywords(source, ranked, labels, cfg), "keywords"
+                prepare_keywords(source, ranked, labels), "keywords"
             )
 
         def _job_index():
@@ -667,9 +664,9 @@ class SerimiMatcher:
         scored = self._mat(scored, "scored")
         tick("rds kernel")
         # the result (alignments + scores) derives only from the scored
-        # checkpoint — every earlier intermediate can release its blocks
-        release_checkpoints(df for df in self._cached if df is not scored)
-        self._cached = [df for df in self._cached if df is scored]
+        # checkpoint — every earlier intermediate can release its blocks;
+        # scored itself passes to the caller with the result
+        self._ckpts.release(keep=scored)
 
         alignments = (
             scored.filter("accepted")

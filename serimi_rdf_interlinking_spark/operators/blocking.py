@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import SerimiConfig
-from ..functions.columns import norm_text, norm_tokens
+from ..functions.columns import lit_map, norm_text, norm_tokens
 from .dedup import _band_keys, _candidate_cooccurrence, _exact_jaccard
 
 
@@ -31,7 +31,7 @@ def blocking_order(
     members: DataFrame,
     labels: list[str],
     cfg: SerimiConfig,
-    mat=None,
+    mat,
 ) -> DataFrame:
     """Returns (s, rank, chunk_id) for every source with a label value.
 
@@ -45,8 +45,7 @@ def blocking_order(
     repartitionByRange samples, so a recompute could re-draw ranges and
     desynchronize the collected offsets from the later rank pass).
     The matcher passes its tracked ``_mat`` so the blocks are released
-    at end-of-run; standalone callers get an untracked eager
-    localCheckpoint.
+    at end-of-run.
     """
     spark = triples.sparkSession
     data = None
@@ -95,7 +94,7 @@ def blocking_order(
     # Python RDD round trip).
     ordered = keyed.repartitionByRange(max(triples.sparkSession.sparkContext.defaultParallelism, 1), "k")
     ordered = ordered.withColumn("pid", F.spark_partition_id())
-    ordered = (mat or (lambda df: df.localCheckpoint(eager=True)))(ordered)
+    ordered = mat(ordered)
     part_counts = (
         ordered.groupBy("pid").agg(F.count("*").alias("n")).orderBy("pid").collect()
     )
@@ -104,9 +103,7 @@ def blocking_order(
     for r in part_counts:
         offsets[r.pid] = acc
         acc += r.n
-    off_map = F.create_map(
-        *[x for pid, off in offsets.items() for x in (F.lit(pid), F.lit(off))]
-    ) if offsets else F.create_map()
+    off_map = lit_map(offsets)
     from pyspark.sql import Window
 
     w = Window.partitionBy("pid").orderBy("k")

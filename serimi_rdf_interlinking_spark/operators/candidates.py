@@ -39,7 +39,8 @@ from pyspark.sql import functions as F
 log = logging.getLogger(__name__)
 
 from ..config import SerimiConfig
-from ..functions.columns import norm_text, norm_tokens, paren_strip, valid_date_col
+from ..functions.columns import lit_map, norm_text, norm_tokens
+from ..functions.columns import paren_strip, valid_date_col
 from ..functions.udfs import asm_passes_udf
 
 YAGO_PREFIX = "http://dbpedia.org/class/yago/"
@@ -53,10 +54,7 @@ MIN_KEYWORD_LEN = 3    # search skips keywords < 3 chars (search_module.rb:71)
 
 
 def prepare_keywords(
-    source: DataFrame,
-    ranked: DataFrame,
-    labels: list[str],
-    cfg: SerimiConfig,
+    source: DataFrame, ranked: DataFrame, labels: list[str]
 ) -> DataFrame:
     """(src, rank, chunk_id, label_idx, kw, kw_norm, searchable).
 
@@ -66,9 +64,7 @@ def prepare_keywords(
     len>=MIN_KEYWORD_LEN). Non-searchable keywords are kept — they
     still enter @searchedlabels for F12 scoring (serimi_module.rb:173).
     """
-    label_map = F.create_map(
-        *[x for i, lab in enumerate(labels) for x in (F.lit(lab), F.lit(i))]
-    )
+    label_map = lit_map({lab: i for i, lab in enumerate(labels)})
     kw = (
         source.join(ranked, "s")
         .filter(F.col("p").isin(labels) & ~F.col("is_bnode") & ~F.col("o_is_uri"))
@@ -268,10 +264,7 @@ def tag_tiers(
     tier 0."""
     if tier_of_pred is None:
         return hits.withColumn("tier", F.lit(0))
-    tier_map = F.create_map(
-        *[x for p, i in tier_of_pred.items() for x in (F.lit(p), F.lit(i))]
-    )
-    return hits.withColumn("tier", tier_map[F.col("p")]).filter(
+    return hits.withColumn("tier", lit_map(tier_of_pred)[F.col("p")]).filter(
         F.col("tier").isNotNull()
     )
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import release_checkpoints
+from ..session import Checkpoints
 
 # edge rows connected_components' path probe collects before counting
 DRIVER_PROBE_ROWS = 10_000
@@ -71,15 +71,9 @@ def connected_components(
 
     Every localCheckpoint made here except the returned frame is
     released before returning or raising."""
-    ckpts: list[DataFrame] = []
-    out = None
-
-    def checkpoint(df: DataFrame) -> DataFrame:
-        ckpts.append(df.localCheckpoint(eager=True))
-        return ckpts[-1]
-
+    ck = Checkpoints()
     try:
-        e = checkpoint(
+        e = ck(
             edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
             .filter(F.col("a").isNotNull() & F.col("b").isNotNull())
             .distinct()
@@ -101,11 +95,11 @@ def connected_components(
                 list(mapping.items()), f"node {t}, component {t}"
             )
 
-        und = checkpoint(
+        und = ck(
             e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
             .distinct()
         )
-        labels = checkpoint(
+        labels = ck(
             und.select(F.col("a").alias("node"))
             .distinct()
             .withColumn("component", F.col("node"))
@@ -129,7 +123,7 @@ def connected_components(
                 F.col("node").alias("component"),
                 F.col("component").alias("comp2"),
             )
-            new_labels = checkpoint(
+            new_labels = ck(
                 prop.join(lab2, "component", "left")
                 .select(
                     "node",
@@ -148,13 +142,12 @@ def connected_components(
             )
             labels = new_labels
             if changed == 0:
-                out = labels
-                return out
+                return ck.release(keep=labels)
         raise RuntimeError(
             f"connected_components did not converge in {MAX_ITER} rounds"
         )
     finally:
-        release_checkpoints(df for df in ckpts if df is not out)
+        ck.release()
 
 
 def canonical_mapping(

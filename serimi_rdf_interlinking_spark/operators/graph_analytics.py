@@ -12,8 +12,8 @@ statistics (triangles) are the first analyses a KG consumer runs.
 Scale design (all three):
 * edges are the ONLY corpus-sized input; every round is a constant
   number of hash-shuffles of |E| rows — no all-pairs step anywhere;
-* iteration lineage is truncated per round (eager localCheckpoint),
-  so plans stay bounded regardless of iteration count;
+* iteration lineage is truncated per round (eager localCheckpoint,
+  released on return unless the result reads it), so plans stay bounded;
 * PageRank's dangling-mass term is a 1-row scalar aggregate per
   round (O(1) driver traffic, not a collect of node state);
 * triangle counting orients edges by (degree, id) before the
@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import Checkpoints
 
 
 def _distinct_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -58,19 +60,17 @@ def pagerank(
     independent engine (the DuckDB power-iteration oracle in
     __spark_entry__.py) computes bit-comparable values.
     """
-    e = _distinct_edges(edges, src, dst).localCheckpoint(eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    ck = Checkpoints()
+    e = ck(_distinct_edges(edges, src, dst))
+    nodes = ck(
+        e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
     )
     n = nodes.count()
     deg = e.groupBy("src").agg(F.count("*").alias("deg"))
     # nodes annotated once with out-degree; deg NULL == dangling
-    base = nodes.join(deg, nodes["node"] == deg["src"], "left").select(
-        "node", "deg"
-    ).localCheckpoint(eager=True)
+    base = ck(
+        nodes.join(deg, nodes["node"] == deg["src"], "left").select("node", "deg")
+    )
 
     ranks = base.withColumn("rank", F.lit(1.0 / n))
     for _ in range(iterations):
@@ -95,7 +95,7 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("c"))
         )
-        ranks = (
+        ranks = ck(
             base.join(contribs, base["node"] == contribs["dst"], "left")
             .crossJoin(dangling)
             .select(
@@ -110,8 +110,8 @@ def pagerank(
                     )
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
+    ck.release(keep=ranks if iterations else base)
     return ranks.select("node", "rank")
 
 
@@ -133,27 +133,26 @@ def k_hop(
     — then truncates lineage. The textbook distributed BFS shape.
     """
     e = _distinct_edges(edges, src, dst)
-    visited = (
+    ck = Checkpoints()
+    visited = ck(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     frontier = visited
     for depth in range(1, k + 1):
-        nxt = (
+        nxt = ck(
             frontier.join(e, frontier["node"] == e["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
             break
-        visited = visited.union(nxt).localCheckpoint(eager=True)
+        visited = ck(visited.union(nxt))
         frontier = nxt
-    return visited
+    return ck.release(keep=visited)
 
 
 def sssp(
@@ -183,11 +182,12 @@ def sssp(
         .groupBy(src, dst)
         .agg(F.min(weight).alias("__w"))
     )
-    dist = (
+    ck = Checkpoints()
+    # `merged` is always the checkpoint `dist` reads
+    dist = merged = ck(
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
     )
     frontier = dist
     for _ in range(rounds):
@@ -200,7 +200,7 @@ def sssp(
             .groupBy("node")
             .agg(F.min("nd").alias("nd"))
         )
-        merged = (
+        merged = ck(
             dist.join(cand, "node", "full_outer")
             .select(
                 "node",
@@ -213,12 +213,12 @@ def sssp(
                     | (F.col("nd") < F.col("dist"))
                 ).alias("__improved"),
             )
-            .localCheckpoint(eager=True)
         )
         frontier = merged.filter(F.col("__improved")).select("node", "dist")
         dist = merged.select("node", "dist")
         if frontier.isEmpty():
             break
+    ck.release(keep=merged)
     return dist
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame
 def widen_to_cluster(df: DataFrame) -> DataFrame:
     par = df.sparkSession.sparkContext.defaultParallelism
     try:
-        n = df.rdd.getNumPartitions()
+        n = df._jdf.queryExecution().toRdd().getNumPartitions()  # no Python RDD
     except Exception:  # pragma: no cover - planning edge
         return df
     if n < par:

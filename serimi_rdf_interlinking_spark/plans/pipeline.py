@@ -31,7 +31,7 @@ from ..config import SerimiConfig
 from ..extract import extract_triples, mention_uri, mentions_as_source_triples
 from ..matcher import SerimiMatcher
 from ..operators.graph import canonical_mapping
-from ..session import conf_override, release_checkpoints
+from ..session import Checkpoints, conf_override
 from ..sources.triples import OWL_SAMEAS, WIKI_REDIRECT
 
 # minimum label Jaccard of the opt-in LSH recovery tier's matches
@@ -69,7 +69,7 @@ class KGPipeline:
         # the reference-parity alignment pins cover the default path.
         self.lsh_recovery = lsh_recovery
         # localCheckpoints a stage pins; released once it commits or raises
-        self._pinned: list[DataFrame] = []
+        self._ckpts = Checkpoints()
 
     # -- state ---------------------------------------------------------------
     def _state(self) -> dict:
@@ -166,8 +166,7 @@ class KGPipeline:
                 try:
                     outs[stage] = self._build(spark, stage, path, pages, target, outs)
                 finally:
-                    release_checkpoints(self._pinned)
-                    self._pinned = []
+                    self._ckpts.release()
                 ran.append(stage)
             if stage == stop_after:
                 break
@@ -211,11 +210,11 @@ class KGPipeline:
         # re-execute per consuming stage (multi-consumer
         # re-execution; localCheckpoint truncates in memory)
         mentions = mentions_as_source_triples(outs["extract"]).localCheckpoint()
-        self._pinned.append(mentions)
+        self._ckpts.add(mentions)
         res = SerimiMatcher(self.cfg).run(
             spark, mentions, target, "mention://class/Entity"
         )
-        self._pinned.append(res.scores)
+        self._ckpts.add(res.scores)
         aligned = res.alignments
         if self.lsh_recovery:
             aligned = aligned.unionByName(

@@ -3,14 +3,15 @@
 Local-mode defaults match the sandbox (local[N] single JVM); on a real
 cluster the same settings apply except master/memory come from
 spark-submit. AQE is on so skewed candidate joins re-plan at runtime
-(north_rule: explicit skew handling).
+(north_rule: explicit skew handling). `Checkpoints` is the one owner
+of every eager localCheckpoint that is freed again.
 """
 
 from __future__ import annotations
 
 import logging
 import os
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 from contextlib import contextmanager
 
 from pyspark import SparkContext
@@ -73,28 +74,43 @@ def conf_override(spark: SparkSession, overrides: dict[str, str]) -> Iterator[No
                 spark.conf.set(k, v)
 
 
-def release_checkpoints(frames: Iterable[DataFrame]) -> None:
-    """Free the executor blocks of localCheckpoint'ed frames that will
-    never be read again. localCheckpoint storage does NOT go through
-    the CacheManager, so `df.unpersist()` is a no-op on it — the blocks
-    are released by unpersisting the LogicalRDD's underlying RDD
-    directly. Other frames are skipped."""
-    rdd_logger = "org.apache.spark.rdd.MapPartitionsRDD"
-    # silence the expected per-RDD "locally checkpointed ... cannot be
-    # recomputed after unpersisting" WARN for the unpersist loop only:
-    # releasing is deliberate and the frames are never touched again
-    try:
-        log4j = SparkContext._jvm.org.apache.logging.log4j
-        prev_level = log4j.LogManager.getLogger(rdd_logger).getLevel()
-        log4j.core.config.Configurator.setLevel(rdd_logger, log4j.Level.ERROR)
-    except Exception:  # pragma: no cover - log tuning only
-        prev_level = None
-    try:
-        for df in frames:
-            try:
-                df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:  # not a LogicalRDD, e.g. a parquet read
-                log.debug("checkpoint release failed", exc_info=True)
-    finally:
-        if prev_level is not None:
-            log4j.core.config.Configurator.setLevel(rdd_logger, prev_level)
+class Checkpoints:
+    """`ck(df)` checkpoints `df` eagerly and records it; `ck.add(df)`
+    records a frame checkpointed elsewhere; `ck.release(keep)` frees
+    every recorded frame but `keep`, forgets them all (`keep` passes to
+    the caller; a later `release()` in a `finally` is a no-op) and
+    returns `keep`."""
+
+    def __init__(self) -> None:
+        self._frames: list[DataFrame] = []
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        return self.add(df.localCheckpoint(eager=True))
+
+    def add(self, df: DataFrame) -> DataFrame:
+        self._frames.append(df)
+        return df
+
+    def release(self, keep: DataFrame | None = None) -> DataFrame | None:
+        # localCheckpoint blocks bypass the CacheManager (df.unpersist() is
+        # a no-op on them): unpersist the LogicalRDD's RDD, silencing the
+        # expected per-RDD "cannot be recomputed after unpersisting" WARN
+        frames = [df for df in self._frames if df is not keep]
+        self._frames = []
+        rdd_logger = "org.apache.spark.rdd.MapPartitionsRDD"
+        try:
+            log4j = SparkContext._jvm.org.apache.logging.log4j
+            prev_level = log4j.LogManager.getLogger(rdd_logger).getLevel()
+            log4j.core.config.Configurator.setLevel(rdd_logger, log4j.Level.ERROR)
+        except Exception:  # pragma: no cover - log tuning only
+            prev_level = None
+        try:
+            for df in frames:
+                try:
+                    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+                except Exception:  # not a LogicalRDD, e.g. a parquet read
+                    log.debug("checkpoint release failed", exc_info=True)
+        finally:
+            if prev_level is not None:
+                log4j.core.config.Configurator.setLevel(rdd_logger, prev_level)
+        return keep

@@ -8,6 +8,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
 
 
+def _persistent_rdds(spark):
+    """Ids of the session's persistent RDDs. Compared as sets: the
+    context cleaner may release an earlier test's frames meanwhile."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
 @pytest.fixture(scope="session")
 def spark():
     from serimi_rdf_interlinking_spark.session import get_spark

@@ -6,6 +6,7 @@ import logging
 import os
 
 import pytest
+from conftest import _persistent_rdds
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -422,13 +423,10 @@ def test_matcher_releases_checkpoint_storage(spark):
     cfg = SerimiConfig(shuffle_partitions=4)
     # delta-based: other tests in this shared session may hold their own
     # localCheckpoints; the matcher must add at most ONE (scored).
-    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    before = _persistent_rdds(spark)
     res = SerimiMatcher(cfg).run(spark, src, tgt, CLASS_CITY)
-    after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-    assert after <= before + 1, (
-        f"matcher leaked checkpoints: {before} persisted before run(), "
-        f"{after} after"
-    )
+    added = _persistent_rdds(spark) - before
+    assert len(added) <= 1, f"matcher leaked checkpoints: {sorted(added)}"
     # the kept checkpoint must still serve the result
     assert res.alignments.count() > 0
 

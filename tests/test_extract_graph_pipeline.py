@@ -5,6 +5,7 @@ import os
 from collections import Counter
 
 import pytest
+from conftest import _persistent_rdds
 from pyspark.sql import functions as F
 
 from serimi_rdf_interlinking_spark.config import SerimiConfig
@@ -451,12 +452,6 @@ def test_connected_components_driver_path_equals_distributed(spark):
         for r in connected_components(edges, driver_threshold=0).collect()
     }
     assert local == dist and len(local) > 0
-
-
-def _persistent_rdds(spark):
-    """Ids of the session's persistent RDDs. Compared as sets: the
-    context cleaner may release an earlier test's frames meanwhile."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
 
 def test_pipeline_run_releases_its_checkpoints(

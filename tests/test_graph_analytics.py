@@ -9,6 +9,7 @@ anchored by three engines.)
 import numpy as np
 import pandas as pd
 import pytest
+from conftest import _persistent_rdds
 
 from serimi_rdf_interlinking_spark.operators.graph_analytics import (
     k_hop,
@@ -136,6 +137,30 @@ def test_sssp_parallel_edges_take_min_weight(spark):
         rounds=1,
     ).toPandas()
     assert dict(zip(out["node"], out["dist"])) == {1: 0, 2: 3}
+
+
+@pytest.mark.parametrize("op", ["pagerank", "k_hop", "sssp"])
+def test_iterative_operator_keeps_only_its_result(spark, op):
+    """The operator releases every per-round checkpoint except the one
+    its result reads, and that one still serves the reference values."""
+    epd = _rand_edges(8, n_edges=60)
+    epd = epd.assign(w=np.random.default_rng(108).integers(1, 10, len(epd)))
+    unweighted = epd[["src", "dst"]]
+    edges = spark.createDataFrame(epd)
+    seeds = spark.createDataFrame(pd.DataFrame({"node": [0, 1]}))
+    run, col, expected = {
+        "pagerank": (lambda: pagerank(edges, iterations=5), "rank",
+                     lambda: _np_pagerank(unweighted, iterations=5)),
+        "k_hop": (lambda: k_hop(edges, seeds, k=3), "dist",
+                  lambda: _py_bfs(unweighted, [0, 1], 3)),
+        "sssp": (lambda: sssp(edges, seeds, rounds=4), "dist",
+                 lambda: _py_bellman_ford(epd, [0, 1], 4)),
+    }[op]
+    before = _persistent_rdds(spark)
+    out = run()
+    assert len(_persistent_rdds(spark) - before) == 1
+    got = out.toPandas()
+    assert dict(zip(got["node"], got[col])) == pytest.approx(expected(), rel=1e-9)
 
 
 def _brute_triangles(edges: pd.DataFrame):

@@ -300,3 +300,25 @@ def test_set_operations_single_lineitem_scan(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 0
     assert plan.count("Scan ExistingRDD") >= 2
+
+
+def test_widen_to_cluster_reads_partitions_without_python_rdd(spark, monkeypatch):
+    """The partition-count probe plans no Python-RDD conversion: with
+    `DataFrame.rdd` raising, a 1-partition frame is still widened to
+    the default parallelism and a wide frame is returned untouched."""
+    from serimi_rdf_interlinking_spark.operators.partitioning import (
+        widen_to_cluster,
+    )
+
+    narrow = spark.range(100).coalesce(1)
+    par = spark.sparkContext.defaultParallelism
+    wide = spark.range(0, 100, 1, par)
+
+    def no_rdd(self):
+        raise AssertionError("df.rdd probed")
+
+    monkeypatch.setattr(type(narrow), "rdd", property(no_rdd))
+    widened = widen_to_cluster(narrow)
+    assert widen_to_cluster(wide) is wide
+    monkeypatch.undo()
+    assert widened.rdd.getNumPartitions() == par

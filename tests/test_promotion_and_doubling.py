@@ -98,7 +98,7 @@ def test_promotion_changes_chunk2_winner(spark, promo_frames):
     source, target, ranked = promo_frames
     cfg = SerimiConfig(warmup_chunk=0, chunk=2, shuffle_partitions=4)
     m = SerimiMatcher(cfg)
-    keywords = prepare_keywords(source, ranked, [LBL], cfg)
+    keywords = prepare_keywords(source, ranked, [LBL])
     index = build_token_index(target, [PRED_A, PRED_B], cfg)
 
     rows = m._run_sequential_loop(
@@ -150,7 +150,7 @@ def test_adaptive_doubling_rescues_single_group_chunk(spark):
     )
     cfg = SerimiConfig(warmup_chunk=0, chunk=2, shuffle_partitions=4)
     m = SerimiMatcher(cfg)
-    keywords = prepare_keywords(source, ranked, [LBL], cfg)
+    keywords = prepare_keywords(source, ranked, [LBL])
     index = build_token_index(target, [PRED_B], cfg)
 
     rows = m._run_sequential_loop(

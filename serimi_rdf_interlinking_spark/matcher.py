@@ -53,6 +53,7 @@ from .operators.candidates import (
     prepare_keywords,
     raw_token_index,
     select_candidates,
+    target_literals,
     word_hits,
 )
 from .operators.labels import (
@@ -68,6 +69,7 @@ from .operators.rds import (
     parse_chunk,
 )
 from .session import Checkpoints, conf_override
+from .sources.triples import WIKI_REDIRECT
 
 KW_KEY = ["s", "rank", "chunk_id", "label_idx", "kw"]
 MAX_SEARCH_PREDICATES = 6  # $word_by_word_properties cap (serimi_module.rb:29)
@@ -117,7 +119,7 @@ class SerimiMatcher:
         self,
         keywords: DataFrame,
         index: DataFrame,
-        target: DataFrame,
+        lits: DataFrame,
         tiers: dict[str, int] | None,
         textp: list[str] | None,
         stopwords: tuple[str, ...],
@@ -127,7 +129,7 @@ class SerimiMatcher:
 
         def passing_hits(hits: DataFrame, tier: int) -> DataFrame:
             return self._mat(
-                f11_passing(hits, target, textp, stopwords, cfg),
+                f11_passing(hits, lits, textp, stopwords, cfg),
                 f"{name}_p{tier}",
             )
 
@@ -357,8 +359,6 @@ class SerimiMatcher:
         rows = cand_rows.unionByName(origin_rows).unionByName(kw_rows)
 
         if self.cfg.dbpedia_target:
-            from .sources.triples import WIKI_REDIRECT
-
             redirects = target.filter(F.col("p") == WIKI_REDIRECT).select(
                 F.col("s").alias("alias"), F.col("o").alias("rtarget")
             )
@@ -426,6 +426,7 @@ class SerimiMatcher:
         self,
         source: DataFrame,
         target: DataFrame,
+        lits: DataFrame,
         keywords: DataFrame,
         index: DataFrame,
         order0: list[str],
@@ -469,7 +470,7 @@ class SerimiMatcher:
             )
             tiers = {p: i for i, p in enumerate(order)} if order else None
             cr = self._retrieve(
-                span, index, target, tiers, textp, stopwords, f"seq{chunk_id}"
+                span, index, lits, tiers, textp, stopwords, f"seq{chunk_id}"
             )
             n_data = cr.pairs.select("s").distinct().count()
             if order:
@@ -507,7 +508,10 @@ class SerimiMatcher:
         with conf_override(
             spark, {"spark.sql.shuffle.partitions": str(cfg.shuffle_partitions)}
         ):
-            return self._run(spark, source, target, class_uri)
+            try:
+                return self._run(spark, source, target, class_uri)
+            finally:  # frees the boundaries of a run that raised
+                self._ckpts.release()
 
     def _run(
         self,
@@ -559,8 +563,10 @@ class SerimiMatcher:
                 prepare_keywords(source, ranked, labels), "keywords"
             )
 
+        lits = target_literals(target, cfg)  # read by the index and F11
+
         def _job_index():
-            return self._mat(raw_token_index(target, None, cfg), "index_all")
+            return self._mat(raw_token_index(lits), "index_all")
 
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_sw = pool.submit(_job_stopwords)
@@ -576,7 +582,7 @@ class SerimiMatcher:
         # checkpointed frame.
         index_all = apply_hot_token_cap(index_raw, cfg)
         kw0 = keywords.filter(F.col("chunk_id") == 0)
-        cr0 = self._retrieve(kw0, index_all, target, None, None, stopwords, "warm")
+        cr0 = self._retrieve(kw0, index_all, lits, None, None, stopwords, "warm")
         tick("warm retrieve")
         textp, search_preds, warm_rows = self._warmup(
             cr0, source, target, stopwords
@@ -617,7 +623,7 @@ class SerimiMatcher:
                     cfg.mode,
                 )
             seq_rows = self._run_sequential_loop(
-                source, target, keywords, index, search_preds, textp,
+                source, target, lits, keywords, index, search_preds, textp,
                 stopwords,
             )
             tick("sequential loop")
@@ -629,7 +635,7 @@ class SerimiMatcher:
             # cascade (frozen after warm-up — SURVEY §7 divergence)
             kwN = keywords.filter(F.col("chunk_id") >= 1)
             crN = self._retrieve(
-                kwN, index, target, tiers, textp, stopwords, "main"
+                kwN, index, lits, tiers, textp, stopwords, "main"
             )
             crN = self._merge_singleton_chunks(crN)
             tick("main retrieve")

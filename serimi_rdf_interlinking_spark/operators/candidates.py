@@ -3,9 +3,10 @@
 The reference issues one Virtuoso `bif:contains` query per (keyword,
 predicate) with retry-on-error and break-on-first-hit
 (search_module.rb:62-198). Here the whole corpus is searched at once
-against an inverted token index over target literals (explode +
-distinct), whose per-token fan-out is capped (skew guard — hot tokens
-like 'john' otherwise explode J2, SURVEY.md §7).
+against an inverted token index (explode + distinct, per-token fan-out
+capped: hot tokens like 'john' otherwise explode J2, SURVEY.md §7) over
+`target_literals`, the one view of the target's searchable literals
+that F11 reads too.
 
 The search cascade is one loop over tiers (the matcher's `_retrieve`);
 each tier searches only the keywords every earlier tier missed:
@@ -42,6 +43,7 @@ from ..config import SerimiConfig
 from ..functions.columns import lit_map, norm_text, norm_tokens
 from ..functions.columns import paren_strip, valid_date_col
 from ..functions.udfs import asm_passes_udf
+from ..sources.triples import WIKI_REDIRECT
 
 YAGO_PREFIX = "http://dbpedia.org/class/yago/"
 KEYWORD_MAX_LEN = 150  # F8 label hygiene (serimi_module.rb:160)
@@ -129,19 +131,12 @@ def split_hot(
 # ---------------------------------------------------------------------------
 
 
-def raw_token_index(
-    target: DataFrame,
-    search_predicates: list[str] | None,
-    cfg: SerimiConfig,
-) -> DataFrame:
-    """The UNCAPPED inverted index (tok, cand, p, norm_o) over distinct
-    tokens of target literal values — build step only; callers apply
-    `apply_hot_token_cap` (directly, or re-apply it after restricting
-    `p`, so the cap always reflects the fan-out of the index actually
-    joined)."""
+def target_literals(target: DataFrame, cfg: SerimiConfig) -> DataFrame:
+    """(cand, p, o, norm_o): non-URI, non-bnode target triples, minus
+    yago subjects (F6, cfg.dbpedia_target) and redirect subjects (F7,
+    cfg.drop_redirect_candidates). Both drop whole subjects, so an
+    indexed candidate keeps all its literals here for F11."""
     lits = target.filter(~F.col("o_is_uri") & ~F.col("is_bnode"))
-    if search_predicates is not None:
-        lits = lits.filter(F.col("p").isin(search_predicates))
     if cfg.dbpedia_target:
         lits = lits.filter(~F.col("s").startswith(YAGO_PREFIX))
     if cfg.drop_redirect_candidates:
@@ -153,8 +148,6 @@ def raw_token_index(
         # alias candidates it replaces. Opt-in for users who want
         # redirect stubs out of the candidate budget and do not rely
         # on alias-only labels.
-        from ..sources.triples import WIKI_REDIRECT
-
         redirect_subjects = (
             target.filter(F.col("p") == WIKI_REDIRECT)
             .select(F.col("s").alias("cand"))
@@ -165,12 +158,17 @@ def raw_token_index(
             lits["s"] == redirect_subjects["cand"],
             "left_anti",
         )
+    return lits.select(
+        F.col("s").alias("cand"), "p", "o", norm_text("o").alias("norm_o")
+    )
+
+
+def raw_token_index(lits: DataFrame) -> DataFrame:
+    """The UNCAPPED inverted index (cand, p, norm_o, tok) over `lits`
+    (`target_literals`). Callers apply `apply_hot_token_cap`, again
+    after restricting `p`, so the cap reflects the index joined."""
     return (
-        lits.select(
-            F.col("s").alias("cand"),
-            "p",
-            norm_text("o").alias("norm_o"),
-        )
+        lits.select("cand", "p", "norm_o")
         .withColumn("tok", F.explode(F.array_distinct(norm_tokens("norm_o"))))
         .distinct()
     )
@@ -243,11 +241,11 @@ def build_token_index(
     search_predicates: list[str] | None,
     cfg: SerimiConfig,
 ) -> DataFrame:
-    """raw_token_index + apply_hot_token_cap in one call (the simple
-    entry point when no predicate restriction follows)."""
-    return apply_hot_token_cap(
-        raw_token_index(target, search_predicates, cfg), cfg
-    )
+    """The capped index, restricted to `search_predicates` unless None."""
+    lits = target_literals(target, cfg)
+    if search_predicates is not None:
+        lits = lits.filter(F.col("p").isin(search_predicates))
+    return apply_hot_token_cap(raw_token_index(lits), cfg)
 
 
 # ---------------------------------------------------------------------------
@@ -423,17 +421,19 @@ def word_hits(
 
 def f11_passing(
     hits: DataFrame,
-    target: DataFrame,
+    lits: DataFrame,
     textp: list[str] | None,
     stopwords: tuple[str, ...],
     cfg: SerimiConfig,
 ) -> DataFrame:
-    """Adds pass/fail per (kw, cand): the candidate's description has a
-    literal with advanced_string_matching(kw, o) > threshold.
-
-    When textp is unknown (warm-up chunk) the length-ratio prune
-    len(o) <= 3*len(kw) applies instead (search_module.rb:247-249).
-    Scores are computed once per DISTINCT (kw, literal) pair.
+    """`hits` whose candidate has a literal o in `lits` (the
+    `target_literals` view their index came from) with
+    advanced_string_matching(kw, o) > threshold. Each distinct
+    (kw, cand) inner-joins the view, which restricts it to hit
+    candidates. Literals under a `textp` predicate are skipped; when
+    textp is unknown (warm-up, None) the prune len(o) <= 3*len(kw)
+    applies instead (search_module.rb:247-249). Scores are computed
+    once per DISTINCT (kw, literal) pair.
 
     The output carries ``found_p`` — a deterministic choice (min) of
     the PASSING description triples' predicate per (kw, cand). This is
@@ -443,25 +443,12 @@ def f11_passing(
     the deterministic pick inside the reference's ambiguity envelope.
     The promotion fold uses it when cfg.promote_found_predicate is on.
     """
-    cands = hits.select("cand").distinct()
-    desc = target.join(cands, target["s"] == cands["cand"], "left_semi").filter(
-        ~F.col("o_is_uri") & ~F.col("is_bnode")
+    desc = lits.select(
+        "cand", F.col("p").alias("desc_p"), F.col("o").alias("lit")
     )
-    if textp is not None:
-        if textp:
-            desc = desc.filter(~F.col("p").isin(list(textp)))
-    pairs = (
-        hits.select("kw", "cand")
-        .distinct()
-        .join(
-            desc.select(
-                F.col("s").alias("cand"),
-                F.col("p").alias("desc_p"),
-                F.col("o").alias("lit"),
-            ),
-            "cand",
-        )
-    )
+    if textp:
+        desc = desc.filter(~F.col("desc_p").isin(list(textp)))
+    pairs = hits.select("kw", "cand").distinct().join(desc, "cand")
     if textp is None:
         pairs = pairs.filter(F.length("lit") <= 3 * F.length("kw"))
     # boolean short-circuit kernel: F11 consumes only the decision, so

@@ -13,7 +13,7 @@ Scale design (all three):
 * edges are the ONLY corpus-sized input; every round is a constant
   number of hash-shuffles of |E| rows — no all-pairs step anywhere;
 * iteration lineage is truncated per round (eager localCheckpoint,
-  released on return unless the result reads it), so plans stay bounded;
+  released unless the result reads it, on raise too), so plans stay bounded;
 * PageRank's dangling-mass term is a 1-row scalar aggregate per
   round (O(1) driver traffic, not a collect of node state);
 * triangle counting orients edges by (degree, id) before the
@@ -61,58 +61,59 @@ def pagerank(
     __spark_entry__.py) computes bit-comparable values.
     """
     ck = Checkpoints()
-    e = ck(_distinct_edges(edges, src, dst))
-    nodes = ck(
-        e.select(F.col("src").alias("node")).union(e.select("dst")).distinct()
-    )
-    n = nodes.count()
-    deg = e.groupBy("src").agg(F.count("*").alias("deg"))
-    # nodes annotated once with out-degree; deg NULL == dangling
-    base = ck(
-        nodes.join(deg, nodes["node"] == deg["src"], "left").select("node", "deg")
-    )
+    try:
+        e = ck(_distinct_edges(edges, src, dst))
+        nodes = ck(
+            e.select(F.col("src").alias("node")).union(e.select("dst"))
+            .distinct()
+        )
+        n = nodes.count()
+        deg = e.groupBy("src").agg(F.count("*").alias("deg"))
+        # nodes annotated once with out-degree; deg NULL == dangling
+        base = ck(
+            nodes.join(deg, nodes["node"] == deg["src"], "left")
+            .select("node", "deg")
+        )
 
-    ranks = base.withColumn("rank", F.lit(1.0 / n))
-    for _ in range(iterations):
-        # dangling mass as a ONE-ROW frame crossJoined into the rank
-        # update instead of a driver collect: the collect version ran a
-        # full extra job (scan + agg over the rank table) per round —
-        # 2x the job count at high iteration counts — where the cross
-        # join folds it into the round's single materializing job as a
-        # broadcast of one row. Same aggregate, same partial-sum order
-        # over the checkpointed rank table, and dm/n divides in IEEE
-        # double exactly like the collected python float did — ranks
-        # stay bit-identical (oracle-hash-verified).
-        dangling = ranks.filter(F.col("deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
-        contribs = (
-            e.join(
-                ranks.filter(F.col("deg").isNotNull()),
-                e["src"] == ranks["node"],
+        ranks = base.withColumn("rank", F.lit(1.0 / n))
+        for _ in range(iterations):
+            # dangling mass as a ONE-ROW frame crossJoined into the
+            # round's single materializing job (a driver collect cost one
+            # extra job per round); same aggregate, same partial-sum order
+            # and IEEE division as the collected float, so ranks stay
+            # bit-identical (oracle-hash-verified).
+            dangling = ranks.filter(F.col("deg").isNull()).agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
             )
-            .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("c"))
-        )
-        ranks = ck(
-            base.join(contribs, base["node"] == contribs["dst"], "left")
-            .crossJoin(dangling)
-            .select(
-                "node",
-                "deg",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("c"), F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n))
-                    )
-                ).alias("rank"),
+            contribs = (
+                e.join(
+                    ranks.filter(F.col("deg").isNotNull()),
+                    e["src"] == ranks["node"],
+                )
+                .select("dst", (F.col("rank") / F.col("deg")).alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("c"))
             )
-        )
-    ck.release(keep=ranks if iterations else base)
-    return ranks.select("node", "rank")
+            ranks = ck(
+                base.join(contribs, base["node"] == contribs["dst"], "left")
+                .crossJoin(dangling)
+                .select(
+                    "node",
+                    "deg",
+                    (
+                        F.lit((1.0 - damping) / n)
+                        + F.lit(damping)
+                        * (
+                            F.coalesce(F.col("c"), F.lit(0.0))
+                            + F.col("dm") / F.lit(float(n))
+                        )
+                    ).alias("rank"),
+                )
+            )
+        ck.release(keep=ranks if iterations else base)
+        return ranks.select("node", "rank")
+    finally:
+        ck.release()
 
 
 def k_hop(
@@ -134,25 +135,28 @@ def k_hop(
     """
     e = _distinct_edges(edges, src, dst)
     ck = Checkpoints()
-    visited = ck(
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-    )
-    frontier = visited
-    for depth in range(1, k + 1):
-        nxt = ck(
-            frontier.join(e, frontier["node"] == e["src"])
-            .select(F.col("dst").alias("node"))
+    try:
+        visited = ck(
+            seeds.select(F.col(seed_col).alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(depth))
+            .withColumn("dist", F.lit(0))
         )
-        if nxt.isEmpty():
-            break
-        visited = ck(visited.union(nxt))
-        frontier = nxt
-    return ck.release(keep=visited)
+        frontier = visited
+        for depth in range(1, k + 1):
+            nxt = ck(
+                frontier.join(e, frontier["node"] == e["src"])
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .withColumn("dist", F.lit(depth))
+            )
+            if nxt.isEmpty():
+                break
+            visited = ck(visited.union(nxt))
+            frontier = nxt
+        return ck.release(keep=visited)
+    finally:
+        ck.release()
 
 
 def sssp(
@@ -183,43 +187,46 @@ def sssp(
         .agg(F.min(weight).alias("__w"))
     )
     ck = Checkpoints()
-    # `merged` is always the checkpoint `dist` reads
-    dist = merged = ck(
-        seeds.select(F.col(seed_col).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-    )
-    frontier = dist
-    for _ in range(rounds):
-        cand = (
-            frontier.join(e, frontier["node"] == e[src])
-            .select(
-                F.col(dst).alias("node"),
-                (F.col("dist") + F.col("__w")).alias("nd"),
-            )
-            .groupBy("node")
-            .agg(F.min("nd").alias("nd"))
+    try:
+        # `merged` is always the checkpoint `dist` reads
+        dist = merged = ck(
+            seeds.select(F.col(seed_col).alias("node"))
+            .distinct()
+            .withColumn("dist", F.lit(0).cast("long"))
         )
-        merged = ck(
-            dist.join(cand, "node", "full_outer")
-            .select(
-                "node",
-                F.least(
-                    F.coalesce(F.col("dist"), F.col("nd")),
-                    F.coalesce(F.col("nd"), F.col("dist")),
-                ).alias("dist"),
-                (
-                    F.col("dist").isNull()
-                    | (F.col("nd") < F.col("dist"))
-                ).alias("__improved"),
+        frontier = dist
+        for _ in range(rounds):
+            cand = (
+                frontier.join(e, frontier["node"] == e[src])
+                .select(
+                    F.col(dst).alias("node"),
+                    (F.col("dist") + F.col("__w")).alias("nd"),
+                )
+                .groupBy("node")
+                .agg(F.min("nd").alias("nd"))
             )
-        )
-        frontier = merged.filter(F.col("__improved")).select("node", "dist")
-        dist = merged.select("node", "dist")
-        if frontier.isEmpty():
-            break
-    ck.release(keep=merged)
-    return dist
+            merged = ck(
+                dist.join(cand, "node", "full_outer")
+                .select(
+                    "node",
+                    F.least(
+                        F.coalesce(F.col("dist"), F.col("nd")),
+                        F.coalesce(F.col("nd"), F.col("dist")),
+                    ).alias("dist"),
+                    (
+                        F.col("dist").isNull()
+                        | (F.col("nd") < F.col("dist"))
+                    ).alias("__improved"),
+                )
+            )
+            frontier = merged.filter("__improved").select("node", "dist")
+            dist = merged.select("node", "dist")
+            if frontier.isEmpty():
+                break
+        ck.release(keep=merged)
+        return dist
+    finally:
+        ck.release()
 
 
 def triangle_count(

@@ -1,8 +1,8 @@
 """Candidate retrieval (operators/candidates.py): the inverted token
 index's hot-token cap (`apply_hot_token_cap`) and the shared hot-key
 guard under it (`hot_keys` + `split_hot`, also used by dedup's
-hot-shingle drop), and the cascade's first-hit rules
-(`select_candidates`)."""
+hot-shingle drop), the cascade's first-hit rules
+(`select_candidates`) and the F11 filter (`f11_passing`)."""
 
 import logging
 
@@ -19,6 +19,7 @@ def test_hot_token_cap_recomputed_on_filtered_index(spark):
     from serimi_rdf_interlinking_spark.operators.candidates import (
         apply_hot_token_cap,
         raw_token_index,
+        target_literals,
     )
     from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
 
@@ -28,7 +29,7 @@ def test_hot_token_cap_recomputed_on_filtered_index(spark):
     rows += [(f"f{i}", "B", f"zebra beta{i}", False, False) for i in range(2)]
     target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
     cfg = SerimiConfig(max_candidates_per_token=3)
-    raw = raw_token_index(target, None, cfg)
+    raw = raw_token_index(target_literals(target, cfg))
 
     capped_all = apply_hot_token_cap(raw, cfg)
     assert capped_all.filter("tok = 'zebra'").count() == 3  # hot: capped
@@ -50,7 +51,7 @@ def _token_cap_rows(spark):
     rows = [(f"e{i}", "A", f"zebra alpha{i}", False, False) for i in range(8)]
     target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
     cfg = SerimiConfig(max_candidates_per_token=3)
-    raw = C.raw_token_index(target, None, cfg)
+    raw = C.raw_token_index(C.target_literals(target, cfg))
     return sorted(map(tuple, C.apply_hot_token_cap(raw, cfg).collect()))
 
 
@@ -234,3 +235,50 @@ def test_select_candidates_and_nsw_first_hits_union(spark):
     )
     cr = select_candidates(kws, p1, p2)
     assert {r.cand for r in cr.pairs.collect()} == {"cA", "cD", "cG", "cJ"}
+
+
+def test_f11_passing_textp_modes_and_found_predicate(spark):
+    """F11 keeps a hit when its candidate has a literal passing ASM in
+    the target's literal view: textp None prunes literals longer than
+    3*len(kw), textp [] filters nothing, a textp list skips its
+    predicates; found_p is the least passing predicate, and a hit whose
+    candidate has no literal drops out."""
+    from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.functions.kernels import asm_passes
+    from serimi_rdf_interlinking_spark.operators.candidates import (
+        f11_passing,
+        target_literals,
+    )
+    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
+
+    A, B, TEXT = "http://t/a", "http://t/b", "http://t/text"
+    stopwords = ("the",)
+    cfg = SerimiConfig()
+    long_lit = "rome the the the the the"  # passes ASM, > 3*len("rome")
+    assert asm_passes("rome", long_lit, stopwords, cfg.string_threshold)
+    target = spark.createDataFrame(
+        [
+            ("c1", B, "rome", False, False),
+            ("c1", A, "rome", False, False),
+            ("c1", A, "zzzz qqqq", False, False),
+            ("c2", TEXT, "rome", False, False),
+            ("c2", A, "unrelated words", False, False),
+            ("c3", A, long_lit, False, False),
+            ("c4", A, "http://t/rome", True, False),
+        ],
+        TRIPLE_SCHEMA,
+    )
+    hits = spark.createDataFrame(
+        [("s1", 0, 1, 0, "rome", 0, f"c{i}") for i in range(1, 5)],
+        HIT_SCHEMA + ", tier int, cand string",
+    )
+    lits = target_literals(target, cfg)
+
+    def found(textp):
+        out = f11_passing(hits, lits, textp, stopwords, cfg)
+        assert set(hits.columns) <= set(out.columns)
+        return {r.cand: r.found_p for r in out.collect() if r.passes}
+
+    assert found(None) == {"c1": A, "c2": TEXT}
+    assert found([]) == {"c1": A, "c2": TEXT, "c3": A}
+    assert found([TEXT]) == {"c1": A, "c3": A}

@@ -431,6 +431,33 @@ def test_matcher_releases_checkpoint_storage(spark):
     assert res.alignments.count() > 0
 
 
+def test_matcher_releases_checkpoints_when_run_raises(spark, monkeypatch):
+    """A run that raises after its retrieval boundaries were
+    materialized leaves none of them persisted."""
+    from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
+    from serimi_rdf_interlinking_spark.sources.fixtures import (
+        CLASS_CITY,
+        build_interlinking_fixture,
+    )
+    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
+
+    fx = build_interlinking_fixture(n_entities=12, seed=3)
+    src = spark.createDataFrame(fx.source, TRIPLE_SCHEMA)
+    tgt = spark.createDataFrame(fx.target, TRIPLE_SCHEMA)
+
+    def failing_merge(self, cr):
+        raise RuntimeError("merge failed")
+
+    monkeypatch.setattr(SerimiMatcher, "_merge_singleton_chunks", failing_merge)
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        SerimiMatcher(SerimiConfig(shuffle_partitions=4)).run(
+            spark, src, tgt, CLASS_CITY
+        )
+    assert _persistent_rdds(spark) - before == set()
+
+
 def test_dedup_clusters_transitive(spark):
     """a~b and b~c but a!~c directly: one cluster {a,b,c} via closure."""
     base = "the quick brown fox jumps over the lazy dog wearing hats"

@@ -17,6 +17,7 @@ from serimi_rdf_interlinking_spark.operators.graph_analytics import (
     sssp,
     triangle_count,
 )
+from serimi_rdf_interlinking_spark.session import Checkpoints
 
 
 def _rand_edges(seed: int, n_nodes: int = 60, n_edges: int = 240):
@@ -140,9 +141,10 @@ def test_sssp_parallel_edges_take_min_weight(spark):
 
 
 @pytest.mark.parametrize("op", ["pagerank", "k_hop", "sssp"])
-def test_iterative_operator_keeps_only_its_result(spark, op):
+def test_iterative_operator_keeps_only_its_result(spark, monkeypatch, op):
     """The operator releases every per-round checkpoint except the one
-    its result reads, and that one still serves the reference values."""
+    its result reads, and that one still serves the reference values.
+    A run that raises part way releases every checkpoint it made."""
     epd = _rand_edges(8, n_edges=60)
     epd = epd.assign(w=np.random.default_rng(108).integers(1, 10, len(epd)))
     unweighted = epd[["src", "dst"]]
@@ -161,6 +163,21 @@ def test_iterative_operator_keeps_only_its_result(spark, op):
     assert len(_persistent_rdds(spark) - before) == 1
     got = out.toPandas()
     assert dict(zip(got["node"], got[col])) == pytest.approx(expected(), rel=1e-9)
+
+    checkpoint = Checkpoints.__call__
+    calls = []
+
+    def third_call_raises(self, df):
+        calls.append(df)
+        if len(calls) == 3:
+            raise RuntimeError("third checkpoint failed")
+        return checkpoint(self, df)
+
+    monkeypatch.setattr(Checkpoints, "__call__", third_call_raises)
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="third checkpoint failed"):
+        run()
+    assert _persistent_rdds(spark) - before == set()
 
 
 def _brute_triangles(edges: pd.DataFrame):

@@ -193,6 +193,35 @@ def test_semi_join_is_semi_in_plan(spark):
     assert "LeftSemi" in plan
 
 
+def test_f11_reads_its_hit_frame_without_candidate_semi_join(spark):
+    """F11 joins each distinct (kw, cand) straight to the target's
+    literal view: no LeftSemi pre-filter of the target on the hit
+    candidates, and the hit frame's subtree (a Range scan here) appears
+    once for the (kw, cand) pairs, once for their score-once distinct
+    and once for the final join back to the hits."""
+    import re
+
+    from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.operators.candidates import (
+        f11_passing,
+        target_literals,
+    )
+    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
+
+    cfg = SerimiConfig()
+    target = spark.createDataFrame(
+        [("c0", "http://t/a", "rome", False, False)], TRIPLE_SCHEMA
+    )
+    hits = spark.range(4).select(
+        F.lit("rome").alias("kw"),
+        F.concat(F.lit("c"), F.col("id").cast("string")).alias("cand"),
+    )
+    out = f11_passing(hits, target_literals(target, cfg), [], (), cfg)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert not re.search(r"LeftSemi, \(s#\d+ = cand#\d+\)", plan), plan
+    assert plan.count("Range (0, 4") <= 3, plan
+
+
 def test_matcher_kernel_is_arrow_not_row_python(spark, triple_dfs):
     """The chunk kernel must enter the plan as FlatMapGroupsInPandas
     (Arrow), never row-at-a-time BatchEvalPython (input_hint)."""

@@ -44,6 +44,7 @@ from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
 from serimi_rdf_interlinking_spark.operators.candidates import (
     build_token_index,
     prepare_keywords,
+    target_literals,
 )
 from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
 
@@ -101,8 +102,10 @@ def test_promotion_changes_chunk2_winner(spark, promo_frames):
     keywords = prepare_keywords(source, ranked, [LBL])
     index = build_token_index(target, [PRED_A, PRED_B], cfg)
 
+    lits = target_literals(target, cfg)
+
     rows = m._run_sequential_loop(
-        source, target, keywords, index, [PRED_A, PRED_B], [], ()
+        source, target, lits, keywords, index, [PRED_A, PRED_B], [], ()
     )
     cands_s2 = {r[2] for r in rows if r[1] == "http://s/2"}
     assert cands_s2 == {"http://t/Y"}, rows
@@ -114,7 +117,7 @@ def test_promotion_changes_chunk2_winner(spark, promo_frames):
     cr = m._retrieve(
         keywords.filter(F.col("rank") >= 2),
         index,
-        target,
+        lits,
         {PRED_A: 0, PRED_B: 1},
         [],
         (),
@@ -154,7 +157,8 @@ def test_adaptive_doubling_rescues_single_group_chunk(spark):
     index = build_token_index(target, [PRED_B], cfg)
 
     rows = m._run_sequential_loop(
-        source, target, keywords, index, [PRED_B], [], ()
+        source, target, target_literals(target, cfg), keywords, index,
+        [PRED_B], [], (),
     )
     by_src = {}
     for chunk_id, src, cand, _v, _t, acc in rows:

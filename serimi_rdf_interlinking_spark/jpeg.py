@@ -53,7 +53,6 @@ def _zigzag_order() -> np.ndarray:
 
 
 ZIGZAG = _zigzag_order()          # k -> flat position
-UNZIGZAG = np.argsort(ZIGZAG)     # flat position -> k
 
 # Annex K.1 / K.2 quantization tables (natural row-major order)
 QUANT_LUMA = np.array([

@@ -52,6 +52,7 @@ from .operators.candidates import (
     phrase_hits,
     prepare_keywords,
     raw_token_index,
+    search_index,
     select_candidates,
     target_literals,
     word_hits,
@@ -590,28 +591,12 @@ class SerimiMatcher:
         tick("warmup kernel")
 
         # the main-retrieval index is DERIVED from the materialized RAW
-        # index (a predicate filter over the checkpointed frame) instead
-        # of a second full build — saves a target scan and the
-        # explode+distinct shuffle. The hot-token cap is RE-APPLIED on
-        # the restricted frame (one cheap aggregation over the
-        # checkpoint): a token hot on the any-predicate index but cold
-        # under the searched predicates keeps its full (small) fan-out,
-        # and the capped sample is always drawn from rows that survive
-        # the predicate filter — never pre-filter rows that the
-        # restriction would then discard.
-        if search_preds:
-            restricted = index_raw.filter(F.col("p").isin(search_preds))
-            if index_all is index_raw:
-                # the any-predicate pass found NO hot token (it returns
-                # its input unchanged then, hence the identity check),
-                # and a predicate-restricted subset can only have
-                # SMALLER per-token fan-outs — skip the second scan job
-                index = restricted
-            else:
-                index = apply_hot_token_cap(restricted, cfg)
-            tiers = {p: i for i, p in enumerate(search_preds)}
-        else:
-            index, tiers = index_all, None  # fallback: nothing learned
+        # index (a predicate filter over the checkpointed frame)
+        index = search_index(index_raw, index_all, search_preds, cfg)
+        tiers = (
+            {p: i for i, p in enumerate(search_preds)} if search_preds
+            else None  # fallback: nothing learned
+        )
 
         if cfg.mode == "sequential" or cfg.use_pivot:
             if cfg.use_pivot and cfg.mode != "sequential":

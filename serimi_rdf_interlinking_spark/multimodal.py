@@ -22,9 +22,8 @@ against numpy references. Formats genuinely needing libraries absent
 from this container (MP3/MP4 SAMPLES — container metadata probes via
 mediaprobe.py — and arithmetic/lossless/hierarchical JPEG) raise
 NotImplementedError with a clear message; animated GIF decodes fully
-(decode_gif_frames + frame_sample_decode below); `fake_decode=True` keeps the deterministic byte-level
-fake for plumbing tests. Further real codec decoders drop into
-`_decode_real` without touching the Spark plumbing.
+(decode_gif_frames + frame_sample_decode below). Further real codec
+decoders drop into `_decode_real` without touching the Spark plumbing.
 """
 
 from __future__ import annotations
@@ -54,15 +53,6 @@ FEATURE_SCHEMA = (
     "media_id string, kind string, n_bytes long, sha256 string,"
     " feature array<float>"
 )
-
-
-def _fake_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for a real decoder: a byte-histogram-based
-    feature vector (stable across runs and machines)."""
-    if payload is None:
-        return [0.0] * dim
-    h = hashlib.sha256(payload).digest()
-    return [b / 255.0 for b in h[:dim]]
 
 
 def synth_ppm(w: int, h: int, seed: int = 0, maxval: int = 255) -> bytes:
@@ -1033,14 +1023,12 @@ def _decode_real(
         return _audio_features(samples, rate, dim)
     raise NotImplementedError(
         f"decoding mime {mime!r} requires codec libraries not present in "
-        "this environment (PPM/PNG/GIF/JPEG/WAV decode natively; run "
-        "with fake_decode=True for the deterministic byte-level fake)"
+        "this environment (PPM/PNG/GIF/JPEG/WAV decode natively)"
     )
 
 
 def decode_and_featurize(
     media: DataFrame,
-    fake_decode: bool = False,
     dim: int = 8,
     audio_spectral: bool = False,
 ) -> DataFrame:
@@ -1053,13 +1041,10 @@ def decode_and_featurize(
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if fake_decode:
-                feats = [_fake_features(p, dim) for p in pdf["payload"]]
-            else:
-                feats = [
-                    _decode_real(p, m, dim, audio_spectral)
-                    for p, m in zip(pdf["payload"], pdf["mime"])
-                ]
+            feats = [
+                _decode_real(p, m, dim, audio_spectral)
+                for p, m in zip(pdf["payload"], pdf["mime"])
+            ]
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -1075,25 +1060,6 @@ def decode_and_featurize(
 
     return media.select("media_id", "kind", "mime", "payload").mapInPandas(
         _run, FEATURE_SCHEMA
-    )
-
-
-def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: emits (media_id, frame_ts_ms)
-    rows for each sample point from metadata — metadata-only (no
-    decode); frame_sample_decode below extracts real pixels for
-    formats with a native decoder."""
-    from pyspark.sql import functions as F
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .filter(F.col("duration_ms").isNotNull())
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(F.lit(0), F.col("duration_ms"), F.lit(every_ms))
-            ).alias("frame_ts_ms"),
-        )
     )
 
 

@@ -166,7 +166,8 @@ def target_literals(target: DataFrame, cfg: SerimiConfig) -> DataFrame:
 def raw_token_index(lits: DataFrame) -> DataFrame:
     """The UNCAPPED inverted index (cand, p, norm_o, tok) over `lits`
     (`target_literals`). Callers apply `apply_hot_token_cap`, again
-    after restricting `p`, so the cap reflects the index joined."""
+    after restricting `p` (`search_index`), so the cap reflects the
+    index joined."""
     return (
         lits.select("cand", "p", "norm_o")
         .withColumn("tok", F.explode(F.array_distinct(norm_tokens("norm_o"))))
@@ -190,7 +191,7 @@ def apply_hot_token_cap(idx: DataFrame, cfg: SerimiConfig) -> DataFrame:
 
     The fan-out scan runs on `idx` AS GIVEN: callers that restrict the
     index to the learned search predicates re-apply this cap on the
-    RESTRICTED frame (matcher.py), so a token hot on the any-predicate
+    RESTRICTED frame (`search_index`), so a token hot on the any-predicate
     index but cold under the searched predicates is never capped — the
     round-3 half-closure of this guard.
 
@@ -236,16 +237,34 @@ def apply_hot_token_cap(idx: DataFrame, cfg: SerimiConfig) -> DataFrame:
     return cold.unionByName(capped)
 
 
-def build_token_index(
-    target: DataFrame,
-    search_predicates: list[str] | None,
+def search_index(
+    index_raw: DataFrame,
+    index_all: DataFrame,
+    search_preds: list[str] | None,
     cfg: SerimiConfig,
 ) -> DataFrame:
-    """The capped index, restricted to `search_predicates` unless None."""
-    lits = target_literals(target, cfg)
-    if search_predicates is not None:
-        lits = lits.filter(F.col("p").isin(search_predicates))
-    return apply_hot_token_cap(raw_token_index(lits), cfg)
+    """The main-retrieval index: `index_raw` (the uncapped index)
+    restricted to the learned `search_preds`, or `index_all` (its
+    capped any-predicate form) when nothing was learned.
+
+    The restriction is a predicate filter over `index_raw` instead of a
+    second full build — it saves a target scan and the explode+distinct
+    shuffle. The hot-token cap is RE-APPLIED on the restricted frame (one
+    cheap aggregation): a token hot on the any-predicate index but cold
+    under the searched predicates keeps its full (small) fan-out, and
+    the capped sample is always drawn from rows that survive the
+    predicate filter — never pre-filter rows that the restriction would
+    then discard."""
+    if not search_preds:
+        return index_all
+    restricted = index_raw.filter(F.col("p").isin(search_preds))
+    if index_all is index_raw:
+        # the any-predicate pass found NO hot token (it returns its
+        # input unchanged then, hence the identity check), and a
+        # predicate-restricted subset can only have SMALLER per-token
+        # fan-outs — skip the second scan job
+        return restricted
+    return apply_hot_token_cap(restricted, cfg)
 
 
 # ---------------------------------------------------------------------------

@@ -168,26 +168,3 @@ def canonical_mapping(
     cc = connected_components(edges)
     return cc.select(F.col("node").alias("entity"), F.col("component").alias("canonical"))
 
-
-def canonicalize_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Rewrite s and (uri-valued) o through the canonical mapping —
-    two broadcast-or-shuffle left joins; non-mapped nodes pass through."""
-    m_s = mapping.select(
-        F.col("entity").alias("s"), F.col("canonical").alias("s_canon")
-    )
-    m_o = mapping.select(
-        F.col("entity").alias("o"), F.col("canonical").alias("o_canon")
-    )
-    out = (
-        triples.join(m_s, "s", "left")
-        .join(m_o, "o", "left")
-        .withColumn("s", F.coalesce("s_canon", "s"))
-        .withColumn(
-            "o",
-            F.when(F.col("o_is_uri"), F.coalesce("o_canon", "o")).otherwise(
-                F.col("o")
-            ),
-        )
-        .drop("s_canon", "o_canon")
-    )
-    return out.distinct()

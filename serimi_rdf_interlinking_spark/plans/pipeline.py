@@ -209,8 +209,7 @@ class KGPipeline:
         # distincts over the extract table — left lazy it would
         # re-execute per consuming stage (multi-consumer
         # re-execution; localCheckpoint truncates in memory)
-        mentions = mentions_as_source_triples(outs["extract"]).localCheckpoint()
-        self._ckpts.add(mentions)
+        mentions = self._ckpts(mentions_as_source_triples(outs["extract"]))
         res = SerimiMatcher(self.cfg).run(
             spark, mentions, target, "mention://class/Entity"
         )

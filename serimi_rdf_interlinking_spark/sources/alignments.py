@@ -14,7 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import conf_override
 from .triples import OWL_SAMEAS
 
 
@@ -90,8 +89,7 @@ def write_alignments(
     and `_recover_append_state` runs first so a rerun after any crash
     point resumes from a consistent state. The swap goes through the
     Hadoop FileSystem API, so it works on any supported filesystem,
-    not just local paths. For the per-chunk scale path (replace exactly
-    one chunk's partition on re-emit) see write_alignments_by_chunk."""
+    not just local paths."""
     lines = alignment_lines(alignments, fmt)
     spark = alignments.sparkSession
     if mode == "append":
@@ -128,31 +126,6 @@ def write_alignments(
     elif mode != "overwrite":
         raise ValueError(f"unknown write mode {mode!r}")
     lines.coalesce(1).write.mode("overwrite").text(path)
-
-
-def write_alignments_by_chunk(
-    scores: DataFrame, path: str, fmt: str = "txt"
-) -> None:
-    """Per-chunk idempotent sink — the S6 scale contract for resumed
-    runs: alignment lines land in a chunk_id-partitioned text table
-    written with DYNAMIC partition overwrite, so re-emitting a chunk
-    replaces exactly that chunk's partition and leaves every other
-    chunk's files untouched (overwrite-by-filter, no global rewrite,
-    no duplicates). Input is MatchResult.scores
-    (chunk_id, src, cand, ..., accepted)."""
-    spark = scores.sparkSession
-    accepted = scores.filter("accepted").select(
-        F.col("chunk_id"),
-        F.col("src").alias("source"),
-        F.col("cand").alias("target"),
-    ).distinct()
-    out = accepted.select(
-        "chunk_id", _line_expr(fmt).alias("value")
-    ).sortWithinPartitions("chunk_id", "value")
-    with conf_override(
-        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    ):
-        out.write.mode("overwrite").partitionBy("chunk_id").text(path)
 
 
 def read_gold_alignments(spark: SparkSession, path: str) -> DataFrame:

@@ -22,7 +22,6 @@ SRC_ONT = "http://src.test/ontology/"
 TGT_ONT = "http://tgt.test/ontology/"
 
 CLASS_CITY = "http://src.test/class/City"
-CLASS_PERSON = "http://src.test/class/Person"
 
 _SYL1 = ["bar", "cor", "dal", "fen", "gar", "hol", "jas", "kel", "lor", "mar",
          "nor", "pol", "quil", "ros", "sal", "tor", "ulm", "ver", "wes", "zan"]
@@ -31,7 +30,6 @@ _COUNTRIES = ["argovia", "belmora", "cordia", "dalmena", "estria"]
 _REGIONS = ["north", "south", "east", "west", "central"]
 _FIRST = ["alda", "bruno", "celia", "dario", "elena", "fabio", "greta", "hugo",
           "irene", "jonas", "karla", "lucas", "mira", "nestor", "olga", "pavel"]
-_LAST = [a + b for a in _SYL1[:12] for b in ("son", "man", "etti")]
 
 
 @dataclass

@@ -13,9 +13,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..extract import extract_triples
 from ..functions.columns import norm_text
-from ..sources.triples import PAGE_SCHEMA
 
 
 def replay_files(
@@ -47,18 +45,6 @@ def replay_files(
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def stream_extract(
-    spark: SparkSession, pages_dir: str, out_dir: str, checkpoint_dir: str
-):
-    """Pages parquet → mapInPandas extraction → appended triples.
-    Returns the StreamingQuery."""
-    return replay_files(
-        spark, pages_dir, out_dir, checkpoint_dir,
-        lambda pages: extract_triples(pages, from_html=False),
-        8, schema=PAGE_SCHEMA,
     )
 
 

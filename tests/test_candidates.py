@@ -99,8 +99,10 @@ def test_j2_skewed_label_corpus_bounded_fanout_and_recall(spark, caplog):
     that has any non-hot token."""
     from serimi_rdf_interlinking_spark.config import SerimiConfig
     from serimi_rdf_interlinking_spark.operators.candidates import (
-        build_token_index,
+        apply_hot_token_cap,
         phrase_hits,
+        raw_token_index,
+        target_literals,
     )
     from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
 
@@ -116,7 +118,9 @@ def test_j2_skewed_label_corpus_bounded_fanout_and_recall(spark, caplog):
     target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
     cfg = SerimiConfig(max_candidates_per_token=20, shuffle_partitions=4)
     with caplog.at_level(logging.WARNING):
-        idx = build_token_index(target, None, cfg)
+        idx = apply_hot_token_cap(
+            raw_token_index(target_literals(target, cfg)), cfg
+        )
         fanout = {
             r.tok: r.n
             for r in idx.groupBy("tok").agg(F.count("*").alias("n")).collect()

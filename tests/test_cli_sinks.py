@@ -15,7 +15,6 @@ from serimi_rdf_interlinking_spark.sources.alignments import (
     alignment_lines,
     read_gold_alignments,
     write_alignments,
-    write_alignments_by_chunk,
 )
 
 
@@ -83,31 +82,6 @@ def test_append_mode_is_idempotent(spark, tmp_path):
         "http://a/2=http://b/2",
         "http://a/3=http://b/3",
     ]
-
-
-def test_per_chunk_overwrite_replaces_only_that_chunk(spark, tmp_path):
-    """Dynamic-partition per-chunk sink: re-emitting chunk 1 replaces
-    chunk 1's partition and leaves chunk 0's files untouched."""
-    cols = ["chunk_id", "src", "cand", "score", "accepted"]
-    out = str(tmp_path / "align_chunked")
-    first = spark.createDataFrame(
-        [
-            (0, "http://a/1", "http://b/1", 0.9, True),
-            (1, "http://a/2", "http://b/2", 0.8, True),
-            (1, "http://a/9", "http://b/9", 0.1, False),  # filtered out
-        ],
-        cols,
-    )
-    write_alignments_by_chunk(first, out, "txt")
-    chunk0_before = _read_bytes_sorted(out + "/chunk_id=0")
-    # resume re-emits chunk 1 with a corrected alignment
-    redo = spark.createDataFrame(
-        [(1, "http://a/2", "http://b/2fixed", 0.85, True)], cols
-    )
-    write_alignments_by_chunk(redo, out, "txt")
-    assert _read_bytes_sorted(out + "/chunk_id=0") == chunk0_before
-    chunk1 = spark.read.text(out + "/chunk_id=1").collect()
-    assert [r.value for r in chunk1] == ["http://a/2=http://b/2fixed"]
 
 
 def test_cli_parser_defaults():

@@ -375,14 +375,18 @@ def test_minhash_band_key_checkpoint_in_plan(spark):
 
 
 def test_token_index_hot_token_guard(spark, caplog):
-    """build_token_index caps tokens whose fan-out exceeds the ceiling
+    """apply_hot_token_cap caps tokens whose fan-out exceeds the ceiling
     to a deterministic sample of exactly ceiling rows (never drops them
     to zero — an all-hot-token keyword must stay findable) and logs the
     cap count; cold tokens are untouched."""
     import logging
 
     from serimi_rdf_interlinking_spark.config import SerimiConfig
-    from serimi_rdf_interlinking_spark.operators.candidates import build_token_index
+    from serimi_rdf_interlinking_spark.operators.candidates import (
+        apply_hot_token_cap,
+        raw_token_index,
+        target_literals,
+    )
     from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
 
     rows = [
@@ -393,7 +397,7 @@ def test_token_index_hot_token_guard(spark, caplog):
     tgt = spark.createDataFrame(rows, TRIPLE_SCHEMA)
     cfg = SerimiConfig(max_candidates_per_token=10)
     with caplog.at_level(logging.WARNING, logger="serimi_rdf_interlinking_spark.operators.candidates"):
-        idx = build_token_index(tgt, None, cfg)
+        idx = apply_hot_token_cap(raw_token_index(target_literals(tgt, cfg)), cfg)
         got = idx.collect()
     toks = {r.tok for r in got}
     assert any("hot tokens" in r.message for r in caplog.records)

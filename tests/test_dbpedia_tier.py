@@ -17,7 +17,10 @@ from serimi_rdf_interlinking_spark.config import SerimiConfig
 from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
 from serimi_rdf_interlinking_spark.operators.candidates import (
     YAGO_PREFIX,
-    build_token_index,
+    apply_hot_token_cap,
+    raw_token_index,
+    search_index,
+    target_literals,
 )
 from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
 
@@ -132,10 +135,15 @@ def test_f7_drop_redirect_candidates_flag(spark, dbp_frames):
     _source, target, _gold = dbp_frames
     cfg_off = SerimiConfig(shuffle_partitions=4)
     cfg_on = SerimiConfig(shuffle_partitions=4, drop_redirect_candidates=True)
-    idx_off = build_token_index(target, [NAME], cfg_off)
-    idx_on = build_token_index(target, [NAME], cfg_on)
-    cands_off = {r.cand for r in idx_off.collect()}
-    cands_on = {r.cand for r in idx_on.collect()}
+
+    def name_index_cands(cfg):
+        # the matcher's index steps, with NAME as the learned predicate
+        raw = raw_token_index(target_literals(target, cfg))
+        idx = search_index(raw, apply_hot_token_cap(raw, cfg), [NAME], cfg)
+        return {r.cand for r in idx.collect()}
+
+    cands_off = name_index_cands(cfg_off)
+    cands_on = name_index_cands(cfg_on)
     assert any("/alias" in c for c in cands_off)
     assert not any("/alias" in c for c in cands_on)
     assert "http://t/e0" in cands_on  # non-redirect subjects untouched

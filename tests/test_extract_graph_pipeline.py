@@ -1,6 +1,7 @@
 """Extraction, connected components, KG pipeline checkpoint/resume,
-streaming ingestion, multimodal plumbing."""
+multimodal plumbing."""
 
+import hashlib
 import os
 from collections import Counter
 
@@ -14,11 +15,7 @@ from serimi_rdf_interlinking_spark.extract import (
     extract_triples,
     extract_triples_from_text,
 )
-from serimi_rdf_interlinking_spark.operators.graph import (
-    canonical_mapping,
-    canonicalize_triples,
-    connected_components,
-)
+from serimi_rdf_interlinking_spark.operators.graph import connected_components
 from serimi_rdf_interlinking_spark.plans.pipeline import KGPipeline
 from serimi_rdf_interlinking_spark.sources.triples import PAGE_SCHEMA, TRIPLE_SCHEMA
 
@@ -141,25 +138,6 @@ def test_connected_components(spark):
     cc = {r.node: r.component for r in connected_components(edges).collect()}
     assert cc["a"] == cc["b"] == cc["c"] == "a"
     assert cc["x"] == cc["y"] == "x"
-
-
-def test_canonicalize_triples(spark):
-    mapping = spark.createDataFrame(
-        [("alias1", "canon"), ("canon", "canon")], ["entity", "canonical"]
-    )
-    triples = spark.createDataFrame(
-        [
-            ("alias1", "p:a", "lit", False, False),
-            ("other", "p:b", "alias1", True, False),
-        ],
-        TRIPLE_SCHEMA,
-    )
-    out = canonicalize_triples(triples, mapping).collect()
-    subjects = {r.s for r in out}
-    objects = {r.o for r in out}
-    assert "alias1" not in subjects
-    assert "canon" in subjects
-    assert "alias1" not in objects  # uri object rewritten
 
 
 def test_pipeline_end_to_end_and_resume(spark, fixture_small, triple_dfs, tmp_path):
@@ -320,49 +298,33 @@ def test_pipeline_lineage_survives_torn_write(
     assert _stage_rows(arrow_rows) == _stage_rows(spark_rows)
 
 
-def test_streaming_extract(spark, fixture_small, tmp_path):
-    from serimi_rdf_interlinking_spark.streaming.ingest import stream_extract
-
-    pages = _pages_df(spark, fixture_small)
-    pages_dir = str(tmp_path / "pages")
-    out_dir = str(tmp_path / "triples_out")
-    ckpt = str(tmp_path / "stream_ckpt")
-    pages.write.mode("overwrite").parquet(pages_dir)
-
-    q = stream_extract(spark, pages_dir, out_dir, ckpt)
-    assert q.awaitTermination(300), "stream did not terminate in 300s"
-    got = spark.read.parquet(out_dir)
-    batch = extract_triples(pages)
-    assert got.count() == batch.count()
-    assert got.exceptAll(batch).count() == 0
-
-
 def test_multimodal_plumbing(spark):
+    """decode_and_featurize on a real PPM payload: byte count and digest
+    of the payload, a `dim`-long feature from the production decoder,
+    the same row on every run; a mime with no native decoder raises."""
     from serimi_rdf_interlinking_spark.multimodal import (
         MEDIA_SCHEMA,
         decode_and_featurize,
-        frame_sample,
+        synth_ppm,
     )
 
-    rows = [
-        ("m1", "image", b"\x01\x02\x03", "image/png", 2, 2, None),
-        ("m2", "video", b"\x04\x05", "video/mp4", None, None, 3500),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = decode_and_featurize(media, fake_decode=True).collect()
-    by_id = {r.media_id: r for r in feats}
-    assert by_id["m1"].n_bytes == 3
-    assert len(by_id["m1"].feature) == 8
+    ppm = synth_ppm(6, 4, seed=5)
+    media = spark.createDataFrame(
+        [("m1", "image", ppm, "image/x-portable-pixmap", 6, 4, None)],
+        MEDIA_SCHEMA,
+    )
+    (row,) = decode_and_featurize(media).collect()
+    assert row.n_bytes == len(ppm)
+    assert row.sha256 == hashlib.sha256(ppm).hexdigest()
+    assert len(row.feature) == 8
     # deterministic across invocations
-    feats2 = decode_and_featurize(media, fake_decode=True).collect()
-    assert {r.media_id: r.sha256 for r in feats2} == {
-        r.media_id: r.sha256 for r in feats
-    }
-    # real decode is an explicit stub
-    with pytest.raises(Exception):
-        decode_and_featurize(media, fake_decode=False).collect()
-    frames = frame_sample(media, every_ms=1000).collect()
-    assert {r.frame_ts_ms for r in frames} == {0, 1000, 2000, 3000}
+    assert decode_and_featurize(media).collect() == [row]
+    video = spark.createDataFrame(
+        [("m2", "video", b"\x04\x05", "video/mp4", None, None, 3500)],
+        MEDIA_SCHEMA,
+    )
+    with pytest.raises(Exception, match="codec libraries"):
+        decode_and_featurize(video).collect()
 
 
 def test_pipeline_triples_pr_vs_reference_semantics(

@@ -13,6 +13,23 @@ Hand-computed reference behavior on the fixture below:
 """
 
 import pytest
+from pyspark.sql import functions as F
+
+from serimi_rdf_interlinking_spark.config import SerimiConfig
+from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
+from serimi_rdf_interlinking_spark.operators.candidates import (
+    apply_hot_token_cap,
+    prepare_keywords,
+    raw_token_index,
+    search_index,
+    target_literals,
+)
+from serimi_rdf_interlinking_spark.sources.fixtures import (
+    CLASS_CITY,
+    build_interlinking_fixture,
+    build_promotion_divergence_fixture,
+)
+from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
 
 
 def test_batch_merges_singleton_chunks(spark):
@@ -20,14 +37,6 @@ def test_batch_merges_singleton_chunks(spark):
     chunk retrieves ONE source, which RDS alone cannot score (it needs
     a >= 2-group pseudo-class). The singleton-chunk merge must recover
     full recall, matching the sequential loop's double-and-retry."""
-    from serimi_rdf_interlinking_spark.config import SerimiConfig
-    from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
-    from serimi_rdf_interlinking_spark.sources.fixtures import (
-        CLASS_CITY,
-        build_interlinking_fixture,
-    )
-    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
-
     fx = build_interlinking_fixture(n_entities=12, seed=3)
     src = spark.createDataFrame(fx.source, TRIPLE_SCHEMA)
     tgt = spark.createDataFrame(fx.target, TRIPLE_SCHEMA)
@@ -37,16 +46,7 @@ def test_batch_merges_singleton_chunks(spark):
     ).run(spark, src, tgt, CLASS_CITY)
     got = {(r.source, r.target) for r in res.alignments.collect()}
     assert got == gold  # full recall despite all-singleton chunking
-from pyspark.sql import functions as F
 
-from serimi_rdf_interlinking_spark.config import SerimiConfig
-from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
-from serimi_rdf_interlinking_spark.operators.candidates import (
-    build_token_index,
-    prepare_keywords,
-    target_literals,
-)
-from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
 
 LBL = "http://www.w3.org/2000/01/rdf-schema#label"
 PRED_A = "http://tgt.test/ontology/name"
@@ -59,6 +59,13 @@ def _src_triples(pairs):
 
 def _tgt(s, p, o, uri=False):
     return (s, p, o, uri, False)
+
+
+def _search_index(target, search_preds, cfg):
+    """The matcher's main-retrieval index over `target` for the learned
+    `search_preds`: literal view -> raw index -> cap -> restriction."""
+    raw = raw_token_index(target_literals(target, cfg))
+    return search_index(raw, apply_hot_token_cap(raw, cfg), search_preds, cfg)
 
 
 @pytest.fixture()
@@ -100,7 +107,7 @@ def test_promotion_changes_chunk2_winner(spark, promo_frames):
     cfg = SerimiConfig(warmup_chunk=0, chunk=2, shuffle_partitions=4)
     m = SerimiMatcher(cfg)
     keywords = prepare_keywords(source, ranked, [LBL])
-    index = build_token_index(target, [PRED_A, PRED_B], cfg)
+    index = _search_index(target, [PRED_A, PRED_B], cfg)
 
     lits = target_literals(target, cfg)
 
@@ -154,7 +161,7 @@ def test_adaptive_doubling_rescues_single_group_chunk(spark):
     cfg = SerimiConfig(warmup_chunk=0, chunk=2, shuffle_partitions=4)
     m = SerimiMatcher(cfg)
     keywords = prepare_keywords(source, ranked, [LBL])
-    index = build_token_index(target, [PRED_B], cfg)
+    index = _search_index(target, [PRED_B], cfg)
 
     rows = m._run_sequential_loop(
         source, target, target_literals(target, cfg), keywords, index,
@@ -177,14 +184,6 @@ def test_promote_found_predicate_matches_reference_cascade(spark):
     the passing triples live under tgt:alias, so the found-mode cascade
     ends with alias promoted to the front and recall matches the
     searched-tier sequential mode (11/13)."""
-    from serimi_rdf_interlinking_spark.config import SerimiConfig
-    from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
-    from serimi_rdf_interlinking_spark.sources.fixtures import (
-        CLASS_CITY,
-        build_promotion_divergence_fixture,
-    )
-    from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
-
     fx = build_promotion_divergence_fixture()
     src = spark.createDataFrame(fx.source, TRIPLE_SCHEMA)
     tgt = spark.createDataFrame(fx.target, TRIPLE_SCHEMA)

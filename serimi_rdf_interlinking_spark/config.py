@@ -7,8 +7,10 @@ adaptive threshold (initializer.rb:16). Blocking (search_module.rb:33-56)
 is always on: the reference only ever sets it true (initializer.rb:22).
 
 The reference's hard-coded matcher constants (text length, group
-presence, sample and keyword limits, pivot FIFO, ...) are not fields:
-each is a module constant beside the code that reads it.
+presence, sample and keyword limits, pivot FIFO, the warm-up chunk of
+5, ...) are not fields, and neither is an engine value no caller sets
+(the hot-token cap): each is a module constant beside the code that
+reads it.
 
 Two reference CLI bugs are deliberately NOT replicated (we implement the
 *intended* semantics): `-p` writes options[:chunk] (serimi.rb:58-61) and
@@ -28,34 +30,13 @@ class SerimiConfig:
     rds_threshold: float | None = None  # fixed RDS delta; None = adaptive delta-m
     topk: int = 0                    # top-k per group; 0 = adaptive threshold
     use_pivot: bool = False          # carry pivot groups across chunks (serimi_class.rb:279-298)
-    warmup_chunk: int = 5            # first chunk is 5 then sigma (initializer.rb:94-98)
 
     # engine knobs (ours; no reference analogue)
     mode: str = "batch"              # "batch" = all chunks in parallel (pivots off);
                                      # "sequential" = reference-parity driver loop
     shuffle_partitions: int = 32
-    # hot-token skew guard: tokens with index fan-out above this are
-    # capped to a deterministic sample of exactly this many rows
-    # (frequency prefilter + truncating top-k, logged) — this bounds
-    # every token-join key at the ceiling, which is why there is no
-    # separate salting knob for the index join.
-    max_candidates_per_token: int = 5000
     checkpoint_dir: str | None = None     # per-stage parquet checkpoints + pipeline_state
     run_id: str = "run0"
-
-    # Sequential-mode promotion source. False (default): promote the
-    # SEARCHED predicate of the keyword's winning tier — deterministic,
-    # the round-2 documented trade. True: promote the predicate of a
-    # PASSING DESCRIPTION TRIPLE (f11's found_p, min() over the passing
-    # triples) — the reference's $found semantics
-    # (search_module.rb:252-260), where the promoted predicate is the
-    # one whose literal actually passed ASM, which can differ from the
-    # searched predicate. A found predicate outside the learned
-    # searchable list falls back to the searched-tier predicate (the
-    # restricted index stays closed over the cascade; the reference
-    # could promote novel predicates, but only via nondeterministic
-    # describe order).
-    promote_found_predicate: bool = False
 
     # J4 word-by-word fallback tier (search_module.rb:172-198). Dead
     # code in the reference ($word_by_word is never set,

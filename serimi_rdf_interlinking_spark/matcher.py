@@ -44,7 +44,7 @@ log = logging.getLogger(__name__)
 from .config import SerimiConfig
 from .functions.columns import lit_map
 from .operators import rds_core
-from .operators.blocking import blocking_order
+from .operators.blocking import WARMUP_CHUNK, blocking_order
 from .operators.candidates import (
     and_hits,
     apply_hot_token_cap,
@@ -189,66 +189,43 @@ class SerimiMatcher:
         Granularity notes (documented approximations of the strictly
         per-SPARQL-call reference):
 
-        * the reference's $found is the predicate of the last PASSING
-          TRIPLE seen by filter() (search_module.rb:252-260) — which
-          can be a NON-searched predicate when another description
-          literal passes ASM. But "last passing" there follows the
-          SPARQL describe result order, which is endpoint-dependent
-          and nondeterministic, so exact parity is ill-defined; we
-          promote the searched predicate of the keyword's winning tier
-          — a deterministic choice inside the reference's own
-          ambiguity envelope (round-2 advice, documented trade);
+        * the promoted predicate is the searched predicate of the
+          keyword's winning tier, order[min(tier)]. The reference's
+          $found is the predicate of the last PASSING TRIPLE seen by
+          filter() (search_module.rb:252-260), which can be a
+          non-searched predicate when another description literal
+          passes ASM; but "last passing" follows the SPARQL describe
+          order, which is endpoint-dependent and nondeterministic, so
+          the searched-tier predicate is a deterministic choice inside
+          the reference's own ambiguity envelope (SURVEY.md §7);
         * inside and_search the 'nsw' variant's filter() runs last
           (search_module.rb:152-167), so when both variants pass, the
           nsw predicate is the one promoted;
         * keyword fold order is (rank, label_idx, kw) — entity order
           by blocking rank, then the reference's per-entity label
-          iteration;
-        * with cfg.promote_found_predicate the promoted predicate is
-          f11's found_p of the winning tier — the predicate of a
-          PASSING DESCRIPTION TRIPLE, the reference's actual $found
-          source — falling back to the searched-tier predicate when
-          the found predicate is outside the learned cascade (keeps
-          the restricted index closed; see config.py).
+          iteration.
         """
-        found_mode = self.cfg.promote_found_predicate
-        # min(struct(tier, found_p)): winning tier first, then the
-        # deterministic found-predicate pick within that tier
-        agg = F.min(F.struct(F.col("tier"), F.col("found_p"))).alias("b")
+        key = ["rank", "label_idx", "kw"]
+        tier = F.min("tier").alias("tier")
         t1 = {
-            (r.rank, r.label_idx, r.kw): (r.b.tier, r.b.found_p)
-            for r in cr.passing[0].groupBy("rank", "label_idx", "kw")
-            .agg(agg)
-            .collect()
+            (r.rank, r.label_idx, r.kw): r.tier
+            for r in cr.passing[0].groupBy(*key).agg(tier).collect()
         }
         # tiers 1-2 only: the reference's $found would never have come
         # from the word-by-word tier
-        t2and: dict[tuple, tuple] = {}
-        t2nsw: dict[tuple, tuple] = {}
+        t2and: dict[tuple, int] = {}
+        t2nsw: dict[tuple, int] = {}
         for p2 in cr.passing[1:2]:
-            for r in (
-                p2.groupBy("rank", "label_idx", "kw", "variant")
-                .agg(agg)
-                .collect()
-            ):
+            for r in p2.groupBy(*key, "variant").agg(tier).collect():
                 d = t2nsw if r.variant == "nsw" else t2and
-                key = (r.rank, r.label_idx, r.kw)
-                cur = (r.b.tier, r.b.found_p)
-                d[key] = min(d.get(key, cur), cur)
+                d[(r.rank, r.label_idx, r.kw)] = r.tier
 
-        def promoted(tier: int, found_p: str | None) -> str:
-            if found_mode and found_p in order:
-                return found_p
-            return order[tier]
-
+        # a tier-1 hit means and_search never ran; the nsw filter()
+        # runs after 'and'
+        won_tier = {**t2and, **t2nsw, **t1}
         new_order = list(order)
-        for key in sorted(set(t1) | set(t2and) | set(t2nsw)):
-            if key in t1:           # tier-1 hit: and_search never ran
-                won = promoted(*t1[key])
-            elif key in t2nsw:      # nsw filter() runs after 'and'
-                won = promoted(*t2nsw[key])
-            else:
-                won = promoted(*t2and[key])
+        for k in sorted(won_tier):
+            won = order[won_tier[k]]
             new_order = [won] + [p for p in new_order if p != won]
         return new_order
 
@@ -463,7 +440,7 @@ class SerimiMatcher:
         score = self._chunk_scorer(textp, stopwords)
         pivots = rds_core.PivotFifo(PIVOT_FIFO) if cfg.use_pivot else None
         out: list[tuple] = []
-        offset, limit = cfg.warmup_chunk, cfg.chunk
+        offset, limit = WARMUP_CHUNK, cfg.chunk
         chunk_id = 1
         while offset < count:
             span = keywords.filter(
@@ -581,7 +558,7 @@ class SerimiMatcher:
         # warm-up chunk: any-predicate search (wbwp == ['?p']). The RAW
         # index was materialized above; the hot-token guard scans the
         # checkpointed frame.
-        index_all = apply_hot_token_cap(index_raw, cfg)
+        index_all = apply_hot_token_cap(index_raw)
         kw0 = keywords.filter(F.col("chunk_id") == 0)
         cr0 = self._retrieve(kw0, index_all, lits, None, None, stopwords, "warm")
         tick("warm retrieve")
@@ -592,7 +569,7 @@ class SerimiMatcher:
 
         # the main-retrieval index is DERIVED from the materialized RAW
         # index (a predicate filter over the checkpointed frame)
-        index = search_index(index_raw, index_all, search_preds, cfg)
+        index = search_index(index_raw, index_all, search_preds)
         tiers = (
             {p: i for i, p in enumerate(search_preds)} if search_preds
             else None  # fallback: nothing learned

@@ -919,11 +919,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     return samples.reshape(-1, n_channels), rate
 
 
-# round-3/4 public name; PCM16 streams decode identically through the
-# generalized path above
-decode_wav_pcm16 = decode_wav
-
-
 def resize_nearest(img: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     """Nearest-neighbor resize via index gathers — the standard
     library-free downsample for thumbnail/feature grids."""
@@ -1017,7 +1012,7 @@ def _decode_real(
 
         return _image_features(decode_jpeg(payload), dim)
     if mime in ("audio/wav", "audio/x-wav"):
-        samples, rate = decode_wav_pcm16(payload)
+        samples, rate = decode_wav(payload)
         if audio_spectral:
             return audio_spectral_features(samples, rate, dim)
         return _audio_features(samples, rate, dim)
@@ -1035,14 +1030,15 @@ def decode_and_featurize(
     """mapInPandas decode/feature stage. Partition-parallel, no shuffle;
     batch shape: one pandas frame per Arrow batch with binary payloads.
     PPM/PNG/GIF/JPEG/WAV decode for real (see module docstring);
-    remaining codec formats raise until libraries are present.
+    remaining codec formats raise until libraries are present. A null
+    payload gives a null feature.
     `audio_spectral=True` swaps the time-domain audio summary for the
     FFT descriptor set (audio_spectral_features)."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [
-                _decode_real(p, m, dim, audio_spectral)
+                None if p is None else _decode_real(p, m, dim, audio_spectral)
                 for p, m in zip(pdf["payload"], pdf["mime"])
             ]
             yield pd.DataFrame(

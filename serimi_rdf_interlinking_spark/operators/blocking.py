@@ -25,6 +25,12 @@ from ..config import SerimiConfig
 from ..functions.columns import lit_map, norm_text, norm_tokens
 from .dedup import _band_keys, _candidate_cooccurrence, _exact_jaccard
 
+WARMUP_CHUNK = 5  # the first chunk is 5 sources, then sigma (initializer.rb:94-98)
+# lsh_label_join's character shingle width and minhash banding
+SHINGLE_K = 4
+LSH_NUM_HASHES = 12
+LSH_BANDS = 4
+
 
 def blocking_order(
     triples: DataFrame,
@@ -111,11 +117,9 @@ def blocking_order(
         "rank", F.row_number().over(w) - 1 + off_map[F.col("pid")]
     ).select("s", "rank")
 
-    warm = cfg.warmup_chunk
-    sigma = cfg.chunk
     chunk = (
-        F.when(F.col("rank") < warm, F.lit(0))
-        .otherwise(1 + F.floor((F.col("rank") - warm) / sigma))
+        F.when(F.col("rank") < WARMUP_CHUNK, F.lit(0))
+        .otherwise(1 + F.floor((F.col("rank") - WARMUP_CHUNK) / cfg.chunk))
         .cast("long")
     )
     return ranked.withColumn("chunk_id", chunk)
@@ -126,22 +130,21 @@ def blocking_order(
 # ---------------------------------------------------------------------------
 
 
-def _char_shingle_rows(
-    df: DataFrame, id_col: str, label_col: str, k: int
-) -> DataFrame:
-    """(id, sh) distinct character k-shingles of the keyword-normalized
-    label. Labels shorter than k yield one shingle (the whole label) —
-    substr past the end truncates identically in Spark and DuckDB, so
-    the SQL oracle mirrors bit-for-bit."""
-    base = df.select(F.col(id_col).alias("id"), norm_text(label_col).alias("nrm"))
-    n_sh = F.greatest(F.length("nrm") - F.lit(k - 1), F.lit(1))
+def _char_shingle_rows(df: DataFrame, id_col: str) -> DataFrame:
+    """(id, sh) distinct character SHINGLE_K-shingles of the
+    keyword-normalized `label`. Labels shorter than SHINGLE_K yield one
+    shingle (the whole label) — substr past the end truncates
+    identically in Spark and DuckDB, so the SQL oracle mirrors
+    bit-for-bit."""
+    base = df.select(F.col(id_col).alias("id"), norm_text("label").alias("nrm"))
+    n_sh = F.greatest(F.length("nrm") - F.lit(SHINGLE_K - 1), F.lit(1))
     return base.select(
         "id",
         F.explode(
             F.array_distinct(
                 F.transform(
                     F.sequence(F.lit(1), n_sh),
-                    lambda i: F.col("nrm").substr(i, F.lit(k)),
+                    lambda i: F.col("nrm").substr(i, F.lit(SHINGLE_K)),
                 )
             )
         ).alias("sh"),
@@ -149,16 +152,7 @@ def _char_shingle_rows(
 
 
 def lsh_label_join(
-    src: DataFrame,
-    tgt: DataFrame,
-    src_id: str = "src_id",
-    src_label: str = "label",
-    tgt_id: str = "tgt_id",
-    tgt_label: str = "label",
-    num_hashes: int = 12,
-    bands: int = 4,
-    k: int = 4,
-    verify_threshold: float = 0.5,
+    src: DataFrame, tgt: DataFrame, verify_threshold: float
 ) -> DataFrame:
     """LSH-blocked similarity join between two label sets — the
     north_star's fuzzy selection tier ("LSH-blocked similarity join on
@@ -169,7 +163,8 @@ def lsh_label_join(
     character-Jaccard verification bounded to the LSH candidates.
     Band keys, co-occurrence and verify are minhash_lsh_pairs' own.
     Catches typo/spacing variants where no full token matches exactly.
-    Returns (src_id, tgt_id, jaccard >= verify_threshold).
+    `src` is (src_id, label), `tgt` is (tgt_id, label); returns
+    (src_id, tgt_id, jaccard >= verify_threshold).
 
     Scale shape: both sides shuffle once on (band, band_key) — the
     join never materializes src x tgt; verification work is linear in
@@ -181,12 +176,12 @@ def lsh_label_join(
     verify) instead of persisted: shingling is a linear stateless map
     over label rows, and a persist inside an operator races against
     itself when the consumers run within one action."""
-    src_sh = _char_shingle_rows(src, src_id, src_label, k)
-    tgt_sh = _char_shingle_rows(tgt, tgt_id, tgt_label, k)
-    a = _band_keys(src_sh, num_hashes, bands).select(
+    src_sh = _char_shingle_rows(src, "src_id")
+    tgt_sh = _char_shingle_rows(tgt, "tgt_id")
+    a = _band_keys(src_sh, LSH_NUM_HASHES, LSH_BANDS).select(
         F.col("id").alias("id_a"), "band", "band_key"
     )
-    b = _band_keys(tgt_sh, num_hashes, bands).select(
+    b = _band_keys(tgt_sh, LSH_NUM_HASHES, LSH_BANDS).select(
         F.col("id").alias("id_b"), "band", "band_key"
     )
     cand = (

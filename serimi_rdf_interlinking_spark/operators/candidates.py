@@ -175,10 +175,16 @@ def raw_token_index(lits: DataFrame) -> DataFrame:
     )
 
 
-def apply_hot_token_cap(idx: DataFrame, cfg: SerimiConfig) -> DataFrame:
+# hot-token skew guard: an index token in more rows than this is capped
+# to a deterministic sample of exactly this many rows, which bounds
+# every token-join key at the ceiling (no salting needed)
+MAX_CANDIDATES_PER_TOKEN = 5000
+
+
+def apply_hot_token_cap(idx: DataFrame) -> DataFrame:
     """Skew guard over an inverted index: tokens whose fan-out exceeds
-    cfg.max_candidates_per_token are CAPPED to a deterministic sample
-    of that many rows (the cap smallest (cand, p, norm_o) triples,
+    MAX_CANDIDATES_PER_TOKEN are CAPPED to a deterministic sample of
+    that many rows (the cap smallest (cand, p, norm_o) triples,
     chosen by a two-level truncating aggregate so no single task ever
     sorts a hot token's full fan-in). A hot token ('john' across 1M
     person labels) contributes no phrase selectivity — tier-1 joins
@@ -186,8 +192,7 @@ def apply_hot_token_cap(idx: DataFrame, cfg: SerimiConfig) -> DataFrame:
     quadratically fan out the tier-2 AND join. Capping (rather than
     dropping, the pre-round-3 behavior) keeps a keyword findable even
     when EVERY one of its tokens is hot, while still bounding every
-    downstream token join at max_candidates_per_token rows per key —
-    no hot-key salting needed.
+    downstream token join at MAX_CANDIDATES_PER_TOKEN rows per key.
 
     The fan-out scan runs on `idx` AS GIVEN: callers that restrict the
     index to the learned search predicates re-apply this cap on the
@@ -198,7 +203,7 @@ def apply_hot_token_cap(idx: DataFrame, cfg: SerimiConfig) -> DataFrame:
     The hot set is found and applied by the shared hot-key guard
     (`hot_keys` collects it to the driver, `split_hot` splits the index
     by membership)."""
-    cap = cfg.max_candidates_per_token
+    cap = MAX_CANDIDATES_PER_TOKEN
     hot_list = hot_keys(idx, "tok", cap)
     if not hot_list:
         return idx
@@ -241,7 +246,6 @@ def search_index(
     index_raw: DataFrame,
     index_all: DataFrame,
     search_preds: list[str] | None,
-    cfg: SerimiConfig,
 ) -> DataFrame:
     """The main-retrieval index: `index_raw` (the uncapped index)
     restricted to the learned `search_preds`, or `index_all` (its
@@ -264,7 +268,7 @@ def search_index(
         # predicate-restricted subset can only have SMALLER per-token
         # fan-outs — skip the second scan job
         return restricted
-    return apply_hot_token_cap(restricted, cfg)
+    return apply_hot_token_cap(restricted)
 
 
 # ---------------------------------------------------------------------------
@@ -445,22 +449,14 @@ def f11_passing(
     stopwords: tuple[str, ...],
     cfg: SerimiConfig,
 ) -> DataFrame:
-    """`hits` whose candidate has a literal o in `lits` (the
-    `target_literals` view their index came from) with
-    advanced_string_matching(kw, o) > threshold. Each distinct
-    (kw, cand) inner-joins the view, which restricts it to hit
-    candidates. Literals under a `textp` predicate are skipped; when
-    textp is unknown (warm-up, None) the prune len(o) <= 3*len(kw)
-    applies instead (search_module.rb:247-249). Scores are computed
-    once per DISTINCT (kw, literal) pair.
-
-    The output carries ``found_p`` — a deterministic choice (min) of
-    the PASSING description triples' predicate per (kw, cand). This is
-    the reference's ``$found`` raw material (search_module.rb:252-260
-    sets it to the predicate of the last triple that passed filter());
-    "last" there follows nondeterministic describe order, so min() is
-    the deterministic pick inside the reference's ambiguity envelope.
-    The promotion fold uses it when cfg.promote_found_predicate is on.
+    """The rows of `hits` whose (kw, cand) has a literal o in `lits`
+    (the `target_literals` view their index came from) with
+    advanced_string_matching(kw, o) > threshold; the columns are the
+    hit columns. Each distinct (kw, cand) inner-joins the view, which
+    restricts it to hit candidates. Literals under a `textp` predicate
+    are skipped; when textp is unknown (warm-up, None) the prune
+    len(o) <= 3*len(kw) applies instead (search_module.rb:247-249).
+    Scores are computed once per DISTINCT (kw, literal) pair.
     """
     desc = lits.select(
         "cand", F.col("p").alias("desc_p"), F.col("o").alias("lit")
@@ -485,13 +481,8 @@ def f11_passing(
         .filter(F.col("ok"))
         .select("kw", "lit")
     )
-    passing = (
-        pairs.join(scored_pairs, ["kw", "lit"], "left_semi")
-        .groupBy("kw", "cand")
-        .agg(F.min("desc_p").alias("found_p"))
-        .withColumn("passes", F.lit(True))
-    )
-    return hits.join(passing, ["kw", "cand"], "inner")
+    passing = pairs.join(scored_pairs, ["kw", "lit"], "left_semi")
+    return hits.join(passing, ["kw", "cand"], "left_semi")
 
 
 # ---------------------------------------------------------------------------
@@ -504,8 +495,8 @@ class CandidateResult:
     pairs: DataFrame      # (chunk_id, rank, s, cand)
     searched: DataFrame   # (chunk_id, rank, s, kw) — winning label property
     # passing frames of the tiers that ran, in tier order, kept for the
-    # sequential-mode promotion fold (search_module.rb:107-108 — which
-    # predicate "found" each keyword decides the next chunk's cascade
+    # sequential-mode promotion fold (search_module.rb:107-108 — the
+    # tier that found each keyword decides the next chunk's cascade
     # order)
     passing: list[DataFrame] = field(default_factory=list)
 

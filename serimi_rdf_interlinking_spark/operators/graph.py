@@ -21,6 +21,8 @@ from ..session import Checkpoints
 
 # edge rows connected_components' path probe collects before counting
 DRIVER_PROBE_ROWS = 10_000
+# edge count up to which connected_components labels on the driver
+DRIVER_MAX_EDGES = 1_000_000
 MAX_ITER = 25  # pointer-jumping rounds: cover diameters up to ~2^25
 
 
@@ -52,14 +54,13 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    driver_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Returns (node, component) with component = min node id (string
     order) of the node's component. Edges are treated as undirected.
 
     Adaptive strategy: the edge set here is VERIFIED near-dup / sameAs
     pairs — orders of magnitude smaller than the corpus — so when it
-    fits comfortably on the driver (<= driver_threshold edges) a local
+    fits comfortably on the driver (<= DRIVER_MAX_EDGES edges) a local
     union-find computes the identical labeling in one collect instead
     of paying multiple two-shuffle+checkpoint rounds (measured ~4.6s of
     pure round overhead for a 477-node graph). Above the threshold the
@@ -82,7 +83,7 @@ def connected_components(
         # probe pays a count(), and the edges are collected only if it fits
         rows = e.limit(DRIVER_PROBE_ROWS + 1).collect()
         n_edges = len(rows) if len(rows) <= DRIVER_PROBE_ROWS else e.count()
-        if n_edges <= driver_threshold:
+        if n_edges <= DRIVER_MAX_EDGES:
             if len(rows) < n_edges:
                 rows = e.collect()
             mapping = _union_find_local([(r.a, r.b) for r in rows])

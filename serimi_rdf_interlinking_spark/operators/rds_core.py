@@ -46,22 +46,18 @@ OVERFLOW_MIN = 5.0    # A5 rule max(mu, sigma) > 5 (serimi_class.rb:363)
 # ---------------------------------------------------------------------------
 
 
+def _distinct_triples(groups: list[list[Triple]]) -> list[Triple]:
+    """The distinct triples across `groups`, in first-seen order."""
+    return list(dict.fromkeys(t for g in groups for t in g))
+
+
 def get_text_properties(groups: list[list[Triple]]) -> list[str]:
     """Predicates having any object value longer than TEXT_LEN."""
-    seen: set[Triple] = set()
-    textp: list[str] = []
-    for g in groups:
-        for t in g:
-            if t in seen:
-                continue
-            seen.add(t)
-            if len(str(t[2])) > TEXT_LEN:
-                textp.append(t[1])
-    out: list[str] = []
-    for p in textp:
-        if p not in out:
-            out.append(p)
-    return out
+    return list(
+        dict.fromkeys(
+            t[1] for t in _distinct_triples(groups) if len(str(t[2])) > TEXT_LEN
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -150,14 +146,10 @@ def entropy_computation(
 # ---------------------------------------------------------------------------
 
 
-def property_overflow(groups: list[list[Triple]]) -> list[str]:
-    triples: list[Triple] = []
-    seen: set[Triple] = set()
-    for g in groups:
-        for t in g:
-            if t not in seen:
-                seen.add(t)
-                triples.append(t)
+def property_overflow(triples: list[Triple]) -> list[str]:
+    """Predicates of a (subject, predicate) pair whose count among the
+    chunk's distinct `triples` exceeds max(mean, stddev) of all pair
+    counts, when that threshold exceeds OVERFLOW_MIN."""
     counts: dict[tuple[str, str], int] = {}
     for t in triples:
         sp = (t[0], t[1])
@@ -179,16 +171,9 @@ def property_overflow(groups: list[list[Triple]]) -> list[str]:
 # ---------------------------------------------------------------------------
 
 
-def restricted_ifp(groups: list[list[Triple]]) -> list[str]:
-    """Predicates whose object values (within the chunk's distinct
-    triples) are all distinct."""
-    triples: list[Triple] = []
-    seen: set[Triple] = set()
-    for g in groups:
-        for t in g:
-            if t not in seen:
-                seen.add(t)
-                triples.append(t)
+def restricted_ifp(triples: list[Triple]) -> list[str]:
+    """Predicates whose object values among the chunk's distinct
+    `triples` are all distinct."""
     by_pred: dict[str, list[str]] = {}
     for t in triples:
         by_pred.setdefault(t[1], []).append(str(t[2]))
@@ -280,18 +265,14 @@ def rds_score(
     `groups` may include trailing pivot groups (beyond len(origins));
     those receive no origin-similarity term (serimi_class.rb:176).
     """
-    ifp = restricted_ifp(groups) + list(textp) + property_overflow(groups)
+    triples = _distinct_triples(groups)
+    ifp = restricted_ifp(triples) + list(textp) + property_overflow(triples)
     ifp_set = set(dict.fromkeys(ifp))
 
     # per-group summaries over distinct triples (group.uniq)
     summaries = []
     for group in groups:
-        distinct: list[Triple] = []
-        seen: set[Triple] = set()
-        for t in group:
-            if t not in seen:
-                seen.add(t)
-                distinct.append(t)
+        distinct = _distinct_triples([group])
         P = [t[1] for t in distinct]
         D = [str(t[2]) for t in distinct if not t[3] and t[1] not in ifp_set]
         O = [str(t[2]) for t in distinct if t[3] and t[1] not in ifp_set]

@@ -10,12 +10,13 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def test_hot_token_cap_recomputed_on_filtered_index(spark):
+def test_hot_token_cap_recomputed_on_filtered_index(spark, monkeypatch):
     """A token hot on the any-predicate index but cold under the
     searched predicates must keep its FULL fan-out when the cap is
     re-applied on the restricted frame (round-3 half-closure: the old
     path reused the any-predicate cap and truncated it)."""
     from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.operators import candidates as C
     from serimi_rdf_interlinking_spark.operators.candidates import (
         apply_hot_token_cap,
         raw_token_index,
@@ -28,13 +29,13 @@ def test_hot_token_cap_recomputed_on_filtered_index(spark):
     rows = [(f"e{i}", "A", f"zebra alpha{i}", False, False) for i in range(8)]
     rows += [(f"f{i}", "B", f"zebra beta{i}", False, False) for i in range(2)]
     target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    cfg = SerimiConfig(max_candidates_per_token=3)
-    raw = raw_token_index(target_literals(target, cfg))
+    monkeypatch.setattr(C, "MAX_CANDIDATES_PER_TOKEN", 3)
+    raw = raw_token_index(target_literals(target, SerimiConfig()))
 
-    capped_all = apply_hot_token_cap(raw, cfg)
+    capped_all = apply_hot_token_cap(raw)
     assert capped_all.filter("tok = 'zebra'").count() == 3  # hot: capped
 
-    restricted = apply_hot_token_cap(raw.filter(F.col("p") == "B"), cfg)
+    restricted = apply_hot_token_cap(raw.filter(F.col("p") == "B"))
     # cold under B: full fan-out survives, nothing truncated
     assert restricted.filter("tok = 'zebra'").count() == 2
     # (the stale path — filtering AFTER capping on the any-predicate
@@ -42,7 +43,7 @@ def test_hot_token_cap_recomputed_on_filtered_index(spark):
     # B-rows could be truncated or dropped entirely)
 
 
-def _token_cap_rows(spark):
+def _token_cap_rows(spark, monkeypatch):
     """apply_hot_token_cap over an index with one hot token."""
     from serimi_rdf_interlinking_spark.config import SerimiConfig
     from serimi_rdf_interlinking_spark.operators import candidates as C
@@ -50,12 +51,12 @@ def _token_cap_rows(spark):
 
     rows = [(f"e{i}", "A", f"zebra alpha{i}", False, False) for i in range(8)]
     target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    cfg = SerimiConfig(max_candidates_per_token=3)
-    raw = C.raw_token_index(C.target_literals(target, cfg))
-    return sorted(map(tuple, C.apply_hot_token_cap(raw, cfg).collect()))
+    monkeypatch.setattr(C, "MAX_CANDIDATES_PER_TOKEN", 3)
+    raw = C.raw_token_index(C.target_literals(target, SerimiConfig()))
+    return sorted(map(tuple, C.apply_hot_token_cap(raw).collect()))
 
 
-def _hot_shingle_drop_rows(spark):
+def _hot_shingle_drop_rows(spark, monkeypatch):
     """ngram_jaccard_pairs over a corpus whose 4 boilerplate shingles
     are above a small max_shingle_df."""
     from serimi_rdf_interlinking_spark.operators.dedup import (
@@ -84,20 +85,23 @@ def test_hot_token_cap_broadcast_membership_path(spark, monkeypatch, run):
     path, for both callers of the shared hot-key guard."""
     from serimi_rdf_interlinking_spark.operators import candidates as C
 
-    lit_rows = run(spark)
+    lit_rows = run(spark, monkeypatch)
     monkeypatch.setattr(C, "HOT_LIST_ISIN_MAX", 0)
-    join_rows = run(spark)
+    join_rows = run(spark, monkeypatch)
     assert lit_rows == join_rows
 
 
-def test_j2_skewed_label_corpus_bounded_fanout_and_recall(spark, caplog):
+def test_j2_skewed_label_corpus_bounded_fanout_and_recall(
+    spark, caplog, monkeypatch
+):
     """A label token shared by a large fraction of the corpus ('smith'
     across 200 entities; SURVEY §7 skew risk): the cap must bound every
-    downstream token join at max_candidates_per_token rows per key,
+    downstream token join at MAX_CANDIDATES_PER_TOKEN rows per key,
     log the cap accounting, and — because tier-1 joins only each
     keyword's RAREST token — preserve 100% recall for every keyword
     that has any non-hot token."""
     from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.operators import candidates as C
     from serimi_rdf_interlinking_spark.operators.candidates import (
         apply_hot_token_cap,
         phrase_hits,
@@ -116,10 +120,10 @@ def test_j2_skewed_label_corpus_bounded_fanout_and_recall(spark, caplog):
         for i in range(30)
     ]
     target = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    cfg = SerimiConfig(max_candidates_per_token=20, shuffle_partitions=4)
+    monkeypatch.setattr(C, "MAX_CANDIDATES_PER_TOKEN", 20)
     with caplog.at_level(logging.WARNING):
         idx = apply_hot_token_cap(
-            raw_token_index(target_literals(target, cfg)), cfg
+            raw_token_index(target_literals(target, SerimiConfig()))
         )
         fanout = {
             r.tok: r.n
@@ -241,12 +245,13 @@ def test_select_candidates_and_nsw_first_hits_union(spark):
     assert {r.cand for r in cr.pairs.collect()} == {"cA", "cD", "cG", "cJ"}
 
 
-def test_f11_passing_textp_modes_and_found_predicate(spark):
-    """F11 keeps a hit when its candidate has a literal passing ASM in
-    the target's literal view: textp None prunes literals longer than
-    3*len(kw), textp [] filters nothing, a textp list skips its
-    predicates; found_p is the least passing predicate, and a hit whose
-    candidate has no literal drops out."""
+def test_f11_passing_textp_modes(spark):
+    """F11 keeps a hit, with the hit columns only, when its candidate
+    has a literal passing ASM in the target's literal view: textp None
+    prunes literals longer than 3*len(kw), textp [] filters nothing, a
+    textp list skips its predicates, and a hit whose candidate has no
+    literal drops out. A hit with two passing literals (c1) is kept
+    once."""
     from serimi_rdf_interlinking_spark.config import SerimiConfig
     from serimi_rdf_interlinking_spark.functions.kernels import asm_passes
     from serimi_rdf_interlinking_spark.operators.candidates import (
@@ -278,11 +283,11 @@ def test_f11_passing_textp_modes_and_found_predicate(spark):
     )
     lits = target_literals(target, cfg)
 
-    def found(textp):
+    def passing(textp):
         out = f11_passing(hits, lits, textp, stopwords, cfg)
-        assert set(hits.columns) <= set(out.columns)
-        return {r.cand: r.found_p for r in out.collect() if r.passes}
+        assert sorted(out.columns) == sorted(hits.columns)
+        return sorted(r.cand for r in out.collect())
 
-    assert found(None) == {"c1": A, "c2": TEXT}
-    assert found([]) == {"c1": A, "c2": TEXT, "c3": A}
-    assert found([TEXT]) == {"c1": A, "c3": A}
+    assert passing(None) == ["c1", "c2"]
+    assert passing([]) == ["c1", "c2", "c3"]
+    assert passing([TEXT]) == ["c1", "c3"]

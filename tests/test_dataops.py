@@ -374,7 +374,7 @@ def test_minhash_band_key_checkpoint_in_plan(spark):
     assert "xor(" not in plan.lower()
 
 
-def test_token_index_hot_token_guard(spark, caplog):
+def test_token_index_hot_token_guard(spark, caplog, monkeypatch):
     """apply_hot_token_cap caps tokens whose fan-out exceeds the ceiling
     to a deterministic sample of exactly ceiling rows (never drops them
     to zero — an all-hot-token keyword must stay findable) and logs the
@@ -382,6 +382,7 @@ def test_token_index_hot_token_guard(spark, caplog):
     import logging
 
     from serimi_rdf_interlinking_spark.config import SerimiConfig
+    from serimi_rdf_interlinking_spark.operators import candidates as C
     from serimi_rdf_interlinking_spark.operators.candidates import (
         apply_hot_token_cap,
         raw_token_index,
@@ -395,9 +396,11 @@ def test_token_index_hot_token_guard(spark, caplog):
         for i in range(20)
     ]
     tgt = spark.createDataFrame(rows, TRIPLE_SCHEMA)
-    cfg = SerimiConfig(max_candidates_per_token=10)
+    monkeypatch.setattr(C, "MAX_CANDIDATES_PER_TOKEN", 10)
     with caplog.at_level(logging.WARNING, logger="serimi_rdf_interlinking_spark.operators.candidates"):
-        idx = apply_hot_token_cap(raw_token_index(target_literals(tgt, cfg)), cfg)
+        idx = apply_hot_token_cap(
+            raw_token_index(target_literals(tgt, SerimiConfig()))
+        )
         got = idx.collect()
     toks = {r.tok for r in got}
     assert any("hot tokens" in r.message for r in caplog.records)

@@ -139,7 +139,7 @@ def test_f7_drop_redirect_candidates_flag(spark, dbp_frames):
     def name_index_cands(cfg):
         # the matcher's index steps, with NAME as the learned predicate
         raw = raw_token_index(target_literals(target, cfg))
-        idx = search_index(raw, apply_hot_token_cap(raw, cfg), [NAME], cfg)
+        idx = search_index(raw, apply_hot_token_cap(raw), [NAME])
         return {r.cand for r in idx.collect()}
 
     cands_off = name_index_cands(cfg_off)

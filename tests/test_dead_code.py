@@ -85,3 +85,23 @@ def test_every_package_definition_has_a_non_test_reader():
     assert not unread, "read only by tests:\n" + "\n".join(unread)
     # every allowlist entry still names a package definition
     assert ALLOWED <= {name for _where, name in defs}
+
+
+def test_every_config_field_is_set_by_a_non_test_caller():
+    """A `SerimiConfig` field that no non-test `SerimiConfig(...)` call
+    sets is a knob only tests turn: it belongs beside its reader as a
+    module constant, which tests monkeypatch."""
+    from dataclasses import fields
+
+    from serimi_rdf_interlinking_spark.config import SerimiConfig
+
+    set_by_callers: set[str] = set()
+    for f in _non_test_sources():
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "SerimiConfig"
+                or getattr(node.func, "attr", None) == "SerimiConfig"
+            ):
+                set_by_callers.update(k.arg for k in node.keywords)
+    unset = sorted({f.name for f in fields(SerimiConfig)} - set_by_callers)
+    assert not unset, "SerimiConfig fields no non-test caller sets: " + ", ".join(unset)

@@ -15,6 +15,7 @@ from serimi_rdf_interlinking_spark.extract import (
     extract_triples,
     extract_triples_from_text,
 )
+from serimi_rdf_interlinking_spark.operators import graph as G
 from serimi_rdf_interlinking_spark.operators.graph import connected_components
 from serimi_rdf_interlinking_spark.plans.pipeline import KGPipeline
 from serimi_rdf_interlinking_spark.sources.triples import PAGE_SCHEMA, TRIPLE_SCHEMA
@@ -369,15 +370,12 @@ def test_recall_diagnosis(spark):
     }
 
 
-def test_connected_components_deep_chain_pointer_jumping(spark):
+def test_connected_components_deep_chain_pointer_jumping(spark, monkeypatch):
     """A 300-node path graph THROUGH THE DISTRIBUTED LOOP
-    (driver_threshold=0 disables the small-graph union-find shortcut):
+    (DRIVER_MAX_EDGES=0 disables the small-graph union-find shortcut):
     plain min-label propagation needs 299 rounds; pointer jumping must
-    converge within the default 25."""
-    from serimi_rdf_interlinking_spark.operators.graph import (
-        connected_components,
-    )
-
+    converge within MAX_ITER = 25."""
+    monkeypatch.setattr(G, "DRIVER_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(299)]
         + [("z0", "z1"), ("z1", "z2")],  # a second, separate component
@@ -385,20 +383,18 @@ def test_connected_components_deep_chain_pointer_jumping(spark):
     )
     cc = {
         r.node: r.component
-        for r in connected_components(edges, driver_threshold=0).collect()
+        for r in connected_components(edges).collect()
     }
     assert all(cc[f"n{i:04d}"] == "n0000" for i in range(300))
     assert cc["z0"] == cc["z1"] == cc["z2"] == "z0"
 
 
-def test_connected_components_driver_path_equals_distributed(spark):
+def test_connected_components_driver_path_equals_distributed(
+    spark, monkeypatch
+):
     """The small-graph union-find shortcut must produce the exact
     labeling of the distributed pointer-jumping loop."""
     import random
-
-    from serimi_rdf_interlinking_spark.operators.graph import (
-        connected_components,
-    )
 
     rng = random.Random(11)
     edges = spark.createDataFrame(
@@ -409,9 +405,10 @@ def test_connected_components_driver_path_equals_distributed(spark):
         (r.node, r.component)
         for r in connected_components(edges).collect()
     }
+    monkeypatch.setattr(G, "DRIVER_MAX_EDGES", 0)
     dist = {
         (r.node, r.component)
-        for r in connected_components(edges, driver_threshold=0).collect()
+        for r in connected_components(edges).collect()
     }
     assert local == dist and len(local) > 0
 
@@ -431,14 +428,17 @@ def test_pipeline_run_releases_its_checkpoints(
     assert _persistent_rdds(spark) - before == set()
 
 
-def test_connected_components_distributed_keeps_only_its_result(spark):
+def test_connected_components_distributed_keeps_only_its_result(
+    spark, monkeypatch
+):
     """The distributed loop releases every checkpoint it made except
     the returned labels."""
+    monkeypatch.setattr(G, "DRIVER_MAX_EDGES", 0)
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(20)], ["src", "dst"]
     )
     before = _persistent_rdds(spark)
-    cc = connected_components(edges, driver_threshold=0)
+    cc = connected_components(edges)
     assert len(_persistent_rdds(spark) - before) == 1
     assert {r.component for r in cc.collect()} == {"n0"}
 
@@ -455,12 +455,11 @@ def _cc_edges(spark, n):
 def test_connected_components_probe_is_bounded_over_threshold(
     spark, monkeypatch
 ):
-    """A graph over driver_threshold must not be shipped to the driver:
+    """A graph over DRIVER_MAX_EDGES must not be shipped to the driver:
     the path probe collects at most DRIVER_PROBE_ROWS + 1 edges, counts,
     and leaves the labeling to the distributed loop."""
-    from serimi_rdf_interlinking_spark.operators import graph as G
-
     monkeypatch.setattr(G, "DRIVER_PROBE_ROWS", 3, raising=False)
+    monkeypatch.setattr(G, "DRIVER_MAX_EDGES", 10)
     edges, expected = _cc_edges(spark, 12)
     collected = []
     cls = type(edges)
@@ -472,27 +471,26 @@ def test_connected_components_probe_is_bounded_over_threshold(
         return rows
 
     monkeypatch.setattr(cls, "collect", spy)
-    cc = G.connected_components(edges, driver_threshold=10)
+    cc = G.connected_components(edges)
     assert collected and max(collected) <= 4
     assert {r.node: r.component for r in cc.collect()} == expected
 
 
 @pytest.mark.parametrize("probe", [None, 3], ids=["one_probe", "count_path"])
 @pytest.mark.parametrize("extra", [0, 1], ids=["at_threshold", "over_threshold"])
-def test_connected_components_labels_at_driver_threshold(
+def test_connected_components_labels_at_driver_max_edges(
     spark, monkeypatch, probe, extra
 ):
-    """Exactly driver_threshold edges take the driver union-find, one
+    """Exactly DRIVER_MAX_EDGES edges take the driver union-find, one
     more takes the distributed loop; both give the same labels, with
     the probe larger than the graph (one probe job) and smaller (count,
     then collect only what fits)."""
-    from serimi_rdf_interlinking_spark.operators import graph as G
-
     if probe is not None:
         monkeypatch.setattr(G, "DRIVER_PROBE_ROWS", probe)
     threshold = 6
+    monkeypatch.setattr(G, "DRIVER_MAX_EDGES", threshold)
     edges, expected = _cc_edges(spark, threshold + extra)
-    cc = G.connected_components(edges, driver_threshold=threshold)
+    cc = G.connected_components(edges)
     assert {r.node: r.component for r in cc.collect()} == expected
 
 

@@ -46,15 +46,15 @@ def test_decode_ppm_roundtrip():
 
 
 def test_decode_wav_roundtrip():
-    from serimi_rdf_interlinking_spark.multimodal import decode_wav_pcm16
+    from serimi_rdf_interlinking_spark.multimodal import decode_wav
 
     payload, samples = _wav(400, rate=8000, channels=2)
-    got, rate = decode_wav_pcm16(payload)
+    got, rate = decode_wav(payload)
     assert rate == 8000
     assert got.shape == (400, 2)
     assert np.array_equal(got, samples)
     with pytest.raises(ValueError):
-        decode_wav_pcm16(b"OggS" + b"\x00" * 40)
+        decode_wav(b"OggS" + b"\x00" * 40)
 
 
 def test_decode_png_roundtrip_all_filters_and_colors():
@@ -332,7 +332,7 @@ def test_audio_spectral_in_spark_stage(spark):
         MEDIA_SCHEMA,
         audio_spectral_features,
         decode_and_featurize,
-        decode_wav_pcm16,
+        decode_wav,
         synth_wav,
     )
 
@@ -342,7 +342,7 @@ def test_audio_spectral_in_spark_stage(spark):
     )
     (row,) = decode_and_featurize(media, audio_spectral=True).collect()
     assert row.feature == pytest.approx(
-        audio_spectral_features(*decode_wav_pcm16(wav))
+        audio_spectral_features(*decode_wav(wav))
     )
 
 
@@ -385,6 +385,30 @@ def test_real_decode_in_spark_stage(spark):
     )
     with pytest.raises(Exception, match="codec libraries"):
         decode_and_featurize(bad).collect()
+
+
+def test_null_payload_gives_null_feature(spark):
+    """A row with a null payload (MEDIA_SCHEMA allows it) gets a null
+    feature, 0 bytes and a null digest for every decodable mime; the
+    decodable row beside it keeps its feature."""
+    from serimi_rdf_interlinking_spark.multimodal import (
+        MEDIA_SCHEMA,
+        decode_and_featurize,
+    )
+
+    ppm, _ = _ppm(3, 2)
+    rows = [
+        ("ppm", "image", None, "image/x-portable-pixmap", None, None, None),
+        ("png", "image", None, "image/png", None, None, None),
+        ("wav", "audio", None, "audio/wav", None, None, None),
+        ("ok", "image", ppm, "image/x-portable-pixmap", 3, 2, None),
+    ]
+    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
+    feats = {r.media_id: r for r in decode_and_featurize(media).collect()}
+    for mid in ("ppm", "png", "wav"):
+        assert feats[mid].feature is None
+        assert feats[mid].n_bytes == 0 and feats[mid].sha256 is None
+    assert len(feats["ok"].feature) == 8
 
 
 def test_wav_all_sample_types_land_on_one_int16_space():

@@ -266,7 +266,7 @@ def test_lsh_label_join_no_cartesian_all_codegen_joins(spark):
         F.concat(F.lit("t"), "id").alias("tgt_id"),
         F.concat(F.lit("label word "), "id").alias("label"),
     )
-    plan = _plan(lsh_label_join(src, tgt))
+    plan = _plan(lsh_label_join(src, tgt, 0.5))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan

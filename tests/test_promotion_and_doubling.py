@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from serimi_rdf_interlinking_spark.config import SerimiConfig
 from serimi_rdf_interlinking_spark.matcher import SerimiMatcher
+from serimi_rdf_interlinking_spark.operators.blocking import WARMUP_CHUNK
 from serimi_rdf_interlinking_spark.operators.candidates import (
     apply_hot_token_cap,
     prepare_keywords,
@@ -27,7 +28,6 @@ from serimi_rdf_interlinking_spark.operators.candidates import (
 from serimi_rdf_interlinking_spark.sources.fixtures import (
     CLASS_CITY,
     build_interlinking_fixture,
-    build_promotion_divergence_fixture,
 )
 from serimi_rdf_interlinking_spark.sources.triples import TRIPLE_SCHEMA
 
@@ -65,7 +65,16 @@ def _search_index(target, search_preds, cfg):
     """The matcher's main-retrieval index over `target` for the learned
     `search_preds`: literal view -> raw index -> cap -> restriction."""
     raw = raw_token_index(target_literals(target, cfg))
-    return search_index(raw, apply_hot_token_cap(raw, cfg), search_preds, cfg)
+    return search_index(raw, apply_hot_token_cap(raw), search_preds)
+
+
+def _ranked_after_warmup(spark, n):
+    """Sources http://s/0..n-1 ranked right after the warm-up span, so
+    the sequential loop's chunks start at source 0."""
+    return spark.createDataFrame(
+        [(f"http://s/{i}", i + WARMUP_CHUNK, 0) for i in range(n)],
+        ["s", "rank", "chunk_id"],
+    )
 
 
 @pytest.fixture()
@@ -96,15 +105,12 @@ def promo_frames(spark):
     ]
     source = spark.createDataFrame(src_rows, TRIPLE_SCHEMA)
     target = spark.createDataFrame(tgt_rows, TRIPLE_SCHEMA)
-    ranked = spark.createDataFrame(
-        [(f"http://s/{i}", i, 0) for i in range(4)], ["s", "rank", "chunk_id"]
-    )
-    return source, target, ranked
+    return source, target, _ranked_after_warmup(spark, 4)
 
 
 def test_promotion_changes_chunk2_winner(spark, promo_frames):
     source, target, ranked = promo_frames
-    cfg = SerimiConfig(warmup_chunk=0, chunk=2, shuffle_partitions=4)
+    cfg = SerimiConfig(chunk=2, shuffle_partitions=4)
     m = SerimiMatcher(cfg)
     keywords = prepare_keywords(source, ranked, [LBL])
     index = _search_index(target, [PRED_A, PRED_B], cfg)
@@ -122,7 +128,7 @@ def test_promotion_changes_chunk2_winner(spark, promo_frames):
     # frozen-order control (the batch divergence): same retrieval with
     # tiers fixed at [A, B] picks X for s/2
     cr = m._retrieve(
-        keywords.filter(F.col("rank") >= 2),
+        keywords.filter(F.col("rank") >= 2 + WARMUP_CHUNK),
         index,
         lits,
         {PRED_A: 0, PRED_B: 1},
@@ -155,12 +161,9 @@ def test_adaptive_doubling_rescues_single_group_chunk(spark):
     ]
     source = spark.createDataFrame(src_rows, TRIPLE_SCHEMA)
     target = spark.createDataFrame(tgt_rows, TRIPLE_SCHEMA)
-    ranked = spark.createDataFrame(
-        [(f"http://s/{i}", i, 0) for i in range(4)], ["s", "rank", "chunk_id"]
-    )
-    cfg = SerimiConfig(warmup_chunk=0, chunk=2, shuffle_partitions=4)
+    cfg = SerimiConfig(chunk=2, shuffle_partitions=4)
     m = SerimiMatcher(cfg)
-    keywords = prepare_keywords(source, ranked, [LBL])
+    keywords = prepare_keywords(source, _ranked_after_warmup(spark, 4), [LBL])
     index = _search_index(target, [PRED_B], cfg)
 
     rows = m._run_sequential_loop(
@@ -176,28 +179,3 @@ def test_adaptive_doubling_rescues_single_group_chunk(spark):
     assert (1, "http://t/2", True) in by_src["http://s/2"]
     assert (1, "http://t/3", True) in by_src["http://s/3"]
 
-
-def test_promote_found_predicate_matches_reference_cascade(spark):
-    """cfg.promote_found_predicate derives the promoted predicate from
-    the passing description triple ($found, search_module.rb:252-260)
-    instead of the searched tier. On the promotion-divergence fixture
-    the passing triples live under tgt:alias, so the found-mode cascade
-    ends with alias promoted to the front and recall matches the
-    searched-tier sequential mode (11/13)."""
-    fx = build_promotion_divergence_fixture()
-    src = spark.createDataFrame(fx.source, TRIPLE_SCHEMA)
-    tgt = spark.createDataFrame(fx.target, TRIPLE_SCHEMA)
-    gold = set(fx.gold)
-
-    cfg = SerimiConfig(
-        chunk=2, topk=1, mode="sequential", shuffle_partitions=4,
-        promote_found_predicate=True,
-    )
-    matcher = SerimiMatcher(cfg)
-    res = matcher.run(spark, src, tgt, CLASS_CITY)
-    got = {(r.source, r.target) for r in res.alignments.collect()}
-    assert got <= gold
-    assert len(got & gold) == 11
-    # the evolved cascade front is the predicate whose literal PASSED
-    # (alias), matching the reference's $found promotion
-    assert matcher.final_search_order[0].rsplit("/", 1)[-1] == "alias"

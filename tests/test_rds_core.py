@@ -69,13 +69,13 @@ def test_restricted_ifp():
         [T("s1", "p:id", "u1"), T("s2", "p:id", "u2"),
          T("s1", "p:cat", "c"), T("s2", "p:cat", "c")]
     ]
-    assert R.restricted_ifp(groups) == ["p:id"]
+    assert R.restricted_ifp(R._distinct_triples(groups)) == ["p:id"]
 
 
 def test_property_overflow_gate():
     # threshold must exceed 5 for any exclusion (serimi_class.rb:363)
     groups = [[T("s1", "p:a", f"v{i}") for i in range(4)]]
-    assert R.property_overflow(groups) == []
+    assert R.property_overflow(R._distinct_triples(groups)) == []
     # one (s,p) with 60 distinct objects vs a few 1-count pairs:
     # population stddev exceeds 5 -> threshold active -> p:big flagged
     g = [T("s1", "p:big", f"v{i}") for i in range(60)]
@@ -84,7 +84,7 @@ def test_property_overflow_gate():
     m = sum(vals) / len(vals)
     sd = math.sqrt(sum((v - m) ** 2 for v in vals) / len(vals))
     assert max(m, sd) > 5
-    flagged = R.property_overflow([g])
+    flagged = R.property_overflow(R._distinct_triples([g]))
     assert flagged == ["p:big"]
 
 
